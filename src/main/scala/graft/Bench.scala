@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE json line with per-query seconds.
   * A short untimed warmup (session init, codegen, parquet footer reads)
@@ -10,18 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local("graft-bench", cpus)
 
     // Warmup: exercise codegen, shuffle machinery, and each table's footer.
     spark.range(10000000L).selectExpr("sum(id)").collect()
@@ -120,6 +108,9 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"[bench] streaming warmup failed: $e")
     }
+    // the warmup's persists and round checkpoints are not the first
+    // timed query's to carry
+    try GraftSession.release(spark) catch { case _: Throwable => }
 
     // Each query runs `reps` times and reports the MIN: a single timed
     // run is hostage to whatever co-tenant happens to burn cores during
@@ -150,11 +141,7 @@ object Bench {
         // blocks too: localCheckpoint pins its round states in the block
         // manager until driver GC — across 297 queries that residue is
         // storage pressure + GC churn charged to whoever runs later.
-        try {
-          graft.operators.CacheScope.releaseSession(spark)
-          spark.catalog.clearCache()
-          graft.operators.CacheScope.releaseCheckpoints(spark)
-        } catch { case _: Throwable => }
+        try GraftSession.release(spark) catch { case _: Throwable => }
         (dt, ok)
       }
       val ok = times.forall(_._2)

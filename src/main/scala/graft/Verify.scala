@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,15 +9,10 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session (AQE, 64 MB broadcast threshold), so the plans
+    // checked here are the plans Bench times; only the width differs
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = GraftSession.local("graft-verify", cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -30,11 +24,9 @@ object Verify {
       }
       // Several query builders persist() intra-query reuse branches
       // (q26 hot set, q56 baskets, d17 postings, ...) whose lifetime is
-      // one query. A full-board verify run in a single session would
-      // otherwise accumulate every such cache — drain the session scope
-      // registry, then clear anything persisted outside it.
-      graft.operators.CacheScope.releaseSession(spark)
-      spark.catalog.clearCache()
+      // one query; a full-board run in one session would otherwise
+      // accumulate every such cache.
+      GraftSession.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

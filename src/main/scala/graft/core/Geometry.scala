@@ -64,13 +64,19 @@ object GridSnap {
     if (p < 0) p - cell else p
 
   /** The grid cell (as a Rect of side `cell`) containing (x, y). */
-  def cellOf(x: Double, y: Double, cell: Double): Rect = {
-    val cx = corner(x, cell)
-    val cy = corner(y, cell)
-    Rect(cx, cy, cx + cell, cy + cell)
-  }
+  def cellOf(x: Double, y: Double, cell: Double): Rect =
+    cellAtCorner(corner(x, cell), corner(y, cell), cell)
 
-  /** Integer cell id (corner / cell) — stable key for histograms. */
-  def cellId(p: Double, cell: Double): Long =
-    math.round(corner(p, cell) / cell)
+  /** The grid cell whose lower-left corner is (cx, cy), a grid corner.
+    * Cells are keyed by integer index and every edge is computed as
+    * `k * cell`: `corner + cell` can miss the next cell's corner by one
+    * ulp (5 * 0.1 + 0.1 = 0.6, 6 * 0.1 = 0.6000000000000001), and the
+    * space partitioner then carries cells into boxes that do not
+    * contain them.
+    */
+  def cellAtCorner(cx: Double, cy: Double, cell: Double): Rect = {
+    val i = math.round(cx / cell)
+    val j = math.round(cy / cell)
+    Rect(i * cell, j * cell, (i + 1) * cell, (j + 1) * cell)
+  }
 }

@@ -41,11 +41,17 @@ object SpacePartitioner {
       maxPointsPerPartition: Long,
       cellSize: Double): List[CellCount] = {
     if (cells.isEmpty) return Nil
-    val bounding = boundingRect(cells)
+    // re-snap every cell so all its edges are `k * cellSize`: a caller's
+    // `corner + cell` edge can miss the next cell's corner by one ulp,
+    // and a box that does not contain its cells is re-split forever
+    val snapped = cells.toSeq
+      .groupMapReduce(c => GridSnap.cellAtCorner(c._1.x, c._1.y, cellSize))(_._2)(_ + _)
+      .toSet
+    val bounding = boundingRect(snapped)
     // Sorted array for deterministic iteration; counts are over
     // fully-contained cells (cells are grid-aligned, cuts land on cell
     // boundaries, so no cell ever straddles a cut).
-    val cellArr = cells.toArray.sortBy(c => (c._1.x, c._1.y))
+    val cellArr = snapped.toArray.sortBy(c => (c._1.x, c._1.y))
     val total = { var s = 0; cellArr.foreach(s += _._2); s }
 
     @tailrec

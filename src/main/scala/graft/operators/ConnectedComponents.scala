@@ -44,20 +44,6 @@ object ConnectedComponents {
     */
   val DefaultDriverMax: Long = 2L * 1000 * 1000
 
-  // Bisect knobs (system properties; tools.CcBisect). The r17 bisect at
-  // local[32] AND local[8] (3 reps solo each, q74/q51/s32) measured the
-  // r16 sub-changes (lazy checkpoint, dropped largeStar distinct) as
-  // individually flat-to-positive at BOTH widths — the r16 driver
-  // board's q74 blowup was width-32 tiny-task scheduling under load,
-  // not an algorithmic regression — and round-width right-sizing as
-  // the consistent winner, so lazy+nodistinct+rightsize is the
-  // default spelling. Flags kept so the bisect stays re-runnable.
-  private def flag(name: String, default: Boolean): Boolean =
-    sys.props.get(name).map(_.toBoolean).getOrElse(default)
-  private def eagerCkpt: Boolean = flag("graft.cc.eager", default = false)
-  private def lsDistinct: Boolean = flag("graft.cc.lsdistinct", default = false)
-  private def rightsize: Boolean = flag("graft.cc.rightsize", default = true)
-
   /** Canonical undirected edge set, oriented (u > v), self-loops and
     * duplicates dropped. Input: first two columns are integral node ids.
     */
@@ -79,14 +65,12 @@ object ConnectedComponents {
     val mins = sym.groupBy("u")
       .agg(F.min("v").as("mn"))
       .select(col("u"), least(col("mn"), col("u")).as("m"))
-    val out = sym.join(mins, "u")
+    // no mid-round distinct: [[smallStar]]'s min-aggregate absorbs
+    // duplicates and its final distinct dedups the round's output; the
+    // extra exchange measured flat-to-slower at local[8] and local[32]
+    sym.join(mins, "u")
       .filter(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
-    // dedup optional: [[smallStar]]'s min-aggregate absorbs duplicates
-    // and its final distinct dedups the round's output, so the
-    // mid-round exchange only pays off when duplicate multiplicity is
-    // high (dense near-clique rounds) — bisected by tools.CcBisect
-    if (lsDistinct) out.distinct() else out
   }
 
   /** Small-star round over (u > v)-oriented edges: connect each node's
@@ -112,7 +96,7 @@ object ConnectedComponents {
     // checksum together) instead of the two the eager spelling paid —
     // same truncated lineage, same values
     val spark = edges.sparkSession
-    var e = canon(edges).localCheckpoint(eagerCkpt)
+    var e = canon(edges).localCheckpoint(eager = false)
     var checksum = checksumOf(e)
     // Right-size the round shuffles to the measured edge volume (guide
     // §2.2): each round is 2 aggregates + 2 joins over O(E) 16-byte
@@ -123,17 +107,13 @@ object ConnectedComponents {
     // configured parallelism (scale-adaptive, not a local-mode const).
     val partsKey = "spark.sql.shuffle.partitions"
     val prevParts = spark.conf.get(partsKey)
-    val rp = rightsize
-    if (rp) {
-      val target = math.max(1L, checksum._1 / 4000000L)
-      val p = math.min(prevParts.toLong, target)
-      spark.conf.set(partsKey, p.toString)
-    }
+    val target = math.max(1L, checksum._1 / 4000000L)
+    spark.conf.set(partsKey, math.min(prevParts.toLong, target).toString)
     try {
       var converged = false
       var it = 0
       while (!converged && it < maxIter) {
-        val next = smallStar(largeStar(e)).localCheckpoint(eagerCkpt)
+        val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
         val nextSum = checksumOf(next)
         converged = nextSum == checksum
         checksum = nextSum
@@ -142,9 +122,7 @@ object ConnectedComponents {
       }
       require(converged, s"connected components did not converge in $maxIter rounds")
       e
-    } finally {
-      if (rp) spark.conf.set(partsKey, prevParts)
-    }
+    } finally spark.conf.set(partsKey, prevParts)
   }
 
   /** (row count, order-independent content hash) — two identical edge

@@ -97,8 +97,8 @@ object DistributedDBSCAN {
         cornerExpr($"y", cell).as("cy"))
       .count()
       .collect()
-      .map(r => (Rect(r.getDouble(0), r.getDouble(1),
-        r.getDouble(0) + cell, r.getDouble(1) + cell), r.getLong(2).toInt))
+      .map(r => (GridSnap.cellAtCorner(r.getDouble(0), r.getDouble(1), cell),
+        r.getLong(2).toInt))
       .toSet
 
     // ---- Driver: cost-based space plan ----

@@ -2040,14 +2040,13 @@ object Similarity {
   }
 
   /** PQ graph pipeline over a routed (id, probes, vec) frame — shared
-    * by the flat-routed [[pqKnnGraphTrainedFp]], the corpus-scaled
-    * [[pqKnnGraphScaledFp]], and [[graft.tools.PqGraphProbe]] (which
-    * must time exactly the stages the operators execute): residual
-    * quantization vs the assigned centroid, integer-Lloyd codebook on
-    * the deterministic hash-sample, codegen encode/ADC, bounded ADC
-    * top-`cBudget`, exact-integer rerank.
+    * by the flat-routed [[pqKnnGraphTrainedFp]] and the corpus-scaled
+    * [[pqKnnGraphScaledFp]]: residual quantization vs the assigned
+    * centroid, integer-Lloyd codebook on the deterministic hash-sample,
+    * codegen encode/ADC, bounded ADC top-`cBudget`, exact-integer
+    * rerank.
     */
-  private[graft] def pqGraphFromRouted(routed: DataFrame, cent: DataFrame,
+  private def pqGraphFromRouted(routed: DataFrame, cent: DataFrame,
       k: Int, m: Int, ncode: Int, iters: Int, sampleN: Int, cBudget: Int,
       scope: CacheScope): DataFrame = {
     import routed.sparkSession.implicits._

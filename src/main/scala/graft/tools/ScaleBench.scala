@@ -400,26 +400,16 @@ object ScaleBench {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("GRAFT_SCALE_COPIES", "10").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // synth writes ONE file per table with 4 MB row groups so scans
-      // can split — but splitting is governed by maxPartitionBytes
-      // (default 128 MB), under which a 15 MB embeddings file is ONE
-      // task and every corpus × centroids routing scan single-threads
-      // (measured: s38's routing 206 s in one task at 30x). Match the
-      // knob to the row-group size — the sizing every real deployment
-      // does (SURVEY §6 spill-aware rule).
-      .config("spark.sql.files.maxPartitionBytes", (4 * 1024 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // synth writes ONE file per table with 4 MB row groups so scans
+    // can split — but splitting is governed by maxPartitionBytes
+    // (default 128 MB), under which a 15 MB embeddings file is ONE
+    // task and every corpus × centroids routing scan single-threads
+    // (measured: s38's routing 206 s in one task at 30x). Match the
+    // knob to the row-group size — the sizing every real deployment
+    // does (SURVEY §6 spill-aware rule).
+    val spark = graft.GraftSession.local("graft-scale-bench", cpus,
+      Map("spark.sql.files.maxPartitionBytes" -> (4 * 1024 * 1024).toString))
 
     val oneDir = "/tmp/graft_scale/x1"
     val nDir = s"/tmp/graft_scale/x$copies"

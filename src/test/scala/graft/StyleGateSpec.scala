@@ -67,6 +67,31 @@ class StyleGateSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  private def mainFilesWith(needles: String*): Seq[String] = for {
+    f <- sources
+    if f.getPath.startsWith("src/main/")
+    (line, i) <- lines(f)
+    if needles.exists(line.contains)
+  } yield s"${f.getPath}:${i + 1}"
+
+  test("sessions are built only by GraftSession (and the user-facing examples)") {
+    val bad = mainFilesWith("SparkSession.builder").filterNot { at =>
+      at.startsWith("src/main/scala/graft/GraftSession.scala:") ||
+        at.startsWith("src/main/scala/graft/examples/")
+    }
+    withClue(bad.mkString("session builders outside GraftSession:\n", "\n", "\n")) {
+      bad shouldBe empty
+    }
+  }
+
+  test("operators read no system properties") {
+    val bad = mainFilesWith("sys.props", "System.getProperty")
+      .filter(_.startsWith("src/main/scala/graft/operators/"))
+    withClue(bad.mkString("system properties read at:\n", "\n", "\n")) {
+      bad shouldBe empty
+    }
+  }
+
   test("every file ends with a newline (NewLineAtEofChecker)") {
     val bad = sources.filter { f =>
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)

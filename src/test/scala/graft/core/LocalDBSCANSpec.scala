@@ -143,6 +143,30 @@ class SpacePartitionerSpec extends AnyFunSuite with Matchers {
   test("empty input yields no partitions") {
     SpacePartitioner.partition(Set.empty, 10, 0.6) shouldBe Nil
   }
+
+  test("cells built as corner + cell terminate (one-ulp edges)") {
+    // 5 * 0.1 + 0.1 = 0.6 but 6 * 0.1 = 0.6000000000000001: a cell's
+    // far edge built as corner + cell can miss the next cell's corner
+    val cell = 0.1
+    val cells = (for { i <- 0 until 12; j <- 0 until 12 } yield {
+      val (x, y) = ((185 + i) * cell, (588 + j) * cell)
+      (Rect(x, y, x + cell, y + cell), 50)
+    }).toSet
+    // planned on a daemon thread: a planner that spins fails this
+    // test instead of hanging the suite
+    val result = new java.util.concurrent.atomic.AtomicReference[List[(Rect, Int)]]
+    val planner = new Thread(() => result.set(SpacePartitioner.partition(cells, 100, cell)))
+    planner.setDaemon(true)
+    planner.start()
+    planner.join(10000)
+    val parts = result.get
+    withClue("partition did not return within 10 s: ") { parts should not be null }
+    cells.foreach { case (c, _) =>
+      parts.count(_._1.contains(c.x + cell / 2, c.y + cell / 2)) shouldBe 1
+    }
+    parts.map(_._2).sum shouldBe 144 * 50
+    all(parts.map(_._2)) should be <= 100
+  }
 }
 
 class UnionFindSpec extends AnyFunSuite with Matchers {

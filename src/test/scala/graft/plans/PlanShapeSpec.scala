@@ -10,8 +10,8 @@ import graft.operators.TestSpark
   * count; this makes the claim executable). Counts come from the
   * STATIC executed-plan string, so only queries without persist() are
   * pinned (a cached branch prints its whole lineage and the counts
-  * stop meaning anything — see tools/PlanShapeProbe, the diagnostic
-  * this spec grew from). Bounds are upper bounds: AQE may reuse or
+  * stop meaning anything; `tools.Probe --plan` prints the same counts
+  * for the AQE plan a query runs). Bounds are upper bounds: AQE may reuse or
   * drop exchanges at runtime, never add them. A regression here is the
   * d15/q44 class — a respelling that silently re-executes or
   * re-shuffles an expensive branch.
