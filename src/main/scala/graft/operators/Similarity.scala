@@ -19,6 +19,12 @@ import org.apache.spark.sql.functions._
   * (Charikar 2002) for big-big similarity: bucket both sides on the
   * sign signature, equi-join buckets, then exact-verify — the same
   * grid-bucket trick the spatial core uses for its eps-join.
+  *
+  * [[annTopK]] is the one approximate top-k entry point: an [[AnnSpec]]
+  * picks the partition pruning (none, or IVF over lowest-id, trained or
+  * fixed-point-trained centroids with hard or soft assignment) and the
+  * scorer (exact cosine, PQ/ADC, residual PQ, or fixed-point residual PQ
+  * with an exact-integer rerank); each decision is one private stage.
   */
 object Similarity {
 
@@ -90,64 +96,195 @@ object Similarity {
     Bridge.column(graft.functions.HyperplaneBucketExpr(Bridge.expression(vec), nPlanes))
   }
 
-  /** IVF (inverted-file) approximate top-k: the second ANN scale path
-    * beside hyperplane LSH. Deterministic coarse quantizer — the
-    * `nlist` lowest-id vectors act as centroids (no trained k-means, so
-    * the oracle can replicate the exact partition) — assigns every
-    * corpus vector to its max-cosine centroid via a broadcast product +
-    * arg-max aggregate (partial-aggregatable, no window sort over the
-    * corpus); queries probe their `nprobe` nearest centroid lists and
-    * rank exactly within them. At scale the corpus shuffles once (by
-    * centroid), and each query touches nprobe/nlist of the data.
-    * Tie-breaks: higher cosine, then lower id — everywhere.
+  /** Approximate top-k neighbors of every query vector — the one ANN
+    * entry point. `spec` picks a point on the grid {Flat, Ivf} × {Raw,
+    * Pq, PqResidual} (see [[AnnSpec]]); each decision is one private
+    * stage, composed here:
+    *
+    *   - [[centroidFrame]]: the coarse centroids, by source;
+    *   - [[routeCorpus]] / [[assignNearest]]: every corpus vector into
+    *     its `assign` nearest lists;
+    *   - [[probeLists]]: every query's `nprobe` nearest lists;
+    *   - the scorer: exact cosine ([[scoreRaw]]), ADC over a raw-vector
+    *     codebook ([[scorePq]]), residual ADC ([[scoreResidual]]), or the
+    *     integer ADC with its exact rerank ([[scoreResidualFp]]);
+    *   - [[keepTop]]: the per-query rank tail.
+    *
+    * Output (q_id, n_id, rnk, score) with score cos_sim (Raw), adc_d2
+    * (float PQ) or adc_fp [, d2_fp] (fixed point); a query never ranks
+    * itself. Ties everywhere: better score, then lower id. Recall of
+    * every point the rows use is measured in AnnRecallSpec.
     */
-  def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 32, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfTopKCb(corpus, queries, k,
-      broadcast(corpus.filter(col(idCol) < nlist)
-        .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))),
-      nprobe, idCol, vecCol)
+  def annTopK(corpus: DataFrame, queries: DataFrame, k: Int, spec: AnnSpec): DataFrame = {
+    import AnnSpec._
+    spec.validate(k)
+    ((spec.coarse, spec.code): @unchecked) match {
+      case (Flat, pq: Pq) => scorePq(corpus, queries, k, pq, None)
+      case (ivf: Ivf, code) =>
+        val cent = centroidFrame(corpus, ivf.nlist, ivf.centroids)
+        code match {
+          case Raw => scoreRaw(corpus, queries, k, cent, ivf)
+          case pq: Pq => scorePq(corpus, queries, k, pq, Some((cent, ivf.nprobe)))
+          case r: PqResidual if r.codebook == TrainedFp =>
+            scoreResidualFp(corpus, queries, k, cent, ivf.nprobe, r)
+          case r: PqResidual => scoreResidual(corpus, queries, k, cent, ivf, r)
+        }
+    }
+  }
 
-  /** [[ivfTopK]]'s body against an explicit broadcast centroid frame
-    * (c_id, c_vec) — shared by the deterministic and trained coarse
-    * quantizers; only where the centroids come from differs.
+  /** The ANN stages read the embeddings-table layout. */
+  private val IdCol = "vec_id"
+  private val VecCol = "embedding"
+
+  /** [[annTopK]] stage 1, the coarse quantizer as a broadcast
+    * (c_id, c_vec) frame. LowestId: the `nlist` lowest-id vectors act as
+    * centroids — no trained k-means, so the oracle can replicate the
+    * exact partition. Trained/TrainedFp: the replayable trainers below
+    * (arbitrary corpus points make lopsided cells and recall pays).
     */
-  private def ivfTopKCb(corpus: DataFrame, queries: DataFrame, k: Int,
-      cent: DataFrame, nprobe: Int,
-      idCol: String, vecCol: String): DataFrame = {
+  private def centroidFrame(corpus: DataFrame, nlist: Int, from: AnnSpec.Source): DataFrame =
+    from match {
+      case AnnSpec.LowestId => lowestIdCentroids(corpus, nlist, IdCol, VecCol)
+      case AnnSpec.Trained => centFrame(corpus.sparkSession, ivfTrainCentroidsLocal(corpus, nlist))
+      case AnnSpec.TrainedFp => centFrame(corpus.sparkSession, ivfTrainCentroidsFp(corpus, nlist))
+    }
+
+  /** The `nlist` lowest-id vectors as broadcast (c_id, c_vec) centroids. */
+  private def lowestIdCentroids(corpus: DataFrame, nlist: Int,
+      idCol: String, vecCol: String): DataFrame =
+    broadcast(corpus.filter(col(idCol) < nlist)
+      .select(col(idCol).cast("long").as("c_id"), col(vecCol).as("c_vec")))
+
+  /** Driver-trained centroids as a broadcast (c_id, c_vec) frame. */
+  private def centFrame(s: org.apache.spark.sql.SparkSession,
+      trained: Array[(Long, Array[Double])]): DataFrame = {
+    import s.implicits._
+    broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("c_id", "c_vec"))
+  }
+
+  /** Hard IVF assignment over `cands` (rows × centroids): each `id`
+    * keeps its max-cosine c_id, ties to the lower c_id, as a max over a
+    * (cos, -c_id, c_id, carry...) struct — partial-aggregatable, no
+    * window sort over the corpus. Output (id, c_id, carry...).
+    */
+  private def assignNearest(cands: DataFrame, id: String, vec: String,
+      carry: String*): DataFrame =
+    cands
+      .withColumn("cos_c", cosine(col(vec), col("c_vec")))
+      .groupBy(col(id))
+      .agg(max(struct(Seq(col("cos_c"), (-col("c_id")).as("neg_c"), col("c_id")) ++
+        carry.map(col): _*)).as("best"))
+      .select(Seq(col(id), col("best.c_id").as("c_id")) ++
+        carry.map(c => col(s"best.$c").as(c)): _*)
+
+  /** The `n` best lists of every row of `cands` (id, vec, c_id, c_vec)
+    * as (id, probes, vec), probes a bounded [[graft.functions.TopKCosAgg]]
+    * state — O(n) per row, partial-aggregatable, no window sort over the
+    * n × nlist product; probes[1] is the hard assignment. NULL cosines
+    * (zero-norm vectors: x/0 is NULL in Spark) are filtered first — the
+    * typed (Long, Double) input cannot carry null, and a zero vector has
+    * no meaningful cosine neighbors. first() is deterministic here: the
+    * vec is identical on every row of an id group.
+    */
+  private def topLists(cands: DataFrame, n: Int): DataFrame = cands
+    .withColumn("cos_c", cosine(col("vec"), col("c_vec")))
+    .filter(col("cos_c").isNotNull)
+    .groupBy(col("id"))
+    .agg(topCos(n)(col("c_id"), col("cos_c")).as("probes"), first(col("vec")).as("vec"))
+
+  /** The bounded (id, score) top-`n` aggregate, best score first, ties
+    * to the lower id ([[graft.functions.TopKCosAgg]]).
+    */
+  private def topCos(n: Int) = {
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    udaf(new graft.functions.TopKCosAgg(n), ExpressionEncoder[(Long, Double)]())
+  }
+
+  /** [[annTopK]] stage 2, routing: (n_id, c_id, n_vec), every corpus
+    * vector in its `assign` nearest lists. At scale the corpus shuffles
+    * once (by centroid) and each query touches nprobe/nlist of the data.
+    *
+    * assign > 1 is MULTI-PROBE soft assignment, the recall-ceiling
+    * breaker: trained-IVF recall@10 at nprobe=4 sits EXACTLY on the
+    * list-coverage bound (Lloyd iterations and sample size are
+    * saturated; the misses are true neighbors whose single assigned list
+    * the query never probes — cell-boundary points). Indexed into its
+    * `assign` nearest lists, a boundary neighbor is reachable from BOTH
+    * adjacent cells; the scan budget per query is nprobe·assign·(n/nlist)
+    * rows, so (assign=2, nprobe=2) costs the baseline (1, 4) scan but
+    * covers the 2×2 list-pair union instead of a 1×4 line (AnnRecallSpec
+    * holds the measured table).
+    */
+  private def routeCorpus(corpus: DataFrame, cent: DataFrame, assign: Int): DataFrame =
+    if (assign == 1)
+      assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent), "n_id", "n_vec", "n_vec")
+    else topLists(rowsOf(corpus, "id", "vec").crossJoin(cent), assign)
+      .select(col("id").as("n_id"), explode(col("probes")("_1")).as("c_id"),
+        col("vec").as("n_vec"))
+
+  /** (id, vec) of an embeddings frame under the names a stage uses. */
+  private def rowsOf(df: DataFrame, id: String, vec: String): DataFrame =
+    df.select(col(IdCol).cast("long").as(id), col(VecCol).as(vec))
+
+  /** [[annTopK]] stage 3, probes: (q_id, q_vec, c_id, c_vec), each
+    * query's `nprobe` max-cosine lists (ties to the lower c_id) — a
+    * window over the small |queries| × nlist product only.
+    */
+  private def probeLists(queries: DataFrame, cent: DataFrame, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // arg-max centroid per corpus vector: max of (cos, -c_id) struct
-    val assigned = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-      .crossJoin(cent)
-      .withColumn("cos_c", cosine(col("n_vec"), col("c_vec")))
-      .groupBy(col("n_id"))
-      .agg(max(struct(col("cos_c"), (-col("c_id")).as("neg_c"),
-        col("c_id"), col("n_vec"))).as("best"))
-      .select(col("n_id"), col("best.n_vec").as("n_vec"), col("best.c_id").as("c_id"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_q").desc, col("c_id").asc)
-    val probes = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cos_q").desc, col("c_id").asc)
+    rowsOf(queries, "q_id", "q_vec")
       .crossJoin(cent)
       .withColumn("cos_q", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("prn", row_number().over(wProbe))
+      .withColumn("prn", row_number().over(w))
       .filter(col("prn") <= nprobe)
+  }
+
+  /** [[annTopK]]'s rank tail: the `n` best rows per q_id by `by`, ties
+    * to the lower n_id, ranked 1..n in column `rank`.
+    */
+  private def keepTop(df: DataFrame, n: Int, by: Column, rank: String = "rnk"): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    df.withColumn(rank,
+        row_number().over(Window.partitionBy(col("q_id")).orderBy(by, col("n_id").asc)))
+      .filter(col(rank) <= n)
+  }
+
+  /** Exact-cosine scorer over the probed lists: the probes broadcast
+    * into ONE equi-join on the list id, then an exact rank within them.
+    * Under soft routing the candidates dedup on (q_id, n_id) first — a
+    * neighbor met through two shared cells must not take two top-k slots.
+    */
+  private def scoreRaw(corpus: DataFrame, queries: DataFrame, k: Int, cent: DataFrame,
+      ivf: AnnSpec.Ivf): DataFrame = {
+    val probes = probeLists(queries, cent, ivf.nprobe)
       .select(col("q_id"), col("q_vec"), col("c_id"))
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    broadcast(probes).join(assigned, Seq("c_id"))
+    val met = broadcast(probes).join(routeCorpus(corpus, cent, ivf.assign), Seq("c_id"))
       .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wTop))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("n_id"), col("rnk"),
-        round(col("cos"), 6).as("cos_sim"))
+    val cands = if (ivf.assign == 1) met
+      else met.select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec"))
+        .dropDuplicates("q_id", "n_id")
+    keepTop(cands.withColumn("cos", cosine(col("q_vec"), col("n_vec"))), k, col("cos").desc)
+      .select(col("q_id"), col("n_id"), col("rnk"), round(col("cos"), 6).as("cos_sim"))
+  }
+
+  /** The deterministic training sample every trainer draws: the `n`
+    * rows with the smallest portable hash of `id` — PortableHash family
+    * member i=1 as a column, h = (3*(id mod P) + 8) mod P, P = 10^9+7 —
+    * ties to the lower id. Corpus-order-independent and engine-portable,
+    * computed as a distributed top-k, never a full collect.
+    */
+  private def hashSample(df: DataFrame, id: Column, n: Int): DataFrame = {
+    val P = 1000000007L
+    df.withColumn("h", (lit(3L) * (id % P) + 8L) % P)
+      .orderBy(col("h").asc, id.asc)
+      .limit(n)
   }
 
   /** TRAINED IVF coarse quantizer: spherical k-means, fully replayable
     * — the coarse-quantizer counterpart of [[pqTrainCodebookLocal]].
     *
-    * The deterministic lowest-id centroids ([[ivfTopK]]) exist so the
+    * The deterministic lowest-id centroids ([[AnnSpec.LowestId]]) exist so the
     * oracle can replay the exact partition, but arbitrary corpus
     * points make lopsided cells and recall pays. This trainer uses the
     * same replayability recipe as the PQ trainer: a bounded
@@ -162,13 +299,8 @@ object Similarity {
   def ivfTrainCentroidsLocal(corpus: DataFrame, nlist: Int = 32,
       iters: Int = 10, sampleN: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding"): Array[(Long, Array[Double])] = {
-    val P = 1000000007L
-    val sample = corpus
-      .select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"),
-        ((lit(3L) * (col(idCol).cast("long") % P) + 8L) % P).as("h"))
-      .orderBy(col("h").asc, col("id").asc)
-      .limit(sampleN)
+    val sample = hashSample(corpus.select(col(idCol).cast("long").as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v")), col("id"), sampleN)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -278,15 +410,11 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       scaleQ: Long = 512L, normQ: Long = 32768L,
       hashSeed: Boolean = false): Array[(Long, Array[Double])] = {
-    val P = 1000000007L
     // keep the (h, id) hash order — seed positions index into it
-    val sample: Array[Array[Long]] = corpus
+    val sample: Array[Array[Long]] = hashSample(corpus
       .select(col(idCol).cast("long").as("id"),
         transform(col(vecCol),
-          x => floor(x.cast("double") * scaleQ).cast("long")).as("qv"),
-        ((lit(3L) * (col(idCol).cast("long") % P) + 8L) % P).as("h"))
-      .orderBy(col("h").asc, col("id").asc)
-      .limit(sampleN)
+          x => floor(x.cast("double") * scaleQ).cast("long")).as("qv")), col("id"), sampleN)
       .collect()
       .map(_.getSeq[Long](1).toArray)
     if (sample.isEmpty) return Array.empty
@@ -388,105 +516,10 @@ object Similarity {
     cent.zipWithIndex.map { case (cv, c) => (c.toLong, cv.map(_.toDouble)) }
   }
 
-  /** [[ivfTopK]] with the fixed-point trained quantizer — s23's path:
-    * train via [[ivfTrainCentroidsFp]] (SQL-replayable), then run the
-    * identical probed-list cosine search (one broadcast assignment
-    * scan, equi-join on the list id, exact rank within nprobe lists).
-    */
-  def ivfTopKTrainedFp(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 32, nprobe: Int = 4, iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import corpus.sparkSession.implicits._
-    val trained = ivfTrainCentroidsFp(corpus, nlist, iters, sampleN, idCol, vecCol)
-    val cent = broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("c_id", "c_vec"))
-    ivfTopKCb(corpus, queries, k, cent, nprobe, idCol, vecCol)
-  }
-
-  /** MULTI-PROBE (soft-assignment) trained IVF — the round-12 recall
-    * ceiling breaker. AnnTrainProbe proved the trained-IVF recall@10 at
-    * nprobe=4 sits EXACTLY on the list-coverage bound: Lloyd
-    * iterations and sample size are saturated, the misses are true
-    * neighbors whose single assigned list the query never probes
-    * (cell-boundary points). Soft assignment indexes every corpus
-    * vector into its `assign` nearest lists, so a boundary neighbor is
-    * reachable from BOTH adjacent cells; the scan budget per query is
-    * nprobe·assign·(n/nlist) candidate rows — (assign=2, nprobe=2)
-    * costs the same scan as the baseline (assign=1, nprobe=4) but
-    * covers the 2×2 list-pair union instead of a 1×4 line
-    * (AnnRecallSpec holds the measured table).
-    *
-    * Dataflow is [[ivfTopKTrainedFp]]'s with two changes: the routing
-    * aggregate keeps `assign` lists per corpus vector (bounded
-    * [[graft.functions.TopKCosAgg]] state, partial-aggregatable), and
-    * candidates dedup on (q_id, n_id) before the exact rank — a
-    * neighbor probed via two shared cells must not occupy two top-k
-    * slots. Same tie conventions as the whole family.
-    */
-  def ivfTopKTrainedFpSoft(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 32, nprobe: Int = 4, assign: Int = 2,
-      iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import corpus.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    import org.apache.spark.sql.expressions.Window
-    val trained = ivfTrainCentroidsFp(corpus, nlist, iters, sampleN, idCol, vecCol)
-    val cent = broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("c_id", "c_vec"))
-    val topA = udaf(new graft.functions.TopKCosAgg(assign),
-      ExpressionEncoder[(Long, Double)]())
-    val assigned = corpus
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .crossJoin(cent)
-      .withColumn("cos_c", cosine(col("vec"), col("c_vec")))
-      .filter(col("cos_c").isNotNull) // zero-norm vectors: see ivfKnnGraphTrainedFp
-      .groupBy(col("id"))
-      .agg(topA(col("c_id"), col("cos_c")).as("lists"),
-        first(col("vec")).as("vec"))
-      .select(col("id").as("n_id"), col("vec").as("n_vec"),
-        explode(col("lists")("_1")).as("c_id"))
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_q").desc, col("c_id").asc)
-    val probes = queries.select(col(idCol).cast("long").as("q_id"),
-        col(vecCol).as("q_vec"))
-      .crossJoin(cent)
-      .withColumn("cos_q", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nprobe)
-      .select(col("q_id"), col("q_vec"), col("c_id"))
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("n_id").asc)
-    broadcast(probes).join(assigned, Seq("c_id"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("q_vec"), col("n_id"), col("n_vec"))
-      .dropDuplicates("q_id", "n_id") // shared-cell pairs rank once
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wTop))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("n_id"), col("rnk"),
-        round(col("cos"), 6).as("cos_sim"))
-  }
-
-  /** [[ivfTopK]] with trained spherical-k-means centroids: train on the
-    * deterministic sample, then run the identical probed-list search
-    * (one broadcast assignment scan, equi-join on the list id, exact
-    * rank within nprobe lists). Recall delta vs the deterministic
-    * lowest-id quantizer is measured in AnnRecallSpec.
-    */
-  def ivfTopKTrained(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 32, nprobe: Int = 4, iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import corpus.sparkSession.implicits._
-    val trained = ivfTrainCentroidsLocal(corpus, nlist, iters, sampleN, idCol, vecCol)
-    val cent = broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("c_id", "c_vec"))
-    ivfTopKCb(corpus, queries, k, cent, nprobe, idCol, vecCol)
-  }
-
   /** BIG-BIG k-NN GRAPH via the IVF-partitioned block join — every
     * vector's top-k neighbors, the precursor of semantic dedup /
     * clustering over a whole corpus. Unlike the bounded-query top-k
-    * family ([[ivfTopKTrainedFp]] broadcasts the query side), BOTH
+    * family ([[annTopK]] broadcasts the query side), BOTH
     * sides here are the full corpus, so nothing is broadcast except
     * the trained centroid table:
     *
@@ -531,47 +564,16 @@ object Similarity {
   private[graft] def ivfKnnGraphFromTrained(corpus: DataFrame,
       trained: Array[(Long, Array[Double])], k: Int, nprobe: Int,
       idCol: String, vecCol: String, scope: CacheScope): DataFrame = {
-    import corpus.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val cent = broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("c_id", "c_vec"))
-    val topNp = udaf(new graft.functions.TopKCosAgg(nprobe),
-      ExpressionEncoder[(Long, Double)]())
-    val topK = udaf(new graft.functions.TopKCosAgg(k),
-      ExpressionEncoder[(Long, Double)]())
-    // one scan routes every vector: probes[1] = assignment, probes[1..nprobe]
-    // = the query-side lists (first() is deterministic here — the vec is
-    // identical on every row of an id group by construction). Scope-persisted:
-    // both sides of the candidate join derive from it, and without the cache
+    // one scan routes every vector ([[topLists]]): probes[1] = assignment,
+    // probes[1..nprobe] = the query-side lists. Scope-persisted: both
+    // sides of the candidate join derive from it, and without the cache
     // the O(n·nlist) routing scan runs twice (the .explain showed two full
     // corpus × centroid aggregation branches under the join).
-    // NULL cosines (zero-norm vectors: x/0 is NULL in Spark) are
-    // filtered before every bounded aggregation — the typed (Long,
-    // Double) input cannot carry null, and a zero vector has no
-    // meaningful cosine neighbors anyway (the window-path family ranks
-    // them last for the same reason).
-    val routed = scope.own(corpus
+    val routed = scope.own(topLists(corpus
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .crossJoin(cent)
-      .withColumn("cos_c", cosine(col("vec"), col("c_vec")))
-      .filter(col("cos_c").isNotNull)
-      .groupBy(col("id"))
-      .agg(topNp(col("c_id"), col("cos_c")).as("probes"),
-        first(col("vec")).as("vec"))
+      .crossJoin(centFrame(corpus.sparkSession, trained)), nprobe)
       .persist())
-    val assigned = routed.select(col("id").as("n_id"), col("vec").as("n_vec"),
-      element_at(col("probes"), 1)("_1").as("c_id"))
-    val probes = routed.select(col("id").as("q_id"), col("vec").as("q_vec"),
-      explode(col("probes")("_1")).as("c_id"))
-    probes.join(assigned, Seq("c_id"))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .filter(col("cos").isNotNull)
-      .groupBy(col("q_id"))
-      .agg(topK(col("n_id"), col("cos")).as("nbrs"))
-      .select(col("q_id"), posexplode(col("nbrs")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col")("_1").as("n_id"), round(col("col")("_2"), 6).as("cos_sim"))
+    knnGraphTailFromRouted(routed, k)
   }
 
   /** Both super-table builders (and their oracle replays) depend on two
@@ -616,30 +618,7 @@ object Similarity {
       ns0: Int)
       : (Seq[(Long, Seq[Double])], Seq[(Long, Long, Seq[Double])]) = {
     requireTrainedInvariants(trained)
-    val cvs: Array[Array[Long]] = trained.map(_._2.map(_.toLong))
-    val nc = cvs.length
-    val ns = math.min(ns0, nc)
-    val d = cvs.head.length
-    def dotL(a: Array[Long], b: Array[Long]): Long = {
-      var acc = 0L; var i = 0
-      while (i < d) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
-    val cAssign = Array.tabulate(nc) { c =>
-      var best = 0; var bestDot = Long.MinValue; var s = 0
-      while (s < ns) {
-        val dt = dotL(cvs(c), cvs(s))
-        if (dt > bestDot) { bestDot = dt; best = s }
-        s += 1
-      }
-      best.toLong
-    }
-    val supers = Seq.tabulate(ns)(s =>
-      (s.toLong, cvs(s).map(_.toDouble).toSeq))
-    val centRows = trained.toSeq.zipWithIndex.map {
-      case ((cid, cv), ci) => (cAssign(ci), cid, cv.toSeq)
-    }
-    (supers, centRows)
+    superTable(trained, Array.range(0, math.min(ns0, trained.length)))
   }
 
   /** The two-level router's super-centroid table: a farthest-point
@@ -659,12 +638,6 @@ object Similarity {
     val cvs: Array[Array[Long]] = trained.map(_._2.map(_.toLong))
     val nc = cvs.length
     val ns = math.min(superList, nc)
-    val d = cvs.head.length
-    def dotL(a: Array[Long], b: Array[Long]): Long = {
-      var acc = 0L; var i = 0
-      while (i < d) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
     val seedPos = new Array[Int](ns)
     val maxDot = Array.fill(nc)(Long.MinValue)
     seedPos(0) = 0
@@ -686,21 +659,39 @@ object Similarity {
       seedPos(s0) = best
       s0 += 1
     }
-    val cAssign = Array.tabulate(nc) { c =>
+    superTable(trained, seedPos)
+  }
+
+  /** Both super tables from the chosen super positions `seeds`: supers
+    * (s_id, s_vec) = the trained centroids at those positions, and
+    * every centroid assigned to its argmax-integer-dot super (strict >:
+    * ties → lowest super ordinal) as (s_id, c_id, c_vec).
+    */
+  private def superTable(trained: Array[(Long, Array[Double])], seeds: Array[Int])
+      : (Seq[(Long, Seq[Double])], Seq[(Long, Long, Seq[Double])]) = {
+    val cvs: Array[Array[Long]] = trained.map(_._2.map(_.toLong))
+    val cAssign = cvs.map { cv =>
       var best = 0; var bestDot = Long.MinValue; var s = 0
-      while (s < ns) {
-        val dt = dotL(cvs(c), cvs(seedPos(s)))
+      while (s < seeds.length) {
+        val dt = dotL(cv, cvs(seeds(s)))
         if (dt > bestDot) { bestDot = dt; best = s }
         s += 1
       }
       best.toLong
     }
-    val supers = Seq.tabulate(ns)(s =>
-      (s.toLong, cvs(seedPos(s)).map(_.toDouble).toSeq))
+    val supers = Seq.tabulate(seeds.length)(s =>
+      (s.toLong, cvs(seeds(s)).map(_.toDouble).toSeq))
     val centRows = trained.toSeq.zipWithIndex.map {
       case ((cid, cv), ci) => (cAssign(ci), cid, cv.toSeq)
     }
     (supers, centRows)
+  }
+
+  /** Exact integer dot product of two equal-length centroid vectors. */
+  private def dotL(a: Array[Long], b: Array[Long]): Long = {
+    var acc = 0L; var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
   }
 
   /** TWO-LEVEL (hierarchical) trained routing for the big-big k-NN
@@ -733,8 +724,6 @@ object Similarity {
       iters: Int = 10, sampleN: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: CacheScope = CacheScope.session): DataFrame = {
-    import corpus.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     require(superList >= 1 && superProbe >= 1,
       s"superList/superProbe must be >= 1, got $superList/$superProbe")
     ivfKnnGraph2LFromTrained(corpus,
@@ -750,10 +739,8 @@ object Similarity {
       trained: Array[(Long, Array[Double])], k: Int, nprobe: Int,
       superList: Int, superProbe: Int,
       idCol: String, vecCol: String, scope: CacheScope): DataFrame = {
-    import corpus.sparkSession.implicits._
     if (trained.isEmpty)
-      return Seq.empty[(Long, Long, Long, Double)]
-        .toDF("q_id", "rnk", "n_id", "cos_sim")
+      return emptyGraph(corpus)
     val (superRows, centRows) = kCenterSuperTable(trained, superList)
     val routed = twoLevelRouted(corpus, superRows, centRows, nprobe,
       superProbe, idCol, vecCol, scope)
@@ -775,30 +762,13 @@ object Similarity {
       nprobe: Int, superProbe: Int,
       idCol: String, vecCol: String, scope: CacheScope): DataFrame = {
     import corpus.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val supers = broadcast(superRows.toDF("s_id", "s_vec"))
+    // level 1 ranks the supers, which ride in topLists' (c_id, c_vec) slots
+    val supers = broadcast(superRows.toDF("c_id", "c_vec"))
     val centT = broadcast(centRows.toDF("s_id", "c_id", "c_vec"))
-    val topNp = udaf(new graft.functions.TopKCosAgg(nprobe),
-      ExpressionEncoder[(Long, Double)]())
-    val topSp = udaf(new graft.functions.TopKCosAgg(superProbe),
-      ExpressionEncoder[(Long, Double)]())
-    val lvl1 = corpus
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .crossJoin(supers)
-      .withColumn("cos_s", cosine(col("vec"), col("s_vec")))
-      .filter(col("cos_s").isNotNull)
-      .groupBy(col("id"))
-      .agg(topSp(col("s_id"), col("cos_s")).as("sprobes"),
-        first(col("vec")).as("vec"))
-      .select(col("id"), explode(col("sprobes")("_1")).as("s_id"), col("vec"))
-    scope.own(lvl1
-      .join(centT, Seq("s_id"))
-      .withColumn("cos_c", cosine(col("vec"), col("c_vec")))
-      .filter(col("cos_c").isNotNull)
-      .groupBy(col("id"))
-      .agg(topNp(col("c_id"), col("cos_c")).as("probes"),
-        first(col("vec")).as("vec"))
-      .persist())
+    val lvl1 = topLists(corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
+        .crossJoin(supers), superProbe)
+      .select(col("id"), explode(col("probes")("_1")).as("s_id"), col("vec"))
+    scope.own(topLists(lvl1.join(centT, Seq("s_id")), nprobe).persist())
   }
 
   /** [[ivfKnnGraphTrainedFp]]'s tail over a routed (id, probes, vec)
@@ -807,23 +777,53 @@ object Similarity {
     * shares.
     */
   private[graft] def knnGraphTailFromRouted(routed: DataFrame,
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val topK = udaf(new graft.functions.TopKCosAgg(k),
-      ExpressionEncoder[(Long, Double)]())
-    val assigned = routed.select(col("id").as("n_id"), col("vec").as("n_vec"),
-      element_at(col("probes"), 1)("_1").as("c_id"))
-    val probes = routed.select(col("id").as("q_id"), col("vec").as("q_vec"),
-      explode(col("probes")("_1")).as("c_id"))
+      k: Int): DataFrame =
+    rankedEdges(cellPairs(probesOf(routed), assignedOf(routed)), k)
+
+  /** A routed (id, probes, vec) frame's neighbor side: (n_id, n_vec,
+    * c_id = probes[1], the hard assignment).
+    */
+  private def assignedOf(routed: DataFrame): DataFrame = routed.select(col("id").as("n_id"),
+    col("vec").as("n_vec"), element_at(col("probes"), 1)("_1").as("c_id"))
+
+  /** A routed frame's query side: one (q_id, q_vec, c_id) row per probed list. */
+  private def probesOf(routed: DataFrame): DataFrame = routed.select(col("id").as("q_id"),
+    col("vec").as("q_vec"), explode(col("probes")("_1")).as("c_id"))
+
+  /** (q_id, n_id, cos) of every probe meeting an assigned vector in its
+    * cell — a shuffle EQUI-join on the cell id, never all-pairs; NULL
+    * cosines (zero-norm vectors) dropped before the bounded aggregate.
+    */
+  private def cellPairs(probes: DataFrame, assigned: DataFrame): DataFrame =
     probes.join(assigned, Seq("c_id"))
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
       .filter(col("cos").isNotNull)
-      .groupBy(col("q_id"))
-      .agg(topK(col("n_id"), col("cos")).as("nbrs"))
-      .select(col("q_id"), posexplode(col("nbrs")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col")("_1").as("n_id"), round(col("col")("_2"), 6).as("cos_sim"))
+      .select(col("q_id"), col("n_id"), col("cos"))
+
+  /** Per-query top-k of (q_id, n_id, cos) pairs at FULL precision —
+    * the stored edge form, so re-merging never reorders a near-tie.
+    */
+  private def topEdges(pairs: DataFrame, k: Int): DataFrame = pairs
+    .groupBy(col("q_id"))
+    .agg(topCos(k)(col("n_id"), col("cos")).as("nbrs"))
+    .select(col("q_id"), explode(col("nbrs")).as("e"))
+    .select(col("q_id"), col("e")("_1").as("n_id"), col("e")("_2").as("cos"))
+
+  /** Per-query top-k of (q_id, n_id, cos) pairs as the published graph
+    * (q_id, rnk, n_id, cos_sim) — rounding only at output.
+    */
+  private def rankedEdges(pairs: DataFrame, k: Int): DataFrame = pairs
+    .groupBy(col("q_id"))
+    .agg(topCos(k)(col("n_id"), col("cos")).as("nbrs"))
+    .select(col("q_id"), posexplode(col("nbrs")))
+    .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
+      col("col")("_1").as("n_id"), round(col("col")("_2"), 6).as("cos_sim"))
+
+  /** The k-NN graph answer over an empty quantizer (no corpus). */
+  private def emptyGraph(corpus: DataFrame): DataFrame = {
+    import corpus.sparkSession.implicits._
+    Seq.empty[(Long, Long, Long, Double)].toDF("q_id", "rnk", "n_id", "cos_sim")
   }
 
   /** Corpus-derived IVF geometry — the production scaling convention
@@ -883,19 +883,27 @@ object Similarity {
       iters: Int = 10, sampleN: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: CacheScope = CacheScope.session): DataFrame = {
-    import corpus.sparkSession.implicits._
-    val n = corpus.count()
-    val nlist = scaledNlist(n, targetList)
-    val trained = ivfTrainCentroidsFp(corpus, nlist, iters, sampleN,
-      idCol, vecCol, hashSeed = true)
-    if (trained.isEmpty)
-      return Seq.empty[(Long, Long, Long, Double)]
-        .toDF("q_id", "rnk", "n_id", "cos_sim")
-    val (superRows, centRows) =
-      firstNsSuperTable(trained, scaledSuperList(trained.length))
-    val routed = twoLevelRouted(corpus, superRows, centRows, nprobe,
-      superProbe, idCol, vecCol, scope)
-    knnGraphTailFromRouted(routed, k)
+    scaledRouter(corpus, targetList, nprobe, superProbe, iters, sampleN, idCol, vecCol, scope)
+      .fold(emptyGraph(corpus)) { case (_, route) => knnGraphTailFromRouted(route(corpus), k) }
+  }
+
+  /** [[knnGraphScaledFp]]'s derived quantizer: nlist from the corpus
+    * count, hash-seeded fixed-point training, the first-prefix super
+    * table — and the two-level routing it defines, as a function so the
+    * maintenance operators route a second frame through the SAME frozen
+    * tables. None = empty corpus.
+    */
+  private def scaledRouter(corpus: DataFrame, targetList: Int, nprobe: Int,
+      superProbe: Int, iters: Int, sampleN: Int, idCol: String, vecCol: String,
+      scope: CacheScope): Option[(Array[(Long, Array[Double])], DataFrame => DataFrame)] = {
+    val trained = ivfTrainCentroidsFp(corpus, scaledNlist(corpus.count(), targetList),
+      iters, sampleN, idCol, vecCol, hashSeed = true)
+    if (trained.isEmpty) None
+    else {
+      val (superRows, centRows) = firstNsSuperTable(trained, scaledSuperList(trained.length))
+      Some((trained, (df: DataFrame) => twoLevelRouted(df, superRows, centRows, nprobe,
+        superProbe, idCol, vecCol, scope)))
+    }
   }
 
   /** Graph-routed ANN — beam search over the [[ivfKnnGraphTrainedFp]]
@@ -1030,12 +1038,10 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: CacheScope = CacheScope.session): Seq[(Int, DataFrame)] = {
     import corpus.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     require(roundsWanted.nonEmpty && roundsWanted.forall(_ >= 0),
       s"roundsWanted must be non-empty, >= 0 each; got $roundsWanted")
     require(k <= beam, s"k=$k must be <= beam=$beam (the final read is a beam prefix)")
-    val topB = udaf(new graft.functions.TopKCosAgg(beam),
-      ExpressionEncoder[(Long, Double)]())
+    val topB = topCos(beam)
     val vecs = scope.own(corpus
       .select(col(idCol).cast("long").as("nid"), col(vecCol).as("nvec"))
       .persist()) // seed scan + one score join per round
@@ -1182,11 +1188,7 @@ object Similarity {
     */
   def scatterGatherMerge(partials: DataFrame, k: Int,
       m: Int = Int.MaxValue): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    partials.filter(col("srn") <= m)
-      .withColumn("mrnk", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos_sim").desc, col("n_id").asc)))
-      .filter(col("mrnk") <= k)
+    keepTop(partials.filter(col("srn") <= m), k, col("cos_sim").desc, "mrnk")
       .select(col("q_id"), col("mrnk").cast("long").as("rnk"), col("n_id"),
         col("cos_sim"), col("shard"))
   }
@@ -1200,7 +1202,7 @@ object Similarity {
     *
     * Scale shape: the all-pairs product is confined to each cluster —
     * one corpus scan against `nlist` broadcast centroids (the
-    * [[ivfTopK]] coarse quantizer, same deterministic lowest-id
+    * [[annTopK]] coarse quantizer, same deterministic lowest-id
     * centroid convention so an oracle can replay the assignment), then
     * ONE equi-join on the cluster id. At 100 TB the cluster id is the
     * shuffle key and per-cluster work is O((n/nlist)^2) instead of
@@ -1236,37 +1238,23 @@ object Similarity {
     require(nlist >= 1, s"nlist=$nlist must be positive")
     require(superList >= 1 && hierarchicalAbove >= superList,
       s"superList=$superList must be in [1, hierarchicalAbove=$hierarchicalAbove]")
-    val cent = broadcast(corpus.filter(col(idCol) < nlist)
-      .select(col(idCol).cast("long").as("c_id"), col(vecCol).as("c_vec")))
+    val cent = lowestIdCentroids(corpus, nlist, idCol, vecCol)
     val rows = corpus.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
-    val bestOf = (cands: DataFrame) => cands
-      .withColumn("cos_c", cosine(col("n_vec"), col("c_vec")))
-      .groupBy(col("n_id"))
-      .agg(max(struct(col("cos_c"), (-col("c_id")).as("neg_c"),
-        col("c_id"), col("n_vec"))).as("best"))
-      .select(col("n_id"), col("best.c_id").as("c_id"), col("best.n_vec").as("n_vec"))
+    val bestOf = (cands: DataFrame) => assignNearest(cands, "n_id", "n_vec", "n_vec")
     val picked =
       if (nlist <= hierarchicalAbove) bestOf(rows.crossJoin(cent))
       else {
         // level 1: the superList lowest-id centroids are the super
-        // cells; every centroid is pre-assigned to one (tiny cross)
-        val supers = broadcast(cent.filter(col("c_id") < superList)
-          .select(col("c_id").as("s_id"), col("c_vec").as("s_vec")))
-        val centCell = broadcast(cent
-          .crossJoin(supers)
-          .withColumn("cos_s", cosine(col("c_vec"), col("s_vec")))
-          .groupBy(col("c_id"))
-          .agg(max(struct(col("cos_s"), (-col("s_id")).as("neg_s"),
-            col("s_id"), col("c_vec"))).as("b"))
-          .select(col("b.s_id").as("s_id"), col("c_id"), col("b.c_vec").as("c_vec")))
+        // cells; every centroid is pre-assigned to one (tiny cross;
+        // supers take assignNearest's c_id/c_vec slots)
+        val supers = broadcast(cent.filter(col("c_id") < superList))
+        val centCell = broadcast(assignNearest(
+            cent.toDF("cid", "cvec").crossJoin(supers), "cid", "cvec", "cvec")
+          .select(col("c_id").as("s_id"), col("cid").as("c_id"), col("cvec").as("c_vec")))
         // level 2: rows pick their super cell, then argmax among only
         // that cell's centroids (equi-join on s_id)
-        val rowCell = rows.crossJoin(supers)
-          .withColumn("cos_s", cosine(col("n_vec"), col("s_vec")))
-          .groupBy(col("n_id"))
-          .agg(max(struct(col("cos_s"), (-col("s_id")).as("neg_s"),
-            col("s_id"), col("n_vec"))).as("b"))
-          .select(col("n_id"), col("b.s_id").as("s_id"), col("b.n_vec").as("n_vec"))
+        val rowCell = assignNearest(rows.crossJoin(supers), "n_id", "n_vec", "n_vec")
+          .withColumnRenamed("c_id", "s_id")
         bestOf(rowCell.join(centCell, "s_id"))
       }
     val assigned = scope.own(picked
@@ -1285,7 +1273,7 @@ object Similarity {
   /** Embedding-space decontamination: flag every corpus vector whose
     * cosine against ANY eval-set vector reaches `minCos`, reporting
     * the best-matching eval id (max cos, ties to the lowest eval id —
-    * the argmax convention shared with [[ivfTopK]]'s quantizer).
+    * the argmax convention shared with [[assignNearest]]).
     * The semantic sibling of [[graft.operators.Dedup.contamination]]'s
     * n-gram overlap: it catches paraphrased/reworded benchmark leakage
     * that exact n-grams miss.
@@ -1323,17 +1311,10 @@ object Similarity {
     val scored =
       if (evalIsBenchmarkSized) best(rows.crossJoin(broadcast(ev)))
       else {
-        val cent = broadcast(corpus.filter(col(idCol) < nlist)
-          .select(col(idCol).cast("long").as("c_id"), col(vecCol).as("c_vec")))
-        def assign(df: DataFrame, id: String, vec: String): DataFrame = df
-          .crossJoin(cent)
-          .withColumn("cos_c", cosine(col(vec), col("c_vec")))
-          .groupBy(col(id))
-          .agg(max(struct(col("cos_c"), (-col("c_id")).as("neg_c"),
-            col("c_id"), col(vec))).as("b"))
-          .select(col(id), col("b.c_id").as("c_id"), col(s"b.$vec").as(vec))
-        val evCell = assign(ev, "e_id", "e_vec")
-        val matched = best(assign(rows, "n_id", "n_vec").join(evCell, "c_id"))
+        val cent = lowestIdCentroids(corpus, nlist, idCol, vecCol)
+        val evCell = assignNearest(ev.crossJoin(cent), "e_id", "e_vec", "e_vec")
+        val matched = best(assignNearest(rows.crossJoin(cent), "n_id", "n_vec", "n_vec")
+          .join(evCell, "c_id"))
         rows.select(col("n_id")).join(matched, Seq("n_id"), "left")
       }
     scored.select(col("n_id").as(idCol), col("eval_id"),
@@ -1341,61 +1322,92 @@ object Similarity {
       coalesce((col("cos_e") >= minCos).cast("long"), lit(0L)).as("contaminated"))
   }
 
-  /** Product-quantization ADC top-k (Jégou et al. 2011) — the third ANN
-    * scale path beside hyperplane LSH and IVF, and the one that shrinks
-    * the SCAN itself: each vector is stored as `m` small codes (one per
-    * subspace) instead of `d` floats, and query-to-vector distance is
-    * approximated as the sum of `m` precomputed query-to-codeword
-    * distances (Asymmetric Distance Computation — codes meet the exact
-    * query, not a quantized one).
+  /** Product-quantization ADC (Jégou et al. 2011) — the ANN scorer that
+    * shrinks the SCAN itself: each vector is stored as `m` small codes
+    * (one per subspace) instead of `d` floats, and query-to-vector
+    * distance is approximated as the sum of `m` precomputed
+    * query-to-codeword distances (Asymmetric Distance Computation —
+    * codes meet the exact query, not a quantized one).
     *
-    * Deterministic codebook, same convention as [[ivfTopK]]'s coarse
-    * quantizer: subspace `j`'s codewords are the sub-vectors of the
-    * `ncode` lowest-id corpus vectors (no trained k-means, so an
-    * external engine can replicate the exact encoding). All distances
-    * are sequential left folds over per-element doubles — deterministic
-    * and engine-portable; argmin/top-k ties break to the lower id.
+    * The LowestId codebook — subspace `j`'s codewords are the
+    * sub-vectors of the `ncode` lowest-id corpus vectors, no trained
+    * k-means — lets an external engine replicate the exact encoding;
+    * the Trained one ([[pqTrainCodebookLocal]]) trades that for recall.
+    * All distances are sequential left folds over per-element doubles —
+    * deterministic and engine-portable; argmin/top-k ties break to the
+    * lower id.
     *
     * Dataflow at scale: encoding is one corpus scan + a broadcast
     * codebook join + a partial-aggregatable argmin (in production the
-    * codes are a build-once asset like d09's signature index); the
-    * search itself is ONE scan of the code table (m integers per
+    * codes are the build-once [[ensurePqIndex]] asset, passed as
+    * `codes`); the search is ONE scan of the code table (m integers per
     * vector, a 32x narrower read than the raw floats at d=64) against
-    * a broadcast per-query lookup table, with a per-row O(m) fold —
-    * no shuffle of the corpus, no all-pairs float work. Compose with
-    * [[ivfTopK]]'s coarse partition to also prune which codes scan.
+    * broadcast per-query LUTs, with a per-row O(m) fold — no shuffle of
+    * the corpus, no all-pairs float work.
+    *
+    * Under Ivf — the production shape every real vector store runs —
+    * the coarse quantizer prunes WHICH lists a query reads and PQ
+    * shrinks WHAT each read costs: the code table joins the (n_id →
+    * list) assignment once, then the probe set — (q_id, c_id) pairs x
+    * the per-query LUT, both tiny — BROADCASTS into ONE equi-join on the
+    * list id. That join IS the prune. No residual encoding, so the ADC
+    * values equal the flat scan's for every probed neighbor and an
+    * external engine can replay both halves independently. Recall is the
+    * PRODUCT of the two approximations (a neighbor must be in a probed
+    * list AND rank under the quantized distance).
     */
-  def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 8, ncode: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqSearch(pqEncode(corpus, m, ncode, idCol, vecCol),
-      corpus, queries, k, m, ncode, idCol, vecCol)
+  private def scorePq(corpus: DataFrame, queries: DataFrame, k: Int, pq: AnnSpec.Pq,
+      ivf: Option[(DataFrame, Int)]): DataFrame = {
+    val (cb, ncode) =
+      if (pq.codebook == AnnSpec.LowestId)
+        (pqCodebook(corpus, pq.m, pq.ncode, IdCol, VecCol), pq.ncode)
+      else {
+        val trained = pqTrainCodebookLocal(corpus, pq.m, pq.ncode)
+        (cbFrame(corpus.sparkSession, trained), trained.map(_.length).max)
+      }
+    val codes = pq.codes.getOrElse(
+      pqEncodeCb(pqSubspaced(corpus, "n_id", pq.m, IdCol, VecCol), cb, "c_id", "n_id"))
+    val lut = adcLut(pqSubspaced(queries, "q_id", pq.m, IdCol, VecCol), cb, "c_id",
+      pq.m, ncode, "q_id")
+    val met = ivf match {
+      case None => codes.crossJoin(broadcast(lut))
+      case Some((cent, nprobe)) =>
+        val assigned = assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent),
+          "n_id", "n_vec")
+        val probeLut = probeLists(queries, cent, nprobe).select(col("q_id"), col("c_id"))
+          .join(lut, "q_id")
+        codes.join(assigned, "n_id").join(broadcast(probeLut), Seq("c_id"))
+    }
+    keepTop(met.filter(col("n_id") =!= col("q_id")).withColumn("adc", pqAdc(pq.m, ncode)),
+        k, col("adc").asc)
+      .select(col("q_id"), col("n_id"), col("rnk"), round(col("adc"), 6).as("adc_d2"))
+  }
 
   /** Subspace-local squared L2 — sequential left fold (deterministic). */
   private def pqD2(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, t) => acc + t)
 
-  /** One row per (vector, subspace): (outId, j, sub) with sub the
-    * double-cast slice j of the vector. Width d/m is computed per row;
-    * a row whose dimension is NOT a multiple of m fails the query with
-    * an explicit error (a truncating split would silently drop the
+  /** One row per (vector, subspace): (outId, keep..., j, sub) with sub
+    * the double-cast slice j of the vector. Width d/m is computed per
+    * row; a row whose dimension is NOT a multiple of m fails the query
+    * with an explicit error (a truncating split would silently drop the
     * trailing d % m elements from every distance).
     */
   private def pqSubspaced(df: DataFrame, outId: String, m: Int,
-      idCol: String, vecCol: String): DataFrame = {
+      idCol: String, vecCol: String, keep: String*): DataFrame = {
     val subW = (org.apache.spark.sql.functions.size(col("vec")) / lit(m)).cast("int")
     val dimOk = assert_true(
       org.apache.spark.sql.functions.size(col(vecCol)) % lit(m) === 0,
       concat(lit(s"graft.pq: embedding dimension must be a multiple of m=$m; got dim="),
         org.apache.spark.sql.functions.size(col(vecCol)).cast("string")))
-    df.select(col(idCol).cast("long").as(outId),
+    val keys = col(outId) +: keep.map(col)
+    df.select((col(idCol).cast("long").as(outId) +: keep.map(col)) :+
         // assert_true yields null on pass, so the `when` always takes
         // this branch — it exists to keep the guard in the plan
         when(dimOk.isNull,
-          transform(col(vecCol), x => x.cast("double"))).as("vec"))
-      .select(col(outId), col("vec"), explode(sequence(lit(0), lit(m - 1))).as("j"))
-      .select(col(outId), col("j"),
-        slice(col("vec"), col("j") * subW + 1, subW).as("sub"))
+          transform(col(vecCol), x => x.cast("double"))).as("vec"): _*)
+      .select(keys :+ col("vec") :+ explode(sequence(lit(0), lit(m - 1))).as("j"): _*)
+      .select(keys :+ col("j") :+ slice(col("vec"), col("j") * subW + 1, subW).as("sub"): _*)
   }
 
   /** The deterministic codebook: (j, c_id, cv) — subspace j's codewords
@@ -1414,132 +1426,45 @@ object Similarity {
     */
   def pqEncode(corpus: DataFrame, m: Int = 8, ncode: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqEncodeCb(corpus, pqCodebook(corpus, m, ncode, idCol, vecCol), m, idCol, vecCol)
+    pqEncodeCb(pqSubspaced(corpus, "n_id", m, idCol, vecCol),
+      pqCodebook(corpus, m, ncode, idCol, vecCol), "c_id", "n_id")
 
-  /** [[pqEncode]] against an explicit (j, c_id, cv) codebook frame. */
-  private def pqEncodeCb(corpus: DataFrame, cb: DataFrame, m: Int,
-      idCol: String, vecCol: String): DataFrame =
-    pqSubspaced(corpus, "n_id", m, idCol, vecCol)
-      .join(cb, "j")
-      .groupBy(col("n_id"), col("j"))
-      .agg(min(struct(pqD2(col("sub"), col("cv")).as("d"), col("c_id"))).as("best"))
-      .groupBy(col("n_id"))
-      .agg(transform(sort_array(collect_list(struct(col("j"), col("best.c_id").as("c")))),
+  /** [[pqEncode]] of [[pqSubspaced]] rows against an explicit
+    * (j, `cw`, cv) codebook frame: (keys..., codes).
+    */
+  private def pqEncodeCb(sub: DataFrame, cb: DataFrame, cw: String,
+      keys: String*): DataFrame =
+    sub.join(cb, "j")
+      .groupBy(keys.map(col) :+ col("j"): _*)
+      .agg(min(struct(pqD2(col("sub"), col("cv")).as("d"), col(cw))).as("best"))
+      .groupBy(keys.map(col): _*)
+      .agg(transform(sort_array(collect_list(struct(col("j"), col(s"best.$cw").as("c")))),
         e => e("c")).as("codes"))
 
-  /** ADC search over an encoded code table: per-query LUTs (flat array
-    * indexed j*ncode + c_id) built from the same deterministic codebook,
-    * then ONE scan of the code table x broadcast LUTs with a per-row
-    * O(m) fold. `corpus` supplies only the ncode codebook rows.
-    *
-    * The flat array is built by EXPLICIT slot placement (a per-query
-    * map keyed j*ncode + c_id, expanded to a dense array with unused
-    * slots = +inf), so codeword ids only need to be < ncode — gaps in
-    * the corpus id space below ncode cannot misalign the lookup. The
-    * hot scan keeps its O(1) `element_at` per subspace.
+  /** Flat ADC LUT per `keys` group of [[pqSubspaced]] query rows:
+    * lut[j*ncode + cw + 1] = d2(query slice j, codeword cw). Built by
+    * EXPLICIT slot placement (a map keyed j*ncode + cw, expanded to a
+    * dense array with unused slots = +inf), so codeword ids only need to
+    * be < ncode — gaps in the corpus id space below ncode cannot
+    * misalign the lookup. The hot scan keeps its O(1) `element_at` per
+    * subspace.
     */
-  def pqSearch(codes: DataFrame, corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 8, ncode: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(m >= 1 && ncode >= 1, s"m=$m ncode=$ncode must be positive")
-    val lut = pqQueryLut(corpus, queries, m, ncode, idCol, vecCol)
-    val adc = codes.crossJoin(broadcast(lut))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("adc", pqAdc(m, ncode))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("n_id").asc)
-    adc.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("n_id"), col("rnk"), round(col("adc"), 6).as("adc_d2"))
-  }
-
-  /** Per-query flat ADC LUT: (q_id, lut) with lut[j*ncode + c_id + 1] =
-    * d2(query slice j, codeword c_id). Built by explicit slot placement
-    * (see [[pqSearch]]); slots for absent codeword ids are +inf.
-    */
-  private def pqQueryLut(corpus: DataFrame, queries: DataFrame, m: Int, ncode: Int,
-      idCol: String, vecCol: String): DataFrame =
-    pqQueryLutCb(pqCodebook(corpus, m, ncode, idCol, vecCol), queries, m, ncode, idCol, vecCol)
-
-  private def pqQueryLutCb(cb: DataFrame, queries: DataFrame, m: Int, ncode: Int,
-      idCol: String, vecCol: String): DataFrame =
-    pqSubspaced(queries, "q_id", m, idCol, vecCol)
-      .join(cb, "j")
-      .groupBy(col("q_id"))
+  private def adcLut(sub: DataFrame, cb: DataFrame, cw: String, m: Int, ncode: Int,
+      keys: String*): DataFrame =
+    sub.join(cb, "j")
+      .groupBy(keys.map(col): _*)
       .agg(map_from_entries(collect_list(struct(
-        (col("j") * ncode + col("c_id")).cast("int").as("slot"),
+        (col("j") * ncode + col(cw)).cast("int").as("slot"),
         pqD2(col("sub"), col("cv")).as("d")))).as("lutm"))
-      .select(col("q_id"),
+      .select(keys.map(col) :+
         transform(sequence(lit(0), lit(m * ncode - 1)),
-          p => coalesce(element_at(col("lutm"), p), lit(Double.MaxValue))).as("lut"))
+          p => coalesce(element_at(col("lutm"), p), lit(Double.MaxValue))).as("lut"): _*)
 
   /** The per-row O(m) ADC fold over a `codes` array and a `lut` array. */
   private def pqAdc(m: Int, ncode: Int): Column =
     aggregate(sequence(lit(0), lit(m - 1)), lit(0.0),
       (acc, j) => acc + element_at(col("lut"),
         (j * ncode + element_at(col("codes"), j + 1) + 1).cast("int")))
-
-  /** Composed IVF x PQ — the production ANN shape (the one every real
-    * vector store runs): a coarse quantizer prunes WHICH inverted lists
-    * a query reads, and PQ/ADC shrinks WHAT each read costs. Both
-    * halves keep their standalone conventions ([[ivfTopK]]'s
-    * deterministic lowest-id centroids with max-cosine assignment,
-    * [[pqTopK]]'s deterministic lowest-id codebook over the RAW vectors
-    * — no residual encoding, so the composed ADC values are identical
-    * to [[pqSearch]]'s for every probed neighbor and an external engine
-    * can replay both halves independently).
-    *
-    * Dataflow at scale: the code table joins the (n_id → list) coarse
-    * assignment once, then the probe set — (q_id, c_id) pairs x the
-    * per-query LUT, both tiny — BROADCASTS into ONE equi-join on the
-    * list id `c_id`. That join IS the prune: each query's ADC fold
-    * touches only the nprobe/nlist fraction of the code table, and the
-    * code table itself is the 32x-narrower read. No corpus shuffle
-    * beyond the one-time assignment (in production both the codes and
-    * the assignment are build-once assets, pre-partitioned by c_id).
-    *
-    * `codes` defaults to an inline [[pqEncode]]; pass the
-    * [[ensurePqIndex]] asset for the production split. Recall is the
-    * PRODUCT of the two approximations (a neighbor must be in a probed
-    * list AND rank under the quantized distance) — measured in
-    * AnnRecallSpec against s01/s04/s12.
-    */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 32, nprobe: Int = 4, m: Int = 8, ncode: Int = 16,
-      codes: Option[DataFrame] = None,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nlist >= 1 && nprobe >= 1, s"nlist=$nlist nprobe=$nprobe must be positive")
-    val cent = broadcast(corpus.filter(col(idCol) < nlist)
-      .select(col(idCol).cast("long").as("c_id"), col(vecCol).as("c_vec")))
-    // coarse assignment n_id -> inverted list (arg-max cosine centroid,
-    // ties to the lower c_id) — partial-aggregatable, one corpus pass
-    val assigned = corpus.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
-      .crossJoin(cent)
-      .withColumn("cos_c", cosine(col("n_vec"), col("c_vec")))
-      .groupBy(col("n_id"))
-      .agg(max(struct(col("cos_c"), (-col("c_id")).as("neg_c"), col("c_id"))).as("best"))
-      .select(col("n_id"), col("best.c_id").as("c_id"))
-    val listedCodes = codes.getOrElse(pqEncode(corpus, m, ncode, idCol, vecCol))
-      .join(assigned, "n_id")
-    // probe set: each query's nprobe nearest centroid lists
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cos_q").desc, col("c_id").asc)
-    val probes = queries.select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-      .crossJoin(cent)
-      .withColumn("cos_q", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nprobe)
-      .select(col("q_id"), col("c_id"))
-    val probeLut = probes.join(pqQueryLut(corpus, queries, m, ncode, idCol, vecCol), "q_id")
-    // THE prune: equi-join on the list id — only probed lists scan
-    val adc = listedCodes.join(broadcast(probeLut), Seq("c_id"))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("adc", pqAdc(m, ncode))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("n_id").asc)
-    adc.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("n_id"), col("rnk"), round(col("adc"), 6).as("adc_d2"))
-  }
 
   /** The deterministic codebook collected to the driver —
     * `cb(j)(c)` = codeword c of subspace j. m x ncode x (d/m) doubles
@@ -1612,7 +1537,7 @@ object Similarity {
     *
     * Returns `cb(j)(c) = (c, centroid)` — codeword "ids" are DENSE
     * ranks 0..ncode-1 (they are trained centers, not corpus points).
-    * Feed to [[pqEncodeTrained]] / [[pqSearchTrained]], or to
+    * Used by [[annTopK]]'s Trained codebooks, or fed to
     * [[pqEncodeLocal]] for streaming rows. Recall deltas vs the
     * deterministic codebook are measured in AnnRecallSpec.
     */
@@ -1620,15 +1545,8 @@ object Similarity {
       iters: Int = 10, sampleN: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : Array[Array[(Long, Array[Double])]] = {
-    // portable hash family member i=1 (PortableHash.family) as a column:
-    // h = (3*(id mod P) + 8) mod P — deterministic, engine-portable
-    val P = 1000000007L
-    val sample = corpus
-      .select(col(idCol).cast("long").as("id"),
-        transform(col(vecCol), x => x.cast("double")).as("v"),
-        ((lit(3L) * (col(idCol).cast("long") % P) + 8L) % P).as("h"))
-      .orderBy(col("h").asc, col("id").asc)
-      .limit(sampleN)
+    val sample = hashSample(corpus.select(col(idCol).cast("long").as("id"),
+        transform(col(vecCol), x => x.cast("double")).as("v")), col("id"), sampleN)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -1680,7 +1598,7 @@ object Similarity {
   }
 
   /** A local codebook (trained or collected) as a broadcast (j, c_id,
-    * cv) frame — the shape [[pqEncodeCb]]/[[pqQueryLutCb]] consume.
+    * cv) frame — the shape [[pqEncodeCb]]/[[adcLut]] consume.
     */
   private def cbFrame(s: org.apache.spark.sql.SparkSession,
       cb: Array[Array[(Long, Array[Double])]]): DataFrame = {
@@ -1690,118 +1608,57 @@ object Similarity {
     }.toSeq.toDF("j", "c_id", "cv"))
   }
 
-  /** [[pqEncode]] with a trained codebook (same distributed one-scan +
-    * broadcast-join + argmin shape; only the codewords differ).
+  /** RESIDUAL ADC — the exact faiss IVFPQ shape: each corpus vector is
+    * PQ-encoded as its residual `v - centroid(v)` against its assigned
+    * coarse centroid, and each query builds one LUT PER PROBED LIST from
+    * its own residual against that list's centroid. Residuals are much
+    * smaller than raw vectors (the coarse quantizer removes the dominant
+    * direction), so the same m x ncode codebook spends its codewords on
+    * fine structure — measurably better recall than raw-vector ADC at
+    * identical code size (AnnRecallSpec).
+    *
+    * LowestId codebook: subspace slices of the ncode lowest-id residuals
+    * PAST the centroid range — under LowestId centroids the nlist lowest
+    * ids are the centroids themselves, which assign to themselves with
+    * residual ZERO (a codebook of zeros degenerates ADC to id order).
+    * Codeword ids re-based to dense 0..ncode-1. Fully deterministic, so
+    * the oracle replays s16's whole composition. Trained codebook:
+    * [[pqTrainCodebookLocal]] run over the deterministic hash-sample of
+    * the RESIDUALS — the quantity the codebook actually encodes.
+    *
+    * Dataflow is [[scorePq]]'s with one twist: the LUT is keyed on
+    * (q_id, c_id), not q_id — still a broadcast of nprobe x m x ncode
+    * doubles per query against ONE equi-join on the list id.
     */
-  def pqEncodeTrained(corpus: DataFrame, cb: Array[Array[(Long, Array[Double])]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqEncodeCb(corpus, cbFrame(corpus.sparkSession, cb), cb.length, idCol, vecCol)
-
-  /** [[pqSearch]] with a trained codebook over a matching code table. */
-  def pqSearchTrained(codes: DataFrame, queries: DataFrame, k: Int,
-      cb: Array[Array[(Long, Array[Double])]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = cb.length
-    val ncode = cb.map(_.length).max
-    val lut = pqQueryLutCb(cbFrame(queries.sparkSession, cb), queries, m, ncode, idCol, vecCol)
-    val adc = codes.crossJoin(broadcast(lut))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("adc", pqAdc(m, ncode))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("n_id").asc)
-    adc.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+  private def scoreResidual(corpus: DataFrame, queries: DataFrame, k: Int,
+      cent: DataFrame, ivf: AnnSpec.Ivf, r: AnnSpec.PqResidual): DataFrame = {
+    val (m, ncode, nlist) = (r.m, r.ncode, ivf.nlist)
+    def res(v: String) = zip_with(col(v), col("c_vec"),
+      (a, b) => a.cast("double") - b.cast("double"))
+    val assigned = assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent),
+        "n_id", "n_vec", "n_vec", "c_vec")
+      .select(col("n_id"), col("c_id"), res("n_vec").as("res"))
+    val cb =
+      if (r.codebook == AnnSpec.LowestId)
+        broadcast(pqSubspaced(
+            assigned.filter(col("n_id") >= nlist && col("n_id") < nlist + ncode)
+              .select((col("n_id") - nlist).as("rid"), col("res")),
+            "c_id2", m, "rid", "res")
+          .select(col("j"), col("c_id2").as("cw"), col("sub").as("cv")))
+      else cbFrame(corpus.sparkSession, pqTrainCodebookLocal(
+          assigned.select(col("n_id").as(IdCol), col("res").as(VecCol)), m, ncode))
+        .select(col("j"), col("c_id").as("cw"), col("cv"))
+    val codes = pqEncodeCb(
+      pqSubspaced(assigned.select(col("n_id"), col("res")), "n_id", m, "n_id", "res")
+        .join(assigned.select(col("n_id"), col("c_id")), "n_id"),
+      cb, "cw", "n_id", "c_id")
+    val probes = probeLists(queries, cent, ivf.nprobe)
+      .select(col("q_id"), col("c_id"), res("q_vec").as("qres"))
+    val lut = adcLut(pqSubspaced(probes, "q_id", m, "q_id", "qres", "c_id"), cb, "cw",
+      m, ncode, "q_id", "c_id")
+    val met = codes.join(broadcast(lut), Seq("c_id")).filter(col("n_id") =!= col("q_id"))
+    keepTop(met.withColumn("adc", pqAdc(m, ncode)), k, col("adc").asc)
       .select(col("q_id"), col("n_id"), col("rnk"), round(col("adc"), 6).as("adc_d2"))
-  }
-
-  /** Trained-codebook PQ top-k: train on the deterministic sample,
-    * encode, ADC-search. The one-call form AnnRecallSpec measures
-    * against [[pqTopK]]'s deterministic codebook.
-    */
-  def pqTopKTrained(corpus: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 8, ncode: Int = 16, iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val cb = pqTrainCodebookLocal(corpus, m, ncode, iters, sampleN, idCol, vecCol)
-    pqSearchTrained(pqEncodeTrained(corpus, cb, idCol, vecCol),
-      queries, k, cb, idCol, vecCol)
-  }
-
-  /** RESIDUAL-encoding IVF x PQ — the exact faiss IVFPQ shape: each
-    * corpus vector is PQ-encoded as its residual `v - centroid(v)`
-    * against its assigned coarse centroid, and each query builds one
-    * LUT PER PROBED LIST from its own residual against that list's
-    * centroid. Residuals are much smaller than raw vectors (the coarse
-    * quantizer removes the dominant direction), so the same m x ncode
-    * codebook spends its codewords on fine structure — measurably
-    * better recall than raw-vector ADC at identical code size
-    * (AnnRecallSpec).
-    *
-    * Still fully deterministic: centroids are the nlist lowest-id
-    * vectors (max-cosine assignment, ties to lower c_id) and the
-    * residual codebook is the lowest-id residuals per subspace — an
-    * external engine can replay everything. Spec-verified (recall +
-    * determinism); the oracle-checked row stays s15's raw-vector
-    * composition, whose ADC values are shared with s12/s13.
-    *
-    * Dataflow is s15's with one twist: the LUT join key is
-    * (q_id, c_id), not q_id — still a broadcast of
-    * nprobe x m x ncode doubles per query against ONE equi-join on
-    * the list id.
-    */
-  def ivfPqTopKResidual(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 32, nprobe: Int = 4, m: Int = 8, ncode: Int = 16,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(nlist >= 1 && nprobe >= 1, s"nlist=$nlist nprobe=$nprobe must be positive")
-    // the per-(query, list) LUT key below packs q_id*10000 + c_id into
-    // one long for pqSubspaced's single-id contract; c_id < nlist keeps
-    // the pack collision-free only while nlist stays under the radix
-    require(nlist <= 10000, s"nlist=$nlist exceeds the 10000 LUT-key radix")
-    val cent = broadcast(corpus.filter(col(idCol) < nlist)
-      .select(col(idCol).cast("long").as("c_id"), col(vecCol).as("c_vec")))
-    // residual codebook: subspace slices of the ncode lowest-id
-    // residuals PAST the centroid range — the nlist lowest ids are the
-    // centroids themselves, which assign to themselves with residual
-    // ZERO (a codebook of zeros degenerates ADC to id order). Codeword
-    // ids re-based to dense 0..ncode-1.
-    ivfPqResidualSearch(corpus, queries, k, cent, nprobe, m, ncode,
-      idCol, vecCol,
-      assigned => broadcast(pqSubspaced(
-          assigned.filter(col("n_id") >= nlist && col("n_id") < nlist + ncode)
-            .select((col("n_id") - nlist).as("rid"), col("res")),
-          "c_id2", m, "rid", "res")
-        .select(col("j"), col("c_id2").as("cw"), col("sub").as("cv"))))
-  }
-
-  /** [[ivfPqTopKResidual]] with BOTH stages trained — the full faiss
-    * IVFPQ recipe on the engine's replayable-training recipes: coarse
-    * centroids from the spherical-k-means trainer
-    * ([[ivfTrainCentroidsLocal]], s23's quantizer) and the residual
-    * codebook from per-subspace Lloyd k-means
-    * ([[pqTrainCodebookLocal]]) run over the deterministic hash-sample
-    * of the RESIDUALS — the quantity the codebook actually encodes.
-    * Identical search dataflow; only the two broadcast assets differ.
-    * Recall deltas vs the deterministic composition are measured in
-    * AnnRecallSpec.
-    */
-  def ivfPqTopKResidualTrained(corpus: DataFrame, queries: DataFrame, k: Int,
-      nlist: Int = 32, nprobe: Int = 4, m: Int = 8, ncode: Int = 16,
-      iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import corpus.sparkSession.implicits._
-    require(nlist >= 1 && nprobe >= 1, s"nlist=$nlist nprobe=$nprobe must be positive")
-    require(nlist <= 10000, s"nlist=$nlist exceeds the 10000 LUT-key radix")
-    val trained = ivfTrainCentroidsLocal(corpus, nlist, iters, sampleN, idCol, vecCol)
-    val cent = broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("c_id", "c_vec"))
-    ivfPqResidualSearch(corpus, queries, k, cent, nprobe, m, ncode,
-      idCol, vecCol,
-      assigned => {
-        val cb = pqTrainCodebookLocal(
-          assigned.select(col("n_id").as("vec_id"), col("res").as("embedding")),
-          m, ncode, iters, sampleN)
-        cbFrame(corpus.sparkSession, cb)
-          .select(col("j"), col("c_id").as("cw"), col("cv"))
-      })
   }
 
   /** Per-subspace Lloyd k-means over quantized residual slices in pure
@@ -1861,72 +1718,56 @@ object Similarity {
     cb
   }
 
-  /** FULLY-TRAINED residual IVF×PQ in fixed point — s24's path: the
-    * faiss-IVFPQ recipe with BOTH trainings SQL-replayable. Coarse
-    * centroids from [[ivfTrainCentroidsFp]]; residuals taken against
-    * the UNIT-rescaled centroid (cv/2^15 — an exact power-of-two
-    * division) and quantized at ×2^12 (floor — exact); the residual
-    * codebook from [[pqTrainCodebookFp]]'s integer Lloyd over the
-    * deterministic hash-sample of those quantized residuals. ADC is
-    * the exact INTEGER sum of per-subspace squared distances — the
-    * oracle replays training, encoding, probing, and scoring
-    * bit-for-bit (no float folds anywhere past the probe cosines,
-    * which follow the proven s04 fold pattern).
+  /** Quantized residual vs the assigned centroid (column c_vec, a
+    * ×2^15 fixed-point centroid): rescaled to unit norm (/2^15 — an
+    * exact power-of-two division), quantized at ×2^12 (floor — exact).
+    */
+  private def fpResidual(vec: Column): Column = zip_with(vec, col("c_vec"),
+    (a, b) => floor((a.cast("double") - b / 32768.0d) * 4096.0d).cast("long"))
+
+  /** The residual codebook's training rows: the quantized residuals
+    * (qres) of the `n`-row hash sample of an (n_id, qres) frame.
+    */
+  private def fpResidualSample(assigned: DataFrame, n: Int): Array[Array[Long]] =
+    hashSample(assigned, col("n_id"), n).select(col("qres")).collect()
+      .map(_.getSeq[Long](0).toArray)
+
+  /** FIXED-POINT residual ADC — s24's path: the faiss-IVFPQ recipe with
+    * BOTH trainings SQL-replayable. Residuals against the TrainedFp
+    * centroids are [[fpResidual]]s; the residual codebook is
+    * [[pqTrainCodebookFp]]'s integer Lloyd over the deterministic
+    * hash-sample of those residuals. ADC is the exact INTEGER sum of
+    * per-subspace squared distances — the oracle replays training,
+    * encoding, probing, and scoring bit-for-bit (no float folds
+    * anywhere past the probe cosines, which follow the proven s04 fold
+    * pattern).
     *
     * Bounds: |res_i| ≤ ~2 ⇒ |qres_i| ≤ 2^13; per-subspace d² ≤
     * 8·(2^14)² = 2^31; ADC ≤ 2^34 — Longs with headroom.
+    *
+    * `rerankC` is the ADC candidate budget of the exact-integer rerank:
+    * -1 = 8k (the faiss-style refine default), 0 = rank by ADC alone.
+    * Measured at sf0.01/50 queries: ADC-only recall@10 0.310 -> 0.494
+    * with C=4k -> 0.514 with C=8k — 0.514 is exactly the trained-IVF
+    * nprobe=4 list-coverage ceiling, i.e. the rerank recovers
+    * EVERYTHING the 8x32 codebook loses; past C=8k the knob to turn is
+    * nprobe (0.688 at 8, 0.892 at 16), not C.
     */
-  def ivfPqTopKResidualTrainedFp(corpus: DataFrame, queries: DataFrame,
-      k: Int, nlist: Int = 32, nprobe: Int = 4, m: Int = 8, ncode: Int = 32,
-      iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      rerankC: Int = -1,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  private def scoreResidualFp(corpus: DataFrame, queries: DataFrame, k: Int,
+      cent: DataFrame, nprobe: Int, r: AnnSpec.PqResidual): DataFrame = {
     import corpus.sparkSession.implicits._
-    require(k >= 1 && nlist >= 1 && nprobe >= 1,
-      s"need k/nlist/nprobe >= 1, got k=$k nlist=$nlist nprobe=$nprobe")
-    // ADC candidate budget for the exact-integer rerank; -1 = 8k (the
-    // faiss-style refine default), 0 = rank by ADC alone (pre-round-12
-    // behavior). Measured at sf0.01/50 queries: ADC-only recall@10
-    // 0.310 -> 0.494 with C=4k -> 0.514 with C=8k — 0.514 is exactly
-    // the trained-IVF nprobe=4 list-coverage ceiling, i.e. the rerank
-    // recovers EVERYTHING the 8x32 codebook loses; past C=8k the knob
-    // to turn is nprobe (0.688 at 8, 0.892 at 16), not C.
-    val cBudget = if (rerankC == -1) 8 * k else rerankC
-    val P = 1000000007L
-    val trained = ivfTrainCentroidsFp(corpus, nlist, iters, sampleN, idCol, vecCol)
-    val cent = broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("c_id", "c_vec"))
-    val d = 64
-    val sub = d / m
-    // quantized residual vs the assigned centroid: exact ops only
-    def qresOf(vec: Column) = zip_with(vec, col("c_vec"),
-      (a, b) => floor((a.cast("double") - b / 32768.0d) * 4096.0d).cast("long"))
-    // assignment as a partial-aggregatable max-struct argmax (cos DESC,
-    // c_id ASC via the negated id — same tie rule the oracle's
-    // row_number spells), not a 32x-corpus window shuffle; persisted:
-    // the residual-sample collect and the encode pass both read it
-    val assigned = scope.own(corpus
-      .select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
-      .crossJoin(cent)
-      .withColumn("cos_c", cosine(col("n_vec"), col("c_vec")))
-      .groupBy(col("n_id"))
-      .agg(max(struct(col("cos_c"), (-col("c_id")).as("neg_c"),
-        col("c_id"), col("n_vec"), col("c_vec"))).as("b"))
-      .select(col("n_id"), col("b.c_id").as("c_id"),
-        col("b.n_vec").as("n_vec"), col("b.c_vec").as("c_vec"))
-      .select(col("n_id"), col("c_id"), qresOf(col("n_vec")).as("qres"))
-      .persist())
-    // residual-codebook training over the deterministic hash-sample
-    val rsample: Array[Array[Long]] = assigned
-      .withColumn("h", (lit(3L) * (col("n_id") % P) + 8L) % P)
-      .orderBy(col("h").asc, col("n_id").asc)
-      .limit(sampleN)
-      .select(col("qres"))
-      .collect()
-      .map(_.getSeq[Long](0).toArray)
-    val cbArr = pqTrainCodebookFp(rsample, m, ncode, iters)
+    val (m, sub) = (r.m, 64 / r.m)
+    val cBudget = if (r.rerankC == -1) 8 * k else r.rerankC
+    // assignment (the max-struct argmax: cos DESC, c_id ASC — the tie
+    // rule the oracle's row_number spells — not a 32x-corpus window
+    // shuffle) + quantized residual, persisted: the residual-sample
+    // collect and the encode pass both read it
+    val assigned = CacheScope.session.own(
+      assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent),
+          "n_id", "n_vec", "n_vec", "c_vec")
+        .select(col("n_id"), col("c_id"), fpResidual(col("n_vec")).as("qres"))
+        .persist())
+    val cbArr = pqTrainCodebookFp(fpResidualSample(assigned, 4096), m, r.ncode, 10)
     val cb = broadcast(cbArr.zipWithIndex.flatMap { case (cws, j) =>
       cws.zipWithIndex.map { case (cv, cw) => (j, cw.toLong, cv.toSeq) }
     }.toSeq.toDF("j", "cw", "cv"))
@@ -1942,28 +1783,19 @@ object Similarity {
       .groupBy(col("n_id"), col("c_id"), col("j"))
       .agg(min(struct(d2Fp(col("slice"), col("cv")).as("d2"), col("cw"))).as("b"))
       .select(col("n_id"), col("c_id"), col("j"), col("b.cw").as("cw"))
-    // probe: nprobe best lists per query by cosine, residual per list
-    val wProbe = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos_q").desc, col("c_id").asc)
-    val probes = queries
-      .select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-      .crossJoin(cent)
-      .withColumn("cos_q", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("prn", row_number().over(wProbe)).filter(col("prn") <= nprobe)
-      .select(col("q_id"), col("c_id"), qresOf(col("q_vec")).as("qres"))
+    val probes = probeLists(queries, cent, nprobe)
+      .select(col("q_id"), col("c_id"), fpResidual(col("q_vec")).as("qres"))
     // LUT: integer d² of the query's residual slice vs every codeword
     val lut = subspaced(probes, Seq(col("q_id"), col("c_id")))
       .join(cb, "j")
       .select(col("q_id"), col("c_id"), col("j"), col("cw"),
         d2Fp(col("slice"), col("cv")).as("d2"))
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("adc_fp").asc, col("n_id").asc)
     val adc = codes.join(broadcast(lut), Seq("c_id", "j", "cw"))
       .filter(col("n_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("n_id"), col("c_id"))
       .agg(sum(col("d2")).as("adc_fp"))
     if (cBudget <= 0)
-      adc.withColumn("rnk", row_number().over(wk))
-        .filter(col("rnk") <= k)
+      keepTop(adc, k, col("adc_fp").asc)
         .select(col("q_id"), col("n_id"), col("rnk"), col("adc_fp"))
     else {
       // exact-integer rerank over the ADC top-C: the centroid cancels
@@ -1972,17 +1804,12 @@ object Similarity {
       // up to the ±1/dim quantization floor — cross-list comparable,
       // commutative integer sums, SQL-replayable. Candidates stay
       // bounded at C per query; both joins are slim equi-joins.
-      val wr = Window.partitionBy(col("q_id"))
-        .orderBy(col("d2_fp").asc, col("n_id").asc)
-      adc.withColumn("crn", row_number().over(wk)).filter(col("crn") <= cBudget)
+      val cands = keepTop(adc, cBudget, col("adc_fp").asc, "crn")
         .join(probes.select(col("q_id"), col("c_id"), col("qres").as("q_qres")),
           Seq("q_id", "c_id"))
         .join(assigned.select(col("n_id"), col("qres").as("n_qres")), Seq("n_id"))
-        .withColumn("d2_fp", aggregate(
-          zip_with(col("q_qres"), col("n_qres"), (x, y) => (x - y) * (x - y)),
-          lit(0L), (acc, t) => acc + t))
-        .withColumn("rnk", row_number().over(wr))
-        .filter(col("rnk") <= k)
+        .withColumn("d2_fp", d2Fp(col("q_qres"), col("n_qres")))
+      keepTop(cands, k, col("d2_fp").asc)
         .select(col("q_id"), col("n_id"), col("rnk"), col("adc_fp"), col("d2_fp"))
     }
   }
@@ -2014,50 +1841,38 @@ object Similarity {
       iters: Int = 10, sampleN: Int = 4096, cBudget: Int = 40,
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: CacheScope = CacheScope.session): DataFrame = {
-    import corpus.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     require(k >= 1 && cBudget >= k,
       s"need cBudget >= k >= 1, got k=$k cBudget=$cBudget")
-    val trained = ivfTrainCentroidsFp(corpus, nlist, iters, sampleN, idCol, vecCol)
-    val cent = broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("c_id", "c_vec"))
-    val topNp = udaf(new graft.functions.TopKCosAgg(nprobe),
-      ExpressionEncoder[(Long, Double)]())
+    val cent = centFrame(corpus.sparkSession,
+      ivfTrainCentroidsFp(corpus, nlist, iters, sampleN, idCol, vecCol))
     // ONE routing scan (s30's sanctioned corpus × broadcast-centroids
     // shape): probes[1] = the hard assignment, probes[1..nprobe] = the
     // query-side lists. Persisted — assignment, q-side residuals, and
     // the rerank all derive from it.
-    val routed = scope.own(corpus
+    val routed = scope.own(topLists(corpus
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .crossJoin(cent)
-      .withColumn("cos_c", cosine(col("vec"), col("c_vec")))
-      .filter(col("cos_c").isNotNull)
-      .groupBy(col("id"))
-      .agg(topNp(col("c_id"), col("cos_c")).as("probes"),
-        first(col("vec")).as("vec"))
+      .crossJoin(cent), nprobe)
       .persist())
-    pqGraphFromRouted(routed, cent, k, m, ncode, iters, sampleN, cBudget, scope)
+    pqGraphRanked(corpus,
+      pqGraphPrepFromRouted(routed, cent, m, ncode, iters, sampleN, scope), k, cBudget)
   }
 
-  /** PQ graph pipeline over a routed (id, probes, vec) frame — shared
+  /** The PQ graph pipeline over a routed (id, probes, vec) frame, shared
     * by the flat-routed [[pqKnnGraphTrainedFp]] and the corpus-scaled
     * [[pqKnnGraphScaledFp]]: residual quantization vs the assigned
     * centroid, integer-Lloyd codebook on the deterministic hash-sample,
-    * codegen encode/ADC, bounded ADC top-`cBudget`, exact-integer
-    * rerank.
+    * codegen encode/ADC ([[pqGraphPrepFromRouted]]), then bounded ADC
+    * top-`cBudget` and exact-integer rerank ([[pqGraphRankFromPrep]]).
+    * No prep (empty corpus) is the empty graph.
     */
-  private def pqGraphFromRouted(routed: DataFrame, cent: DataFrame,
-      k: Int, m: Int, ncode: Int, iters: Int, sampleN: Int, cBudget: Int,
-      scope: CacheScope): DataFrame = {
-    import routed.sparkSession.implicits._
-    pqGraphPrepFromRouted(routed, cent, m, ncode, iters, sampleN, scope) match {
-      case None => Seq.empty[(Long, Long, Int, Long, Long)]
-        .toDF("q_id", "n_id", "rnk", "adc_fp", "d2_fp")
-      case Some(prep) => pqGraphRankFromPrep(prep, k, cBudget)
-    }
+  private def pqGraphRanked(corpus: DataFrame, prep: Option[PqGraphPrep], k: Int,
+      cBudget: Int): DataFrame = {
+    import corpus.sparkSession.implicits._
+    prep.fold(Seq.empty[(Long, Long, Int, Long, Long)]
+      .toDF("q_id", "n_id", "rnk", "adc_fp", "d2_fp"))(pqGraphRankFromPrep(_, k, cBudget))
   }
 
-  /** The cBudget-independent front of [[pqGraphFromRouted]]:
+  /** The cBudget-independent front of the PQ graph pipeline:
     * assignment + quantized residuals, the integer-Lloyd residual
     * codebook, codegen-encoded neighbor codes, and the per-(query,
     * probed list) residual query side. Split out so a multi-budget
@@ -2073,27 +1888,15 @@ object Similarity {
       cent: DataFrame, m: Int, ncode: Int, iters: Int, sampleN: Int,
       scope: CacheScope): Option[PqGraphPrep] = {
     import org.apache.spark.sql.graftbridge.Bridge
-    val P = 1000000007L
-    def qresOf(vec: Column) = zip_with(vec, col("c_vec"),
-      (a, b) => floor((a.cast("double") - b / 32768.0d) * 4096.0d).cast("long"))
     // neighbor side: hard assignment, ×2^12-quantized residual vs the
     // assigned list's centroid (exact ops only)
-    val assigned = scope.own(routed
-      .select(col("id").as("n_id"),
-        element_at(col("probes"), 1)("_1").as("c_id"), col("vec"))
+    val assigned = scope.own(assignedOf(routed)
       .join(cent, "c_id")
-      .select(col("n_id"), col("c_id"), qresOf(col("vec")).as("qres"))
+      .select(col("n_id"), col("c_id"), fpResidual(col("n_vec")).as("qres"))
       .persist())
     // residual codebook: integer Lloyd over the deterministic
     // hash-sample (bounded driver-planning step, the s23/s24 class)
-    val rsample: Array[Array[Long]] = assigned
-      .withColumn("h", (lit(3L) * (col("n_id") % P) + 8L) % P)
-      .orderBy(col("h").asc, col("n_id").asc)
-      .limit(sampleN)
-      .select(col("qres"))
-      .collect()
-      .map(_.getSeq[Long](0).toArray)
-    val cbArr = pqTrainCodebookFp(rsample, m, ncode, iters)
+    val cbArr = pqTrainCodebookFp(fpResidualSample(assigned, sampleN), m, ncode, iters)
     if (cbArr.isEmpty) return None // empty corpus: nothing to encode
     val ncw = cbArr.head.length
     val sub = cbArr.head.head.length
@@ -2112,11 +1915,9 @@ object Similarity {
     val coded = assigned.withColumn("codes", encodeCol(col("qres")))
     // query side: one row per (q, probed list) with the residual vs
     // THAT list's centroid — candidates in a list score against it
-    val qside = scope.own(routed
-      .select(col("id").as("q_id"), col("vec"),
-        explode(col("probes")("_1")).as("c_id"))
+    val qside = scope.own(probesOf(routed)
       .join(cent, "c_id")
-      .select(col("q_id"), col("c_id"), qresOf(col("vec")).as("q_qres"))
+      .select(col("q_id"), col("c_id"), fpResidual(col("q_vec")).as("q_qres"))
       .persist())
     // block join on the list id (shuffle equi-join — never all-pairs)
     // + codegen ADC: budget-INDEPENDENT, so it is computed (and
@@ -2133,7 +1934,7 @@ object Similarity {
     Some(PqGraphPrep(assigned, scored, qside))
   }
 
-  /** The per-cBudget tail of [[pqGraphFromRouted]]: bounded ADC top-C
+  /** The per-cBudget tail of the PQ graph pipeline: bounded ADC top-C
     * per query (−adc is exact in a double: adc ≤ 2^34 ≪ 2^53), then
     * the exact-integer rerank of the bounded candidates — slim
     * id-keyed equi-joins, d2_fp = scaled exact L2 of q−n (the centroid
@@ -2145,27 +1946,21 @@ object Similarity {
     // guard; a cBudget < k would silently truncate instead of failing
     require(k >= 1 && cBudget >= k,
       s"need 1 <= k <= cBudget; got k=$k, cBudget=$cBudget")
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.graftbridge.Bridge
-    val topC = udaf(new graft.functions.TopKCosAgg(cBudget),
-      ExpressionEncoder[(Long, Double)]())
+    val topC = topCos(cBudget)
     val cand = prep.scored
       .groupBy(col("q_id"))
       .agg(topC(col("n_id"), -col("adc_fp").cast("double")).as("cand"))
       .select(col("q_id"), explode(col("cand")).as("e"))
       .select(col("q_id"), col("e")("_1").as("n_id"),
         (-col("e")("_2")).cast("long").as("adc_fp"))
-    val wr = Window.partitionBy(col("q_id"))
-      .orderBy(col("d2_fp").asc, col("n_id").asc)
-    cand
-      .join(prep.assigned.select(col("n_id"), col("c_id"),
-        col("qres").as("n_qres")), Seq("n_id"))
-      .join(prep.qside, Seq("q_id", "c_id"))
-      .withColumn("d2_fp", Bridge.column(graft.functions.L2Fp(
-        Bridge.expression(col("q_qres")), Bridge.expression(col("n_qres")))))
-      .withColumn("rnk", row_number().over(wr))
-      .filter(col("rnk") <= k)
+    keepTop(cand
+        .join(prep.assigned.select(col("n_id"), col("c_id"),
+          col("qres").as("n_qres")), Seq("n_id"))
+        .join(prep.qside, Seq("q_id", "c_id"))
+        .withColumn("d2_fp", Bridge.column(graft.functions.L2Fp(
+          Bridge.expression(col("q_qres")), Bridge.expression(col("n_qres"))))),
+        k, col("d2_fp").asc)
       .select(col("q_id"), col("n_id"), col("rnk"), col("adc_fp"), col("d2_fp"))
   }
 
@@ -2198,50 +1993,22 @@ object Similarity {
       iters: Int = 10, sampleN: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: CacheScope = CacheScope.session): DataFrame = {
-    import base.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val nbase = base.count()
-    val nlist = scaledNlist(nbase, targetList)
-    val trained = ivfTrainCentroidsFp(base, nlist, iters, sampleN,
-      idCol, vecCol, hashSeed = true)
-    if (trained.isEmpty)
-      return Seq.empty[(Long, Long, Long, Double)]
-        .toDF("q_id", "rnk", "n_id", "cos_sim")
-    val (superRows, centRows) =
-      firstNsSuperTable(trained, scaledSuperList(trained.length))
-    val routedB = twoLevelRouted(base, superRows, centRows, nprobe,
-      superProbe, idCol, vecCol, scope)
-    val routedN = twoLevelRouted(arriving, superRows, centRows, nprobe,
-      superProbe, idCol, vecCol, scope)
-    def asgOf(r: DataFrame) = r.select(col("id").as("n_id"),
-      col("vec").as("n_vec"), element_at(col("probes"), 1)("_1").as("c_id"))
-    def prbOf(r: DataFrame) = r.select(col("id").as("q_id"),
-      col("vec").as("q_vec"), explode(col("probes")("_1")).as("c_id"))
-    val topK = udaf(new graft.functions.TopKCosAgg(k),
-      ExpressionEncoder[(Long, Double)]())
-    def candPairs(prb: DataFrame, asg: DataFrame) = prb.join(asg, Seq("c_id"))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .filter(col("cos").isNotNull)
-      .select(col("q_id"), col("n_id"), col("cos"))
+    val route = scaledRouter(base, targetList, nprobe, superProbe, iters, sampleN,
+        idCol, vecCol, scope) match {
+      case Some((_, r)) => r
+      case None => return emptyGraph(base)
+    }
+    val routedB = route(base)
+    val routedN = route(arriving)
     // the frozen asset: base top-k at FULL precision (production
     // persists this; built once, then only merged into)
-    val baseEdges = candPairs(prbOf(routedB), asgOf(routedB))
-      .groupBy(col("q_id"))
-      .agg(topK(col("n_id"), col("cos")).as("nbrs"))
-      .select(col("q_id"), explode(col("nbrs")).as("e"))
-      .select(col("q_id"), col("e")("_1").as("n_id"), col("e")("_2").as("cos"))
+    val baseEdges = topEdges(cellPairs(probesOf(routedB), assignedOf(routedB)), k)
     // increments: base queries meet ONLY the arriving assignments;
     // arriving queries rank base+new members of their probed cells
-    val updates = candPairs(prbOf(routedB), asgOf(routedN))
-    val newEdges = candPairs(prbOf(routedN),
-      asgOf(routedB).unionByName(asgOf(routedN)))
-    baseEdges.unionByName(updates).unionByName(newEdges)
-      .groupBy(col("q_id"))
-      .agg(topK(col("n_id"), col("cos")).as("nbrs"))
-      .select(col("q_id"), posexplode(col("nbrs")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col")("_1").as("n_id"), round(col("col")("_2"), 6).as("cos_sim"))
+    val updates = cellPairs(probesOf(routedB), assignedOf(routedN))
+    val newEdges = cellPairs(probesOf(routedN),
+      assignedOf(routedB).unionByName(assignedOf(routedN)))
+    rankedEdges(baseEdges.unionByName(updates).unionByName(newEdges), k)
   }
 
   /** TOMBSTONE-AWARE k-NN GRAPH MAINTENANCE — the delete half of the
@@ -2279,8 +2046,6 @@ object Similarity {
       iters: Int = 10, sampleN: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: CacheScope = CacheScope.session): DataFrame = {
-    import corpus.sparkSession.implicits._
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
     // empty takedown batch: the repair dataflow degenerates to the
     // stored graph (live filter drops nothing, zero affected queries),
     // so skip the corpus count + full quantizer training it would
@@ -2288,37 +2053,19 @@ object Similarity {
     if (deletedIds.isEmpty)
       return knnGraphScaledFp(corpus, k, targetList, nprobe, superProbe,
         iters, sampleN, idCol, vecCol, scope)
-    val n = corpus.count()
-    val nlist = scaledNlist(n, targetList)
-    val trained = ivfTrainCentroidsFp(corpus, nlist, iters, sampleN,
-      idCol, vecCol, hashSeed = true)
-    if (trained.isEmpty)
-      return Seq.empty[(Long, Long, Long, Double)]
-        .toDF("q_id", "rnk", "n_id", "cos_sim")
-    val (superRows, centRows) =
-      firstNsSuperTable(trained, scaledSuperList(trained.length))
-    val routed = twoLevelRouted(corpus, superRows, centRows, nprobe,
-      superProbe, idCol, vecCol, scope)
+    val routed = scaledRouter(corpus, targetList, nprobe, superProbe, iters, sampleN,
+        idCol, vecCol, scope) match {
+      case Some((_, route)) => route(corpus)
+      case None => return emptyGraph(corpus)
+    }
     val del = deletedIds.select(
       deletedIds(deletedIds.columns.head).cast("long").as("del_id"))
-    val asg = routed.select(col("id").as("n_id"), col("vec").as("n_vec"),
-      element_at(col("probes"), 1)("_1").as("c_id"))
-    val prb = routed.select(col("id").as("q_id"), col("vec").as("q_vec"),
-      explode(col("probes")("_1")).as("c_id"))
-    val topK = udaf(new graft.functions.TopKCosAgg(k),
-      ExpressionEncoder[(Long, Double)]())
-    def rankOf(prbSide: DataFrame, asgSide: DataFrame) = prbSide
-      .join(asgSide, Seq("c_id"))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .filter(col("cos").isNotNull)
-      .groupBy(col("q_id"))
-      .agg(topK(col("n_id"), col("cos")).as("nbrs"))
-      .select(col("q_id"), explode(col("nbrs")).as("e"))
-      .select(col("q_id"), col("e")("_1").as("n_id"), col("e")("_2").as("cos"))
+    val asg = assignedOf(routed)
+    val prb = probesOf(routed)
     // the frozen asset: full-corpus top-k at FULL precision (production
     // reads this from parquet; built once, then only repaired)
-    val baseEdges = scope.own(rankOf(prb, asg).persist()) // live filter + affected scan
+    val baseEdges = scope.own( // read by the live filter and the affected scan
+      topEdges(cellPairs(prb, asg), k).persist())
     val liveEdges = baseEdges
       .join(del, baseEdges("q_id") === del("del_id"), "left_anti")
     val affected = liveEdges
@@ -2328,21 +2075,16 @@ object Similarity {
       .join(affected, Seq("q_id"), "left_anti")
     // repair: affected queries re-rank the SURVIVING members of their
     // probed cells — the frozen probes bound the candidate set
-    val repairs = rankOf(
+    val repairs = topEdges(cellPairs(
       prb.join(affected, Seq("q_id"), "left_semi"),
-      asg.join(del, asg("n_id") === del("del_id"), "left_anti"))
-    untouched.unionByName(repairs)
-      .groupBy(col("q_id"))
-      .agg(topK(col("n_id"), col("cos")).as("nbrs"))
-      .select(col("q_id"), posexplode(col("nbrs")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rnk"),
-        col("col")("_1").as("n_id"), round(col("col")("_2"), 6).as("cos_sim"))
+      asg.join(del, asg("n_id") === del("del_id"), "left_anti")), k)
+    rankedEdges(untouched.unionByName(repairs), k)
   }
 
   /** CORPUS-SCALED PQ k-NN graph — [[knnGraphScaledFp]]'s derived
     * geometry (nlist = max(32, ceil(n/targetList)), hash-seeded
     * trainer, two-level routing with ns = ceil(sqrt(nc)) first-prefix
-    * supers) feeding [[pqGraphFromRouted]]'s compressed pipeline: the
+    * supers) feeding [[pqGraphRanked]]'s compressed pipeline: the
     * candidate block join carries m codeword longs instead of the
     * d-dim vector, ADC scores, exact-integer top-`cBudget` rerank.
     * The registered production shape for building the semantic-dedup
@@ -2356,15 +2098,10 @@ object Similarity {
       iters: Int = 10, sampleN: Int = 4096, cBudget: Int = 40,
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: CacheScope = CacheScope.session): DataFrame = {
-    import corpus.sparkSession.implicits._
     require(k >= 1 && cBudget >= k,
       s"need cBudget >= k >= 1, got k=$k cBudget=$cBudget")
-    pqKnnGraphScaledPrep(corpus, targetList, nprobe, superProbe, m, ncode,
-        iters, sampleN, idCol, vecCol, scope) match {
-      case None => Seq.empty[(Long, Long, Int, Long, Long)]
-        .toDF("q_id", "n_id", "rnk", "adc_fp", "d2_fp")
-      case Some(prep) => pqGraphRankFromPrep(prep, k, cBudget)
-    }
+    pqGraphRanked(corpus, pqKnnGraphScaledPrep(corpus, targetList, nprobe, superProbe,
+      m, ncode, iters, sampleN, idCol, vecCol, scope), k, cBudget)
   }
 
   /** The cBudget-independent front of [[pqKnnGraphScaledFp]] (count →
@@ -2378,80 +2115,9 @@ object Similarity {
       m: Int = 8, ncode: Int = 32, iters: Int = 10, sampleN: Int = 4096,
       idCol: String = "vec_id", vecCol: String = "embedding",
       scope: CacheScope = CacheScope.session): Option[PqGraphPrep] = {
-    import corpus.sparkSession.implicits._
-    val n = corpus.count()
-    val nlist = scaledNlist(n, targetList)
-    val trained = ivfTrainCentroidsFp(corpus, nlist, iters, sampleN,
-      idCol, vecCol, hashSeed = true)
-    if (trained.isEmpty) return None
-    val cent = broadcast(trained.toSeq.map { case (cid, cv) => (cid, cv.toSeq) }
-      .toDF("c_id", "c_vec"))
-    val (superRows, centRows) =
-      firstNsSuperTable(trained, scaledSuperList(trained.length))
-    val routed = twoLevelRouted(corpus, superRows, centRows, nprobe,
-      superProbe, idCol, vecCol, scope)
-    pqGraphPrepFromRouted(routed, cent, m, ncode, iters, sampleN, scope)
-  }
-
-  /** Shared residual-IVFPQ search dataflow: assignment + residuals vs
-    * the given centroid frame, codebook from `mkCb(assigned)`, then
-    * s15's probed-list ADC with per-(query, list) LUTs.
-    */
-  private def ivfPqResidualSearch(corpus: DataFrame, queries: DataFrame,
-      k: Int, cent: DataFrame, nprobe: Int, m: Int, ncode: Int,
-      idCol: String, vecCol: String,
-      mkCb: DataFrame => DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val assigned = corpus.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec"))
-      .crossJoin(cent)
-      .withColumn("cos_c", cosine(col("n_vec"), col("c_vec")))
-      .groupBy(col("n_id"))
-      .agg(max(struct(col("cos_c"), (-col("c_id")).as("neg_c"),
-        col("c_id"), col("n_vec"), col("c_vec"))).as("best"))
-      .select(col("n_id"), col("best.c_id").as("c_id"),
-        zip_with(col("best.n_vec"), col("best.c_vec"),
-          (a, b) => a.cast("double") - b.cast("double")).as("res"))
-    val cb = mkCb(assigned)
-    val codes = pqSubspaced(assigned.select(col("n_id"), col("res")), "n_id", m, "n_id", "res")
-      .join(assigned.select(col("n_id"), col("c_id")), "n_id")
-      .join(cb, "j")
-      .groupBy(col("n_id"), col("c_id"), col("j"))
-      .agg(min(struct(pqD2(col("sub"), col("cv")).as("d"), col("cw"))).as("best"))
-      .groupBy(col("n_id"), col("c_id"))
-      .agg(transform(sort_array(collect_list(struct(col("j"), col("best.cw").as("c")))),
-        e => e("c")).as("codes"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("cos_q").desc, col("c_id").asc)
-    val probes = queries.select(col(idCol).cast("long").as("q_id"), col(vecCol).as("q_vec"))
-      .crossJoin(cent)
-      .withColumn("cos_q", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter(col("prn") <= nprobe)
-      .select(col("q_id"), col("c_id"),
-        zip_with(col("q_vec"), col("c_vec"),
-          (a, b) => a.cast("double") - b.cast("double")).as("qres"))
-    // one LUT per (query, probed list): the query's residual vs THAT
-    // list's centroid, against the shared residual codebook
-    val lut = pqSubspaced(probes.select(
-          (col("q_id") * 10000 + col("c_id")).as("qc"), col("qres")),
-        "qc", m, "qc", "qres")
-      .join(cb, "j")
-      .groupBy(col("qc"))
-      .agg(map_from_entries(collect_list(struct(
-        (col("j") * ncode + col("cw")).cast("int").as("slot"),
-        pqD2(col("sub"), col("cv")).as("d")))).as("lutm"))
-      .select(col("qc"),
-        transform(sequence(lit(0), lit(m * ncode - 1)),
-          p => coalesce(element_at(col("lutm"), p), lit(Double.MaxValue))).as("lut"))
-    val probeLut = probes.select(col("q_id"), col("c_id"),
-        (col("q_id") * 10000 + col("c_id")).as("qc"))
-      .join(lut, "qc").drop("qc")
-    val adc = codes.join(broadcast(probeLut), Seq("c_id"))
-      .filter(col("n_id") =!= col("q_id"))
-      .withColumn("adc", pqAdc(m, ncode))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("adc").asc, col("n_id").asc)
-    adc.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("n_id"), col("rnk"), round(col("adc"), 6).as("adc_d2"))
+    scaledRouter(corpus, targetList, nprobe, superProbe, iters, sampleN, idCol, vecCol, scope)
+      .flatMap { case (trained, route) => pqGraphPrepFromRouted(route(corpus),
+        centFrame(corpus.sparkSession, trained), m, ncode, iters, sampleN, scope) }
   }
 
   /** Build-once PQ code asset over the embeddings table (the ANN twin
@@ -3015,8 +2681,17 @@ object Similarity {
     Bridge.column(graft.functions.SignPackExpr(Bridge.expression(vec)))
   }
 
+  /** The exact stage of the two-stage ANN family: the (tiny) top-cand
+    * candidates (q_id, q_vec, n_id, ...) broadcast into an equi-join on
+    * n_id that fetches only their full vectors from `full` (n_id, n_vec),
+    * then rank by exact cosine.
+    */
+  private def rerankCos(full: DataFrame, candidates: DataFrame, k: Int): DataFrame =
+    keepTop(full.join(broadcast(candidates), "n_id")
+      .withColumn("cos", cosine(col("q_vec"), col("n_vec"))), k, col("cos").desc)
+
   /** Binary-quantization ANN with exact rerank — the third compressed
-    * ANN family beside PQ/ADC ([[pqTopK]]) and IVF ([[ivfTopK]]), and
+    * ANN family beside PQ/ADC and IVF ([[annTopK]]), and
     * the cheapest candidate generator of the three: the corpus is
     * represented as ONE long per vector ([[signPack]]), so the
     * candidate stage scans 8 bytes/row instead of 256 (float32 d=64)
@@ -3036,30 +2711,21 @@ object Similarity {
     */
   def binaryRerankTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       cand: Int = 40, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && cand >= k, s"need cand >= k >= 1, got k=$k cand=$cand")
     val sigs = corpus.select(col(idCol).as("n_id"), signPack(col(vecCol)).as("n_sig"))
     val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       signPack(col(vecCol)).as("q_sig")))
-    val wh = Window.partitionBy(col("q_id"))
-      .orderBy(col("hamming").asc, col("n_id").asc)
-    val candidates = sigs.join(q, col("n_id") =!= col("q_id"))
-      .withColumn("hamming", bit_count(col("n_sig").bitwiseXOR(col("q_sig"))).cast("long"))
-      .withColumn("crnk", row_number().over(wh))
-      .filter(col("crnk") <= cand)
+    val candidates = keepTop(sigs.join(q, col("n_id") =!= col("q_id"))
+        .withColumn("hamming", bit_count(col("n_sig").bitwiseXOR(col("q_sig"))).cast("long")),
+        cand, col("hamming").asc, "crnk")
       .select(col("q_id"), col("q_vec"), col("n_id"), col("hamming"))
-    val full = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    full.join(broadcast(candidates), "n_id")
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
+    rerankCos(corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec")), candidates, k)
       .select(col("q_id"), col("n_id"), col("rnk"), col("hamming"),
         round(col("cos"), 6).as("cos_sim"))
   }
 
   /** Scalar-quantization (int8) ANN with exact rerank — the fourth
-    * compressed ANN family beside PQ ([[pqTopK]]), IVF ([[ivfTopK]])
+    * compressed ANN family beside PQ and IVF ([[annTopK]])
     * and sign-bit ([[binaryRerankTopK]]), sitting between binary and
     * PQ on the fidelity/size curve: [[int8Quantize]]'s per-vector
     * symmetric codes are 1 byte/dim (4x narrower than float32), and
@@ -3082,37 +2748,40 @@ object Similarity {
     */
   def sq8RerankTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       cand: Int = 40, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && cand >= k, s"need cand >= k >= 1, got k=$k cand=$cand")
-    def codes(df: DataFrame, outId: String, outCodes: String): DataFrame = {
+    val candidates = keepTop(int8Pairs(corpus, queries, idCol, vecCol),
+        cand, col("idot").desc, "crnk")
+      .select(col("q_id"), col("q_vec"), col("n_id"), col("idot"))
+    rerankCos(corpus.select(col(idCol).cast("long").as("n_id"), col(vecCol).as("n_vec")),
+        candidates, k)
+      .select(col("q_id"), col("n_id"), col("rnk"), col("idot"),
+        round(col("cos"), 6).as("cos_sim"))
+  }
+
+  /** The int8 candidate scan of [[sq8RerankTopK]] and [[mipsTopK]]:
+    * every (query, corpus) pair with the INTEGER dot product idot of
+    * their symmetric int8 codes (per vector scale = max|x| / 127,
+    * code_i = floor(x_i/scale + 0.5), all-zero for a zero vector) and
+    * the corpus vector's scale n_scale; the queries broadcast with their
+    * raw vectors q_vec for the rerank.
+    */
+  private def int8Pairs(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String): DataFrame = {
+    def codes(df: DataFrame, side: String): DataFrame = {
       val v = transform(col(vecCol), x => x.cast("double"))
       val scale = array_max(transform(v, x => abs(x))) / 127.0
       val cs = when(scale === 0, transform(v, _ => lit(0L)))
         .otherwise(transform(v, x => floor(x / scale + 0.5).cast("long")))
-      df.select(col(idCol).cast("long").as(outId), cs.as(outCodes))
+      df.select(col(idCol).cast("long").as(s"${side}_id"), cs.as(s"${side}_codes"),
+        scale.as(s"${side}_scale"))
     }
-    val n = codes(corpus, "n_id", "n_codes")
-    val q = broadcast(codes(queries, "q_id", "q_codes")
+    val q = broadcast(codes(queries, "q")
       .join(queries.select(col(idCol).cast("long").as("q_id"),
         col(vecCol).as("q_vec")), "q_id"))
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(col("idot").desc, col("n_id").asc)
-    val candidates = n.join(q, col("n_id") =!= col("q_id"))
+    codes(corpus, "n").join(q, col("n_id") =!= col("q_id"))
       .withColumn("idot", aggregate(
         zip_with(col("q_codes"), col("n_codes"), (a, b) => a * b),
         lit(0L), (acc, x) => acc + x))
-      .withColumn("crnk", row_number().over(wc))
-      .filter(col("crnk") <= cand)
-      .select(col("q_id"), col("q_vec"), col("n_id"), col("idot"))
-    val full = corpus.select(col(idCol).cast("long").as("n_id"),
-      col(vecCol).as("n_vec"))
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    full.join(broadcast(candidates), "n_id")
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("n_id"), col("rnk"), col("idot"),
-        round(col("cos"), 6).as("cos_sim"))
   }
 
   /** MIPS — maximum inner product search (the recommendation-retrieval
@@ -3136,38 +2805,15 @@ object Similarity {
     */
   def mipsTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       cand: Int = 40, idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && cand >= k, s"need cand >= k >= 1, got k=$k cand=$cand")
-    def codes(df: DataFrame, outId: String, outCodes: String,
-        outScale: String): DataFrame = {
-      val v = transform(col(vecCol), x => x.cast("double"))
-      val scale = array_max(transform(v, x => abs(x))) / 127.0
-      val cs = when(scale === 0, transform(v, _ => lit(0L)))
-        .otherwise(transform(v, x => floor(x / scale + 0.5).cast("long")))
-      df.select(col(idCol).cast("long").as(outId), cs.as(outCodes),
-        scale.as(outScale))
-    }
-    val n = codes(corpus, "n_id", "n_codes", "n_scale")
-    val q = broadcast(codes(queries, "q_id", "q_codes", "q_scale")
-      .join(queries.select(col(idCol).cast("long").as("q_id"),
-        col(vecCol).as("q_vec")), "q_id"))
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(col("sdot").desc, col("n_id").asc)
-    val candidates = n.join(q, col("n_id") =!= col("q_id"))
-      .withColumn("idot", aggregate(
-        zip_with(col("q_codes"), col("n_codes"), (a, b) => a * b),
-        lit(0L), (acc, x) => acc + x))
-      .withColumn("sdot", col("idot").cast("double") * col("n_scale"))
-      .withColumn("crnk", row_number().over(wc))
-      .filter(col("crnk") <= cand)
+    val candidates = keepTop(int8Pairs(corpus, queries, idCol, vecCol)
+        .withColumn("sdot", col("idot").cast("double") * col("n_scale")),
+        cand, col("sdot").desc, "crnk")
       .select(col("q_id"), col("q_vec"), col("n_id"), col("idot"))
     val full = corpus.select(col(idCol).cast("long").as("n_id"),
       col(vecCol).as("n_vec"))
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("ip").desc, col("n_id").asc)
-    full.join(broadcast(candidates), "n_id")
-      .withColumn("ip", dot(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
+    keepTop(full.join(broadcast(candidates), "n_id")
+        .withColumn("ip", dot(col("q_vec"), col("n_vec"))), k, col("ip").desc)
       .select(col("q_id"), col("n_id"), col("rnk"), col("idot"),
         round(col("ip"), 6).as("ip"))
   }
@@ -3186,26 +2832,17 @@ object Similarity {
   def matryoshkaTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       prefixDims: Int = 16, cand: Int = 40,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && cand >= k && prefixDims >= 1,
       s"need cand >= k >= 1 and prefixDims >= 1, got k=$k cand=$cand prefixDims=$prefixDims")
     val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       slice(col(vecCol), 1, prefixDims).as("q_pre")))
     val pre = corpus.select(col(idCol).as("n_id"),
       slice(col(vecCol), 1, prefixDims).as("n_pre"))
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(col("pre_cos").desc, col("n_id").asc)
-    val candidates = pre.join(q, col("n_id") =!= col("q_id"))
-      .withColumn("pre_cos", cosine(col("q_pre"), col("n_pre")))
-      .withColumn("crnk", row_number().over(wc))
-      .filter(col("crnk") <= cand)
+    val candidates = keepTop(pre.join(q, col("n_id") =!= col("q_id"))
+        .withColumn("pre_cos", cosine(col("q_pre"), col("n_pre"))),
+        cand, col("pre_cos").desc, "crnk")
       .select(col("q_id"), col("q_vec"), col("n_id"), col("pre_cos"))
-    val full = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    full.join(broadcast(candidates), "n_id")
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
+    rerankCos(corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec")), candidates, k)
       .select(col("q_id"), col("n_id"), col("rnk"),
         round(col("pre_cos"), 6).as("pre_cos"),
         round(col("cos"), 6).as("cos_sim"))
@@ -3262,28 +2899,19 @@ object Similarity {
   def jlTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       dims: Int = 64, targetDims: Int = 16, cand: Int = 40,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k >= 1 && cand >= k && targetDims >= 1,
       s"need cand >= k >= 1 and targetDims >= 1, got k=$k cand=$cand targetDims=$targetDims")
     val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       jlProject(col(vecCol), dims, targetDims).as("q_jl")))
     val pre = corpus.select(col(idCol).as("n_id"),
       jlProject(col(vecCol), dims, targetDims).as("n_jl"))
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(col("pre_d2").asc, col("n_id").asc)
-    val candidates = pre.join(q, col("n_id") =!= col("q_id"))
-      .withColumn("pre_d2",
-        aggregate(zip_with(col("q_jl"), col("n_jl"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, v) => acc + v))
-      .withColumn("crnk", row_number().over(wc))
-      .filter(col("crnk") <= cand)
+    val candidates = keepTop(pre.join(q, col("n_id") =!= col("q_id"))
+        .withColumn("pre_d2",
+          aggregate(zip_with(col("q_jl"), col("n_jl"), (a, b) => (a - b) * (a - b)),
+            lit(0L), (acc, v) => acc + v)),
+        cand, col("pre_d2").asc, "crnk")
       .select(col("q_id"), col("q_vec"), col("n_id"), col("pre_d2"))
-    val full = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
-    val wk = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
-    full.join(broadcast(candidates), "n_id")
-      .withColumn("cos", cosine(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(wk))
-      .filter(col("rnk") <= k)
+    rerankCos(corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec")), candidates, k)
       .select(col("q_id"), col("n_id"), col("rnk"), col("pre_d2"),
         round(col("cos"), 6).as("cos_sim"))
   }

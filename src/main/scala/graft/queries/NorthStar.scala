@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.functions.TextAnalysis
-import graft.operators.{BpeTokenizer, Dedup, Graph, Mixture, Multimodal, Similarity, TextIndex}
+import graft.operators.{AnnSpec, BpeTokenizer, Dedup, Graph, Mixture, Multimodal, Similarity, TextIndex}
+import graft.operators.AnnSpec.{Flat, Ivf, Pq, PqResidual, Raw, TrainedFp}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1638,7 +1639,8 @@ object NorthStar {
     "s04_ivf_topk" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.ivfTopK(emb, emb.filter($"vec_id" < 5), k = 5, nlist = 32, nprobe = 4)
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"cos_sim")
         .orderBy("q_id", "rnk")
     },
@@ -1651,7 +1653,8 @@ object NorthStar {
     "s12_pq_topk" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.pqTopK(emb, emb.filter($"vec_id" < 5), k = 5, m = 8, ncode = 32)
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Flat, Pq(m = 8, ncode = 32)))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"adc_d2")
         .orderBy("q_id", "rnk")
     },
@@ -1665,7 +1668,8 @@ object NorthStar {
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val codes = Similarity.ensurePqIndex(s, dir, m = 8, ncode = 32)
-      Similarity.pqSearch(codes, emb, emb.filter($"vec_id" < 5), k = 5, m = 8, ncode = 32)
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Flat, Pq(m = 8, ncode = 32, codes = Some(codes))))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"adc_d2")
         .orderBy("q_id", "rnk")
     },
@@ -1680,8 +1684,8 @@ object NorthStar {
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val codes = Similarity.ensurePqIndex(s, dir, m = 8, ncode = 32)
-      Similarity.ivfPqTopK(emb, emb.filter($"vec_id" < 5), k = 5,
-          nlist = 32, nprobe = 4, m = 8, ncode = 32, codes = Some(codes))
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Ivf(nlist = 32, nprobe = 4), Pq(m = 8, ncode = 32, codes = Some(codes))))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"adc_d2")
         .orderBy("q_id", "rnk")
     },
@@ -1699,8 +1703,8 @@ object NorthStar {
         .select($"vec_id".cast("long").as("n_id"))
       val codes = Similarity.ensurePqIndex(s, dir, m = 8, ncode = 32)
         .join(allowed, "n_id")
-      Similarity.ivfPqTopK(emb, emb.filter($"vec_id" < 5), k = 5,
-          nlist = 32, nprobe = 4, m = 8, ncode = 32, codes = Some(codes))
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Ivf(nlist = 32, nprobe = 4), Pq(m = 8, ncode = 32, codes = Some(codes))))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"adc_d2")
         .orderBy("q_id", "rnk")
     },
@@ -1840,7 +1844,7 @@ object NorthStar {
           .select($"q_id", $"n_id").persist()) // joined by all 3 arms
       val nq = queries.count() // bounded: 5 by construction
       Seq(2, 4, 8).map { np =>
-        Similarity.ivfTopK(emb, queries, k, nlist = 32, nprobe = np)
+        Similarity.annTopK(emb, queries, k, AnnSpec(Ivf(nlist = 32, nprobe = np), Raw))
           .select($"q_id", $"n_id")
           .join(exact, Seq("q_id", "n_id"))
           .agg(count(lit(1)).as("n_hits"))
@@ -1863,8 +1867,8 @@ object NorthStar {
     "s31_ivf_multiprobe" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.ivfTopKTrainedFpSoft(emb, emb.filter($"vec_id" < 5), k = 5,
-          nlist = 32, nprobe = 4, assign = 2)
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp, assign = 2), Raw))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"cos_sim")
         .orderBy("q_id", "rnk")
     },
@@ -2398,8 +2402,8 @@ object NorthStar {
     "s23_ivf_trained_topk" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.ivfTopKTrainedFp(emb, emb.filter($"vec_id" < 5), k = 5,
-          nlist = 32, nprobe = 4)
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"cos_sim")
         .orderBy("q_id", "rnk")
     },
@@ -2420,8 +2424,9 @@ object NorthStar {
     "s24_ivf_pq_trained" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.ivfPqTopKResidualTrainedFp(emb, emb.filter($"vec_id" < 5),
-          k = 5, nlist = 32, nprobe = 4, m = 8, ncode = 32)
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp),
+            PqResidual(m = 8, ncode = 32, TrainedFp)))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"adc_fp",
           $"d2_fp")
         .orderBy("q_id", "rnk")
@@ -2721,8 +2726,8 @@ object NorthStar {
     "s16_ivf_pq_residual" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      Similarity.ivfPqTopKResidual(emb, emb.filter($"vec_id" < 5), k = 5,
-          nlist = 32, nprobe = 4, m = 8, ncode = 32)
+      Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
+          AnnSpec(Ivf(nlist = 32, nprobe = 4), PqResidual(m = 8, ncode = 32)))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"adc_d2")
         .orderBy("q_id", "rnk")
     },

@@ -597,21 +597,20 @@ object Relational {
     "q29_bucketed_join" -> { (s, dir) =>
       import s.implicits._
       val (ot, lt) = bucketedFixture(s, dir)
-      val prev = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        // big-big join scenario: broadcasting is off the table
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val joined = s.table(lt)
-          .join(s.table(ot), $"l_orderkey" === $"o_orderkey")
-        val plan = joined.queryExecution.executedPlan.toString
-        require(plan.contains("SortMergeJoin") && !plan.contains("Exchange"),
-          s"bucketed join must be co-located (no Exchange); got:\n$plan")
-        joined
-          .groupBy($"o_orderpriority")
-          .agg(count(lit(1)).as("n_lines"),
-            sum($"l_quantity".cast(M)).cast("double").as("sum_qty"))
-          .orderBy($"o_orderpriority")
-      } finally s.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+      // big-big join scenario: the merge hint keeps broadcasting off the
+      // table in the plan itself, so the plan checked here is the plan
+      // that runs (a session-conf toggle was undone before the caller's
+      // action re-planned the frame, and would leak into shared sessions)
+      val joined = s.table(lt)
+        .join(s.table(ot).hint("merge"), $"l_orderkey" === $"o_orderkey")
+      val plan = joined.queryExecution.executedPlan.toString
+      require(plan.contains("SortMergeJoin") && !plan.contains("Exchange"),
+        s"bucketed join must be co-located (no Exchange); got:\n$plan")
+      joined
+        .groupBy($"o_orderpriority")
+        .agg(count(lit(1)).as("n_lines"),
+          sum($"l_quantity".cast(M)).cast("double").as("sum_qty"))
+        .orderBy($"o_orderpriority")
     },
 
     // Partition-pruned scan over the time-partitioned event store

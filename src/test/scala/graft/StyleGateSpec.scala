@@ -92,6 +92,17 @@ class StyleGateSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("the ANN top-k lattice stays collapsed into Similarity.annTopK") {
+    val gone = Seq("ivfTopK", "ivfTopKCb", "ivfTopKTrained", "ivfTopKTrainedFp",
+      "ivfTopKTrainedFpSoft", "pqTopK", "pqTopKTrained", "pqSearch", "pqSearchTrained",
+      "pqEncodeTrained", "ivfPqTopK", "ivfPqTopKResidual", "ivfPqTopKResidualTrained",
+      "ivfPqTopKResidualTrainedFp", "ivfPqResidualSearch")
+    val bad = mainFilesWith(gone.map(n => s"def $n("): _*)
+    withClue(bad.mkString("ANN entry points that AnnSpec replaces, defined at:\n", "\n", "\n")) {
+      bad shouldBe empty
+    }
+  }
+
   test("every file ends with a newline (NewLineAtEofChecker)") {
     val bad = sources.filter { f =>
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)

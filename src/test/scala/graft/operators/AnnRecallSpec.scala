@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import AnnSpec._
+
 /** Measured recall of the approximate similarity paths against their
   * exact baselines on the real embeddings table (sf0.001, 500 x 64-D).
   * Approximation quality is a claim like performance — it gets measured,
@@ -72,7 +74,8 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       .withColumn("rn", row_number().over(w)).filter($"rn" <= k)
       .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("id")))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val pq = Similarity.pqTopK(emb, queries, k, m = 8, ncode = 32)
+    val pq = Similarity.annTopK(emb, queries, k,
+      AnnSpec(Flat, Pq(m = 8, ncode = 32)))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val recalls = exact.map { case (qid, ex) =>
@@ -111,8 +114,10 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
         got.getOrElse(qid, Set.empty).count(ex).toDouble / ex.size }
       rs.sum / rs.size
     }
-    val det = recallOf(Similarity.pqTopK(emb, queries, k, m = 8, ncode = 32))
-    val trained = recallOf(Similarity.pqTopKTrained(emb, queries, k, m = 8, ncode = 32))
+    val det = recallOf(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Flat, Pq(m = 8, ncode = 32))))
+    val trained = recallOf(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Flat, Pq(m = 8, ncode = 32, Trained))))
     info(f"PQ recall@$k vs exact L2 (m=8, ncode=32): deterministic $det%.3f, " +
       f"trained k-means $trained%.3f")
     // trained centers must not be WORSE than arbitrary corpus points —
@@ -146,10 +151,12 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       rs.sum / rs.size
     }
     val exact = topk(Similarity.bruteForceTopK(emb, queries, k))
-    val ivf = recall(exact, topk(Similarity.ivfTopK(emb, queries, k, nlist = 32, nprobe = 4)))
-    val pq = recall(exact, topk(Similarity.pqTopK(emb, queries, k, m = 8, ncode = 32)))
-    val both = recall(exact, topk(Similarity.ivfPqTopK(emb, queries, k,
-      nlist = 32, nprobe = 4, m = 8, ncode = 32)))
+    val ivf = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw))))
+    val pq = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Flat, Pq(m = 8, ncode = 32)))))
+    val both = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Pq(m = 8, ncode = 32)))))
     info(f"recall@$k vs exact cosine: IVF(32/4) $ivf%.3f, PQ(8x32) $pq%.3f, IVF x PQ $both%.3f")
     // the composition can only lose candidates relative to PQ alone
     // (same distances, pruned candidate set) — and must stay useful
@@ -170,11 +177,12 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       rs.sum / rs.size
     }
     val exact = topk(Similarity.bruteForceTopK(emb, queries, k))
-    val det = recall(exact, topk(Similarity.ivfTopK(emb, queries, k, nlist = 32, nprobe = 4)))
-    val trained = recall(exact, topk(Similarity.ivfTopKTrained(emb, queries, k,
-      nlist = 32, nprobe = 4)))
-    val fp = recall(exact, topk(Similarity.ivfTopKTrainedFp(emb, queries, k,
-      nlist = 32, nprobe = 4)))
+    val det = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw))))
+    val trained = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, Trained), Raw))))
+    val fp = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw))))
     info(f"IVF recall@$k (nlist=32, nprobe=4): deterministic $det%.3f, " +
       f"trained spherical k-means $trained%.3f, fixed-point trained (s23) $fp%.3f")
     // trained centers must not be materially worse than arbitrary
@@ -207,14 +215,14 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       rs.sum / rs.size
     }
     val exact = topk(Similarity.bruteForceTopK(emb, queries, k))
-    val hard = recall(exact, topk(Similarity.ivfTopKTrainedFp(emb, queries, k,
-      nlist = 32, nprobe = 4)))
-    val soft22 = recall(exact, topk(Similarity.ivfTopKTrainedFpSoft(emb, queries, k,
-      nlist = 32, nprobe = 2, assign = 2)))
-    val fine = recall(exact, topk(Similarity.ivfTopKTrainedFp(emb, queries, k,
-      nlist = 128, nprobe = 16)))
-    val soft42 = recall(exact, topk(Similarity.ivfTopKTrainedFpSoft(emb, queries, k,
-      nlist = 32, nprobe = 4, assign = 2)))
+    val hard = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw))))
+    val soft22 = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 2, TrainedFp, assign = 2), Raw))))
+    val fine = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 128, nprobe = 16, TrainedFp), Raw))))
+    val soft42 = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp, assign = 2), Raw))))
     info(f"same 1/8 scan fraction — hard 32/4: $hard%.3f, soft 32/2x2: $soft22%.3f, " +
       f"fine 128/16: $fine%.3f; 2x budget soft 32/4x2 (s31): $soft42%.3f")
     // soft assignment must not lose to hard at the same budget, and the
@@ -252,13 +260,13 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       rs.sum / rs.size
     }
     val exact = topk(Similarity.bruteForceTopK(emb, queries, k))
-    val raw = recall(exact, topk(Similarity.ivfPqTopK(emb, queries, k,
-      nlist = 32, nprobe = 4, m = 8, ncode = 32)))
-    val res = recall(exact, topk(Similarity.ivfPqTopKResidual(emb, queries, k,
-      nlist = 32, nprobe = 4, m = 8, ncode = 32)))
+    val raw = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Pq(m = 8, ncode = 32)))))
+    val res = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), PqResidual(m = 8, ncode = 32)))))
     val curve = Seq(2, 4, 8, 16).map { np =>
-      np -> recall(exact, topk(Similarity.ivfPqTopKResidual(emb, queries, k,
-        nlist = 32, nprobe = np, m = 8, ncode = 32)))
+      np -> recall(exact, topk(Similarity.annTopK(emb, queries, k,
+        AnnSpec(Ivf(nlist = 32, nprobe = np), PqResidual(m = 8, ncode = 32)))))
     }
     info(f"IVF x PQ recall@$k at nprobe=4: raw-vector $raw%.3f, residual $res%.3f")
     info("residual recall@10 by nprobe: " +
@@ -270,8 +278,10 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     // only the useful floor at every knob setting.
     curve.foreach { case (_, r) => r should be > 0.1 }
     // determinism: the full residual pipeline replays bit-identically
-    val once = Similarity.ivfPqTopKResidual(emb, queries, k, 32, 4, 8, 32).collect()
-    val twice = Similarity.ivfPqTopKResidual(emb, queries, k, 32, 4, 8, 32).collect()
+    val once = Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(32, 4), PqResidual(8, 32))).collect()
+    val twice = Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(32, 4), PqResidual(8, 32))).collect()
     once.map(_.toString).sorted shouldBe twice.map(_.toString).sorted
   }
 
@@ -292,16 +302,17 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       rs.sum / rs.size
     }
     val exact = topk(Similarity.bruteForceTopK(emb, queries, k))
-    val det = recall(exact, topk(Similarity.ivfPqTopKResidual(emb, queries, k,
-      nlist = 32, nprobe = 4, m = 8, ncode = 32)))
-    val trained = recall(exact, topk(Similarity.ivfPqTopKResidualTrained(emb,
-      queries, k, nlist = 32, nprobe = 4, m = 8, ncode = 32)))
-    val fpAdc = recall(exact, topk(Similarity.ivfPqTopKResidualTrainedFp(emb,
-      queries, k, nlist = 32, nprobe = 4, m = 8, ncode = 32, rerankC = 0)))
-    val fp = recall(exact, topk(Similarity.ivfPqTopKResidualTrainedFp(emb,
-      queries, k, nlist = 32, nprobe = 4, m = 8, ncode = 32)))
-    val coverage = recall(exact, topk(Similarity.ivfTopKTrainedFp(emb, queries,
-      k, nlist = 32, nprobe = 4)))
+    val det = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), PqResidual(m = 8, ncode = 32)))))
+    val trained = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, Trained), PqResidual(m = 8, ncode = 32, Trained)))))
+    val fpAdc = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp),
+        PqResidual(m = 8, ncode = 32, TrainedFp, rerankC = 0)))))
+    val fp = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), PqResidual(m = 8, ncode = 32, TrainedFp)))))
+    val coverage = recall(exact, topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw))))
     info(f"residual IVFxPQ recall@$k: deterministic $det%.3f, " +
       f"fully trained $trained%.3f, fixed-point trained ADC-only $fpAdc%.3f, " +
       f"+ exact-integer rerank (s24) $fp%.3f, trained-IVF coverage ceiling $coverage%.3f")
@@ -316,8 +327,10 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     fp should be > 0.1
     // replayability: both trainers are deterministic, so the whole
     // trained pipeline bit-agrees across runs
-    val once = Similarity.ivfPqTopKResidualTrained(emb, queries, k, 32, 4, 8, 32).collect()
-    val twice = Similarity.ivfPqTopKResidualTrained(emb, queries, k, 32, 4, 8, 32).collect()
+    val once = Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(32, 4, Trained), PqResidual(8, 32, Trained))).collect()
+    val twice = Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(32, 4, Trained), PqResidual(8, 32, Trained))).collect()
     once.map(_.toString).sorted shouldBe twice.map(_.toString).sorted
   }
 
@@ -329,7 +342,8 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
       df.collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
         .view.mapValues(_.map(_._2).toSet).toMap
     val exact = topk(Similarity.bruteForceTopK(emb, queries, k))
-    val ivf = topk(Similarity.ivfTopK(emb, queries, k, nlist = 32, nprobe = 4))
+    val ivf = topk(Similarity.annTopK(emb, queries, k,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw)))
     val recalls = exact.map { case (q, ex) =>
       ivf.getOrElse(q, Set.empty).count(ex).toDouble / ex.size
     }

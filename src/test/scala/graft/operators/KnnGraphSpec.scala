@@ -5,13 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.functions.TopKCosAgg
+import AnnSpec._
 
 /** Structural invariants of the big-big k-NN graph (s30) and its
   * bounded top-k aggregator.
   *
   * The strongest check is an identity between two INDEPENDENT
   * implementations: [[Similarity.ivfKnnGraphTrainedFp]] (shuffle block
-  * join + TopKCosAgg map-side folds) and [[Similarity.ivfTopKTrainedFp]]
+  * join + TopKCosAgg map-side folds) and [[Similarity.annTopK]] over trained IVF
   * with the query side set to the whole corpus (broadcast probes +
   * window rank). Same trained quantizer, same probed lists, same tie
   * rules — every (q, n, rnk, cos) row must agree bit-for-bit. A bug in
@@ -28,8 +29,8 @@ class KnnGraphSpec extends AnyFunSuite with Matchers {
         .as[(Long, Long, Long, Double)].collect().sortBy(r => (r._1, r._2))
     val graph = rows(Similarity.ivfKnnGraphTrainedFp(emb, k = 5,
       nlist = 32, nprobe = 4))
-    val bcast = rows(Similarity.ivfTopKTrainedFp(emb, emb, k = 5,
-      nlist = 32, nprobe = 4))
+    val bcast = rows(Similarity.annTopK(emb, emb, k = 5,
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw)))
     graph.length shouldBe bcast.length
     graph should contain theSameElementsInOrderAs bcast
   }

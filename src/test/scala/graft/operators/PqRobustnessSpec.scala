@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import AnnSpec._
+
 /** PQ edge cases the sf-scale oracles cannot exercise: corpora whose id
   * space has GAPS below `ncode` (the codebook is "ids < ncode", and the
   * ADC LUT must stay aligned when some of those ids do not exist), and
@@ -61,7 +63,8 @@ class PqRobustnessSpec extends AnyFunSuite with Matchers {
     val corpus = emb.collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble).toArray).toMap
     val queries = emb.filter($"vec_id".isin(0L, 5L, 9L))
-    val got = Similarity.pqTopK(emb, queries, k = 3, m = 4, ncode = 4)
+    val got = Similarity.annTopK(emb, queries, k = 3,
+      AnnSpec(Flat, Pq(m = 4, ncode = 4)))
       .collect()
       .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("n_id"),
         r.getAs[Int]("rnk"), r.getAs[Double]("adc_d2")))
