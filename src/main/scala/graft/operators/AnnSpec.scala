@@ -5,49 +5,54 @@ import org.apache.spark.sql.DataFrame
 /** One point of the ANN grid that [[Similarity.annTopK]] runs: a
   * COARSE stage that decides which corpus vectors a query may meet
   * (all of them, or the members of its `nprobe` nearest inverted
-  * lists) and a CODE stage that decides how a met pair is scored
-  * (exact cosine, or ADC over a product-quantization codebook). The
-  * shape is REPOSE's (ICDE 2021): prune partitions first, then search
-  * inside them.
+  * lists), a CODE stage that decides how a met pair is scored (exact
+  * cosine, or ADC over a product-quantization codebook), and ONE
+  * `source` that both stages read: the coarse centroids and the PQ
+  * codebook are built the same way. The shape is REPOSE's (ICDE 2021):
+  * prune partitions first, then search inside them.
   *
-  * Every composition is checked on the driver by [[validate]] before a
-  * frame is built, so an invalid one fails with a `require` message
-  * instead of a wrong answer or an executor-side error.
+  * The grid is not a full product. [[validate]] accepts exactly these
+  * points, and rejects every other composition on the driver with a
+  * `require` message, before a frame is built:
+  *
+  *   - Ivf × Raw, any source; `assign` > 1 over TrainedFp only;
+  *   - Flat × Pq, LowestId (optionally over a prebuilt code table) or
+  *     Trained;
+  *   - Ivf × Pq, LowestId;
+  *   - Ivf × PqResidual, any source; `rerankC` under TrainedFp only.
   */
-final case class AnnSpec(coarse: AnnSpec.Coarse, code: AnnSpec.Code) {
+final case class AnnSpec(coarse: AnnSpec.Coarse, code: AnnSpec.Code,
+    source: AnnSpec.Source = AnnSpec.LowestId) {
   import AnnSpec._
 
   private[operators] def validate(k: Int): Unit = {
     require(k >= 1, s"k=$k must be >= 1")
-    val centroids = coarse match {
-      case Ivf(nlist, nprobe, from, assign) =>
+    coarse match {
+      case Ivf(nlist, nprobe, assign) =>
         require(nlist >= 1 && nprobe >= 1 && assign >= 1,
           s"nlist=$nlist nprobe=$nprobe assign=$assign must be >= 1")
-        require(assign == 1 || code == Raw,
-          s"assign=$assign (soft assignment) is implemented for the Raw cosine " +
-            s"scorer only, not $code")
-        Some(from)
+        require(assign == 1 || (code == Raw && source == TrainedFp),
+          s"assign=$assign (soft assignment) is implemented for the Raw cosine scorer " +
+            s"over TrainedFp centroids only, not $code over $source")
       case Flat =>
         require(code != Raw, "AnnSpec(Flat, Raw) is exact search: use bruteForceTopK")
-        None
     }
     code match {
       case Raw =>
-      case Pq(m, ncode, codebook, codes) =>
+      case Pq(m, ncode, codes) =>
         require(m >= 1 && ncode >= 1, s"m=$m ncode=$ncode must be >= 1")
-        require(codebook != TrainedFp,
-          "there is no fixed-point raw-vector PQ: use codebook LowestId or Trained")
-        require(codes.isEmpty || codebook == LowestId,
+        require(source != TrainedFp,
+          "there is no fixed-point raw-vector PQ: use source LowestId or Trained")
+        require(coarse == Flat || source == LowestId,
+          s"IVF x PQ runs over the LowestId centroids and codebook only, not $source")
+        require(codes.isEmpty || source == LowestId,
           "a prebuilt code table (ensurePqIndex) is encoded with the LowestId codebook")
-      case PqResidual(m, ncode, codebook, rerankC) =>
+      case PqResidual(m, ncode, rerankC) =>
         require(m >= 1 && ncode >= 1, s"m=$m ncode=$ncode must be >= 1")
-        require(centroids.nonEmpty,
+        require(coarse != Flat,
           "PqResidual encodes residuals against a coarse centroid: it needs Ivf, not Flat")
-        require((codebook == TrainedFp) == centroids.contains(TrainedFp),
-          s"fixed-point residual PQ needs fixed-point centroids and vice versa: " +
-            s"codebook=$codebook over centroids=${centroids.get}")
         require(rerankC >= -1, s"rerankC=$rerankC must be -1 (8k), 0 (ADC only) or > 0")
-        require(rerankC == -1 || codebook == TrainedFp,
+        require(rerankC == -1 || source == TrainedFp,
           "rerankC applies to the fixed-point residual scorer only")
     }
   }
@@ -55,7 +60,7 @@ final case class AnnSpec(coarse: AnnSpec.Coarse, code: AnnSpec.Code) {
 
 object AnnSpec {
 
-  /** Where a coarse quantizer's centroids or a PQ codebook come from. */
+  /** Where the coarse centroids and the PQ codebook come from. */
   sealed trait Source
 
   /** The lowest-id corpus vectors: no training, so an external engine
@@ -72,8 +77,7 @@ object AnnSpec {
   /** Integer Lloyd k-means ([[Similarity.ivfTrainCentroidsFp]],
     * [[Similarity.pqTrainCodebookFp]]): the SQL oracle replays the
     * training bit for bit. Centroids are ×2^15 integers: cosine routing
-    * does not see the scale, but a residual against them is only
-    * meaningful in the fixed-point residual code.
+    * does not see the scale, and the residual code quantizes against it.
     */
   case object TrainedFp extends Source
 
@@ -82,12 +86,11 @@ object AnnSpec {
   /** No partition pruning: every query meets the whole corpus. */
   case object Flat extends Coarse
 
-  /** Inverted-file pruning: `nlist` centroids from `centroids`; every
-    * corpus vector sits in its `assign` nearest lists, and every query
-    * scans the lists of its `nprobe` nearest centroids.
+  /** Inverted-file pruning: `nlist` centroids; every corpus vector sits
+    * in its `assign` nearest lists, and every query scans the lists of
+    * its `nprobe` nearest centroids.
     */
-  final case class Ivf(nlist: Int, nprobe: Int, centroids: Source = LowestId,
-      assign: Int = 1) extends Coarse
+  final case class Ivf(nlist: Int, nprobe: Int, assign: Int = 1) extends Coarse
 
   sealed trait Code
 
@@ -99,15 +102,13 @@ object AnnSpec {
     * ([[Similarity.ensurePqIndex]]); without it the corpus is encoded
     * inline.
     */
-  final case class Pq(m: Int, ncode: Int, codebook: Source = LowestId,
-      codes: Option[DataFrame] = None) extends Code
+  final case class Pq(m: Int, ncode: Int, codes: Option[DataFrame] = None) extends Code
 
   /** ADC over the RESIDUALS v - centroid(v), with one LUT per (query,
-    * probed list) — the faiss IVFPQ shape. Output adc_d2, or for the
-    * TrainedFp codebook the integer adc_fp and, when `rerankC` != 0,
-    * the exact-integer rerank distance d2_fp over the ADC top-C
-    * (-1 = C of 8k).
+    * probed list) — the faiss IVFPQ shape. Output adc_d2, or under the
+    * TrainedFp source the integer adc_fp and, when `rerankC` != 0, the
+    * exact-integer rerank distance d2_fp over the ADC top-C (-1 = C of
+    * 8k).
     */
-  final case class PqResidual(m: Int, ncode: Int, codebook: Source = LowestId,
-      rerankC: Int = -1) extends Code
+  final case class PqResidual(m: Int, ncode: Int, rerankC: Int = -1) extends Code
 }

@@ -98,8 +98,8 @@ object Similarity {
 
   /** Approximate top-k neighbors of every query vector — the one ANN
     * entry point. `spec` picks a point on the grid {Flat, Ivf} × {Raw,
-    * Pq, PqResidual} (see [[AnnSpec]]); each decision is one private
-    * stage, composed here:
+    * Pq, PqResidual} × source (see [[AnnSpec]]); each decision is one
+    * private stage, composed here:
     *
     *   - [[centroidFrame]]: the coarse centroids, by source;
     *   - [[routeCorpus]] / [[assignNearest]]: every corpus vector into
@@ -119,15 +119,15 @@ object Similarity {
     import AnnSpec._
     spec.validate(k)
     ((spec.coarse, spec.code): @unchecked) match {
-      case (Flat, pq: Pq) => scorePq(corpus, queries, k, pq, None)
+      case (Flat, pq: Pq) => scorePq(corpus, queries, k, pq, spec.source, None)
       case (ivf: Ivf, code) =>
-        val cent = centroidFrame(corpus, ivf.nlist, ivf.centroids)
+        val cent = centroidFrame(corpus, ivf.nlist, spec.source)
         code match {
           case Raw => scoreRaw(corpus, queries, k, cent, ivf)
-          case pq: Pq => scorePq(corpus, queries, k, pq, Some((cent, ivf.nprobe)))
-          case r: PqResidual if r.codebook == TrainedFp =>
+          case pq: Pq => scorePq(corpus, queries, k, pq, spec.source, Some((cent, ivf.nprobe)))
+          case r: PqResidual if spec.source == TrainedFp =>
             scoreResidualFp(corpus, queries, k, cent, ivf.nprobe, r)
-          case r: PqResidual => scoreResidual(corpus, queries, k, cent, ivf, r)
+          case r: PqResidual => scoreResidual(corpus, queries, k, cent, ivf, r, spec.source)
         }
     }
   }
@@ -1357,9 +1357,9 @@ object Similarity {
     * list AND rank under the quantized distance).
     */
   private def scorePq(corpus: DataFrame, queries: DataFrame, k: Int, pq: AnnSpec.Pq,
-      ivf: Option[(DataFrame, Int)]): DataFrame = {
+      source: AnnSpec.Source, ivf: Option[(DataFrame, Int)]): DataFrame = {
     val (cb, ncode) =
-      if (pq.codebook == AnnSpec.LowestId)
+      if (source == AnnSpec.LowestId)
         (pqCodebook(corpus, pq.m, pq.ncode, IdCol, VecCol), pq.ncode)
       else {
         val trained = pqTrainCodebookLocal(corpus, pq.m, pq.ncode)
@@ -1618,9 +1618,9 @@ object Similarity {
     * identical code size (AnnRecallSpec).
     *
     * LowestId codebook: subspace slices of the ncode lowest-id residuals
-    * PAST the centroid range — under LowestId centroids the nlist lowest
-    * ids are the centroids themselves, which assign to themselves with
-    * residual ZERO (a codebook of zeros degenerates ADC to id order).
+    * PAST the centroid range — the nlist lowest ids are the LowestId
+    * centroids themselves, which assign to themselves with residual ZERO
+    * (a codebook of zeros degenerates ADC to id order).
     * Codeword ids re-based to dense 0..ncode-1. Fully deterministic, so
     * the oracle replays s16's whole composition. Trained codebook:
     * [[pqTrainCodebookLocal]] run over the deterministic hash-sample of
@@ -1631,7 +1631,8 @@ object Similarity {
     * doubles per query against ONE equi-join on the list id.
     */
   private def scoreResidual(corpus: DataFrame, queries: DataFrame, k: Int,
-      cent: DataFrame, ivf: AnnSpec.Ivf, r: AnnSpec.PqResidual): DataFrame = {
+      cent: DataFrame, ivf: AnnSpec.Ivf, r: AnnSpec.PqResidual,
+      source: AnnSpec.Source): DataFrame = {
     val (m, ncode, nlist) = (r.m, r.ncode, ivf.nlist)
     def res(v: String) = zip_with(col(v), col("c_vec"),
       (a, b) => a.cast("double") - b.cast("double"))
@@ -1639,7 +1640,7 @@ object Similarity {
         "n_id", "n_vec", "n_vec", "c_vec")
       .select(col("n_id"), col("c_id"), res("n_vec").as("res"))
     val cb =
-      if (r.codebook == AnnSpec.LowestId)
+      if (source == AnnSpec.LowestId)
         broadcast(pqSubspaced(
             assigned.filter(col("n_id") >= nlist && col("n_id") < nlist + ncode)
               .select((col("n_id") - nlist).as("rid"), col("res")),

@@ -1868,7 +1868,7 @@ object NorthStar {
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
-          AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp, assign = 2), Raw))
+          AnnSpec(Ivf(nlist = 32, nprobe = 4, assign = 2), Raw, TrainedFp))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"cos_sim")
         .orderBy("q_id", "rnk")
     },
@@ -2403,7 +2403,7 @@ object NorthStar {
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
-          AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw))
+          AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw, TrainedFp))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"cos_sim")
         .orderBy("q_id", "rnk")
     },
@@ -2425,8 +2425,8 @@ object NorthStar {
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       Similarity.annTopK(emb, emb.filter($"vec_id" < 5), k = 5,
-          AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp),
-            PqResidual(m = 8, ncode = 32, TrainedFp)))
+          AnnSpec(Ivf(nlist = 32, nprobe = 4),
+            PqResidual(m = 8, ncode = 32), TrainedFp))
         .select($"q_id", $"n_id", $"rnk".cast("long").as("rnk"), $"adc_fp",
           $"d2_fp")
         .orderBy("q_id", "rnk")

@@ -597,10 +597,9 @@ object Relational {
     "q29_bucketed_join" -> { (s, dir) =>
       import s.implicits._
       val (ot, lt) = bucketedFixture(s, dir)
-      // big-big join scenario: the merge hint keeps broadcasting off the
-      // table in the plan itself, so the plan checked here is the plan
-      // that runs (a session-conf toggle was undone before the caller's
-      // action re-planned the frame, and would leak into shared sessions)
+      // big-big join scenario: the merge hint keeps the join a co-located
+      // SortMergeJoin in the plan itself, so the require checks the plan
+      // that runs
       val joined = s.table(lt)
         .join(s.table(ot).hint("merge"), $"l_orderkey" === $"o_orderkey")
       val plan = joined.queryExecution.executedPlan.toString

@@ -117,7 +117,7 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     val det = recallOf(Similarity.annTopK(emb, queries, k,
       AnnSpec(Flat, Pq(m = 8, ncode = 32))))
     val trained = recallOf(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Flat, Pq(m = 8, ncode = 32, Trained))))
+      AnnSpec(Flat, Pq(m = 8, ncode = 32), Trained)))
     info(f"PQ recall@$k vs exact L2 (m=8, ncode=32): deterministic $det%.3f, " +
       f"trained k-means $trained%.3f")
     // trained centers must not be WORSE than arbitrary corpus points —
@@ -180,9 +180,9 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     val det = recall(exact, topk(Similarity.annTopK(emb, queries, k,
       AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw))))
     val trained = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, Trained), Raw))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw, Trained))))
     val fp = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw, TrainedFp))))
     info(f"IVF recall@$k (nlist=32, nprobe=4): deterministic $det%.3f, " +
       f"trained spherical k-means $trained%.3f, fixed-point trained (s23) $fp%.3f")
     // trained centers must not be materially worse than arbitrary
@@ -216,13 +216,13 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     }
     val exact = topk(Similarity.bruteForceTopK(emb, queries, k))
     val hard = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw, TrainedFp))))
     val soft22 = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 2, TrainedFp, assign = 2), Raw))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 2, assign = 2), Raw, TrainedFp))))
     val fine = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 128, nprobe = 16, TrainedFp), Raw))))
+      AnnSpec(Ivf(nlist = 128, nprobe = 16), Raw, TrainedFp))))
     val soft42 = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp, assign = 2), Raw))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4, assign = 2), Raw, TrainedFp))))
     info(f"same 1/8 scan fraction — hard 32/4: $hard%.3f, soft 32/2x2: $soft22%.3f, " +
       f"fine 128/16: $fine%.3f; 2x budget soft 32/4x2 (s31): $soft42%.3f")
     // soft assignment must not lose to hard at the same budget, and the
@@ -305,14 +305,14 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     val det = recall(exact, topk(Similarity.annTopK(emb, queries, k,
       AnnSpec(Ivf(nlist = 32, nprobe = 4), PqResidual(m = 8, ncode = 32)))))
     val trained = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, Trained), PqResidual(m = 8, ncode = 32, Trained)))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), PqResidual(m = 8, ncode = 32), Trained))))
     val fpAdc = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp),
-        PqResidual(m = 8, ncode = 32, TrainedFp, rerankC = 0)))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4),
+        PqResidual(m = 8, ncode = 32, rerankC = 0), TrainedFp))))
     val fp = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), PqResidual(m = 8, ncode = 32, TrainedFp)))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), PqResidual(m = 8, ncode = 32), TrainedFp))))
     val coverage = recall(exact, topk(Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw))))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw, TrainedFp))))
     info(f"residual IVFxPQ recall@$k: deterministic $det%.3f, " +
       f"fully trained $trained%.3f, fixed-point trained ADC-only $fpAdc%.3f, " +
       f"+ exact-integer rerank (s24) $fp%.3f, trained-IVF coverage ceiling $coverage%.3f")
@@ -328,9 +328,9 @@ class AnnRecallSpec extends AnyFunSuite with Matchers {
     // replayability: both trainers are deterministic, so the whole
     // trained pipeline bit-agrees across runs
     val once = Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(32, 4, Trained), PqResidual(8, 32, Trained))).collect()
+      AnnSpec(Ivf(32, 4), PqResidual(8, 32), Trained)).collect()
     val twice = Similarity.annTopK(emb, queries, k,
-      AnnSpec(Ivf(32, 4, Trained), PqResidual(8, 32, Trained))).collect()
+      AnnSpec(Ivf(32, 4), PqResidual(8, 32), Trained)).collect()
     once.map(_.toString).sorted shouldBe twice.map(_.toString).sorted
   }
 

@@ -30,7 +30,7 @@ class KnnGraphSpec extends AnyFunSuite with Matchers {
     val graph = rows(Similarity.ivfKnnGraphTrainedFp(emb, k = 5,
       nlist = 32, nprobe = 4))
     val bcast = rows(Similarity.annTopK(emb, emb, k = 5,
-      AnnSpec(Ivf(nlist = 32, nprobe = 4, TrainedFp), Raw)))
+      AnnSpec(Ivf(nlist = 32, nprobe = 4), Raw, TrainedFp)))
     graph.length shouldBe bcast.length
     graph should contain theSameElementsInOrderAs bcast
   }
