@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.operators.{DistributedDBSCAN, SpatialJoin}
+import graft.operators.CacheScope.persist
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
@@ -52,7 +53,7 @@ class DBSCANClustering(override val uid: String)
   override def fit(dataset: Dataset[_]): DBSCANClusteringModel = {
     val result = DistributedDBSCAN.cluster(
       dataset.toDF(), $(eps), $(minPoints), $(maxPointsPerPartition), $(xCol), $(yCol))
-    val model = new DBSCANClusteringModel(uid, result.labeled.persist(),
+    val model = new DBSCANClusteringModel(uid, persist(result.labeled),
       result.partitions)
     copyValues(model.setParent(this))
   }

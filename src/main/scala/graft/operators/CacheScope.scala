@@ -3,114 +3,86 @@ package graft.operators
 import org.apache.spark.sql.{Dataset, SparkSession}
 import scala.collection.mutable.ArrayBuffer
 
-/** Caller-owned lifecycle for operator-internal `persist()`s.
+/** Session-owned lifecycle for every operator-internal `persist()`.
   *
   * Several operators cache an intermediate that feeds two branches of
   * the returned (lazy) plan — the cache is what keeps the expensive
   * kernel (shingling, minhashing, the neighbor graph) from being
   * recomputed once per branch. The operator cannot unpersist it before
-  * returning (the result has not run yet), so the lifecycle belongs to
-  * the caller: pass a scope, materialize the result, then `release()`:
+  * returning (the result has not run yet), so it persists through
+  * [[CacheScope.persist]], which registers the frame with its
+  * SparkSession. Whoever owns the session materializes the result, then
+  * reclaims every such cache at once:
   *
   * {{{
-  * val scope = new CacheScope
-  * val pairs = Dedup.jaccardPairs(docs, "text", "doc_id", scope = scope)
-  * pairs.write.parquet(out)   // action — the caches earn their keep here
-  * scope.release()            // zero residual cached RDDs
+  * val pairs = Dedup.jaccardPairs(docs, "text", "doc_id")
+  * pairs.write.parquet(out)          // action — the caches earn their keep here
+  * CacheScope.releaseSession(spark)  // zero residual cached RDDs
   * }}}
   *
-  * After `release()` the returned DataFrame is still valid — a further
-  * action simply recomputes from source.
-  *
-  * The default scope is [[CacheScope.session]]: every operator-internal
-  * persist is tracked in a per-SparkSession registry, so a long-lived
-  * session composing operators reclaims ALL of them with one
-  * `CacheScope.releaseSession(spark)` — no scope threading required and
-  * nothing is ever untracked. Callers wanting finer granularity pass
-  * their own `new CacheScope` (CacheScopeSpec asserts the zero-residual
-  * contract); [[CacheScope.unmanaged]] opts out of tracking entirely
-  * (caches then live until `spark.catalog.clearCache()`).
+  * After the release the returned DataFrame is still valid — a further
+  * action simply recomputes from source. CacheScopeSpec asserts the
+  * zero-residual contract, and StyleGateSpec keeps `persist` out of
+  * every other file under src/main, so nothing is ever untracked.
   */
-class CacheScope private[operators] (track: Boolean) {
-  def this() = this(true)
-
-  private val owned = ArrayBuffer.empty[Dataset[_]]
-
-  private[graft] def own[T <: Dataset[_]](ds: T): T = {
-    if (track) synchronized { owned += ds }
-    ds
-  }
-
-  /** Unpersist every intermediate cached under this scope (non-blocking).
-    * Call after the consuming action; idempotent.
-    */
-  def release(): Unit = synchronized {
-    owned.foreach(_.unpersist())
-    owned.clear()
-  }
-}
-
 object CacheScope {
-  /** Scope that tracks nothing — `release()` is a no-op and caches live
-    * until the session clears them.
-    */
-  val unmanaged: CacheScope = new CacheScope(false)
 
-  /** The default scope: delegates each `own()` to a per-SparkSession
-    * registry. Everything an operator persists under it is reclaimable
-    * via [[releaseSession]], so library composition outside the
-    * one-shot Verify/Bench drivers cannot accumulate untracked caches.
-    *
-    * Registry lifetime: entries live until [[releaseSession]] empties
+  /** Registry lifetime: entries live until [[releaseSession]] empties
     * them or the underlying SparkContext ends (a listener registered at
     * first use removes the entry then). The map is weak-KEYED, but that
-    * eviction alone can never fire while a scope holds Datasets — each
+    * eviction alone can never fire while an entry holds Datasets — each
     * tracked Dataset strongly references its SparkSession, so the value
     * reaches the key; the listener is what actually breaks the cycle
     * for a process that stops sessions without calling releaseSession.
     */
-  val session: CacheScope = new CacheScope(false) {
-    override private[graft] def own[T <: Dataset[_]](ds: T): T =
-      sessionScope(ds.sparkSession).own(ds)
-  }
-
   private val perSession =
-    new java.util.WeakHashMap[SparkSession, CacheScope]()
+    new java.util.WeakHashMap[SparkSession, ArrayBuffer[Dataset[_]]]()
 
-  /** The managed registry scope for `s` (created on first use). */
-  def sessionScope(s: SparkSession): CacheScope = perSession.synchronized {
-    var sc = perSession.get(s)
-    if (sc == null) {
-      sc = new CacheScope(true)
-      perSession.put(s, sc)
-      // Drop every entry of this context when it ends: without this, a
-      // long-lived process that stops and drops sessions would pin each
-      // stopped session (and all its tracked Datasets) forever — the
-      // scope's Dataset refs reach the session, defeating the weak key.
-      val ctx = s.sparkContext
-      ctx.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onApplicationEnd(
-            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
-          perSession.synchronized {
-            val it = perSession.entrySet().iterator()
-            while (it.hasNext) {
-              val en = it.next()
-              if (en.getKey != null && (en.getKey.sparkContext eq ctx))
-                it.remove()
+  /** `ds.persist()` at the default level (MEMORY_AND_DISK), registered
+    * with `ds`'s session so [[releaseSession]] reclaims it.
+    */
+  def persist[T <: Dataset[_]](ds: T): T = {
+    ds.persist()
+    val s = ds.sparkSession
+    perSession.synchronized {
+      var owned = perSession.get(s)
+      if (owned == null) {
+        owned = ArrayBuffer.empty[Dataset[_]]
+        perSession.put(s, owned)
+        // Drop every entry of this context when it ends: without this, a
+        // long-lived process that stops and drops sessions would pin each
+        // stopped session (and all its tracked Datasets) forever — the
+        // entry's Dataset refs reach the session, defeating the weak key.
+        val ctx = s.sparkContext
+        ctx.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+          override def onApplicationEnd(
+              e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit =
+            perSession.synchronized {
+              val it = perSession.entrySet().iterator()
+              while (it.hasNext) {
+                val en = it.next()
+                if (en.getKey != null && (en.getKey.sparkContext eq ctx))
+                  it.remove()
+              }
             }
-          }
-      })
+        })
+      }
+      owned += ds
     }
-    sc
+    ds
   }
 
-  /** Unpersist every operator-internal cache created under the default
-    * [[session]] scope for `s`. Idempotent; results stay valid (a
-    * further action recomputes from source).
+  /** Unpersist (non-blocking) every cache an operator created through
+    * [[persist]] on `s`. Call after the consuming action. Idempotent;
+    * results stay valid (a further action recomputes from source).
     */
   def releaseSession(s: SparkSession): Unit = {
-    val sc = perSession.synchronized(perSession.get(s))
-    if (sc != null) sc.release()
+    val owned = perSession.synchronized {
+      val o = perSession.get(s)
+      if (o == null) Nil
+      else { val all = o.toList; o.clear(); all }
+    }
+    owned.foreach(_.unpersist())
   }
 
   /** Unpersist EVERY persistent RDD of the context — including the

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.TextAnalysis
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -91,11 +92,10 @@ object Dedup {
     * be mirrored in the oracle).
     */
   def jaccardPairs(docs: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, minJaccard: Double = 0.6,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      n: Int = 3, minJaccard: Double = 0.6): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits.{newLongEncoder, newProductEncoder, newStringEncoder}
-    val docSets = scope.own(docs
+    val docSets = persist(docs
       .select(col(idCol).cast("long").as("id"), col(textCol).cast("string"))
       .as[(Long, String)]
       .map { case (id, text) =>
@@ -104,8 +104,7 @@ object Dedup {
         java.util.Arrays.sort(hs)
         (id, hs)
       }
-      .toDF("id", "sh")
-      .persist()) // reused: prefix emission + the verify join
+      .toDF("id", "sh")) // reused: prefix emission + the verify join
     val prefixPosting = docSets
       .as[(Long, Array[Long])]
       .flatMap { case (id, hs) =>
@@ -188,9 +187,8 @@ object Dedup {
     * similarity = fraction of agreeing minhashes.
     */
   def lshCandidatePairs(docs: DataFrame, textCol: String, idCol: String,
-      k: Int = 16, bands: Int = 4, n: Int = 3,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val mh = scope.own(minhashes(docs, textCol, idCol, k, n).persist())
+      k: Int = 16, bands: Int = 4, n: Int = 3): DataFrame = {
+    val mh = persist(minhashes(docs, textCol, idCol, k, n))
     lshCandidatePairsFromMinhashes(mh, k, bands)
   }
 
@@ -249,9 +247,8 @@ object Dedup {
   def dedupVerdicts(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 16, bands: Int = 4, n: Int = 3,
       minEstSim: Double = 0.5,
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val pairs = lshCandidatePairs(docs, textCol, idCol, k, bands, n, scope)
+      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
+    val pairs = lshCandidatePairs(docs, textCol, idCol, k, bands, n)
       .filter($"est_sim" >= minEstSim)
       .select($"id_a", $"id_b")
     val canonMap = ConnectedComponents.componentMap(pairs, driverMaxEdges)
@@ -287,11 +284,10 @@ object Dedup {
   def dedupVerdictsByQuality(docs: DataFrame, textCol: String, idCol: String,
       quality: Column, k: Int = 16, bands: Int = 4, n: Int = 3,
       minEstSim: Double = 0.5,
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val v = dedupVerdicts(docs, textCol, idCol, k, bands, n, minEstSim,
-      driverMaxEdges, scope)
+      driverMaxEdges)
     val q = docs.select(col(idCol).cast("long").as("doc_id"),
       quality.cast("long").as("quality"))
     val w = Window.partitionBy($"canonical_id")
@@ -327,13 +323,12 @@ object Dedup {
       textCol: String, idCol: String, quality: Column,
       k: Int = 16, bands: Int = 4, n: Int = 3,
       minEstSim: Double = 0.5,
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = scope.own(
-      lshCandidatePairs(docs, textCol, idCol, k, bands, n, scope)
+    val pairs = persist(
+      lshCandidatePairs(docs, textCol, idCol, k, bands, n)
         .filter($"est_sim" >= minEstSim)
-        .select($"id_a", $"id_b").persist()) // closed twice: before + after
+        .select($"id_a", $"id_b")) // closed twice: before + after
     val ntc = noticedIds.select(
       col(noticedIds.columns.head).cast("long").as("ntc_id"))
     val q = docs.select(col(idCol).cast("long").as("doc_id"),
@@ -484,10 +479,9 @@ object Dedup {
     * cross join.
     */
   def simhashNearPairs(docs: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      maxHamming: Int = 3): DataFrame = {
     // persist: the signature computation feeds BOTH sides of the self-join
-    val withSim = scope.own(withSimhash(docs, textCol, idCol).persist())
+    val withSim = persist(withSimhash(docs, textCol, idCol))
     val banded = withSim.select($"id", $"simhash",
         explode(array((0 until 4).map(b =>
           struct(lit(b).as("band_no"),
@@ -552,29 +546,26 @@ object Dedup {
     * `minContainment`.
     */
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
-      n: Int = 3, dfCap: Long = 32, minContainment: Double = 0.8,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      n: Int = 3, dfCap: Long = 32, minContainment: Double = 0.8): DataFrame = {
     require(n >= 1, s"shingle n=$n must be >= 1")
     require(dfCap >= 1, s"dfCap=$dfCap must be >= 1")
     require(minContainment > 0 && minContainment <= 1,
       s"minContainment=$minContainment must be in (0, 1]")
     val spark = docs.sparkSession
     import spark.implicits.{newLongEncoder, newProductEncoder, newStringEncoder}
-    val sh = scope.own(docs
+    val sh = persist(docs
       .select(col(idCol).cast("long").as("id"), col(textCol).cast("string"))
       .as[(Long, String)]
       .flatMap { case (id, t) =>
         graft.functions.TextKernels
           .shingleHashes(if (t == null) "" else t, n).iterator.map(h => (id, h))
       }
-      .toDF("id", "sh")
-      .persist())
+      .toDF("id", "sh"))
     val sizes = sh.groupBy($"id").agg(count(lit(1)).as("n_sh"))
     // both sides of the pairs self-join consume `rare`; persist or the
     // df-cap aggregate + join replays once per side
-    val rare = scope.own(sh.join(
-      sh.groupBy($"sh").agg(count(lit(1)).as("df")).filter($"df" <= dfCap), "sh")
-      .persist())
+    val rare = persist(sh.join(
+      sh.groupBy($"sh").agg(count(lit(1)).as("df")).filter($"df" <= dfCap), "sh"))
     val pairs = rare.as("a").join(rare.as("b"),
         col("a.sh") === col("b.sh") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -590,9 +581,8 @@ object Dedup {
   }
 
   def simhash64NearPairs(docs: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 3,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val withSim = scope.own(withSimhash64(docs, textCol, idCol).persist())
+      maxHamming: Int = 3): DataFrame = {
+    val withSim = persist(withSimhash64(docs, textCol, idCol))
     bandedNearPairs64(withSim.select($"id", $"simhash".as("sig64")), maxHamming)
   }
 
@@ -678,17 +668,16 @@ object Dedup {
     * within one document does not (ndocs = 1).
     */
   def lineDupStats(docs: DataFrame, textCol: String, idCol: String,
-      lineTokens: Int = 10,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      lineTokens: Int = 10): DataFrame = {
     require(lineTokens > 0, s"lineTokens must be positive, got $lineTokens")
     val toks = TextAnalysis.tokens(col(textCol))
     val nChunks = greatest(ceil(size(toks).cast("double") / lineTokens).cast("int"), lit(1))
     val lines = transform(sequence(lit(0), nChunks - 1),
       i => array_join(slice(toks, i * lineTokens + 1, lit(lineTokens)), " "))
-    val perLine = scope.own(docs
+    // feeds both the posting aggregate and the per-doc stats
+    val perLine = persist(docs
       .select(col(idCol).cast("long").as("id"), explode(lines).as("line"))
-      .select($"id", TextAnalysis.stringHash($"line").as("lh"))
-      .persist()) // feeds both the posting aggregate and the per-doc stats
+      .select($"id", TextAnalysis.stringHash($"line").as("lh")))
     val posting = perLine.groupBy($"lh")
       .agg(countDistinct($"id").as("ndocs"))
     perLine.join(posting, "lh")
@@ -724,20 +713,19 @@ object Dedup {
     * pair. span_tokens = longest run + windowTokens - 1.
     */
   def longSpanPairs(docs: DataFrame, textCol: String, idCol: String,
-      windowTokens: Int = 8, dfCap: Int = 1000,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      windowTokens: Int = 8, dfCap: Int = 1000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(windowTokens > 0, s"windowTokens must be positive, got $windowTokens")
     require(dfCap >= 2, s"dfCap must be >= 2 (pairs need two postings), got $dfCap")
     val toks = TextAnalysis.tokens(col(textCol))
     val winStrs = transform(sequence(lit(1), size($"toks") - (windowTokens - 1)),
       p => array_join(slice($"toks", p, lit(windowTokens)), " "))
-    val wins = scope.own(docs
+    // feeds the df aggregate and both join sides
+    val wins = persist(docs
       .select(col(idCol).cast("long").as("id"), toks.as("toks"))
       .filter(size($"toks") >= windowTokens)
       .select($"id", posexplode(winStrs).as(Seq("p0", "win")))
-      .select($"id", ($"p0" + 1).as("p"), TextAnalysis.stringHash($"win").as("wh"))
-      .persist()) // feeds the df aggregate and both join sides
+      .select($"id", ($"p0" + 1).as("p"), TextAnalysis.stringHash($"win").as("wh")))
     // `shared` feeds both join sides unpersisted on purpose: the
     // subtrees are identical, AQE exchange reuse serves the second
     // side from the first's shuffle files (persisting measured
@@ -785,12 +773,11 @@ object Dedup {
     * distinct-doc frequency, not raw frequency.
     */
   def dupSpans(docs: DataFrame, textCol: String, idCol: String,
-      windowTokens: Int = 8,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      windowTokens: Int = 8): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(windowTokens > 0, s"windowTokens must be positive, got $windowTokens")
-    val wins = scope.own(windowHashes(docs, textCol, idCol, windowTokens)
-      .persist()) // feeds the cross-doc df aggregate and the mark join
+    // feeds the cross-doc df aggregate and the mark join
+    val wins = persist(windowHashes(docs, textCol, idCol, windowTokens))
     val crossDoc = wins.groupBy($"wh")
       .agg(countDistinct($"id").as("ndocs"))
       .filter($"ndocs" >= 2)
@@ -851,18 +838,17 @@ object Dedup {
     */
   def weightedJaccardPairs(docs: DataFrame, textCol: String, idCol: String,
       wCap: Int = 3, dfCap: Long = 50,
-      thetaNum: Int = 1, thetaDen: Int = 2,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      thetaNum: Int = 1, thetaDen: Int = 2): DataFrame = {
     require(wCap >= 1 && dfCap >= 1, s"wCap=$wCap dfCap=$dfCap must be >= 1")
     require(thetaNum >= 0 && thetaDen >= 1,
       s"theta = $thetaNum/$thetaDen must be a nonnegative rational")
-    val tw = scope.own(docs
+    // feeds df counts, candidate join, and the exact pass
+    val tw = persist(docs
       .select(col(idCol).cast("long").as("id"),
         explode(TextAnalysis.tokens(col(textCol))).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy(col("id"), col("tok"))
-      .agg(least(count(lit(1)), lit(wCap.toLong)).as("w"))
-      .persist()) // feeds df counts, candidate join, and the exact pass
+      .agg(least(count(lit(1)), lit(wCap.toLong)).as("w")))
     val wsum = tw.groupBy(col("id")).agg(sum(col("w")).as("wsum"))
     val rare = tw.join(
       tw.groupBy(col("tok")).agg(count(lit(1)).as("df"))

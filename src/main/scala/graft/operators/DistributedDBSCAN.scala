@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.core._
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -84,11 +85,11 @@ object DistributedDBSCAN {
 
     val cell = 2 * eps
     // Persisted: consumed by two passes (histogram job, duplicate-assign)
-    // — MEMORY_AND_DISK so huge inputs degrade to spill, not OOM.
-    val pts = points
+    // — at the default MEMORY_AND_DISK, so huge inputs degrade to spill,
+    // not OOM.
+    val pts = persist(points
       .select(col(xCol).cast("double").as("x"), col(yCol).cast("double").as("y"))
-      .as[Pt]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .as[Pt])
 
     // ---- Job 1: grid-cell histogram (partial+final agg, tiny result) ----
     val histogram = pts.toDF()
@@ -123,7 +124,7 @@ object DistributedDBSCAN {
 
     // ---- Shuffle by spatial partition; local DBSCAN per group. Points
     // sorted within the group so labels are reproducible. ----
-    val clustered: Dataset[Clustered] = assigned
+    val clustered: Dataset[Clustered] = persist(assigned
       .groupByKey(_.pid)
       .flatMapGroups { (pid, it) =>
         val arr = it.map(a => Pt(a.x, a.y)).toArray
@@ -132,12 +133,11 @@ object DistributedDBSCAN {
           .fit(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
           .iterator
           .map(lp => Clustered(pid, lp.x, lp.y, lp.cluster, lp.flag))
-      }
-      .persist()
+      })
 
     // ---- Margin-band sightings: every clustered copy of a point lying in
     // some partition's eps border band, keyed by the band owner. ----
-    val cands: Dataset[MergeCand] = clustered.flatMap { c =>
+    val cands: Dataset[MergeCand] = persist(clustered.flatMap { c =>
       val ms = bMargins.value
       bIndex.value.query(c.x, c.y).iterator
         .filter { id =>
@@ -145,7 +145,7 @@ object DistributedDBSCAN {
           m.main.contains(c.x, c.y) && !m.inner.almostContains(c.x, c.y)
         }
         .map(target => MergeCand(target, c.pid, c.x, c.y, c.cluster, c.flag))
-    }.persist()
+    })
 
     // ---- Job 2: cluster-alias edges = two sightings of one point under
     // different (partition, local-cluster) ids, where at least one

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,7 +37,7 @@ object GlobalOrder {
     * + `__total` (grand total row count), both LongType.
     */
   private def rankedWithTotal(df: DataFrame, sortCols: Seq[Column],
-                              nParts: Int, scope: CacheScope): DataFrame = {
+                              nParts: Int): DataFrame = {
     require(nParts > 0, s"nParts must be positive, got $nParts")
     work.foreach(c => require(!df.columns.contains(c),
       s"input must not already contain working column $c"))
@@ -46,9 +47,8 @@ object GlobalOrder {
     // keyed by are the ones the ranks actually used (no reliance on
     // repartitionByRange's sampling being replay-identical across two
     // executions of the lineage)
-    val ranged = scope.own(df.repartitionByRange(nParts, sortCols: _*)
-      .withColumn("__pid", spark_partition_id().cast("long"))
-      .persist())
+    val ranged = persist(df.repartitionByRange(nParts, sortCols: _*)
+      .withColumn("__pid", spark_partition_id().cast("long")))
     // pass 1: rank within each range partition — parallel
     val wLocal = Window.partitionBy(col("__pid")).orderBy(sortCols: _*)
     val local = ranged.withColumn("__grank", row_number().over(wLocal).cast("long"))
@@ -73,16 +73,13 @@ object GlobalOrder {
     * `sortCols`, added as `rankName`. `sortCols` should be a total
     * order (include a tiebreaker) for a deterministic result.
     *
-    * PERSISTS the range-partitioned intermediate for the two passes.
-    * Under the default [[CacheScope.session]] the cache is tracked in
-    * the per-session registry — reclaim it with
-    * `CacheScope.releaseSession(spark)` (or pass an explicit scope and
-    * `release()` it after the consuming action).
+    * PERSISTS the range-partitioned intermediate for the two passes;
+    * `CacheScope.releaseSession(spark)` reclaims it after the consuming
+    * action.
     */
   def globalRank(df: DataFrame, sortCols: Seq[Column], nParts: Int = 32,
-                 rankName: String = "rank",
-                 scope: CacheScope = CacheScope.session): DataFrame =
-    rankedWithTotal(df, sortCols, nParts, scope)
+                 rankName: String = "rank"): DataFrame =
+    rankedWithTotal(df, sortCols, nParts)
       .drop("__total").withColumnRenamed("__grank", rankName)
 
   /** Global NTILE(k) over `sortCols`, added as `tileName` (LongType),
@@ -90,14 +87,12 @@ object GlobalOrder {
     * tiles 1..rem hold base+1 rows, tiles rem+1..k hold base. Pure
     * per-row arithmetic on (rank, n) — the rank is the only ordered
     * computation, and it is the two-pass parallel one above.
-    * Same persist caveat as [[globalRank]]: pass a managed scope in
-    * long-lived sessions.
+    * Same persist caveat as [[globalRank]].
     */
   def globalNtile(df: DataFrame, sortCols: Seq[Column], k: Int,
-                  nParts: Int = 32, tileName: String = "tile",
-                  scope: CacheScope = CacheScope.session): DataFrame = {
+                  nParts: Int = 32, tileName: String = "tile"): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    rankedWithTotal(df, sortCols, nParts, scope)
+    rankedWithTotal(df, sortCols, nParts)
       .withColumn(tileName, expr(
         s"""CASE
            |  WHEN __total % $k = 0 THEN (__grank - 1) div (__total div $k) + 1
@@ -121,8 +116,7 @@ object GlobalOrder {
     * Same persist caveat as [[globalRank]].
     */
   def globalRunningSum(df: DataFrame, sortCols: Seq[Column], valueCol: Column,
-                       sumName: String = "cum", nParts: Int = 32,
-                       scope: CacheScope = CacheScope.session): DataFrame = {
+                       sumName: String = "cum", nParts: Int = 32): DataFrame = {
     require(nParts > 0, s"nParts must be positive, got $nParts")
     (work :+ "__v" :+ "__cum").foreach(c => require(!df.columns.contains(c),
       s"input must not already contain working column $c"))
@@ -132,10 +126,9 @@ object GlobalOrder {
     require(Seq("byte", "short", "integer", "long").contains(vType.typeName),
       s"globalRunningSum requires an integral valueCol (exact, " +
         s"order-independent sum); got ${vType.typeName}")
-    val ranged = scope.own(df.repartitionByRange(nParts, sortCols: _*)
+    val ranged = persist(df.repartitionByRange(nParts, sortCols: _*)
       .withColumn("__pid", spark_partition_id().cast("long"))
-      .withColumn("__v", valueCol.cast("long"))
-      .persist())
+      .withColumn("__v", valueCol.cast("long")))
     val wLocal = Window.partitionBy(col("__pid")).orderBy(sortCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val local = ranged.withColumn("__cum", sum(col("__v")).over(wLocal))

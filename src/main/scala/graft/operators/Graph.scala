@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,7 +65,7 @@ object Graph {
     // recomputed by every one of the `iters` chained iterations.
     val ew = edges.groupBy("src", "dst").agg(count(lit(1)).as("w"))
     val outDeg = ew.groupBy("src").agg(sum(col("w")).as("deg"))
-    val e = ew.join(outDeg, "src").persist()
+    val e = persist(ew.join(outDeg, "src"))
     var r = nodes.select(col("id"), lit(scaleFp / n).as("r"))
     for (_ <- 1 to iters) {
       val in = e.join(r, e("src") === r("id"))
@@ -86,15 +87,13 @@ object Graph {
     * label table to the edges + two partial-aggregatable hash
     * aggregates — the (node, label) count, then the
     * max(struct(cnt, -label)) argmax; never a window over nodes — and
-    * a left join back to the node set. `pin` persists each round's
-    * label table (round r+1 reads it twice: count join + fallback);
-    * pass a CacheScope-owned persist from query code. Synchronous +
-    * exact tie-break = bit-replayable: the SQL oracle unrolls the
-    * rounds as layered CTEs. Returns (id, lbl).
+    * a left join back to the node set. Each round's label table is
+    * persisted (round r+1 reads it twice: count join + fallback).
+    * Synchronous + exact tie-break = bit-replayable: the SQL oracle
+    * unrolls the rounds as layered CTEs. Returns (id, lbl).
     */
-  def labelPropagation(nodes: DataFrame, sym: DataFrame, rounds: Int,
-      pin: DataFrame => DataFrame = identity): DataFrame = {
-    var labels = pin(nodes.select(col("id"), col("id").as("lbl")))
+  def labelPropagation(nodes: DataFrame, sym: DataFrame, rounds: Int): DataFrame = {
+    var labels = persist(nodes.select(col("id"), col("id").as("lbl")))
     for (_ <- 1 to rounds) {
       val adopted = sym
         .join(labels.select(col("id").as("v"), col("lbl")), "v")
@@ -103,7 +102,7 @@ object Graph {
         .groupBy(col("u"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("u").as("id"), (-col("m")("neg")).as("new_lbl"))
-      labels = pin(nodes.join(adopted, Seq("id"), "left")
+      labels = persist(nodes.join(adopted, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("new_lbl"), col("id")).as("lbl")))
     }

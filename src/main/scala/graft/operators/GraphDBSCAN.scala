@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -33,13 +34,11 @@ object GraphDBSCAN {
     */
   def labels(ids: DataFrame, nb0: DataFrame, minPts: Int,
       idCol: String = "vec_id",
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val nb = scope.own(nb0.persist())
-    val core = scope.own(nb.groupBy(col("ia")).count()
+      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
+    val nb = persist(nb0)
+    val core = persist(nb.groupBy(col("ia")).count()
       .filter(col("count") + 1 >= minPts) // neighbor count includes self
-      .select(col("ia").as("id"))
-      .persist())
+      .select(col("ia").as("id")))
     val coreEdges = nb
       .join(core.select(col("id").as("ia")), "ia", "left_semi")
       .join(core.select(col("id").as("ib")), "ib", "left_semi")
@@ -87,8 +86,7 @@ object GraphDBSCAN {
   def euclidean(points: DataFrame, eps: Double, minPts: Int,
       idCol: String = "vec_id", vecCol: String = "v",
       gridDims: Int = 2,
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
     val base = points.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
     def cellAt(d: Int, c: Column = col("vec")): Column =
       floor(element_at(c, d + 1) / eps).cast("long")
@@ -111,7 +109,6 @@ object GraphDBSCAN {
           col("a.id") =!= col("b.id") &&
           distSq(col("a.vec"), col("b.vec")) <= lit(eps * eps))
       .select(col("a.id").as("ia"), col("b.id").as("ib"))
-    labels(base.select(col("id").as(idCol)), nb, minPts, idCol, driverMaxEdges,
-      scope)
+    labels(base.select(col("id").as(idCol)), nb, minPts, idCol, driverMaxEdges)
   }
 }

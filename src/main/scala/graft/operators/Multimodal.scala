@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -155,8 +156,7 @@ object Multimodal {
     */
   def chunkOverlapPairs(docs: DataFrame, textCol: String, idCol: String,
       w: Int = 8, mask: Long = 63, dfCap: Long = 16,
-      minOverlap: Double = 0.5,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      minOverlap: Double = 0.5): DataFrame = {
     require(w >= 1, s"chunk window w=$w must be >= 1")
     require(mask >= 0, s"boundary mask=$mask must be >= 0")
     require(dfCap >= 1, s"dfCap=$dfCap must be >= 1")
@@ -164,15 +164,14 @@ object Multimodal {
       s"minOverlap=$minOverlap must be in (0, 1]")
     val spark = docs.sparkSession
     import spark.implicits._
-    val chunks = scope.own(docs
+    val chunks = persist(docs
       .select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .flatMap { case (id, t) =>
         graft.functions.TextKernels.cdcChunkHashes(
           if (t == null) "" else t, w, mask).distinct.map(h => (id, h))
       }
-      .toDF("id", "ch")
-      .persist())
+      .toDF("id", "ch"))
     keyOverlapPairs(chunks, dfCap, minOverlap)
   }
 
@@ -219,8 +218,7 @@ object Multimodal {
     * all-pairs, and the sampled keys are stride× fewer than blocks.
     */
   def frameNearPairs(docs: DataFrame, textCol: String, idCol: String,
-      stride: Int = 4, dfCap: Long = 16, minOverlap: Double = 0.5,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      stride: Int = 4, dfCap: Long = 16, minOverlap: Double = 0.5): DataFrame = {
     require(stride >= 1, s"stride=$stride must be >= 1")
     require(dfCap >= 1, s"dfCap=$dfCap must be >= 1")
     require(minOverlap > 0 && minOverlap <= 1,
@@ -228,7 +226,7 @@ object Multimodal {
     val spark = docs.sparkSession
     import spark.implicits._
     val bs = StubCodec.BlockSize
-    val keys = scope.own(withBinaryPayload(docs, textCol)
+    val keys = persist(withBinaryPayload(docs, textCol)
       .select(col(idCol).cast("long"), col("payload"))
       .as[(Long, Array[Byte])]
       .flatMap { case (id, p) =>
@@ -248,8 +246,7 @@ object Multimodal {
         }
         ks.iterator.map(k => (id, k))
       }
-      .toDF("id", "ch")
-      .persist())
+      .toDF("id", "ch"))
     keyOverlapPairs(keys, dfCap, minOverlap)
   }
 
@@ -305,9 +302,8 @@ object Multimodal {
     * complement to [[chunkOverlapPairs]]'s byte-level CDC matching.
     */
   def phashNearPairs(docs: DataFrame, textCol: String, idCol: String,
-      maxHamming: Int = 6,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val sigs = scope.own(withPerceptualHash(docs, textCol, idCol).persist())
+      maxHamming: Int = 6): DataFrame = {
+    val sigs = persist(withPerceptualHash(docs, textCol, idCol))
     Dedup.bandedNearPairs64(sigs, maxHamming)
   }
 
@@ -667,9 +663,8 @@ object Multimodal {
     * silent shots (the rows the filter exists for).
     */
   def speechShotCoverage(spark: SparkSession, docsWithPayload: DataFrame,
-      idCol: String = "doc_id", vadThr: Int = 95, cutThr: Long = 96L,
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val withP = scope.own(docsWithPayload.persist()) // two extraction passes
+      idCol: String = "doc_id", vadThr: Int = 95, cutThr: Long = 96L): DataFrame = {
+    val withP = persist(docsWithPayload) // two extraction passes
     val shots = shotKeyframes(spark, withP, idCol, cutThr).toDF()
       .select(col("doc_id"), col("shot"), col("start_f"), col("end_f"))
     val segs = vadSpans(spark, withP, idCol, vadThr).toDF()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -549,11 +550,10 @@ object Similarity {
     */
   def ivfKnnGraphTrainedFp(corpus: DataFrame, k: Int,
       nlist: Int = 32, nprobe: Int = 4, iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame =
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     ivfKnnGraphFromTrained(corpus,
       ivfTrainCentroidsFp(corpus, nlist, iters, sampleN, idCol, vecCol),
-      k, nprobe, idCol, vecCol, scope)
+      k, nprobe, idCol, vecCol)
 
   /** [[ivfKnnGraphTrainedFp]] over ALREADY-TRAINED centroids — an
     * evaluation that derives several tables from one quantizer (s40
@@ -563,16 +563,15 @@ object Similarity {
     */
   private[graft] def ivfKnnGraphFromTrained(corpus: DataFrame,
       trained: Array[(Long, Array[Double])], k: Int, nprobe: Int,
-      idCol: String, vecCol: String, scope: CacheScope): DataFrame = {
+      idCol: String, vecCol: String): DataFrame = {
     // one scan routes every vector ([[topLists]]): probes[1] = assignment,
     // probes[1..nprobe] = the query-side lists. Scope-persisted: both
     // sides of the candidate join derive from it, and without the cache
     // the O(n·nlist) routing scan runs twice (the .explain showed two full
     // corpus × centroid aggregation branches under the join).
-    val routed = scope.own(topLists(corpus
+    val routed = persist(topLists(corpus
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .crossJoin(centFrame(corpus.sparkSession, trained)), nprobe)
-      .persist())
+      .crossJoin(centFrame(corpus.sparkSession, trained)), nprobe))
     knnGraphTailFromRouted(routed, k)
   }
 
@@ -722,13 +721,12 @@ object Similarity {
       nlist: Int = 32, nprobe: Int = 4, superList: Int = 6,
       superProbe: Int = 3,
       iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(superList >= 1 && superProbe >= 1,
       s"superList/superProbe must be >= 1, got $superList/$superProbe")
     ivfKnnGraph2LFromTrained(corpus,
       ivfTrainCentroidsFp(corpus, nlist, iters, sampleN, idCol, vecCol),
-      k, nprobe, superList, superProbe, idCol, vecCol, scope)
+      k, nprobe, superList, superProbe, idCol, vecCol)
   }
 
   /** [[ivfKnnGraphTrainedFp2L]] over ALREADY-TRAINED centroids — the
@@ -738,12 +736,12 @@ object Similarity {
   private[graft] def ivfKnnGraph2LFromTrained(corpus: DataFrame,
       trained: Array[(Long, Array[Double])], k: Int, nprobe: Int,
       superList: Int, superProbe: Int,
-      idCol: String, vecCol: String, scope: CacheScope): DataFrame = {
+      idCol: String, vecCol: String): DataFrame = {
     if (trained.isEmpty)
       return emptyGraph(corpus)
     val (superRows, centRows) = kCenterSuperTable(trained, superList)
     val routed = twoLevelRouted(corpus, superRows, centRows, nprobe,
-      superProbe, idCol, vecCol, scope)
+      superProbe, idCol, vecCol)
     knnGraphTailFromRouted(routed, k)
   }
 
@@ -752,7 +750,7 @@ object Similarity {
     * tree's top level, the standard recall repair for boundary rows a
     * single cell would strand), then ranks only the probed super
     * cells' centroids (cells are disjoint, so the union never
-    * duplicates a centroid). Returns the scope-persisted
+    * duplicates a centroid). Returns the persisted
     * (id, probes, vec) frame both the graph tail and the PQ pipeline
     * consume — probes[1] is the hard assignment.
     */
@@ -760,7 +758,7 @@ object Similarity {
       superRows: Seq[(Long, Seq[Double])],
       centRows: Seq[(Long, Long, Seq[Double])],
       nprobe: Int, superProbe: Int,
-      idCol: String, vecCol: String, scope: CacheScope): DataFrame = {
+      idCol: String, vecCol: String): DataFrame = {
     import corpus.sparkSession.implicits._
     // level 1 ranks the supers, which ride in topLists' (c_id, c_vec) slots
     val supers = broadcast(superRows.toDF("c_id", "c_vec"))
@@ -768,7 +766,7 @@ object Similarity {
     val lvl1 = topLists(corpus.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
         .crossJoin(supers), superProbe)
       .select(col("id"), explode(col("probes")("_1")).as("s_id"), col("vec"))
-    scope.own(topLists(lvl1.join(centT, Seq("s_id")), nprobe).persist())
+    persist(topLists(lvl1.join(centT, Seq("s_id")), nprobe))
   }
 
   /** [[ivfKnnGraphTrainedFp]]'s tail over a routed (id, probes, vec)
@@ -881,9 +879,8 @@ object Similarity {
   def knnGraphScaledFp(corpus: DataFrame, k: Int,
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3,
       iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    scaledRouter(corpus, targetList, nprobe, superProbe, iters, sampleN, idCol, vecCol, scope)
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    scaledRouter(corpus, targetList, nprobe, superProbe, iters, sampleN, idCol, vecCol)
       .fold(emptyGraph(corpus)) { case (_, route) => knnGraphTailFromRouted(route(corpus), k) }
   }
 
@@ -894,15 +891,15 @@ object Similarity {
     * tables. None = empty corpus.
     */
   private def scaledRouter(corpus: DataFrame, targetList: Int, nprobe: Int,
-      superProbe: Int, iters: Int, sampleN: Int, idCol: String, vecCol: String,
-      scope: CacheScope): Option[(Array[(Long, Array[Double])], DataFrame => DataFrame)] = {
+      superProbe: Int, iters: Int, sampleN: Int, idCol: String, vecCol: String)
+      : Option[(Array[(Long, Array[Double])], DataFrame => DataFrame)] = {
     val trained = ivfTrainCentroidsFp(corpus, scaledNlist(corpus.count(), targetList),
       iters, sampleN, idCol, vecCol, hashSeed = true)
     if (trained.isEmpty) None
     else {
       val (superRows, centRows) = firstNsSuperTable(trained, scaledSuperList(trained.length))
       Some((trained, (df: DataFrame) => twoLevelRouted(df, superRows, centRows, nprobe,
-        superProbe, idCol, vecCol, scope)))
+        superProbe, idCol, vecCol)))
     }
   }
 
@@ -933,13 +930,11 @@ object Similarity {
       beam: Int = 16, rounds: Int = 3, seedMod: Int = 64,
       graphK: Int = 10, undirected: Boolean = true,
       nlist: Int = 32, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val graph = scope.own(knnEdges(corpus, graphK, undirected, nlist, nprobe,
-        idCol, vecCol, scope)
-      .persist()) // read once per beam round
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val graph = persist(knnEdges(corpus, graphK, undirected, nlist, nprobe,
+        idCol, vecCol)) // read once per beam round
     graphBeamSearchOver(graph, corpus, queries, k, beam, rounds, seedMod,
-      idCol, vecCol, scope)
+      idCol, vecCol)
   }
 
   /** (node, edge_to) walk edges from the [[ivfKnnGraphTrainedFp]]
@@ -952,10 +947,9 @@ object Similarity {
     */
   def knnEdges(corpus: DataFrame, graphK: Int, undirected: Boolean,
       nlist: Int = 32, nprobe: Int = 4,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val g0 = ivfKnnGraphTrainedFp(corpus, graphK, nlist, nprobe,
-        idCol = idCol, vecCol = vecCol, scope = scope)
+        idCol = idCol, vecCol = vecCol)
       .select(col("q_id").as("node"), col("n_id").as("edge_to"))
     symmetrizeEdges(g0, undirected)
   }
@@ -985,10 +979,9 @@ object Similarity {
     */
   def knnEdgesScaled(corpus: DataFrame, graphK: Int, undirected: Boolean,
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val g0 = knnGraphScaledFp(corpus, graphK, targetList, nprobe, superProbe,
-        idCol = idCol, vecCol = vecCol, scope = scope)
+        idCol = idCol, vecCol = vecCol)
       .select(col("q_id").as("node"), col("n_id").as("edge_to"))
     symmetrizeEdges(g0, undirected)
   }
@@ -1002,13 +995,11 @@ object Similarity {
       beam: Int = 16, rounds: Int = 3, seedMod: Int = 64,
       graphK: Int = 10, undirected: Boolean = true,
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
-    val graph = scope.own(knnEdgesScaled(corpus, graphK, undirected,
-        targetList, nprobe, superProbe, idCol, vecCol, scope)
-      .persist()) // read once per beam round
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val graph = persist(knnEdgesScaled(corpus, graphK, undirected,
+        targetList, nprobe, superProbe, idCol, vecCol)) // read once per beam round
     graphBeamSearchOver(graph, corpus, queries, k, beam, rounds, seedMod,
-      idCol, vecCol, scope)
+      idCol, vecCol)
   }
 
   /** [[graphBeamSearch]] over a PREBUILT (node, edge_to) graph — the
@@ -1018,10 +1009,9 @@ object Similarity {
   def graphBeamSearchOver(graph: DataFrame, corpus: DataFrame,
       queries: DataFrame, k: Int, beam: Int = 8, rounds: Int = 2,
       seedMod: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame =
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     graphBeamSearchRoundsOver(graph, corpus, queries, k, beam,
-      Seq(rounds), seedMod, idCol, vecCol, scope).head._2
+      Seq(rounds), seedMod, idCol, vecCol).head._2
 
   /** [[graphBeamSearchOver]] read out at SEVERAL round counts from ONE
     * progressive walk: the beam state after round r is identical
@@ -1035,16 +1025,15 @@ object Similarity {
   def graphBeamSearchRoundsOver(graph: DataFrame, corpus: DataFrame,
       queries: DataFrame, k: Int, beam: Int, roundsWanted: Seq[Int],
       seedMod: Int = 64,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): Seq[(Int, DataFrame)] = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Seq[(Int, DataFrame)] = {
     import corpus.sparkSession.implicits._
     require(roundsWanted.nonEmpty && roundsWanted.forall(_ >= 0),
       s"roundsWanted must be non-empty, >= 0 each; got $roundsWanted")
     require(k <= beam, s"k=$k must be <= beam=$beam (the final read is a beam prefix)")
     val topB = topCos(beam)
-    val vecs = scope.own(corpus
-      .select(col(idCol).cast("long").as("nid"), col(vecCol).as("nvec"))
-      .persist()) // seed scan + one score join per round
+    // seed scan + one score join per round
+    val vecs = persist(corpus
+      .select(col(idCol).cast("long").as("nid"), col(vecCol).as("nvec")))
     val q = broadcast(queries.select(col(idCol).cast("long").as("q_id"),
       col(vecCol).as("q_vec")))
     // exact-score candidate ids against their query, keep top-beam
@@ -1069,7 +1058,7 @@ object Similarity {
     // skip the persist so per-shard single-round callers (s47/s48's
     // scatter arms) don't accumulate one persisted frame per arm
     def snap(r: Int): Unit = if (roundsWanted.contains(r)) {
-      if (roundsWanted.size > 1) beamed = scope.own(beamed.persist())
+      if (roundsWanted.size > 1) beamed = persist(beamed)
       snaps(r) = beamed
     }
     snap(0)
@@ -1137,17 +1126,16 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     require(maxBreadth >= 1 && maxBreadth <= nShards,
       s"maxBreadth=$maxBreadth must be in [1, nShards=$nShards]")
-    val scope = CacheScope.sessionScope(s)
-    val emb = scope.own(s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
         Mixture.rendezvousShardCol(col("vec_id").cast("long"), nShards)
-          .as("shard"))
-      .persist()) // one scan feeds the summary and every arm's slice
+          .as("shard"))) // one scan feeds the summary and every arm's slice
     val q = queries.select(col(idCol).cast("long").as("q_id"),
       col(vecCol).as("q_vec"))
     val summary = emb.filter(col("vec_id") % routerMod === 0)
       .select(col("shard").as("s_shard"), col("embedding").as("s_vec"))
-    val routed = scope.own(q.crossJoin(broadcast(summary))
+    // read by every arm's scatter and the srn tag join
+    val routed = persist(q.crossJoin(broadcast(summary))
       .withColumn("c", cosine(col("q_vec"), col("s_vec")))
       .filter(!isnan(col("c")) && col("c").isNotNull)
       .groupBy(col("q_id"), col("s_shard"))
@@ -1155,8 +1143,7 @@ object Similarity {
       .withColumn("srn", row_number().over(Window.partitionBy(col("q_id"))
         .orderBy(col("score").desc, col("s_shard").asc)))
       .filter(col("srn") <= maxBreadth)
-      .select(col("q_id").as("r_qid"), col("s_shard"), col("srn"))
-      .persist()) // read by every arm's scatter and the srn tag join
+      .select(col("q_id").as("r_qid"), col("s_shard"), col("srn")))
     val arms = (0 until nShards).map { sh =>
       val shardCorpus = emb.filter(col("shard") === sh).drop("shard")
       val armRouted = routed.filter(col("s_shard") === sh)
@@ -1170,8 +1157,8 @@ object Similarity {
           "left_semi")
         .select(col(idCol).cast("long").as("vec_id"),
           col(vecCol).as("embedding"))
-      val graph = scope.own(ensureShardKnnIndex(s, dir, nShards, sh,
-        graphK, targetList, nprobe, superProbe).persist())
+      val graph = persist(ensureShardKnnIndex(s, dir, nShards, sh,
+        graphK, targetList, nprobe, superProbe))
       graphBeamSearchOver(graph, shardCorpus, routedQ, k, beam, rounds,
           seedMod)
         .join(armRouted.select(col("r_qid"), col("srn")),
@@ -1233,7 +1220,6 @@ object Similarity {
     */
   def semanticDedup(corpus: DataFrame, nlist: Int = 32, minCos: Double = 0.95,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session,
       superList: Int = 32, hierarchicalAbove: Int = 128): DataFrame = {
     require(nlist >= 1, s"nlist=$nlist must be positive")
     require(superList >= 1 && hierarchicalAbove >= superList,
@@ -1257,9 +1243,8 @@ object Similarity {
           .withColumnRenamed("c_id", "s_id")
         bestOf(rowCell.join(centCell, "s_id"))
       }
-    val assigned = scope.own(picked
-      .withColumn("nrm", norm(col("n_vec")))
-      .persist())
+    val assigned = persist(picked
+      .withColumn("nrm", norm(col("n_vec"))))
     val dup = assigned.as("x").join(assigned.as("y"),
         col("x.c_id") === col("y.c_id") && col("y.n_id") < col("x.n_id"))
       .filter(dot(col("x.n_vec"), col("y.n_vec")) / (col("x.nrm") * col("y.nrm")) >= minCos)
@@ -1636,9 +1621,11 @@ object Similarity {
     val (m, ncode, nlist) = (r.m, r.ncode, ivf.nlist)
     def res(v: String) = zip_with(col(v), col("c_vec"),
       (a, b) => a.cast("double") - b.cast("double"))
-    val assigned = assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent),
+    // persisted: the codebook, the codes and the codes' c_id join all
+    // read it, and each read re-ran the corpus x centroid argmax
+    val assigned = persist(assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent),
         "n_id", "n_vec", "n_vec", "c_vec")
-      .select(col("n_id"), col("c_id"), res("n_vec").as("res"))
+      .select(col("n_id"), col("c_id"), res("n_vec").as("res")))
     val cb =
       if (source == AnnSpec.LowestId)
         broadcast(pqSubspaced(
@@ -1763,11 +1750,10 @@ object Similarity {
     // rule the oracle's row_number spells — not a 32x-corpus window
     // shuffle) + quantized residual, persisted: the residual-sample
     // collect and the encode pass both read it
-    val assigned = CacheScope.session.own(
+    val assigned = persist(
       assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent),
           "n_id", "n_vec", "n_vec", "c_vec")
-        .select(col("n_id"), col("c_id"), fpResidual(col("n_vec")).as("qres"))
-        .persist())
+        .select(col("n_id"), col("c_id"), fpResidual(col("n_vec")).as("qres")))
     val cbArr = pqTrainCodebookFp(fpResidualSample(assigned, 4096), m, r.ncode, 10)
     val cb = broadcast(cbArr.zipWithIndex.flatMap { case (cws, j) =>
       cws.zipWithIndex.map { case (cv, cw) => (j, cw.toLong, cv.toSeq) }
@@ -1840,8 +1826,7 @@ object Similarity {
   def pqKnnGraphTrainedFp(corpus: DataFrame, k: Int,
       nlist: Int = 32, nprobe: Int = 4, m: Int = 8, ncode: Int = 32,
       iters: Int = 10, sampleN: Int = 4096, cBudget: Int = 40,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && cBudget >= k,
       s"need cBudget >= k >= 1, got k=$k cBudget=$cBudget")
     val cent = centFrame(corpus.sparkSession,
@@ -1850,12 +1835,11 @@ object Similarity {
     // shape): probes[1] = the hard assignment, probes[1..nprobe] = the
     // query-side lists. Persisted — assignment, q-side residuals, and
     // the rerank all derive from it.
-    val routed = scope.own(topLists(corpus
+    val routed = persist(topLists(corpus
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .crossJoin(cent), nprobe)
-      .persist())
+      .crossJoin(cent), nprobe))
     pqGraphRanked(corpus,
-      pqGraphPrepFromRouted(routed, cent, m, ncode, iters, sampleN, scope), k, cBudget)
+      pqGraphPrepFromRouted(routed, cent, m, ncode, iters, sampleN), k, cBudget)
   }
 
   /** The PQ graph pipeline over a routed (id, probes, vec) frame, shared
@@ -1886,15 +1870,13 @@ object Similarity {
       scored: DataFrame, qside: DataFrame)
 
   private[graft] def pqGraphPrepFromRouted(routed: DataFrame,
-      cent: DataFrame, m: Int, ncode: Int, iters: Int, sampleN: Int,
-      scope: CacheScope): Option[PqGraphPrep] = {
+      cent: DataFrame, m: Int, ncode: Int, iters: Int, sampleN: Int): Option[PqGraphPrep] = {
     import org.apache.spark.sql.graftbridge.Bridge
     // neighbor side: hard assignment, ×2^12-quantized residual vs the
     // assigned list's centroid (exact ops only)
-    val assigned = scope.own(assignedOf(routed)
+    val assigned = persist(assignedOf(routed)
       .join(cent, "c_id")
-      .select(col("n_id"), col("c_id"), fpResidual(col("n_vec")).as("qres"))
-      .persist())
+      .select(col("n_id"), col("c_id"), fpResidual(col("n_vec")).as("qres")))
     // residual codebook: integer Lloyd over the deterministic
     // hash-sample (bounded driver-planning step, the s23/s24 class)
     val cbArr = pqTrainCodebookFp(fpResidualSample(assigned, sampleN), m, ncode, iters)
@@ -1916,22 +1898,20 @@ object Similarity {
     val coded = assigned.withColumn("codes", encodeCol(col("qres")))
     // query side: one row per (q, probed list) with the residual vs
     // THAT list's centroid — candidates in a list score against it
-    val qside = scope.own(probesOf(routed)
+    val qside = persist(probesOf(routed)
       .join(cent, "c_id")
-      .select(col("q_id"), col("c_id"), fpResidual(col("q_vec")).as("q_qres"))
-      .persist())
+      .select(col("q_id"), col("c_id"), fpResidual(col("q_vec")).as("q_qres")))
     // block join on the list id (shuffle equi-join — never all-pairs)
     // + codegen ADC: budget-INDEPENDENT, so it is computed (and
-    // scope-persisted, slim: four integer columns, O(n·nprobe·cell))
+    // persisted, slim: four integer columns, O(n·nprobe·cell))
     // once — every cBudget arm reads this frame instead of re-running
     // the join and the ADC kernel
-    val scored = scope.own(qside
+    val scored = persist(qside
       .join(coded.select(col("n_id"), col("c_id"), col("codes")), Seq("c_id"))
       .filter(col("n_id") =!= col("q_id"))
       .withColumn("adc_fp", adcCol(col("q_qres"), col("codes")))
       .filter(col("adc_fp").isNotNull)
-      .select(col("q_id"), col("c_id"), col("n_id"), col("adc_fp"))
-      .persist())
+      .select(col("q_id"), col("c_id"), col("n_id"), col("adc_fp")))
     Some(PqGraphPrep(assigned, scored, qside))
   }
 
@@ -1992,10 +1972,9 @@ object Similarity {
   def knnGraphIncrementalFp(base: DataFrame, arriving: DataFrame, k: Int,
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3,
       iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val route = scaledRouter(base, targetList, nprobe, superProbe, iters, sampleN,
-        idCol, vecCol, scope) match {
+        idCol, vecCol) match {
       case Some((_, r)) => r
       case None => return emptyGraph(base)
     }
@@ -2045,17 +2024,16 @@ object Similarity {
   def knnGraphTombstoneFp(corpus: DataFrame, deletedIds: DataFrame, k: Int,
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3,
       iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // empty takedown batch: the repair dataflow degenerates to the
     // stored graph (live filter drops nothing, zero affected queries),
     // so skip the corpus count + full quantizer training it would
     // otherwise pay and return the plain scaled build
     if (deletedIds.isEmpty)
       return knnGraphScaledFp(corpus, k, targetList, nprobe, superProbe,
-        iters, sampleN, idCol, vecCol, scope)
+        iters, sampleN, idCol, vecCol)
     val routed = scaledRouter(corpus, targetList, nprobe, superProbe, iters, sampleN,
-        idCol, vecCol, scope) match {
+        idCol, vecCol) match {
       case Some((_, route)) => route(corpus)
       case None => return emptyGraph(corpus)
     }
@@ -2065,8 +2043,8 @@ object Similarity {
     val prb = probesOf(routed)
     // the frozen asset: full-corpus top-k at FULL precision (production
     // reads this from parquet; built once, then only repaired)
-    val baseEdges = scope.own( // read by the live filter and the affected scan
-      topEdges(cellPairs(prb, asg), k).persist())
+    val baseEdges = persist( // read by the live filter and the affected scan
+      topEdges(cellPairs(prb, asg), k))
     val liveEdges = baseEdges
       .join(del, baseEdges("q_id") === del("del_id"), "left_anti")
     val affected = liveEdges
@@ -2097,12 +2075,11 @@ object Similarity {
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3,
       m: Int = 8, ncode: Int = 32,
       iters: Int = 10, sampleN: Int = 4096, cBudget: Int = 40,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1 && cBudget >= k,
       s"need cBudget >= k >= 1, got k=$k cBudget=$cBudget")
     pqGraphRanked(corpus, pqKnnGraphScaledPrep(corpus, targetList, nprobe, superProbe,
-      m, ncode, iters, sampleN, idCol, vecCol, scope), k, cBudget)
+      m, ncode, iters, sampleN, idCol, vecCol), k, cBudget)
   }
 
   /** The cBudget-independent front of [[pqKnnGraphScaledFp]] (count →
@@ -2114,11 +2091,10 @@ object Similarity {
   private[graft] def pqKnnGraphScaledPrep(corpus: DataFrame,
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3,
       m: Int = 8, ncode: Int = 32, iters: Int = 10, sampleN: Int = 4096,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      scope: CacheScope = CacheScope.session): Option[PqGraphPrep] = {
-    scaledRouter(corpus, targetList, nprobe, superProbe, iters, sampleN, idCol, vecCol, scope)
+      idCol: String = "vec_id", vecCol: String = "embedding"): Option[PqGraphPrep] = {
+    scaledRouter(corpus, targetList, nprobe, superProbe, iters, sampleN, idCol, vecCol)
       .flatMap { case (trained, route) => pqGraphPrepFromRouted(route(corpus),
-        centFrame(corpus.sparkSession, trained), m, ncode, iters, sampleN, scope) }
+        centFrame(corpus.sparkSession, trained), m, ncode, iters, sampleN) }
   }
 
   /** Build-once PQ code asset over the embeddings table (the ANN twin
@@ -2289,10 +2265,9 @@ object Similarity {
     val emb = s.read.parquet(s"$dir/embeddings.parquet")
     val stored = servingRankedKnnIndex(s, dir, k)
       .select(col("q_id").as("node"), col("n_id").as("edge_to"))
-    val graph = CacheScope.sessionScope(s).own(
+    val graph = persist(
       stored.unionByName(stored.select(col("edge_to").as("node"),
-          col("node").as("edge_to"))).distinct()
-        .persist()) // read once per beam round
+          col("node").as("edge_to"))).distinct()) // read once per beam round
     val all = emb
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
       .unionByName(emb.select((col("vec_id") + 100000L).as("vec_id"),
@@ -2364,13 +2339,12 @@ object Similarity {
         upsertSliceName(dir, nOwners, k, nprobe, superProbe),
         new java.io.File(dir, "embeddings.parquet")) {
       val base = s.read.parquet(s"$dir/embeddings.parquet")
-      val scope = CacheScope.sessionScope(s)
       val trained = ivfTrainCentroidsFp(base, scaledNlist(base.count()),
         hashSeed = true)
       val (superRows, centRows) = firstNsSuperTable(trained,
         scaledSuperList(trained.length))
       val routedB = twoLevelRouted(base, superRows, centRows, nprobe,
-        superProbe, "vec_id", "embedding", scope)
+        superProbe, "vec_id", "embedding")
       val probExp = routedB.select(col("id"),
         posexplode(col("probes")("_1")))
       val members = probExp.filter(col("pos") === 0)
@@ -2521,9 +2495,9 @@ object Similarity {
           new java.io.File(dir, "embeddings.parquet"), upsertAlgoFp) &&
         Assets.manifest(s, baseName).exists(_.generation == 2L))
       return s.read.parquet(Assets.assetPath(s, s"${baseName}_gen2"))
-    val intents = CacheScope.sessionScope(s).own(
+    val intents = persist(
       graft.streaming.Streaming.streamGraphUpsert(s, dir, k, nprobe,
-        superProbe, nOwners).persist()) // signature + both apply arms
+        superProbe, nOwners)) // signature + both apply arms
     // order-free exact signature of the intent batch (the tombstone
     // generation's idempotence convention)
     val sig = intents.agg(count(lit(1)).cast("long"),
@@ -2579,8 +2553,7 @@ object Similarity {
   def cosineDBSCAN(corpus: DataFrame, minCos: Double, minPts: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax,
-      neighborPairs: Option[DataFrame] = None,
-      scope: CacheScope = CacheScope.session): DataFrame = {
+      neighborPairs: Option[DataFrame] = None): DataFrame = {
     val nb = neighborPairs match {
       case Some(p) =>
         // symmetrize: each undirected pair becomes two directed edges.
@@ -2593,17 +2566,16 @@ object Similarity {
             struct(col("ib").as("ia"), col("ia").as("ib")))).as("e"))
           .select(col("e.ia").as("ia"), col("e.ib").as("ib"))
       case None =>
-        val e = scope.own(corpus
+        val e = persist(corpus
           .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-          .withColumn("nrm", norm(col("vec")))
-          .persist())
+          .withColumn("nrm", norm(col("vec"))))
         e.as("a").join(e.as("b"), col("a.id") =!= col("b.id"))
           .withColumn("cos", dot(col("a.vec"), col("b.vec")) / (col("a.nrm") * col("b.nrm")))
           .filter(col("cos") >= minCos)
           .select(col("a.id").as("ia"), col("b.id").as("ib"))
     }
     GraphDBSCAN.labels(corpus.select(col(idCol).cast("long").as(idCol)),
-      nb, minPts, idCol, driverMaxEdges, scope)
+      nb, minPts, idCol, driverMaxEdges)
   }
 
   /** Bucketed approximate neighbor pairs: vectors sharing an LSH bucket,

@@ -3,6 +3,7 @@ package graft.queries
 import graft.functions.TextAnalysis
 import graft.operators.{AnnSpec, BpeTokenizer, Dedup, Graph, Mixture, Multimodal, Similarity, TextIndex}
 import graft.operators.AnnSpec.{Flat, Ivf, Pq, PqResidual, Raw, TrainedFp}
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -205,23 +206,20 @@ object NorthStar {
 
   // ---------- queries ----------
 
-  /** The end-to-end curation pipeline behind t17, reusable with a
-    * caller-owned cache lifecycle: Gopher-rule quality filter (t14's
-    * shared verdict) -> exact dedup to the min-id canonical (d01's
-    * shape) -> deterministic hash split (t08's). The filtered corpus
-    * feeds BOTH dedup branches (canonical aggregate + semi join), so it
-    * persists under `scope` — one quality-filter pass instead of two;
-    * a long-lived session passes a managed scope and `release()`s it
-    * after the consuming action (in-situ zero-residual contract:
-    * CacheScopeSpec). The whole pipeline shuffles twice (dedup group,
-    * dedup semi join) regardless of corpus size.
+  /** The end-to-end curation pipeline behind t17: Gopher-rule quality
+    * filter (t14's shared verdict) -> exact dedup to the min-id
+    * canonical (d01's shape) -> deterministic hash split (t08's). The
+    * filtered corpus feeds BOTH dedup branches (canonical aggregate +
+    * semi join), so it is persisted — one quality-filter pass instead
+    * of two; `CacheScope.releaseSession` reclaims it after the
+    * consuming action (in-situ zero-residual contract: CacheScopeSpec).
+    * The whole pipeline shuffles twice (dedup group, dedup semi join)
+    * regardless of corpus size.
     */
-  def curationPipeline(corpus: DataFrame,
-      scope: graft.operators.CacheScope = graft.operators.CacheScope.session): DataFrame = {
-    val kept = scope.own(corpus
+  def curationPipeline(corpus: DataFrame): DataFrame = {
+    val kept = persist(corpus
       .filter(TextAnalysis.qualityKeep(col("text"), stopList))
-      .withColumn("fp", md5(col("text")))
-      .persist())
+      .withColumn("fp", md5(col("text"))))
     val canon = kept.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
     kept.join(canon, Seq("fp", "doc_id"), "left_semi")
       .withColumn("split", Mixture.splitColumn(col("doc_id")))
@@ -245,7 +243,6 @@ object NorthStar {
     import org.apache.spark.sql.expressions.Window
     def run(): DataFrame = { // def so the empty guard can return
       val P = 1000000007L
-      val scope = graft.operators.CacheScope.sessionScope(s)
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val trained = Similarity.ivfTrainCentroidsFp(emb, nlist = nlist)
       if (trained.isEmpty) // empty corpus: nothing to route or evaluate
@@ -258,8 +255,8 @@ object NorthStar {
         Similarity.kCenterSuperTable(trained, superList)
       val supers = broadcast(superRows.toDF("s_id", "s_vec"))
       val centT = broadcast(centRows.toDF("s_id", "c_id", "c_vec"))
-      val rows = scope.own(emb.select($"vec_id".cast("long").as("id"),
-        $"embedding".as("v")).persist())
+      val rows = persist(emb.select($"vec_id".cast("long").as("id"),
+        $"embedding".as("v")))
       val nAll = rows.count()
       // qMod = 0 derives the ~500-truth-query budget from the corpus:
       // the O(n·nq) brute-force truth arm stays constant-cost as the
@@ -269,23 +266,23 @@ object NorthStar {
       val qm = if (qMod == 0L) math.max(1L, nAll / 500L) else qMod
       val qSide = emb.filter(
         (lit(3L) * ($"vec_id".cast("long") % P) + 8L) % P % qm === 0L)
-      val truth = scope.own(Similarity.bruteForceTopK(emb, qSide, k = 5)
-        .select($"q_id", $"n_id").persist())
+      val truth = persist(Similarity.bruteForceTopK(emb, qSide, k = 5)
+        .select($"q_id", $"n_id"))
       val nq = qSide.count()
       val wid = Window.partitionBy($"id").orderBy($"cos_c".desc, $"c_id".asc)
-      val flatRank = scope.own(rows.crossJoin(cent)
+      val flatRank = persist(rows.crossJoin(cent)
         .withColumn("cos_c", Similarity.cosine($"v", $"c_vec"))
         .withColumn("rn", row_number().over(wid)).filter($"rn" <= 4)
-        .select($"id", $"c_id", $"rn").persist())
+        .select($"id", $"c_id", $"rn"))
       val ws = Window.partitionBy($"id").orderBy($"cos_s".desc, $"s_id".asc)
       val rsup = rows.crossJoin(supers)
         .withColumn("cos_s", Similarity.cosine($"v", $"s_vec"))
         .withColumn("srn", row_number().over(ws)).filter($"srn" <= 3)
         .select($"id", $"s_id", $"v")
-      val twoRank = scope.own(rsup.join(centT, Seq("s_id"))
+      val twoRank = persist(rsup.join(centT, Seq("s_id"))
         .withColumn("cos_c", Similarity.cosine($"v", $"c_vec"))
         .withColumn("rn", row_number().over(wid)).filter($"rn" <= 4)
-        .select($"id", $"c_id", $"rn").persist())
+        .select($"id", $"c_id", $"rn"))
       def armRow(name: String, rank: DataFrame,
           graph: DataFrame): DataFrame = {
         val asg = rank.filter($"rn" === 1).select($"id".as("n_id"), $"c_id")
@@ -308,11 +305,11 @@ object NorthStar {
       // Lloyd, 3 trainings per row in total)
       armRow("flat", flatRank,
           Similarity.ivfKnnGraphFromTrained(emb, trained, k = 5,
-            nprobe = 4, idCol = "vec_id", vecCol = "embedding", scope = scope))
+            nprobe = 4, idCol = "vec_id", vecCol = "embedding"))
         .unionByName(armRow("two_level", twoRank,
           Similarity.ivfKnnGraph2LFromTrained(emb, trained, k = 5,
             nprobe = 4, superList = superList, superProbe = 3,
-            idCol = "vec_id", vecCol = "embedding", scope = scope)))
+            idCol = "vec_id", vecCol = "embedding")))
         .orderBy("arm")
     }
     run()
@@ -329,13 +326,12 @@ object NorthStar {
       qMod: Long): DataFrame = {
     import s.implicits._
     val P = 1000000007L
-    val scope = graft.operators.CacheScope.sessionScope(s)
     val emb = s.read.parquet(s"$dir/embeddings.parquet")
     val qm = if (qMod == 0L) math.max(1L, emb.count() / 500L) else qMod
     val qSide = emb.filter(
       (lit(3L) * ($"vec_id".cast("long") % P) + 8L) % P % qm === 0L)
-    val truth = scope.own(Similarity.bruteForceTopK(emb, qSide, k = 5)
-      .select($"q_id", $"n_id").persist())
+    val truth = persist(Similarity.bruteForceTopK(emb, qSide, k = 5)
+      .select($"q_id", $"n_id"))
     val nq = qSide.count()
     // ONE training + routing + encode + ADC-candidate pass shared by
     // both budget arms (nothing upstream of the bounded top-C depends
@@ -451,10 +447,9 @@ object NorthStar {
     // the metric joins touch |classes| rows.
     "t36_langid_metrics" -> { (s, dir) =>
       import s.implicits._
-      val cm = s.read.parquet(s"$dir/documents.parquet")
+      val cm = persist(s.read.parquet(s"$dir/documents.parquet")
         .groupBy($"lang", TextAnalysis.langGuess($"text").as("guess"))
-        .agg(count(lit(1)).as("n"))
-        .persist()
+        .agg(count(lit(1)).as("n")))
       val byTrue = cm.groupBy($"lang".as("cls_t")).agg(sum($"n").as("n_true"))
       val byPred = cm.groupBy($"guess".as("cls_p")).agg(sum($"n").as("n_pred"))
       val diag = cm.filter($"lang" === $"guess")
@@ -518,9 +513,9 @@ object NorthStar {
       import s.implicits._
       val docs = s.read.parquet(s"$dir/documents.parquet")
         .select($"doc_id", TextAnalysis.tokens($"text").as("toks"))
-      val uni = docs.select(explode($"toks").as("tok"))
-        .groupBy($"tok").agg(count(lit(1)).as("n_tok"))
-        .persist() // consumers: totals + the two bigram-side joins
+      // consumers: totals + the two bigram-side joins
+      val uni = persist(docs.select(explode($"toks").as("tok"))
+        .groupBy($"tok").agg(count(lit(1)).as("n_tok")))
       val bi = docs
         .select(explode(expr(
           """arrays_zip(slice(toks, 1, size(toks) - 1),
@@ -719,9 +714,9 @@ object NorthStar {
     "t46_trained_classifier" -> { (s, dir) =>
       import s.implicits._
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val labels = graft.operators.CacheScope.sessionScope(s).own(
+      val labels = persist(
         Mixture.lmPerplexity(docs, "doc_id", "text")
-          .select($"doc_id", $"keep").persist()) // teacher: sample + readout
+          .select($"doc_id", $"keep")) // teacher: sample + readout
       val (w, thr) = Mixture.trainQualityClassifierFp(docs, labels,
         dim = 4096, sampleN = 256)
       Mixture.applyQualityClassifier(docs, w, thr)
@@ -1097,9 +1092,8 @@ object NorthStar {
     // mixture end to end.
     "t50_dedup_remix" -> { (s, dir) =>
       import s.implicits._
-      val scope = graft.operators.CacheScope.sessionScope(s)
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val mut = scope.own(mutCorpus(s, dir).persist()) // verdicts + before agg + kept corpus
+      val mut = persist(mutCorpus(s, dir)) // verdicts + before agg + kept corpus
       val srcMap = docs.select($"doc_id".as("base_id"), $"source")
       val keptIds = Dedup.dedupVerdicts(mut, "text", "doc_id",
           k = 16, bands = 4, n = 3, minEstSim = 0.5)
@@ -1171,8 +1165,7 @@ object NorthStar {
         .agg(max(struct($"cos_c", (-$"c_id").as("neg_c"), $"c_id"))
           .as("b"))
         .select($"vec_id", $"b.c_id".as("c_id"))
-      val scope = graft.operators.CacheScope.sessionScope(s)
-      val pinned = scope.own(asg.persist()) // sizes + ranked pick
+      val pinned = persist(asg) // sizes + ranked pick
       val h = Mixture.portableHash($"vec_id", Mixture.SampleI)
       val wc = Window.partitionBy($"c_id").orderBy($"h".asc, $"vec_id".asc)
       val kept = pinned.withColumn("h", h)
@@ -1202,8 +1195,7 @@ object NorthStar {
       val st = s.read.parquet(s"$dir/documents.parquet")
         .select($"source", explode(TextAnalysis.tokens($"text")).as("tok"))
         .groupBy($"source", $"tok").agg(count(lit(1)).as("c_st"))
-      val scope = graft.operators.CacheScope.sessionScope(s)
-      val pinned = scope.own(st.persist()) // marginals + term sums
+      val pinned = persist(st) // marginals + term sums
       val ct = pinned.groupBy($"tok").agg(sum($"c_st").as("c_t"))
       val ns = pinned.groupBy($"source").agg(sum($"c_st").as("n_s"))
       val tot = pinned.agg(sum($"c_st").as("n_tot"))
@@ -1284,8 +1276,7 @@ object NorthStar {
         .unionByName(base.filter($"doc_id" % 22 === 0)
           .select(lit(3L).as("ver"), ($"doc_id" + 200000L).as("doc_id"),
             lit("delete").as("op"), lit(0L).as("len")))
-      val scope = graft.operators.CacheScope.sessionScope(s)
-      val pinned = scope.own(log.persist()) // fan-out + latest-op join back
+      val pinned = persist(log) // fan-out + latest-op join back
       val fanned = pinned.withColumn("as_of_version",
         explode(expr("sequence(ver, 3)")))
       val latest = fanned.groupBy($"as_of_version", $"doc_id")
@@ -1311,15 +1302,14 @@ object NorthStar {
     // with the corpus total as t19's broadcast scalar.
     "d24_dedup_bias" -> { (s, dir) =>
       import s.implicits._
-      val scope = graft.operators.CacheScope.sessionScope(s)
-      val pinned = scope.own(
+      // corpus total + per-source aggregate
+      val pinned = persist(
         Dedup.dedupVerdicts(mutCorpus(s, dir), "text", "doc_id",
             k = 16, bands = 4, n = 3, minEstSim = 0.5)
           .select(($"doc_id" % 100000).as("orig_id"),
             ($"doc_id" === $"canonical_id").as("kept"))
           .join(s.read.parquet(s"$dir/documents.parquet")
-            .select($"doc_id".as("orig_id"), $"source"), Seq("orig_id"))
-          .persist()) // corpus total + per-source aggregate
+            .select($"doc_id".as("orig_id"), $"source"), Seq("orig_id")))
       val tot = pinned.agg(
         sum(when($"kept", 1L).otherwise(0L)).as("k_all"),
         count(lit(1)).as("n_all"))
@@ -1360,8 +1350,7 @@ object NorthStar {
     // argmaxes end to end.
     "d27_takedown_reelect" -> { (s, dir) =>
       import s.implicits._
-      val mut = graft.operators.CacheScope.sessionScope(s)
-        .own(mutCorpus(s, dir).persist()) // signatures + quality + id sets
+      val mut = persist(mutCorpus(s, dir)) // signatures + quality + id sets
       Dedup.takedownReelect(mut, mut.filter($"doc_id" % 37 === 5).select($"doc_id"),
           "text", "doc_id",
           size(array_distinct(TextAnalysis.tokens($"text"))).cast("long"),
@@ -1490,8 +1479,7 @@ object NorthStar {
     // is id-keyed.
     "t54_leakage_safe_split" -> { (s, dir) =>
       import s.implicits._
-      val scope = graft.operators.CacheScope.sessionScope(s)
-      val pinned = scope.own(mutCorpus(s, dir).persist()) // cand gen + split
+      val pinned = persist(mutCorpus(s, dir)) // cand gen + split
       val sp = pinned.select($"doc_id",
         Mixture.splitColumn($"doc_id").as("split"))
       val leaked = Dedup.lshCandidatePairs(pinned, "text", "doc_id", 16, 4, 3)
@@ -1557,9 +1545,9 @@ object NorthStar {
         .withColumn("split", Mixture.splitColumn($"doc_id"))
       val train = docs.filter($"split" === "train")
       val test = docs.filter($"split" === "test")
-      val evalSh = graft.operators.CacheScope.sessionScope(s).own(
+      val evalSh = persist(
         Dedup.shingles(test, "text", "doc_id", n = 3)
-          .select($"sh").distinct().persist()) // bloom build + exact confirm
+          .select($"sh").distinct()) // bloom build + exact confirm
       val words = evalSh.as[Long].groupByKey(_ => 0)
         .agg(new graft.functions.BloomAgg(m, kh).toColumn.name("bloom"))
         .map(_._2).collect().headOption
@@ -1839,9 +1827,9 @@ object NorthStar {
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val queries = emb.filter($"vec_id" < 5)
       val k = 10
-      val exact = graft.operators.CacheScope.sessionScope(s).own(
+      val exact = persist(
         Similarity.bruteForceTopK(emb, queries, k)
-          .select($"q_id", $"n_id").persist()) // joined by all 3 arms
+          .select($"q_id", $"n_id")) // joined by all 3 arms
       val nq = queries.count() // bounded: 5 by construction
       Seq(2, 4, 8).map { np =>
         Similarity.annTopK(emb, queries, k, AnnSpec(Ivf(nlist = 32, nprobe = np), Raw))
@@ -2015,8 +2003,7 @@ object NorthStar {
       // the maintained graph is a STORED generation (the LSM read
       // contract taken literally): first touch folds the maintenance
       // stream once, every serve after that reads the asset back
-      val graph = graft.operators.CacheScope.sessionScope(s).own(
-        Similarity.ensureUpsertedKnnIndex(s, dir).persist())
+      val graph = persist(Similarity.ensureUpsertedKnnIndex(s, dir))
       Similarity.graphBeamSearchOver(graph, emb, emb.filter($"vec_id" < 5),
           k = 5, beam = 16, rounds = 3, seedMod = 64)
         .orderBy("q_id", "rnk")
@@ -2038,9 +2025,9 @@ object NorthStar {
       // the UNCHANGED asset is the stored one (identical build:
       // ensureKnnGraphIndex IS knnEdgesScaled over the corpus) — a
       // takedown between compactions never pays an index build
-      val graph = graft.operators.CacheScope.sessionScope(s).own(
+      val graph = persist(
         Similarity.ensureKnnGraphIndex(s, dir, graphK = 10,
-          targetList = 64, nprobe = 4, superProbe = 3).persist())
+          targetList = 64, nprobe = 4, superProbe = 3))
       Similarity.graphBeamSearchOver(graph, emb.filter($"vec_id" % 10 =!= 3),
           emb.filter($"vec_id" < 5), k = 5, beam = 16, rounds = 3,
           seedMod = 64)
@@ -2088,21 +2075,20 @@ object NorthStar {
     // division per arm.
     "s48_scatter_recall" -> { (s, dir) =>
       import s.implicits._
-      val scope = graft.operators.CacheScope.sessionScope(s)
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val queries = emb.filter($"vec_id" < 5)
         .select($"vec_id".cast("long").as("vec_id"), $"embedding")
       val k = 5
-      val truth = scope.own(Similarity.bruteForceTopK(emb, queries, k)
-        .select($"q_id".cast("long").as("q_id"), $"n_id".cast("long").as("n_id"))
-        .persist()) // joined by all three arms
+      // joined by all three arms
+      val truth = persist(Similarity.bruteForceTopK(emb, queries, k)
+        .select($"q_id".cast("long").as("q_id"), $"n_id".cast("long").as("n_id")))
       val nq = queries.count() // bounded: 5 by construction
       // ONE scatter over all 4 shards; each breadth's merge is the
       // srn <= m prefix of the same partials (provably identical to
       // running the breadth-m scatter — routing ranks don't depend
       // on m, walks are per (query, shard) independent)
-      val partials = scope.own(Similarity.scatterGatherPartials(s, dir,
-        queries, nShards = 4, maxBreadth = 4, k = k).persist())
+      val partials = persist(Similarity.scatterGatherPartials(s, dir,
+        queries, nShards = 4, maxBreadth = 4, k = k))
       Seq(1, 2, 4).map { m =>
         Similarity.scatterGatherMerge(partials, k, m)
           .select($"q_id", $"n_id")
@@ -2191,10 +2177,10 @@ object NorthStar {
     "s32_knn_graph_components" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val knn = graft.operators.CacheScope.sessionScope(s).own(
+      val knn = persist(
         Similarity.knnGraphScaledFp(emb, k = 5, targetList = 64,
             nprobe = 4, superProbe = 3)
-          .select($"q_id", $"n_id").persist()) // both sides of the mutual join
+          .select($"q_id", $"n_id")) // both sides of the mutual join
       val edges = knn.as("a").join(knn.as("b"),
           col("a.q_id") === col("b.n_id") && col("a.n_id") === col("b.q_id") &&
             col("a.q_id") < col("a.n_id"))
@@ -2217,7 +2203,7 @@ object NorthStar {
     // neighborhood sums are commutative bigint aggregates, the margin
     // is ONE double division of exact integers, and the keep gate
     // (margin >= 1.02) is cross-multiplied so it never compares
-    // floats. Dataflow: the s30 graph once (scope-persisted — the
+    // floats. Dataflow: the s30 graph once (persisted — the
     // stats aggregate and the pair join both read it), one k-bounded
     // aggregate, two equi-joins back on the vector id. Nothing
     // data-sized broadcasts; at 100 TB every stage keys on the vector
@@ -2225,11 +2211,11 @@ object NorthStar {
     "s34_margin_pairs" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val knn = graft.operators.CacheScope.sessionScope(s).own(
+      // stats aggregate + pair join both read it
+      val knn = persist(
         Similarity.knnGraphScaledFp(emb, k = 5, targetList = 64,
             nprobe = 4, superProbe = 3)
-          .withColumn("cos_fp", round($"cos_sim" * 1e6).cast("long"))
-          .persist()) // stats aggregate + pair join both read it
+          .withColumn("cos_fp", round($"cos_sim" * 1e6).cast("long")))
       val stats = knn.groupBy($"q_id").agg(
         sum($"cos_fp").as("s"), count(lit(1)).as("c"))
       val sx = stats.select($"q_id", $"s".as("s_q"), $"c".as("c_q"))
@@ -2279,15 +2265,13 @@ object NorthStar {
     // division per arm.
     "s36_graph_ann_recall" -> { (s, dir) =>
       import s.implicits._
-      val scope = graft.operators.CacheScope.sessionScope(s)
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
       val queries = emb.filter($"vec_id" < 5)
       val k = 5
-      val truth = scope.own(Similarity.bruteForceTopK(emb, queries, k)
-        .select($"q_id", $"n_id").persist()) // joined by all 4 arms
-      val graph = scope.own(Similarity.knnEdgesScaled(emb, graphK = 10,
-          undirected = true, targetList = 64, nprobe = 4, superProbe = 3)
-        .persist()) // walked by all 4 arms
+      val truth = persist(Similarity.bruteForceTopK(emb, queries, k)
+        .select($"q_id", $"n_id")) // joined by all 4 arms
+      val graph = persist(Similarity.knnEdgesScaled(emb, graphK = 10,
+          undirected = true, targetList = 64, nprobe = 4, superProbe = 3)) // walked by all 4 arms
       val nq = queries.count() // bounded: 5 by construction
       // ONE progressive walk snapshotted at rounds 0/1/2/3 (the beam
       // state after round r doesn't depend on later rounds), instead
@@ -2316,8 +2300,7 @@ object NorthStar {
     "s37_graph_index_probe" -> { (s, dir) =>
       import s.implicits._
       val emb = s.read.parquet(s"$dir/embeddings.parquet")
-      val graph = graft.operators.CacheScope.sessionScope(s).own(
-        Similarity.ensureKnnGraphIndex(s, dir).persist()) // 3 beam rounds
+      val graph = persist(Similarity.ensureKnnGraphIndex(s, dir)) // 3 beam rounds
       Similarity.graphBeamSearchOver(graph, emb, emb.filter($"vec_id" < 5),
           k = 5, beam = 16, rounds = 3, seedMod = 64)
         .orderBy("q_id", "rnk")
@@ -2336,12 +2319,12 @@ object NorthStar {
     // Shuffles: one (source, tok) aggregate + bounded broadcasts.
     "t49_term_dispersion" -> { (s, dir) =>
       import s.implicits._
-      val tok = graft.operators.CacheScope.sessionScope(s).own(
+      // source sizes, token totals, and the dp join
+      val tok = persist(
         s.read.parquet(s"$dir/documents.parquet")
           .select($"source", explode(TextAnalysis.tokens($"text")).as("tok"))
           .filter(length($"tok") > 0)
-          .groupBy($"source", $"tok").agg(count(lit(1)).as("c"))
-          .persist()) // source sizes, token totals, and the dp join
+          .groupBy($"source", $"tok").agg(count(lit(1)).as("c")))
       val ssz = tok.groupBy($"source").agg(sum($"c").as("ssz"))
       val stot = ssz.agg(sum($"ssz").as("S"))
       val top = tok.groupBy($"tok").agg(sum($"c").as("ct"))
@@ -2505,8 +2488,7 @@ object NorthStar {
     // bound.
     "t48_edit_verify" -> { (s, dir) =>
       import s.implicits._
-      val docs = graft.operators.CacheScope.sessionScope(s).own(
-        mutCorpus(s, dir).persist()) // LSH build + both text lookups
+      val docs = persist(mutCorpus(s, dir)) // LSH build + both text lookups
       Dedup.lshCandidatePairs(docs, "text", "doc_id", 16, 4, 3)
         .select($"id_a", $"id_b", $"est_sim")
         .join(docs.select($"doc_id".as("id_a"), $"text".as("ta")), "id_a")
@@ -2551,9 +2533,8 @@ object NorthStar {
       // (q47's two-consumer rule: expensive rebuild, tiny cache).
       val sketch = udaf(new graft.functions.KmvSketchAgg(k),
         org.apache.spark.sql.Encoders.scalaLong)
-      val skn = sp.groupBy($"src")
-        .agg(sketch($"h").as("kv"), countDistinct($"h").as("nd"))
-        .persist()
+      val skn = persist(sp.groupBy($"src")
+        .agg(sketch($"h").as("kv"), countDistinct($"h").as("nd")))
       skn.as("a").join(skn.as("b"), col("a.src") < col("b.src"))
         .select(col("a.src").as("src_a"), col("b.src").as("src_b"),
           col("a.nd").as("nd_a"), col("b.nd").as("nd_b"),
@@ -2595,10 +2576,9 @@ object NorthStar {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val tf = docs.select($"doc_id".cast("long").as("id"),
+      val tf = persist(docs.select($"doc_id".cast("long").as("id"),
           explode(TextAnalysis.tokens($"text")).as("tok"))
-        .groupBy($"id", $"tok").agg(count(lit(1)).as("tf"))
-        .persist()
+        .groupBy($"id", $"tok").agg(count(lit(1)).as("tf")))
       val dl = tf.groupBy($"id").agg(sum($"tf").as("dl"))
       val df = tf.groupBy($"tok").agg(count(lit(1)).as("df"))
       val nl = broadcast(dl.agg(count(lit(1)).as("nn"), sum($"dl").as("ll")))
@@ -3001,7 +2981,7 @@ object NorthStar {
 
     "m14_chunk_dedup_stats" -> { (s, dir) =>
       import s.implicits._
-      val chunks = graft.operators.CacheScope.sessionScope(s).own(
+      val chunks = persist(
         mutCorpus(s, dir)
           .select($"doc_id".cast("long").as("doc_id"), $"text")
           .as[(Long, String)]
@@ -3010,8 +2990,7 @@ object NorthStar {
                 if (t == null) "" else t, w = 8, mask = 63)
               .map { case (h, l) => (id, h, l.toLong) }
           }
-          .toDF("doc_id", "ch", "clen")
-          .persist()) // df aggregate + the mark join read the same rows
+          .toDF("doc_id", "ch", "clen")) // df aggregate + the mark join read the same rows
       val dup = chunks.groupBy($"ch")
         .agg(countDistinct($"doc_id").as("nd"))
         .filter($"nd" >= 2).select($"ch", lit(1L).as("hit"))
@@ -3241,8 +3220,8 @@ object NorthStar {
         .na.fill(0L, Seq("ni"))
         .withColumn("jacc",
           $"ni".cast("double") / ($"na" + $"nb" - $"ni").cast("double"))
-      val cand = Dedup.lshCandidatePairs(corpus, "text", "doc_id", 16, 4, 3)
-        .persist() // two consumers: the totals and the planted probe
+      // two consumers: the totals and the planted probe
+      val cand = persist(Dedup.lshCandidatePairs(corpus, "text", "doc_id", 16, 4, 3))
       val found = cand
         .filter($"id_b" === $"id_a" + 100000 && $"id_a" < 100000)
         .select($"id_a".as("pid")).distinct()
@@ -3277,30 +3256,27 @@ object NorthStar {
       // and the minhash signatures (t40 previously ran it four times:
       // once for truth + once inside each band layout's candidate
       // pipeline)
-      val sh = graft.operators.CacheScope.sessionScope(s).own(
-        Dedup.shingles(corpus, "text", "doc_id", n = 3).persist())
+      val sh = persist(Dedup.shingles(corpus, "text", "doc_id", n = 3))
       val a = sh.filter($"id" < 100000).select($"id".as("pid"), $"sh")
       val b = sh.filter($"id" >= 100000)
         .select(($"id" - 100000).as("pid"), $"sh")
       val inter = a.join(b, Seq("pid", "sh"))
         .groupBy($"pid").agg(count(lit(1)).as("ni"))
-      val trueDups = a.groupBy($"pid").agg(count(lit(1)).as("na"))
+      val trueDups = persist(a.groupBy($"pid").agg(count(lit(1)).as("na"))
         .join(b.groupBy($"pid").agg(count(lit(1)).as("nb")), "pid")
         .join(inter, Seq("pid"), "left")
         .na.fill(0L, Seq("ni"))
         .filter($"ni".cast("double") /
           ($"na" + $"nb" - $"ni").cast("double") >= 0.8)
-        .select($"pid")
-        .persist() // probed once per band layout
+        .select($"pid")) // probed once per band layout
       val nTrue = broadcast(trueDups.agg(count(lit(1)).as("n_true_dup")))
       // ... and ONE minhash signature aggregate shared by all three
       // band layouts (the k=16 signatures don't depend on the banding);
       // each arm only pays its banding join
-      val mh = graft.operators.CacheScope.sessionScope(s).own(
-        Dedup.minhashesFromShingles(sh, k = 16).persist())
+      val mh = persist(Dedup.minhashesFromShingles(sh, k = 16))
       val rows = Seq(2, 4, 8).map { nb =>
-        val cand = Dedup.lshCandidatePairsFromMinhashes(mh, k = 16,
-          bands = nb).persist()
+        val cand = persist(Dedup.lshCandidatePairsFromMinhashes(mh, k = 16,
+          bands = nb))
         val found = cand
           .filter($"id_b" === $"id_a" + 100000 && $"id_a" < 100000)
           .select($"id_a".as("pid")).distinct()
@@ -3382,9 +3358,9 @@ object NorthStar {
     // MUCH of each doc is corpus-duplicated).
     "t43_dup_ngram_fraction" -> { (s, dir) =>
       import s.implicits._
-      val sh = graft.operators.CacheScope.sessionScope(s).own(
+      val sh = persist(
         Dedup.shingles(s.read.parquet(s"$dir/documents.parquet"),
-          "text", "doc_id", n = 3).persist()) // df aggregate + join back
+          "text", "doc_id", n = 3)) // df aggregate + join back
       val df = sh.groupBy($"sh").agg(count(lit(1)).as("df"))
       sh.join(df, "sh")
         .groupBy($"id".as("doc_id"))
@@ -3419,8 +3395,7 @@ object NorthStar {
         .withColumn("total_chars", aggregate(
           transform($"toks", t => length(t).cast("long")),
           lit(0L), (a, x) => a + x))
-      val scope = graft.operators.CacheScope.sessionScope(s)
-      val toksC = scope.own(base.persist()) // bigram, 5-gram, position passes
+      val toksC = persist(base) // bigram, 5-gram, position passes
       val wTop = Window.partitionBy($"doc_id")
         .orderBy($"cnt".desc, $"gram".asc)
       val top2 = toksC
@@ -3504,10 +3479,10 @@ object NorthStar {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val docs = s.read.parquet(s"$dir/documents.parquet")
-      val dp0 = graft.operators.CacheScope.sessionScope(s).own(
+      // df aggregate + match join read the same prints
+      val dp0 = persist(
         Multimodal.constellationPrints(graft.operators.Par.spread(
-            docs.select($"doc_id", $"text"))) // single-task fixture scan
-          .persist()) // df aggregate + match join read the same prints
+            docs.select($"doc_id", $"text")))) // single-task fixture scan
       val kept = dp0.groupBy($"hash").agg(count(lit(1)).as("df"))
         .filter($"df" <= 64).select($"hash")
       val dp = dp0.join(broadcast(kept), Seq("hash"), "left_semi")
@@ -3585,17 +3560,17 @@ object NorthStar {
       // previously re-ran the full constellation extraction — ~1/3 of
       // the row's executor time was that duplicate kernel pass)
       val printsByFo = Seq(3, 6).map { fo =>
-        val dp0 = graft.operators.CacheScope.sessionScope(s).own(
+        val dp0 = persist(
           Multimodal.constellationPrints(graft.operators.Par.spread(
               docs.select($"doc_id", $"text")), // single-task fixture scan
-            fanOut = fo).persist()) // df aggregate + match join
-        val qp = graft.operators.CacheScope.sessionScope(s).own(
+            fanOut = fo)) // df aggregate + match join
+        // query-count aggregate + match join
+        val qp = persist(
           Multimodal.constellationPrints(
             docs.filter($"doc_id" % 25 === 0).select($"doc_id",
               expr("substring(text, ((length(text) div 3) div 8) * 8 + 1," +
                 " length(text) div 3)").as("text")), fanOut = fo)
-          .select($"doc_id".as("q_id"), $"hash", $"t".as("qt"))
-          .persist()) // query-count aggregate + match join
+          .select($"doc_id".as("q_id"), $"hash", $"t".as("qt")))
         fo -> (dp0, qp)
       }.toMap
       Seq((3, 64), (3, 256), (6, 64)).map { case (fo, cap) =>

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -46,7 +47,7 @@ object Relational {
     * cross-join — with the greatest-start-owns-the-pair convention so
     * each overlapping pair survives in exactly one cell. Returned
     * persisted: every caller composes a multi-pass graph algorithm on
-    * it (the unmanaged-cache query convention).
+    * it.
     */
   private def sessionOverlapEdges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -63,14 +64,13 @@ object Relational {
       .agg(min($"sec").as("st"), max($"sec").as("en"))
     val cells = iv.select($"user_id", $"st", $"en",
       explode(sequence(expr("st div 3600"), expr("en div 3600"))).as("cell"))
-    cells.as("a").join(cells.as("b"),
+    persist(cells.as("a").join(cells.as("b"),
         col("a.cell") === col("b.cell") &&
           col("a.user_id") < col("b.user_id") &&
           col("a.st") <= col("b.en") && col("b.st") <= col("a.en") &&
           expr("greatest(a.st, b.st) div 3600") === col("a.cell"))
       .select(col("a.user_id").as("ua"), col("b.user_id").as("ub"))
-      .distinct()
-      .persist()
+      .distinct())
   }
 
   /** One-time bucketed-warehouse fixture for q29: orders + lineitem
@@ -537,10 +537,9 @@ object Relational {
     "q26_bloom_probe" -> { (s, dir) =>
       import s.implicits._
       val (m, kh) = (512, 3)
-      val hot = rd(s, dir, "orders")
+      val hot = persist(rd(s, dir, "orders")
         .filter($"o_totalprice" > 495000.0)
-        .select($"o_custkey").distinct()
-        .persist() // feeds two jobs: the filter build and the exact set
+        .select($"o_custkey").distinct()) // feeds two jobs: the filter build and the exact set
       // headOption: an empty hot set (empty shard / first day) yields
       // zero groups — the filter is then the all-zero sketch, not a crash
       val words = hot.as[Long]
@@ -917,16 +916,14 @@ object Relational {
     "q44_triangles" -> { (s, dir) =>
       import s.implicits._
       val edges = sessionOverlapEdges(s, dir)
-      val deg = edges.select($"ua".as("u")).union(edges.select($"ub".as("u")))
-        .groupBy($"u").agg(count(lit(1)).as("dg"))
-        .persist()
+      val deg = persist(edges.select($"ua".as("u")).union(edges.select($"ub".as("u")))
+        .groupBy($"u").agg(count(lit(1)).as("dg")))
       val byLow = $"da" < $"db" || ($"da" === $"db" && $"ua" < $"ub")
-      val dirEdges = edges
+      val dirEdges = persist(edges
         .join(deg.select($"u".as("ua"), $"dg".as("da")), "ua")
         .join(deg.select($"u".as("ub"), $"dg".as("db")), "ub")
         .select(when(byLow, $"ua").otherwise($"ub").as("src"),
-          when(byLow, $"ub").otherwise($"ua").as("dst"))
-        .persist()
+          when(byLow, $"ub").otherwise($"ua").as("dst")))
       val wedges = dirEdges.as("x").join(dirEdges.as("y"),
           col("x.src") === col("y.src") && col("x.dst") < col("y.dst"))
         .select(col("x.src").as("u"), col("x.dst").as("v"),
@@ -1036,7 +1033,9 @@ object Relational {
     "q47_retention_cohorts" -> { (s, dir) =>
       import s.implicits._
       val wk = expr("ts div 1000000000 div 604800")
-      val ret = events(s, dir)
+      // dozens of rows, two consumers — persist or the feed aggregate
+      // runs once per branch (PlanShapeSpec pins the single feed scan)
+      val ret = persist(events(s, dir)
         .groupBy($"user_id")
         .agg(collect_set(wk).as("weeks"),
           min(when($"event_type" === "signup", wk)).as("cw"))
@@ -1044,10 +1043,7 @@ object Relational {
         .select($"cw", explode($"weeks").as("week"))
         .filter($"week" >= $"cw")
         .groupBy($"cw".as("cohort_week"), ($"week" - $"cw").as("offset_weeks"))
-        .agg(count(lit(1)).as("n_active"))
-        // dozens of rows, two consumers — persist or the feed aggregate
-        // runs once per branch (PlanShapeSpec pins the single feed scan)
-        .persist()
+        .agg(count(lit(1)).as("n_active")))
       val sizes = ret.filter($"offset_weeks" === 0)
         .select($"cohort_week", $"n_active".as("cohort_size"))
       ret.join(broadcast(sizes), "cohort_week")
@@ -1286,24 +1282,22 @@ object Relational {
     // max(struct(cnt, -label)) argmax — both partial-aggregatable, no
     // window over nodes) + a left join back to the node set (isolated
     // nodes keep their own label). Each round's label table is
-    // scope-persisted because round r+1 reads it twice (count join +
+    // persisted because round r+1 reads it twice (count join +
     // fallback); at 100 TB every stage keys on the node id and moves
     // O(edges) rows — the same shuffle shape as one CC round.
     "q77_label_propagation" -> { (s, dir) =>
       import s.implicits._
-      val scope = graft.operators.CacheScope.sessionScope(s)
       val edges = sessionOverlapEdges(s, dir)
       // persisted: each of the 3 propagation rounds equi-joins sym; the
       // un-persisted union re-derived it (2 cache scans + the union)
       // once per round
-      val sym = scope.own(edges.select($"ua".as("u"), $"ub".as("v"))
-        .unionByName(edges.select($"ub".as("u"), $"ua".as("v"))).persist())
+      val sym = persist(edges.select($"ua".as("u"), $"ub".as("v"))
+        .unionByName(edges.select($"ub".as("u"), $"ua".as("v"))))
       // persisted: every propagation round left-joins the node set, so
       // the unpersisted spelling re-ran the events scan + distinct 4x
-      val nodes = scope.own(events(s, dir)
-        .select($"user_id".cast("long").as("id")).distinct().persist())
-      val labels = graft.operators.Graph.labelPropagation(
-        nodes, sym, rounds = 3, df => scope.own(df.persist()))
+      val nodes = persist(events(s, dir)
+        .select($"user_id".cast("long").as("id")).distinct())
+      val labels = graft.operators.Graph.labelPropagation(nodes, sym, rounds = 3)
       val sz = labels.groupBy($"lbl")
         .agg(count(lit(1)).as("community_size"))
       labels.join(sz, "lbl")
@@ -1363,16 +1357,15 @@ object Relational {
     "q48_khop_reach" -> { (s, dir) =>
       import s.implicits._
       val edges = sessionOverlapEdges(s, dir)
-      val sym = edges.select($"ua".as("u"), $"ub".as("v"))
-        .unionByName(edges.select($"ub".as("u"), $"ua".as("v")))
-        .persist()
+      val sym = persist(edges.select($"ua".as("u"), $"ub".as("v"))
+        .unionByName(edges.select($"ub".as("u"), $"ua".as("v"))))
       var dist = sym.select($"u").distinct().filter($"u" % 50 === 0)
         .select($"u", lit(0L).as("hops"))
       for (h <- 1 to 3) {
         val next = dist.filter($"hops" === (h - 1)).join(sym, "u")
           .select($"v".as("u"), lit(h.toLong).as("hops"))
-        dist = dist.unionByName(next)
-          .groupBy($"u").agg(min($"hops").as("hops")).persist()
+        dist = persist(dist.unionByName(next)
+          .groupBy($"u").agg(min($"hops").as("hops")))
       }
       dist.select($"u".as("user_id"), $"hops").orderBy($"user_id")
     },
@@ -1432,10 +1425,9 @@ object Relational {
     // per-partition top-k, only 50 rows reach the driver-side sort).
     "q56_frequent_pairs" -> { (s, dir) =>
       import s.implicits._
-      val baskets = rd(s, dir, "lineitem")
+      val baskets = persist(rd(s, dir, "lineitem")
         .groupBy($"l_orderkey")
-        .agg(array_sort(collect_set($"l_partkey")).as("parts"))
-        .persist()
+        .agg(array_sort(collect_set($"l_partkey")).as("parts")))
       val pairs = baskets
         .select(explode(expr(
           """flatten(transform(parts, (x, i) ->
@@ -1617,10 +1609,9 @@ object Relational {
     // a year is still <50k rows/type — driver-light by construction.
     "q57_gapfill_series" -> { (s, dir) =>
       import s.implicits._
-      val counts = events(s, dir)
+      val counts = persist(events(s, dir)
         .groupBy(expr("ts div 1000000000 div 3600").as("hour"), $"event_type")
-        .agg(count(lit(1)).as("n"))
-        .persist() // three tiny consumers: bounds, types, the gap-fill join
+        .agg(count(lit(1)).as("n"))) // three tiny consumers: bounds, types, the gap-fill join
       val cal = counts.agg(min($"hour").as("h0"), max($"hour").as("h1"))
         .select(explode(sequence($"h0", $"h1")).as("hour"))
       val types = counts.select($"event_type").distinct()
@@ -1742,8 +1733,8 @@ object Relational {
     "q61_bloom_join" -> { (s, dir) =>
       import s.implicits._
       val (m, kh) = (4096, 3)
-      val hot = rd(s, dir, "customer").filter($"c_acctbal" > 9000)
-        .select($"c_custkey", $"c_nationkey").persist()
+      val hot = persist(rd(s, dir, "customer").filter($"c_acctbal" > 9000)
+        .select($"c_custkey", $"c_nationkey"))
       val words = hot.select($"c_custkey").as[Long]
         .groupByKey(_ => 0)
         .agg(new graft.functions.BloomAgg(m, kh).toColumn.name("bloom"))
@@ -1846,7 +1837,8 @@ object Relational {
       import s.implicits._
       val secs = expr("ts div 1000000000")
       val w = Window.partitionBy($"user_id").orderBy(secs, $"event_id")
-      val iv = events(s, dir)
+      // three consumers: two delta projections + the count
+      val iv = persist(events(s, dir)
         .withColumn("sec", secs)
         .withColumn("prev_s", lag($"sec", 1).over(w))
         .withColumn("ns",
@@ -1854,8 +1846,7 @@ object Relational {
         .withColumn("sess", sum($"ns").over(
           w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
         .groupBy($"user_id", $"sess")
-        .agg(min($"sec").as("st"), max($"sec").as("en"))
-        .persist() // three consumers: two delta projections + the count
+        .agg(min($"sec").as("st"), max($"sec").as("en")))
       val deltas = iv
         .select($"st".as("t"), lit(1L).as("delta"), $"user_id", $"sess")
         .unionByName(iv
@@ -1982,8 +1973,7 @@ object Relational {
           expr(s"CASE WHEN w = 0 THEN $maxRho ELSE $maxRho - length(bin(w)) END"))
         .groupBy($"region", $"nation", $"bucket")
         .agg(max($"rho").as("rho"))
-      val fineCached = graft.operators.CacheScope.sessionScope(s)
-        .own(fine.persist()) // three consumers: the three rollup levels
+      val fineCached = persist(fine) // three consumers: the three rollup levels
       def readout(regs: DataFrame, keys: Seq[org.apache.spark.sql.Column], exact: DataFrame,
           level: String): DataFrame = {
         val estExpr =
@@ -2037,10 +2027,10 @@ object Relational {
     // against the broadcast medians); no global sort.
     "q68_mad_outliers" -> { (s, dir) =>
       import s.implicits._
-      val ev = graft.operators.CacheScope.sessionScope(s).own(
+      // three passes: median, MAD, outlier count
+      val ev = persist(
         events(s, dir)
-          .select($"event_type", expr("cast(floor(value) as bigint)").as("v"))
-          .persist()) // three passes: median, MAD, outlier count
+          .select($"event_type", expr("cast(floor(value) as bigint)").as("v")))
       val med = ev.groupBy($"event_type")
         .agg(expr("cast(percentile(2 * v, 0.5D) as bigint)").as("med2"),
           count(lit(1)).as("n"))
@@ -2099,10 +2089,10 @@ object Relational {
       import s.implicits._
       val secs = expr("ts div 1000000000")
       val w = Window.partitionBy($"user_id").orderBy($"sec", $"event_id")
-      val ev = graft.operators.CacheScope.sessionScope(s).own(
+      // consumed as both the fact side and the runs source
+      val ev = persist(
         events(s, dir)
-          .select($"user_id", $"event_id", $"event_type", secs.as("sec"))
-          .persist()) // consumed as both the fact side and the runs source
+          .select($"user_id", $"event_id", $"event_type", secs.as("sec")))
       val runs = ev
         .withColumn("prev_t", lag($"event_type", 1).over(w))
         .withColumn("chg",

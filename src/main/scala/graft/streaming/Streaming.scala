@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -78,7 +79,7 @@ object Streaming {
     * keep individual stores bounded — the knob is the contract, the
     * constant is sized to the state.
     */
-  private val StatePartitions = sys.env.getOrElse("GRAFT_STATE_PARTS", "2")
+  private val StatePartitions = "2"
 
   /** Scatter scratch dirs, reclaimed at JVM exit (see
     * [[runToScatterTable]] — they must outlive the cache that fronts
@@ -944,9 +945,8 @@ object Streaming {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.Multimodal
     val docs = s.read.parquet(s"$dir/documents.parquet")
-    val scope = graft.operators.CacheScope.sessionScope(s)
-    val dp0 = scope.own(Multimodal.constellationPrints(
-      docs.select(col("doc_id"), col("text"))).persist())
+    val dp0 = persist(Multimodal.constellationPrints(
+      docs.select(col("doc_id"), col("text"))))
     val kept = dp0.groupBy(col("hash")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= 64).select(col("hash"))
     val index = dp0.join(broadcast(kept), Seq("hash"), "left_semi")
@@ -1570,7 +1570,7 @@ object Streaming {
       nprobe: Int = 4, superProbe: Int = 3,
       tombstones: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
-    import graft.operators.{CacheScope, Mixture, Similarity}
+    import graft.operators.{Mixture, Similarity}
     require(k <= beam, s"k=$k must be <= beam=$beam")
     require(nShards >= 1, s"nShards=$nShards must be positive")
     // s43's masking contract, shard-composed: the per-shard GRAPH
@@ -1580,23 +1580,22 @@ object Streaming {
       .map(_.select(col(tombstones.get.columns.head).cast("long"))
         .as[Long].collect().toSet)
       .getOrElse(Set.empty)
-    val scope = CacheScope.sessionScope(s)
-    val emb = scope.own(s.read.parquet(s"$dir/embeddings.parquet")
+    // one scan feeds all nShards shard builds
+    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        Mixture.rendezvousShardCol(col("vec_id"), nShards).as("shard"))
-      .persist()) // one scan feeds all nShards shard builds
+        Mixture.rendezvousShardCol(col("vec_id"), nShards).as("shard")))
     // ROUTE ONCE: the rendezvous argmax is computed in ONE streaming
     // pass and the routed arrivals materialize as a table each arm
     // consumes by its own partition — the ingest-tier dispatch. (The
     // filtered-union spelling re-evaluated the O(nShards)-hash argmax
     // in every arm, so router work grew ∝ nShards² per arrival.)
-    val routedQ = scope.own(runToScatterTable(
+    val routedQ = persist(runToScatterTable(
         graft.sources.Sources.embeddingsStream(s, dir)
           .select((col("vec_id") + 100000L).cast("long").as("q_id"),
             col("embedding"))
           .withColumn("shard",
             Mixture.rendezvousShardCol(col("q_id"), nShards)))
-      .repartition(col("shard")).persist()) // cluster by shard once;
+      .repartition(col("shard"))) // cluster by shard once;
     routedQ.count() // arms prune cached batches by shard stats
     // the per-shard replicas build CONCURRENTLY (production's
     // independent per-shard nightly index jobs — Spark schedules
@@ -2687,8 +2686,7 @@ object Streaming {
         Seq.empty[(String, Long, Long, java.lang.Long, Double)]
           .toDF("kind", "q_id", "n_id", "rnk", "cos_sim")
       case Some(partials) =>
-        val scope = graft.operators.CacheScope.sessionScope(s)
-        val p = scope.own(partials.persist()) // read by both intent arms
+        val p = persist(partials) // read by both intent arms
         // upserts are already exact per owner (the assigned cell has
         // ONE owner) — pass through
         val ups = p.filter(col("kind") === "upsert")
@@ -2810,9 +2808,8 @@ object Streaming {
     // tier's route-and-dispatch; the driver never holds a row) and
     // one repartition+persist lets each arm's owner filter prune
     // cached batches by their column stats
-    val scope = graft.operators.CacheScope.sessionScope(s)
-    val routedT = scope.own(runToScatterTable(arrivals)
-      .repartition(col("owner")).persist())
+    val routedT = persist(runToScatterTable(arrivals)
+      .repartition(col("owner")))
     routedT.count() // fill the cache before the arms fan out
     // each owner's replica loads CONCURRENTLY (st58's parallel
     // per-shard load — production's independent serving workers;
@@ -2970,16 +2967,16 @@ object Streaming {
       beam: Int = 16, rounds: Int = 3, seedMod: Int = 64,
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3)
       : DataFrame = {
-    import graft.operators.{CacheScope, Similarity}
+    import graft.operators.Similarity
     val intents = streamTombstoneIntents(s, dir, k, targetList, nprobe,
       superProbe)
     val tomb = intents.filter(col("kind") === "drop")
       .select(col("q_id").cast("long").as("del_id")).distinct()
     val emb = s.read.parquet(s"$dir/embeddings.parquet")
-    val graph = CacheScope.sessionScope(s).own(
+    // read once per beam round
+    val graph = persist(
       Similarity.ensureKnnGraphIndex(s, dir, graphK = 10,
-          targetList = targetList, nprobe = nprobe, superProbe = superProbe)
-        .persist()) // read once per beam round
+          targetList = targetList, nprobe = nprobe, superProbe = superProbe))
     val live = emb.join(tomb, emb("vec_id") === tomb("del_id"), "left_anti")
     Similarity.graphBeamSearchOver(graph, live,
       emb.filter(col("vec_id") < 5), k = k, beam = beam, rounds = rounds,
@@ -3024,24 +3021,23 @@ object Streaming {
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3)
       : DataFrame = {
     import s.implicits._
-    import graft.operators.{CacheScope, Mixture, Similarity}
+    import graft.operators.{Mixture, Similarity}
     require(k <= beam, s"k=$k must be <= beam=$beam")
     require(kFrom >= 1 && kTo > kFrom,
       s"resize must grow the fleet: kFrom=$kFrom, kTo=$kTo")
-    val scope = CacheScope.sessionScope(s)
-    val emb = scope.own(s.read.parquet(s"$dir/embeddings.parquet")
+    // one scan feeds every arm's scoring slice
+    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        Mixture.rendezvousShardCol(col("vec_id"), kTo).as("shard_to"))
-      .persist()) // one scan feeds every arm's scoring slice
+        Mixture.rendezvousShardCol(col("vec_id"), kTo).as("shard_to")))
     // ROUTE ONCE under the NEW layout (st58's ingest-tier dispatch:
     // one streaming pass computes the kTo argmax, arms consume their
     // materialized partitions)
-    val routedQ = scope.own(runToScatterTable(
+    val routedQ = persist(runToScatterTable(
         graft.sources.Sources.embeddingsStream(s, dir)
           .select((col("vec_id") + 100000L).cast("long").as("q_id"),
             col("embedding"))
           .withColumn("shard", Mixture.rendezvousShardCol(col("q_id"), kTo)))
-      .repartition(col("shard")).persist()) // cluster by shard once;
+      .repartition(col("shard"))) // cluster by shard once;
     routedQ.count() // arms prune cached batches by shard stats
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -3167,15 +3163,13 @@ object Streaming {
       graphK: Int = 10, targetList: Int = 64, nprobe: Int = 4,
       superProbe: Int = 3): DataFrame = {
     import s.implicits._
-    import graft.operators.{CacheScope, Mixture, Similarity}
+    import graft.operators.{Mixture, Similarity}
     require(k <= beam, s"k=$k must be <= beam=$beam")
     require(probeShards >= 1 && probeShards <= nShards,
       s"probeShards=$probeShards must be in [1, nShards=$nShards]")
-    val scope = CacheScope.sessionScope(s)
-    val emb = scope.own(s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        Mixture.rendezvousShardCol(col("vec_id"), nShards).as("shard"))
-      .persist())
+        Mixture.rendezvousShardCol(col("vec_id"), nShards).as("shard")))
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -3208,7 +3202,7 @@ object Streaming {
     // against the summary and materializes the (shard, arrival)
     // scatter — probeShards rows per arrival; arms consume their
     // partition instead of each re-running the summary ranking
-    val routedQ = scope.own(runToScatterTable(
+    val routedQ = persist(runToScatterTable(
         graft.sources.Sources.embeddingsStream(s, dir)
           .select((col("vec_id") + 100000L).cast("long").as("q_id"),
             col("embedding"))
@@ -3220,7 +3214,7 @@ object Streaming {
             }.toSeq.sortBy { case (s2, sc) => (-sc, s2) }
               .take(probeShards).iterator.map(r => (r._1, qId, qv))
           }.toDF("shard", "q_id", "embedding"))
-      .repartition(col("shard")).persist()) // cluster by shard once;
+      .repartition(col("shard"))) // cluster by shard once;
     routedQ.count() // arms prune cached batches by shard stats
     // the GATHER: exact top-k merge of the routed arms' partials —
     // shard slices are disjoint, so no dedup; rounded-cosine ties
@@ -3266,24 +3260,22 @@ object Streaming {
       seedMod: Int = 64, graphK: Int = 10, targetList: Int = 64,
       nprobe: Int = 4, superProbe: Int = 3): DataFrame = {
     import s.implicits._
-    import graft.operators.{CacheScope, Mixture, Similarity}
+    import graft.operators.{Mixture, Similarity}
     require(k <= beam, s"k=$k must be <= beam=$beam")
     require(kFrom >= 2, s"kFrom=$kFrom: a 1-shard fleet cannot fail over")
     val kTo = kFrom - 1
-    val scope = CacheScope.sessionScope(s)
-    val emb = scope.own(s.read.parquet(s"$dir/embeddings.parquet")
+    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        Mixture.rendezvousShardCol(col("vec_id"), kTo).as("shard_to"))
-      .persist())
+        Mixture.rendezvousShardCol(col("vec_id"), kTo).as("shard_to")))
     // ROUTE ONCE under the surviving layout (st58's ingest-tier
     // dispatch; the survivors' arms consume their materialized
     // partitions instead of each re-running the HRW argmax)
-    val routedQ = scope.own(runToScatterTable(
+    val routedQ = persist(runToScatterTable(
         graft.sources.Sources.embeddingsStream(s, dir)
           .select((col("vec_id") + 100000L).cast("long").as("q_id"),
             col("embedding"))
           .withColumn("shard", Mixture.rendezvousShardCol(col("q_id"), kTo)))
-      .repartition(col("shard")).persist()) // cluster by shard once;
+      .repartition(col("shard"))) // cluster by shard once;
     routedQ.count() // arms prune cached batches by shard stats
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -3327,13 +3319,11 @@ object Streaming {
     */
   def streamTakedownPropagate(s: SparkSession, dir: String,
       corpus: DataFrame): DataFrame = {
-    import graft.operators.{CacheScope, Dedup}
-    val scope = CacheScope.sessionScope(s)
-    val verdicts = scope.own(
+    import graft.operators.Dedup
+    val verdicts = persist(
       Dedup.dedupVerdicts(corpus, "text", "doc_id",
           k = 16, bands = 4, n = 3, minEstSim = 0.5)
-        .select(col("doc_id"), col("canonical_id"))
-        .persist()) // resolved once, joined twice
+        .select(col("doc_id"), col("canonical_id"))) // resolved once, joined twice
     val notices = graft.sources.Sources.documentsStream(s, dir)
       .filter(col("doc_id") % 37 === 5)
       .select(col("doc_id").cast("long").as("ntc_id"))

@@ -84,11 +84,25 @@ class StyleGateSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  // environment variables count too: a knob nothing sets is a probe
+  // left behind, and the streaming operators are operators
   test("operators read no system properties") {
-    val bad = mainFilesWith("sys.props", "System.getProperty")
-      .filter(_.startsWith("src/main/scala/graft/operators/"))
-    withClue(bad.mkString("system properties read at:\n", "\n", "\n")) {
+    val bad = mainFilesWith("sys.props", "System.getProperty", "sys.env", "System.getenv")
+      .filter(at => at.startsWith("src/main/scala/graft/operators/") ||
+        at.startsWith("src/main/scala/graft/streaming/"))
+    withClue(bad.mkString("system properties or environment read at:\n", "\n", "\n")) {
       bad shouldBe empty
+    }
+  }
+
+  test("every operator cache goes through CacheScope.persist") {
+    val raw = mainFilesWith(".persist(", ".cache()")
+      .filterNot(_.startsWith("src/main/scala/graft/operators/CacheScope.scala:"))
+    val scoped = mainFilesWith("scope: CacheScope", "scope: graft.operators.CacheScope",
+      "new CacheScope", "sessionScope", ".own(")
+    withClue(raw.mkString("persist outside CacheScope at:\n", "\n", "\n") +
+        scoped.mkString("caller-owned cache scopes at:\n", "\n", "\n")) {
+      (raw ++ scoped) shouldBe empty
     }
   }
 

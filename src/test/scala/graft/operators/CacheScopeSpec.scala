@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 /** The operator-cache lifecycle contract: composing the persisting
-  * dedup operators under one CacheScope and releasing it leaves ZERO
+  * dedup operators and releasing the session's CacheScope leaves ZERO
   * residual cached RDDs — a long-lived session composing operators no
   * longer accumulates storage memory until eviction churn. Asserted on
   * the DELTA of persistent-RDD ids so concurrently-running suites
@@ -27,40 +27,38 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
   test("composing d02+d04+d06 operators under a scope releases every cache") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val scope = new CacheScope
     val d = docs
     // the three operator shapes behind d02 / d04 / d06
-    val jac = Dedup.jaccardPairs(d, "text", "doc_id", 3, 0.3, scope)
-    val lsh = Dedup.lshCandidatePairs(d, "text", "doc_id", 16, 4, 3, scope)
-    val sim = Dedup.simhashNearPairs(d, "text", "doc_id", 3, scope)
+    val jac = Dedup.jaccardPairs(d, "text", "doc_id", 3, 0.3)
+    val lsh = Dedup.lshCandidatePairs(d, "text", "doc_id", 16, 4, 3)
+    val sim = Dedup.simhashNearPairs(d, "text", "doc_id", 3)
     val counts = (jac.count(), lsh.count(), sim.count())
     val during = sc.getPersistentRDDs.keySet -- before
     during should not be empty // the caches actually engaged
-    scope.release()
+    CacheScope.releaseSession(spark)
     val after = sc.getPersistentRDDs.keySet -- before
     after shouldBe empty
     // released results stay correct: re-running the actions recomputes
     (jac.count(), lsh.count(), sim.count()) shouldBe counts
     // release is idempotent
-    noException should be thrownBy scope.release()
+    noException should be thrownBy CacheScope.releaseSession(spark)
   }
 
   test("chunkOverlapPairs (m05) caches under the scope and releases clean") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val scope = new CacheScope
     val pairs = Multimodal.chunkOverlapPairs(docs, "text", "doc_id",
-      dfCap = 50, minOverlap = 0.1, scope = scope)
+      dfCap = 50, minOverlap = 0.1)
     val n = pairs.count()
     (sc.getPersistentRDDs.keySet -- before) should not be empty
-    scope.release()
+    CacheScope.releaseSession(spark)
     (sc.getPersistentRDDs.keySet -- before) shouldBe empty
     pairs.count() shouldBe n
   }
 
   test("in situ: the registered t17 pipeline under a managed scope releases clean") {
     // the REAL registered query's pipeline (not a synthetic compose):
-    // run it end-to-end with a managed scope, assert the zero-residual
+    // run it end-to-end, release the session, assert the zero-residual
     // contract holds on a query the driver actually grades
     import spark.implicits._
     import org.apache.spark.sql.functions.{concat, lit}
@@ -69,11 +67,10 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
       .withColumn("text", concat($"text",
         lit(" " + Seq.fill(45)("the word of and to in play").mkString(" "))))
     val before = sc.getPersistentRDDs.keySet
-    val scope = new CacheScope
-    val out = graft.queries.NorthStar.curationPipeline(docs0, scope)
+    val out = graft.queries.NorthStar.curationPipeline(docs0)
     val n = out.count()
     (sc.getPersistentRDDs.keySet -- before) should not be empty // the persist engaged
-    scope.release()
+    CacheScope.releaseSession(spark)
     (sc.getPersistentRDDs.keySet -- before) shouldBe empty
     out.count() shouldBe n // released result recomputes identically
   }
@@ -81,17 +78,28 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
   test("default scope is session-managed: releaseSession reclaims all") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    // no scope passed — the default CacheScope.session tracks these in
-    // the per-session registry
+    // every operator persist is tracked in the per-session registry
     val lsh = Dedup.lshCandidatePairs(docs, "text", "doc_id")
     val n = lsh.count()
     val during = sc.getPersistentRDDs.keySet -- before
     during should not be empty
-    CacheScope.unmanaged.release() // no-op: tracked nothing
-    (sc.getPersistentRDDs.keySet -- before) shouldBe during
     CacheScope.releaseSession(spark)
     (sc.getPersistentRDDs.keySet -- before) shouldBe empty
     lsh.count() shouldBe n // released result recomputes identically
     CacheScope.releaseSession(spark) // idempotent
+  }
+
+  test("releaseSession alone leaves nothing cached by dbscan_events and q44_triangles") {
+    // the paper's DBSCAN pipeline (pts / clustered / cands) and the
+    // relational graph rows persist inside the query builders; with no
+    // clearCache after the release, anything left is an untracked cache
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Seq("dbscan_events", "q44_triangles").foreach { q =>
+      graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect()
+    }
+    (sc.getPersistentRDDs.keySet -- before) should not be empty
+    CacheScope.releaseSession(spark)
+    (sc.getPersistentRDDs.keySet -- before) shouldBe empty
   }
 }

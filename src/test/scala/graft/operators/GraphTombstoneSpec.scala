@@ -32,7 +32,7 @@ class GraphTombstoneSpec extends AnyFunSuite with Matchers {
       Similarity.scaledSuperList(trained.length))
     val routed = Similarity.twoLevelRouted(emb.filter($"vec_id" % 10 =!= 3),
       sr, cr, nprobe = 4, superProbe = 3, idCol = "vec_id",
-      vecCol = "embedding", scope = CacheScope.sessionScope(spark))
+      vecCol = "embedding")
     val batch = rows(Similarity.knnGraphTailFromRouted(routed, 5))
     inc.length shouldBe batch.length
     inc should contain theSameElementsInOrderAs batch

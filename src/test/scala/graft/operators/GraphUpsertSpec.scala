@@ -31,8 +31,7 @@ class GraphUpsertSpec extends AnyFunSuite with Matchers {
     val (sr, cr) = Similarity.firstNsSuperTable(trained,
       Similarity.scaledSuperList(trained.length))
     val routed = Similarity.twoLevelRouted(emb, sr, cr, nprobe = 4,
-      superProbe = 3, idCol = "vec_id", vecCol = "embedding",
-      scope = CacheScope.sessionScope(spark))
+      superProbe = 3, idCol = "vec_id", vecCol = "embedding")
     val batch = rows(Similarity.knnGraphTailFromRouted(routed, 5))
     inc.length shouldBe batch.length
     inc should contain theSameElementsInOrderAs batch
@@ -54,8 +53,7 @@ class GraphUpsertSpec extends AnyFunSuite with Matchers {
     val (sr, cr) = Similarity.firstNsSuperTable(trained,
       Similarity.scaledSuperList(trained.length))
     val routed = Similarity.twoLevelRouted(emb, sr, cr, nprobe = 4,
-      superProbe = 3, idCol = "vec_id", vecCol = "embedding",
-      scope = CacheScope.sessionScope(spark))
+      superProbe = 3, idCol = "vec_id", vecCol = "embedding")
     val vecs = emb.select($"vec_id".cast("long"), $"embedding")
       .as[(Long, Array[Float])].collect().toMap
     val asg = routed.select($"id", element_at($"probes", 1)("_1"))
