@@ -4,10 +4,11 @@ import scala.collection.mutable
 
 /** Driver-side union-find with path compression + union by rank.
   *
-  * Replaces the reference's adjacency-map BFS graph (reference:
-  * DBSCANGraph.scala:36-87) for merging local cluster ids across spatial
-  * partitions — the element count is O(#local clusters), tiny relative to
-  * the data, so a driver structure is the right altitude.
+  * The driver arm of [[graft.operators.ConnectedComponents]]: graphs up
+  * to its edge gate are closed here, larger ones by distributed
+  * large-star/small-star rounds. It replaces the reference's
+  * adjacency-map BFS graph (reference: DBSCANGraph.scala:36-87), which
+  * merges local cluster ids across spatial partitions.
   */
 final class UnionFind[T] {
   private val parent = mutable.HashMap.empty[T, T]

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * [[assign]] is the threshold-gated entry point: small graphs (the
   * common case for near-dup verdicts at test scale — and the DBSCAN
-  * cluster-alias graph in the reference, DBSCAN.scala:148-150) take the
+  * cluster-alias graph, reference DBSCAN.scala:148-150) take the
   * driver union-find; anything bigger than `driverMaxEdges` runs the
   * distributed rounds. A 100 TB crawl's duplicate-pair graph is
   * O(corpus) and MUST take the distributed path — the driver path would
@@ -43,6 +43,8 @@ object ConnectedComponents {
     * exists so callers can force either path.
     */
   val DefaultDriverMax: Long = 2L * 1000 * 1000
+
+  private val MaxRounds = 100 // star rounds converge in O(log^2 n)
 
   /** Canonical undirected edge set, oriented (u > v), self-loops and
     * duplicates dropped. Input: first two columns are integral node ids.
@@ -87,10 +89,10 @@ object ConnectedComponents {
 
   /** Star-forest edges (node -> component-min root) for the undirected
     * graph given by the first two (integral) columns of `edges`.
-    * Root nodes themselves do not appear on the left side — callers
-    * wanting a total assignment use [[assign]].
+    * Root nodes themselves do not appear on the left side;
+    * [[forestMap]] adds them.
     */
-  def starEdges(edges: DataFrame, maxIter: Int = 100): DataFrame = {
+  private def starEdges(edges: DataFrame): DataFrame = {
     // LAZY localCheckpoint: the checksum aggregate is the action that
     // materializes it, so each round costs ONE job (checkpoint-write +
     // checksum together) instead of the two the eager spelling paid —
@@ -112,7 +114,7 @@ object ConnectedComponents {
     try {
       var converged = false
       var it = 0
-      while (!converged && it < maxIter) {
+      while (!converged && it < MaxRounds) {
         val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
         val nextSum = checksumOf(next)
         converged = nextSum == checksum
@@ -120,7 +122,7 @@ object ConnectedComponents {
         e = next
         it += 1
       }
-      require(converged, s"connected components did not converge in $maxIter rounds")
+      require(converged, s"connected components did not converge in $MaxRounds rounds")
       e
     } finally spark.conf.set(partsKey, prevParts)
   }
@@ -134,6 +136,14 @@ object ConnectedComponents {
     val r = e.agg(count(lit(1)),
       sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)"))).head()
     (r.getLong(0), if (r.isNullAt(1)) "0" else r.getDecimal(1).toString)
+  }
+
+  /** Star forest as `(id, component)`: non-roots appear as u, roots only as v. */
+  private def forestMap(edges: DataFrame): DataFrame = {
+    val star = starEdges(edges)
+    star.select(col("u").as("id"), col("v").as("component"))
+      .union(star.select(col("v"), col("v")).distinct()
+        .toDF("id", "component"))
   }
 
   /** Component assignment `(id, component)` for every node incident to
@@ -154,10 +164,7 @@ object ConnectedComponents {
       // probe below would partially execute the edge pipeline — often
       // the query's most expensive stage (q74's levenshtein self-join)
       // — just to learn what the caller already declared. Skip it.
-      val star = starEdges(e)
-      return star.select(col("u").as("id"), col("v").as("component"))
-        .union(star.select(col("v"), col("v")).distinct()
-          .toDF("id", "component"))
+      return forestMap(e)
     }
     // Gate WITHOUT a dedicated count job: collect at most
     // driverMaxEdges + 1 canonical edges in one bounded pass
@@ -180,12 +187,8 @@ object ConnectedComponents {
     } else {
       // big graph: one extra full pass to seed the distributed rounds
       // (starEdges localCheckpoints its input, so nothing upstream is
-      // re-read after the first round). Star forest: non-roots appear
-      // as u, roots only as v.
-      val star = starEdges(e)
-      star.select(col("u").as("id"), col("v").as("component"))
-        .union(star.select(col("v"), col("v")).distinct()
-          .toDF("id", "component"))
+      // re-read after the first round)
+      forestMap(e)
     }
   }
 

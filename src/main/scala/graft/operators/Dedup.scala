@@ -246,12 +246,11 @@ object Dedup {
     */
   def dedupVerdicts(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 16, bands: Int = 4, n: Int = 3,
-      minEstSim: Double = 0.5,
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
+      minEstSim: Double = 0.5): DataFrame = {
     val pairs = lshCandidatePairs(docs, textCol, idCol, k, bands, n)
       .filter($"est_sim" >= minEstSim)
       .select($"id_a", $"id_b")
-    val canonMap = ConnectedComponents.componentMap(pairs, driverMaxEdges)
+    val canonMap = ConnectedComponents.componentMap(pairs)
       .select($"id", $"component".as("canon"))
     docs.select(col(idCol).cast("long").as("doc_id"))
       .join(canonMap, $"doc_id" === $"id", "left")
@@ -283,11 +282,9 @@ object Dedup {
     */
   def dedupVerdictsByQuality(docs: DataFrame, textCol: String, idCol: String,
       quality: Column, k: Int = 16, bands: Int = 4, n: Int = 3,
-      minEstSim: Double = 0.5,
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
+      minEstSim: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val v = dedupVerdicts(docs, textCol, idCol, k, bands, n, minEstSim,
-      driverMaxEdges)
+    val v = dedupVerdicts(docs, textCol, idCol, k, bands, n, minEstSim)
     val q = docs.select(col(idCol).cast("long").as("doc_id"),
       quality.cast("long").as("quality"))
     val w = Window.partitionBy($"canonical_id")
@@ -322,8 +319,7 @@ object Dedup {
   def takedownReelect(docs: DataFrame, noticedIds: DataFrame,
       textCol: String, idCol: String, quality: Column,
       k: Int = 16, bands: Int = 4, n: Int = 3,
-      minEstSim: Double = 0.5,
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
+      minEstSim: Double = 0.5): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pairs = persist(
       lshCandidatePairs(docs, textCol, idCol, k, bands, n)
@@ -335,7 +331,7 @@ object Dedup {
       quality.cast("long").as("quality"))
     // shared verdict tail: min-id component label + quality-argmax kept
     def verdicts(edgeSet: DataFrame, docIds: DataFrame): DataFrame = {
-      val canonMap = ConnectedComponents.componentMap(edgeSet, driverMaxEdges)
+      val canonMap = ConnectedComponents.componentMap(edgeSet)
         .select($"id", $"component".as("canon"))
       docIds.join(canonMap, $"doc_id" === $"id", "left")
         .select($"doc_id", coalesce($"canon", $"doc_id").as("canonical_id"))

@@ -3,6 +3,7 @@ package graft.operators
 import graft.core._
 import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Rows shuffled to their spatial partition (duplicated into the eps
@@ -40,27 +41,29 @@ final case class DBSCANModel(
   *     the margin list (reference: DBSCAN.scala:108-112): O(log P) per
   *     point, which matters when P ~ N/maxPointsPerPartition is large.
   *   - Cluster-alias detection is a relational equi self-join on point
-  *     value + distinct (reference folds per group: DBSCAN.scala:266-291)
-  *     so it shuffles only the eps-band rows and stays in codegen.
+  *     value (reference folds per group: DBSCAN.scala:266-291), so it
+  *     shuffles only the eps-band rows and stays in codegen.
   *   - Cross-partition label merge is a commutative arg-max aggregate
   *     (prefer non-noise, then core over border, then lowest global id)
   *     instead of mutate-last-wins (reference: DBSCAN.scala:205-227) —
   *     deterministic under Spark task retries.
-  *   - Global ids are assigned over a SORTED local-id list (reference
-  *     folds over arbitrary collect order: DBSCAN.scala:162-183), so
-  *     numbering is reproducible.
+  *   - Aliases merge through the gated [[ConnectedComponents.assign]];
+  *     global ids are the dense rank of each component's minimum
+  *     `(pid, cluster)` (reference folds over arbitrary collect order:
+  *     DBSCAN.scala:162-183), so numbering is reproducible.
   *   - Both reused branches are persisted (the reference recomputes the
   *     merge-candidate lineage at sink time — it only caches `clustered`,
   *     DBSCAN.scala:122).
-  *   - Default border semantics are the standard (Archery-style) border
+  *   - Border semantics are the standard (Archery-style) border
   *     re-claim: its noise set is visit-order independent, which the
   *     sorted-group determinism above relies on. The reference's
   *     distributed path uses Naive semantics (no re-claim, reference:
-  *     LocalDBSCANNaive.scala:105-108 dead check) — pass
-  *     `reclaimBorder = false` to emulate it exactly.
+  *     LocalDBSCANNaive.scala:105-108 dead check); `LocalDBSCAN` with
+  *     `reclaimBorder = false` still runs it single-task.
   *
-  * Four jobs per run, like the reference: histogram collect, edge
-  * collect, id collect, and the caller's sink action.
+  * Actions per run: histogram collect, the component step's edge probe
+  * (bounded by its gate; distributed rounds above it), the component-id
+  * collect, and the caller's sink action.
   */
 object DistributedDBSCAN {
 
@@ -71,14 +74,17 @@ object DistributedDBSCAN {
   def cornerExpr(c: Column, cell: Double): Column =
     (when(c < 0, c - cell).otherwise(c) / cell).cast("int").cast("double") * cell
 
+  /** `pid << 32 | cluster`: both are >= 0, so node order is (pid, cluster) order. */
+  private def node(pid: Column, cluster: Column): Column =
+    shiftleft(pid.cast("long"), 32).bitwiseOR(cluster.cast("long"))
+
   def cluster(
       points: DataFrame,
       eps: Double,
       minPoints: Int,
       maxPointsPerPartition: Long = 250,
       xCol: String = "x",
-      yCol: String = "y",
-      reclaimBorder: Boolean = true): DBSCANModel = {
+      yCol: String = "y"): DBSCANModel = {
 
     val spark = points.sparkSession
     import spark.implicits._
@@ -129,7 +135,7 @@ object DistributedDBSCAN {
       .flatMapGroups { (pid, it) =>
         val arr = it.map(a => Pt(a.x, a.y)).toArray
         scala.util.Sorting.quickSort(arr)(Ordering.by((p: Pt) => (p.x, p.y)))
-        new LocalDBSCAN(eps, minPoints, reclaimBorder)
+        new LocalDBSCAN(eps, minPoints, reclaimBorder = true)
           .fit(scala.collection.immutable.ArraySeq.unsafeWrapArray(arr))
           .iterator
           .map(lp => Clustered(pid, lp.x, lp.y, lp.cluster, lp.flag))
@@ -147,7 +153,7 @@ object DistributedDBSCAN {
         .map(target => MergeCand(target, c.pid, c.x, c.y, c.cluster, c.flag))
     })
 
-    // ---- Job 2: cluster-alias edges = two sightings of one point under
+    // ---- Cluster-alias edges = two sightings of one point under
     // different (partition, local-cluster) ids, where at least one
     // sighting is CORE. A partition can only undercount a margin copy's
     // neighbors, so core-in-any-sighting == truly core, and a core
@@ -159,39 +165,28 @@ object DistributedDBSCAN {
     // over-merges exactly there, verified against the exact-graph
     // oracle on the events sample). ----
     val nn = cands.filter(_.flag != Flag.Noise).toDF()
-    val a = nn.select($"x", $"y", $"src".as("ap"), $"cluster".as("ac"), $"flag".as("af"))
-    val b = nn.select($"x", $"y", $"src".as("bp"), $"cluster".as("bc"), $"flag".as("bf"))
+    val a = nn.select($"x", $"y", node($"src", $"cluster").as("an"), $"flag".as("af"))
+    val b = nn.select($"x", $"y", node($"src", $"cluster").as("bn"), $"flag".as("bf"))
     val edges = a.join(b, Seq("x", "y"))
-      .where(struct($"ap", $"ac") < struct($"bp", $"bc") &&
-        ($"af" === Flag.Core || $"bf" === Flag.Core))
-      .select($"ap", $"ac", $"bp", $"bc")
-      .distinct()
-      .collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), (r.getInt(2), r.getInt(3))))
+      .where($"an" < $"bn" && ($"af" === Flag.Core || $"bf" === Flag.Core))
+      .select($"an", $"bn")
 
-    // ---- Job 3: distinct non-noise local cluster ids. ----
-    val localIds = clustered
-      .filter(_.flag != Flag.Noise)
-      .map(c => (c.pid, c.cluster))
-      .distinct()
-      .collect()
-      .sorted // deterministic global numbering
+    // ---- Jobs 2-3: components of the alias graph over every non-noise
+    // local cluster (ConnectedComponents gates driver union-find vs
+    // distributed rounds by edge count). Global id = dense rank of the
+    // component's minimum node, so numbering is reproducible. ----
+    val nodes = clustered.filter(_.flag != Flag.Noise).toDF()
+      .select(node($"pid", $"cluster"))
+    val mappingDF = ConnectedComponents.assign(edges, nodes)
+      .select(shiftright($"id", 32).cast("int"), $"id".bitwiseAND(0xffffffffL).cast("int"),
+        dense_rank().over(Window.orderBy($"component")))
+      .as[(Int, Int, Int)].collect().toSeq
+      .toDF("pid", "cluster", "global")
 
     // All jobs that scan the raw points have run (histogram + the
-    // clustering triggered by the edge/id collects above); downstream
+    // clustering triggered by the component step above); downstream
     // lineage only references the persisted `clustered`/`cands`.
     pts.unpersist()
-
-    // ---- Driver: connected components via union-find; dense global ids. ----
-    val uf = new UnionFind[(Int, Int)]
-    localIds.foreach(uf.add)
-    edges.foreach { case (p, q) => uf.union(p, q) }
-    val rootToGlobal = scala.collection.mutable.HashMap.empty[(Int, Int), Int]
-    val mapping = localIds.map { id =>
-      val g = rootToGlobal.getOrElseUpdate(uf.find(id), rootToGlobal.size + 1)
-      (id._1, id._2, g)
-    }
-    val mappingDF = mapping.toSeq.toDF("pid", "cluster", "global")
 
     val marginsDF = margins.zipWithIndex.map { case (m, i) =>
       (i, m.inner.x, m.inner.y, m.inner.x2, m.inner.y2)

@@ -33,8 +33,7 @@ object GraphDBSCAN {
     *         component's minimum core id (deterministic), noise = -1
     */
   def labels(ids: DataFrame, nb0: DataFrame, minPts: Int,
-      idCol: String = "vec_id",
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
+      idCol: String = "vec_id"): DataFrame = {
     val nb = persist(nb0)
     val core = persist(nb.groupBy(col("ia")).count()
       .filter(col("count") + 1 >= minPts) // neighbor count includes self
@@ -42,7 +41,7 @@ object GraphDBSCAN {
     val coreEdges = nb
       .join(core.select(col("id").as("ia")), "ia", "left_semi")
       .join(core.select(col("id").as("ib")), "ib", "left_semi")
-    val coreLab = ConnectedComponents.assign(coreEdges, core, driverMaxEdges)
+    val coreLab = ConnectedComponents.assign(coreEdges, core)
       .select(col("id"), col("component").as("core_rep"))
     val borderLab = nb
       .join(core.select(col("id").as("ia")), "ia", "left_anti") // non-core left side
@@ -85,8 +84,7 @@ object GraphDBSCAN {
     */
   def euclidean(points: DataFrame, eps: Double, minPts: Int,
       idCol: String = "vec_id", vecCol: String = "v",
-      gridDims: Int = 2,
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax): DataFrame = {
+      gridDims: Int = 2): DataFrame = {
     val base = points.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
     def cellAt(d: Int, c: Column = col("vec")): Column =
       floor(element_at(c, d + 1) / eps).cast("long")
@@ -109,6 +107,6 @@ object GraphDBSCAN {
           col("a.id") =!= col("b.id") &&
           distSq(col("a.vec"), col("b.vec")) <= lit(eps * eps))
       .select(col("a.id").as("ia"), col("b.id").as("ib"))
-    labels(base.select(col("id").as(idCol)), nb, minPts, idCol, driverMaxEdges)
+    labels(base.select(col("id").as(idCol)), nb, minPts, idCol)
   }
 }

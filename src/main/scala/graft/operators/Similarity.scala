@@ -2552,7 +2552,6 @@ object Similarity {
     */
   def cosineDBSCAN(corpus: DataFrame, minCos: Double, minPts: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      driverMaxEdges: Long = ConnectedComponents.DefaultDriverMax,
       neighborPairs: Option[DataFrame] = None): DataFrame = {
     val nb = neighborPairs match {
       case Some(p) =>
@@ -2575,7 +2574,7 @@ object Similarity {
           .select(col("a.id").as("ia"), col("b.id").as("ib"))
     }
     GraphDBSCAN.labels(corpus.select(col(idCol).cast("long").as(idCol)),
-      nb, minPts, idCol, driverMaxEdges)
+      nb, minPts, idCol)
   }
 
   /** Bucketed approximate neighbor pairs: vectors sharing an LSH bucket,

@@ -117,6 +117,17 @@ class StyleGateSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("ConnectedComponents owns the one union-find and its edge gate") {
+    val cc = "src/main/scala/graft/operators/ConnectedComponents.scala:"
+    val unionFinds = mainFilesWith("UnionFind[").filterNot(at =>
+      at.startsWith(cc) || at.startsWith("src/main/scala/graft/core/UnionFind.scala:"))
+    val gates = mainFilesWith("driverMaxEdges: Long").filterNot(_.startsWith(cc))
+    withClue(unionFinds.mkString("union-find outside ConnectedComponents at:\n", "\n", "\n") +
+        gates.mkString("edge-gate parameter outside ConnectedComponents at:\n", "\n", "\n")) {
+      (unionFinds ++ gates) shouldBe empty
+    }
+  }
+
   test("every file ends with a newline (NewLineAtEofChecker)") {
     val bad = sources.filter { f =>
       val bytes = java.nio.file.Files.readAllBytes(f.toPath)

@@ -63,6 +63,27 @@ class DistributedDBSCANSpec extends AnyFunSuite with Matchers {
     r1 should contain theSameElementsInOrderAs r2
   }
 
+  test("golden: non-noise cluster ids are exactly 1..k with no gaps") {
+    import spark.implicits._
+    val df = Golden.rows.map(_._1).toDF()
+    val ids = DistributedDBSCAN.cluster(df, 0.3, 10, 250).labeled.collect()
+      .map(_.getInt(2)).filter(_ != 0).distinct.sorted
+    ids.toSeq shouldBe (1 to ids.length)
+    ids.length shouldBe Golden.rows.map(_._2).filter(_ != 0).distinct.size
+  }
+
+  test("alias merge is transitive across many partitions: a long band is one cluster") {
+    import spark.implicits._
+    val band = for (i <- 0 to 1000; y <- Seq(0.0, 0.1)) yield Pt(i * 0.1, y)
+    val model = DistributedDBSCAN.cluster(band.toDF(), eps = 0.3, minPoints = 3,
+      maxPointsPerPartition = 50)
+    model.partitions.size should be >= 5
+    val rows = model.labeled.collect()
+    rows.map(r => Pt(r.getDouble(0), r.getDouble(1))).toSet shouldBe band.toSet
+    rows.map(_.getString(3)).distinct.toSeq shouldBe Seq(Flag.Core)
+    rows.map(_.getInt(2)).distinct.toSeq shouldBe Seq(1)
+  }
+
   test("single-partition case (budget above n) still works") {
     import spark.implicits._
     val df = Golden.rows.map(_._1).toDF()
