@@ -483,60 +483,36 @@ object Multimodal {
       }
   }
 
-  /** Constellation fingerprints as a DataFrame chain (m11, Wang 2003):
-    * (doc_id, hash, t) per anchor-target pair. Semantics documented at
-    * [[constellationPrintsLocal]] — the two MUST stay bit-identical.
+  /** Constellation fingerprints (m11, Wang 2003): (doc_id, hash, t, fo)
+    * per anchor-target pair, one narrow typed pass of
+    * [[constellationPrintsLocal]] over each row — the batch rows (m11,
+    * m13) and st40's index and snippets all run that one kernel. `t` is
+    * the anchor frame, `fo` the pair's rank within its anchor, so the
+    * fan-out-F prints are exactly the prints of any larger fan-out with
+    * fo <= F.
     */
   def constellationPrints(src: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", fanOut: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val codes = transform(split(col(textCol), ""), c => ascii(c).cast("long"))
-    val frames = src
-      .select(col(idCol).as("doc_id"), codes.as("cs"))
-      .filter(size(col("cs")) >= 8)
-      .select(col("doc_id"), posexplode(transform(
-        sequence(lit(0), (size(col("cs")) / 8).cast("int") - 1),
-        f => aggregate(slice(col("cs"), f * 8 + 1, lit(8)),
-          lit(0L), (a, x) => a + x))))
-      .withColumnRenamed("pos", "f").withColumnRenamed("col", "e")
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("f"))
-    val peaks = frames
-      .withColumn("l1", lag(col("e"), 1).over(w))
-      .withColumn("l2", lag(col("e"), 2).over(w))
-      .withColumn("r1", lead(col("e"), 1).over(w))
-      .withColumn("r2", lead(col("e"), 2).over(w))
-      .filter(col("e") > coalesce(col("l1"), lit(-1L)) &&
-        col("e") > coalesce(col("l2"), lit(-1L)) &&
-        col("e") >= coalesce(col("r1"), lit(-1L)) &&
-        col("e") >= coalesce(col("r2"), lit(-1L)))
-      .select(col("doc_id"), col("f"),
-        least(col("e"), lit(2047L)).as("lvl"))
-    val wp = Window.partitionBy(col("doc_id"), col("af")).orderBy(col("bf"))
-    peaks.as("a").join(peaks.as("b"),
-        col("a.doc_id") === col("b.doc_id") &&
-          col("b.f") > col("a.f") && col("b.f") - col("a.f") <= 16)
-      .select(col("a.doc_id").as("doc_id"), col("a.f").as("af"),
-        col("b.f").as("bf"), col("a.lvl").as("la"), col("b.lvl").as("lb"))
-      .withColumn("fo", row_number().over(wp))
-      .filter(col("fo") <= fanOut)
-      .select(col("doc_id"),
-        ((col("la") * 2048 + col("lb")) * 17 + (col("bf") - col("af")))
-          .as("hash"),
-        col("af").as("t"))
+    import src.sparkSession.implicits._
+    src.select(col(idCol).cast("long"), col(textCol).cast("string"))
+      .as[(Long, String)]
+      .flatMap { case (id, text) =>
+        constellationPrintsLocal(text, fanOut).map { case (h, t, fo) => (id, h, t, fo) }
+      }
+      .toDF("doc_id", "hash", "t", "fo")
   }
 
-  /** Constellation fingerprints of one payload string (the m11 chain
-    * as a per-row kernel, for the streaming probe): 8-char frame
-    * energies over full frames, plateau-deterministic peaks
+  /** Constellation fingerprints of one string: 8-char frame energies
+    * over full frames, plateau-deterministic peaks
     * (left-strict/right-loose, missing neighbors read as -1),
-    * anchor-target pairs fan-out ≤ 3 within 16 frames ascending,
-    * hash = (lvl_a·2048 + lvl_b)·17 + dt with lvl = min(energy, 2047).
-    * MUST stay bit-identical to the m11 DataFrame builder — st40's
-    * oracle is m11's oracle verbatim, so any drift is a red row.
+    * anchor-target pairs within 16 frames ascending, hash =
+    * (lvl_a·2048 + lvl_b)·17 + dt with lvl = min(energy, 2047). Returns
+    * (hash, t, fo): t the anchor frame, fo = 1..fanOut the target's rank
+    * among its anchor's targets. Null or < 8 chars gives no prints.
     */
-  def constellationPrintsLocal(text: String): Array[(Long, Long)] = {
+  def constellationPrintsLocal(text: String, fanOut: Int = 3): Array[(Long, Int, Int)] = {
     val s = if (text == null) "" else text
-    val nf = s.length / 8 // full 8-char frames only, matching the builder
+    val nf = s.length / 8 // full 8-char frames only
     if (nf == 0) return Array.empty
     val e = new Array[Long](nf)
     var f = 0
@@ -551,17 +527,18 @@ object Multimodal {
       e(i) > at(i - 1) && e(i) > at(i - 2) &&
         e(i) >= at(i + 1) && e(i) >= at(i + 2)
     }.toArray
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
     var a = 0
     while (a < peaks.length) {
       val af = peaks(a)
       val la = math.min(e(af), 2047L)
       var b = a + 1; var taken = 0
-      while (b < peaks.length && taken < 3 && peaks(b) - af <= 16) {
+      while (b < peaks.length && taken < fanOut && peaks(b) - af <= 16) {
         val bf = peaks(b)
         val lb = math.min(e(bf), 2047L)
-        out += (((la * 2048L + lb) * 17L + (bf - af), af.toLong))
-        taken += 1; b += 1
+        taken += 1
+        out += (((la * 2048L + lb) * 17L + (bf - af), af, taken))
+        b += 1
       }
       a += 1
     }

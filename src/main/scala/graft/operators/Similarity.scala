@@ -1621,11 +1621,12 @@ object Similarity {
     val (m, ncode, nlist) = (r.m, r.ncode, ivf.nlist)
     def res(v: String) = zip_with(col(v), col("c_vec"),
       (a, b) => a.cast("double") - b.cast("double"))
-    // persisted: the codebook, the codes and the codes' c_id join all
-    // read it, and each read re-ran the corpus x centroid argmax
-    val assigned = persist(assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent),
+    // not persisted: the codebook and the codes (c_id carried through
+    // pqSubspaced) are its only readers, and at sf0.01 building the
+    // cache cost more jobs and task time than re-running the argmax
+    val assigned = assignNearest(rowsOf(corpus, "n_id", "n_vec").crossJoin(cent),
         "n_id", "n_vec", "n_vec", "c_vec")
-      .select(col("n_id"), col("c_id"), res("n_vec").as("res")))
+      .select(col("n_id"), col("c_id"), res("n_vec").as("res"))
     val cb =
       if (source == AnnSpec.LowestId)
         broadcast(pqSubspaced(
@@ -1636,9 +1637,7 @@ object Similarity {
       else cbFrame(corpus.sparkSession, pqTrainCodebookLocal(
           assigned.select(col("n_id").as(IdCol), col("res").as(VecCol)), m, ncode))
         .select(col("j"), col("c_id").as("cw"), col("cv"))
-    val codes = pqEncodeCb(
-      pqSubspaced(assigned.select(col("n_id"), col("res")), "n_id", m, "n_id", "res")
-        .join(assigned.select(col("n_id"), col("c_id")), "n_id"),
+    val codes = pqEncodeCb(pqSubspaced(assigned, "n_id", m, "n_id", "res", "c_id"),
       cb, "cw", "n_id", "c_id")
     val probes = probeLists(queries, cent, ivf.nprobe)
       .select(col("q_id"), col("c_id"), res("q_vec").as("qres"))

@@ -933,8 +933,8 @@ object Streaming {
     * STREAM. The document posting index (df-capped constellation
     * prints) is the static build-once asset; each incoming snippet row
     * fingerprints itself with the per-row kernel
-    * ([[graft.operators.Multimodal.constellationPrintsLocal]] — bit-
-    * identical to the batch builder by contract), probes the index via
+    * ([[graft.operators.Multimodal.constellationPrintsLocal]] — the same
+    * kernel that builds the index and m11's prints), probes the index via
     * a stateless stream-static hash equi-join, and appends its matched
     * prints; the offset-aligned vote argmax is the batch readout after
     * the run, so batch m11 is the exact oracle. O(0) keyed state — the
@@ -958,7 +958,7 @@ object Streaming {
     val qp = snippets.as[(Long, String)]
       .flatMap { case (id, text) =>
         Multimodal.constellationPrintsLocal(text).map {
-          case (h, t) => (id, h, t) }
+          case (h, t, _) => (id, h, t.toLong) }
       }
       .toDF("q_id", "hash", "qt")
     val matched = qp.join(index, Seq("hash"))

@@ -39,9 +39,9 @@ class PlanAuditSpec extends AnyFunSuite with Matchers {
       "SUPER-centroids (s39's sanctioned shrink of the s04 quantizer scan), then an equi-join " +
       "on the super id against the broadcast centroid table; the data-sized candidate join is a " +
       "shuffle EQUI-join on the cell id, merged by the bounded top-k aggregator"),
-    "m13_constellation_recall" -> ("t30's scalar shape per lever arm: the ONE-ROW query-count " +
-      "aggregate crossJoins the ONE-ROW matched-count aggregate; the data-sized work is m11's " +
-      "df-capped posting equi-join per arm"),
+    "m13_constellation_recall" -> ("t30's scalar shape once for all lever arms: the <=3-row " +
+      "arm table crossJoins the ONE-ROW query-count aggregate; the data-sized work is ONE " +
+      "df-tagged posting equi-join (each matched pair tagged with the arms it qualifies for)"),
     "s31_ivf_multiprobe" -> ("s23's sanctioned assignment/probe shape (corpus x 32 broadcast " +
       "trained centroids) with soft rn<=2 routing; the data-sized join is the c_id equi-join, " +
       "deduped on (q_id, n_id) before the exact rank"),
