@@ -135,12 +135,11 @@ object Bench {
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        // Operators persist() intermediates for intra-query reuse; drop
-        // them between reps/queries so each run is measured independently
-        // (no cache hits, no accumulating executor memory). Checkpoint
-        // blocks too: localCheckpoint pins its round states in the block
-        // manager until driver GC — across 297 queries that residue is
-        // storage pressure + GC churn charged to whoever runs later.
+        // Operators persist intermediates for intra-query reuse and
+        // checkpoint the rounds of iterative loops; drop both between
+        // reps/queries so each run is measured independently (no cache
+        // hits, no round state accumulating in the block manager as
+        // storage pressure + GC churn charged to whoever runs later).
         try GraftSession.release(spark) catch { case _: Throwable => }
         (dt, ok)
       }

@@ -33,13 +33,12 @@ object GraftSession {
     spark
   }
 
-  /** Drop what one query left behind: its session-scoped persists, any
-    * other cached frame, and the round checkpoints of iterative
-    * operators (see [[CacheScope.releaseCheckpoints]]).
+  /** Drop what one query left behind: its session-scoped persists and
+    * round checkpoints (see [[CacheScope.releaseSession]]) and any other
+    * cached frame.
     */
   def release(spark: SparkSession): Unit = {
     CacheScope.releaseSession(spark)
     spark.catalog.clearCache()
-    CacheScope.releaseCheckpoints(spark)
   }
 }

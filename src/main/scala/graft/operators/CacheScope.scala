@@ -1,18 +1,23 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import scala.collection.mutable.ArrayBuffer
 
-/** Session-owned lifecycle for every operator-internal `persist()`.
+/** Session-owned lifecycle for every operator-internal `persist()` and
+  * every lineage cut of an iterative operator's round state.
   *
   * Several operators cache an intermediate that feeds two branches of
   * the returned (lazy) plan — the cache is what keeps the expensive
   * kernel (shingling, minhashing, the neighbor graph) from being
-  * recomputed once per branch. The operator cannot unpersist it before
-  * returning (the result has not run yet), so it persists through
-  * [[CacheScope.persist]], which registers the frame with its
-  * SparkSession. Whoever owns the session materializes the result, then
-  * reclaims every such cache at once:
+  * recomputed once per branch. The iterative ones (connected-component
+  * star rounds, label propagation, PageRank, q48's hops, the beam walk)
+  * cut each round's plan so it stays O(1) across rounds instead of
+  * nesting every earlier round. The operator cannot free either before
+  * returning (the result has not run yet), so it goes through
+  * [[CacheScope.persist]] or [[CacheScope.checkpoint]], which register
+  * the frame with its SparkSession. Whoever owns the session
+  * materializes the result, then reclaims every such block at once:
   *
   * {{{
   * val pairs = Dedup.jaccardPairs(docs, "text", "doc_id")
@@ -20,34 +25,56 @@ import scala.collection.mutable.ArrayBuffer
   * CacheScope.releaseSession(spark)  // zero residual cached RDDs
   * }}}
   *
-  * After the release the returned DataFrame is still valid — a further
-  * action simply recomputes from source. CacheScopeSpec asserts the
-  * zero-residual contract, and StyleGateSpec keeps `persist` out of
-  * every other file under src/main, so nothing is ever untracked.
+  * After the release a DataFrame that only persisted stays valid — a
+  * further action simply recomputes from source. One that read a
+  * materialized checkpoint does not (its lineage ends at the freed
+  * blocks): rebuild it from the operator. CacheScopeSpec asserts the
+  * zero-residual contract, and StyleGateSpec keeps `persist` and
+  * `localCheckpoint` out of every other file under src/main, so
+  * nothing is ever untracked.
   */
 object CacheScope {
 
   /** Registry lifetime: entries live until [[releaseSession]] empties
     * them or the underlying SparkContext ends (a listener registered at
     * first use removes the entry then). The map is weak-KEYED, but that
-    * eviction alone can never fire while an entry holds Datasets — each
+    * eviction alone can never fire while an entry holds frames — each
     * tracked Dataset strongly references its SparkSession, so the value
     * reaches the key; the listener is what actually breaks the cycle
     * for a process that stops sessions without calling releaseSession.
+    * Each entry is the action that frees one registered frame.
     */
   private val perSession =
-    new java.util.WeakHashMap[SparkSession, ArrayBuffer[Dataset[_]]]()
+    new java.util.WeakHashMap[SparkSession, ArrayBuffer[() => Unit]]()
 
   /** `ds.persist()` at the default level (MEMORY_AND_DISK), registered
     * with `ds`'s session so [[releaseSession]] reclaims it.
     */
   def persist[T <: Dataset[_]](ds: T): T = {
     ds.persist()
-    val s = ds.sparkSession
+    register(ds.sparkSession, () => ds.unpersist())
+    ds
+  }
+
+  /** Lazy `localCheckpoint` of `ds`, registered with its session so
+    * [[releaseSession]] frees the checkpoint blocks. The returned frame's
+    * plan is a leaf over the checkpoint RDD, so a round loop that cuts
+    * every round plans in constant size; the blocks are written by the
+    * first action that reads the frame and serve every later read, so
+    * a cut frame also stands in for a persisted one.
+    */
+  def checkpoint[T](ds: Dataset[T]): Dataset[T] = {
+    val cut = ds.localCheckpoint(eager = false)
+    val rdds = cut.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }
+    register(cut.sparkSession, () => rdds.foreach(_.unpersist(blocking = false)))
+    cut
+  }
+
+  private def register(s: SparkSession, release: () => Unit): Unit =
     perSession.synchronized {
       var owned = perSession.get(s)
       if (owned == null) {
-        owned = ArrayBuffer.empty[Dataset[_]]
+        owned = ArrayBuffer.empty[() => Unit]
         perSession.put(s, owned)
         // Drop every entry of this context when it ends: without this, a
         // long-lived process that stops and drops sessions would pin each
@@ -67,14 +94,12 @@ object CacheScope {
             }
         })
       }
-      owned += ds
+      owned += release
     }
-    ds
-  }
 
-  /** Unpersist (non-blocking) every cache an operator created through
-    * [[persist]] on `s`. Call after the consuming action. Idempotent;
-    * results stay valid (a further action recomputes from source).
+  /** Free (non-blocking) every cache and checkpoint an operator
+    * registered through [[persist]] or [[checkpoint]] on `s`. Call after
+    * the consuming action. Idempotent.
     */
   def releaseSession(s: SparkSession): Unit = {
     val owned = perSession.synchronized {
@@ -82,21 +107,15 @@ object CacheScope {
       if (o == null) Nil
       else { val all = o.toList; o.clear(); all }
     }
-    owned.foreach(_.unpersist())
+    owned.foreach(_.apply())
   }
 
-  /** Unpersist EVERY persistent RDD of the context — including the
-    * blocks `localCheckpoint` pins, which `unpersist()`/`clearCache()`
-    * never release (they are freed only when the GC driver-side
-    * collects the RDD handle). Iterative operators checkpoint once per
-    * round, so a long session running many of them accumulates dead
-    * round states in the block manager until storage pressure turns
-    * into GC churn and eviction stalls (the shared-board inflation the
-    * bench's queries_note documents). UNLIKE [[releaseSession]], this
-    * is destructive: a still-held checkpointed DataFrame cannot
-    * recompute (its lineage was truncated) — call it only at a point
-    * where no prior query's frames will be used again, e.g. between
-    * bench reps.
+  /** Unpersist EVERY persistent RDD of the context, tracked or not.
+    * Context-wide and destructive: a still-held checkpointed DataFrame of
+    * any session cannot recompute afterwards. Every operator cut now
+    * goes through [[checkpoint]], which [[releaseSession]] frees, so
+    * only the perfbench client still calls this (between operations);
+    * a later benchmark change deletes that call and this method.
     */
   def releaseCheckpoints(s: SparkSession): Unit =
     s.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

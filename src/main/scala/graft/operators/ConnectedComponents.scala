@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.CacheScope.checkpoint
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 
@@ -22,10 +23,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: each round is two groupBy-min aggregates and two
   * equi-joins on the edge set — all shuffle-shaped, nothing ever
-  * collects to the driver. Lineage is truncated every round with
-  * `localCheckpoint` (swap for reliable `checkpoint` on a real cluster)
-  * so the logical plan stays O(1) across iterations instead of nesting
-  * 20 self-joins deep.
+  * collects to the driver. Lineage is cut every round with
+  * [[CacheScope.checkpoint]] so the logical plan stays O(1) across
+  * iterations instead of nesting 20 self-joins deep; the session's
+  * `CacheScope.releaseSession` frees every round's blocks. Round width
+  * is the session's: AQE coalesces the small rounds' shuffles.
   *
   * [[assign]] is the threshold-gated entry point: small graphs (the
   * common case for near-dup verdicts at test scale — and the DBSCAN
@@ -93,38 +95,23 @@ object ConnectedComponents {
     * [[forestMap]] adds them.
     */
   private def starEdges(edges: DataFrame): DataFrame = {
-    // LAZY localCheckpoint: the checksum aggregate is the action that
-    // materializes it, so each round costs ONE job (checkpoint-write +
-    // checksum together) instead of the two the eager spelling paid —
-    // same truncated lineage, same values
-    val spark = edges.sparkSession
-    var e = canon(edges).localCheckpoint(eager = false)
+    // lazy cuts: the checksum aggregate is the action that materializes
+    // each one, so a round costs ONE job (checkpoint write + checksum
+    // together)
+    var e = checkpoint(canon(edges))
     var checksum = checksumOf(e)
-    // Right-size the round shuffles to the measured edge volume (guide
-    // §2.2): each round is 2 aggregates + 2 joins over O(E) 16-byte
-    // rows; at session width over a small frame every round pays
-    // (width × stages) sub-second tasks of pure scheduling. Derived
-    // from the count the convergence checksum already computed — never
-    // raises width, so a production-size edge set keeps the session's
-    // configured parallelism (scale-adaptive, not a local-mode const).
-    val partsKey = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(partsKey)
-    val target = math.max(1L, checksum._1 / 4000000L)
-    spark.conf.set(partsKey, math.min(prevParts.toLong, target).toString)
-    try {
-      var converged = false
-      var it = 0
-      while (!converged && it < MaxRounds) {
-        val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
-        val nextSum = checksumOf(next)
-        converged = nextSum == checksum
-        checksum = nextSum
-        e = next
-        it += 1
-      }
-      require(converged, s"connected components did not converge in $MaxRounds rounds")
-      e
-    } finally spark.conf.set(partsKey, prevParts)
+    var converged = false
+    var it = 0
+    while (!converged && it < MaxRounds) {
+      val next = checkpoint(smallStar(largeStar(e)))
+      val nextSum = checksumOf(next)
+      converged = nextSum == checksum
+      checksum = nextSum
+      e = next
+      it += 1
+    }
+    require(converged, s"connected components did not converge in $MaxRounds rounds")
+    e
   }
 
   /** (row count, order-independent content hash) — two identical edge
@@ -186,8 +173,8 @@ object ConnectedComponents {
       m.toDF("id", "component")
     } else {
       // big graph: one extra full pass to seed the distributed rounds
-      // (starEdges localCheckpoints its input, so nothing upstream is
-      // re-read after the first round)
+      // (starEdges cuts its input with a checkpoint, so nothing upstream
+      // is re-read after the first round)
       forestMap(e)
     }
   }

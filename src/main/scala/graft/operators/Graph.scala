@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.CacheScope.persist
+import graft.operators.CacheScope.{checkpoint, persist}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,10 +20,11 @@ import org.apache.spark.sql.functions._
   * Scale shape: each iteration is one equi-join (ranks to edges on
   * src) + one partial-aggregatable sum keyed by dst — the natural
   * shuffle key of the graph. Out-degrees are joined once, outside the
-  * loop. Iterations chain as one declarative plan (no driver-side
-  * data); a 100 TB deployment persists each iteration's rank table and
-  * `localCheckpoint`s to cut lineage, exactly as
-  * [[ConnectedComponents]] does for its star rounds.
+  * loop. Iterations chain with no driver-side data; each iteration's
+  * table is cut through [[CacheScope.checkpoint]], exactly as
+  * [[ConnectedComponents]] cuts its star rounds, so the plan stays
+  * O(1) in the round count and `CacheScope.releaseSession` frees every
+  * round's blocks.
   */
 object Graph {
 
@@ -52,8 +53,13 @@ object Graph {
       dampDen: Long = 100): DataFrame = {
     require(iters >= 1 && dampNum > 0 && dampDen > dampNum,
       s"need iters>=1 and 0 < dampNum < dampDen; got $iters, $dampNum/$dampDen")
-    val n = nodes.count()
-    if (n == 0) return nodes.select(col("id"), lit(0L).as("rank_fp"))
+    // Persisted: every iteration is cut, so each one plans and runs
+    // apart and joins back to the node set — without the cache the node
+    // derivation (t35's tokenize/explode/distinct) would rerun per
+    // iteration instead of once
+    val ns = persist(nodes)
+    val n = ns.count()
+    if (n == 0) return ns.select(col("id"), lit(0L).as("rank_fp"))
     val base = scaleFp * (dampDen - dampNum) / dampDen / n
     // Parallel edges collapse to ONE weighted row per (src, dst):
     // w parallel copies each contribute (r div deg), so the summed
@@ -66,15 +72,15 @@ object Graph {
     val ew = edges.groupBy("src", "dst").agg(count(lit(1)).as("w"))
     val outDeg = ew.groupBy("src").agg(sum(col("w")).as("deg"))
     val e = persist(ew.join(outDeg, "src"))
-    var r = nodes.select(col("id"), lit(scaleFp / n).as("r"))
+    var r = ns.select(col("id"), lit(scaleFp / n).as("r"))
     for (_ <- 1 to iters) {
       val in = e.join(r, e("src") === r("id"))
         .select(col("dst"), expr("w * (r div deg)").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("s"))
-      r = nodes.join(in, nodes("id") === in("dst"), "left")
-        .select(nodes("id"),
+      r = checkpoint(ns.join(in, ns("id") === in("dst"), "left")
+        .select(ns("id"),
           (lit(base) + expr(s"($dampNum * coalesce(s, cast(0 as bigint))) div $dampDen"))
-            .as("r"))
+            .as("r")))
     }
     r.select(col("id"), col("r").as("rank_fp"))
   }
@@ -88,12 +94,13 @@ object Graph {
     * aggregates — the (node, label) count, then the
     * max(struct(cnt, -label)) argmax; never a window over nodes — and
     * a left join back to the node set. Each round's label table is
-    * persisted (round r+1 reads it twice: count join + fallback).
+    * cut through [[CacheScope.checkpoint]], so the plan stays O(1) in
+    * `rounds` and `CacheScope.releaseSession` frees every round.
     * Synchronous + exact tie-break = bit-replayable: the SQL oracle
     * unrolls the rounds as layered CTEs. Returns (id, lbl).
     */
   def labelPropagation(nodes: DataFrame, sym: DataFrame, rounds: Int): DataFrame = {
-    var labels = persist(nodes.select(col("id"), col("id").as("lbl")))
+    var labels = nodes.select(col("id"), col("id").as("lbl"))
     for (_ <- 1 to rounds) {
       val adopted = sym
         .join(labels.select(col("id").as("v"), col("lbl")), "v")
@@ -102,7 +109,7 @@ object Graph {
         .groupBy(col("u"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("u").as("id"), (-col("m")("neg")).as("new_lbl"))
-      labels = persist(nodes.join(adopted, Seq("id"), "left")
+      labels = checkpoint(nodes.join(adopted, Seq("id"), "left")
         .select(col("id"),
           coalesce(col("new_lbl"), col("id")).as("lbl")))
     }

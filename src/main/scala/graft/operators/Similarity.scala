@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.CacheScope.persist
+import graft.operators.CacheScope.{checkpoint, persist}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1017,7 +1017,7 @@ object Similarity {
     * progressive walk: the beam state after round r is identical
     * whether or not more rounds follow (each round only derives a new
     * frame), so a rounds-0/1/2/3 recall curve (s36) walks the graph
-    * once and snapshots the persisted beam at each requested round —
+    * once and snapshots the checkpointed beam at each requested round —
     * previously each arm re-ran seed + r rounds from scratch, paying
     * 1+2+3 redundant round-steps and 3 redundant seed scans. Returns
     * (rounds, result) in the caller's order.
@@ -1044,42 +1044,31 @@ object Similarity {
       .filter(col("cos").isNotNull)
       .groupBy(col("q_id"))
       .agg(topB(col("n_id"), col("cos")).as("beam"))
-    var beamed = vecs.filter(col("nid") % seedMod === 0)
+    // The seed and every round's beam are cut through
+    // CacheScope.checkpoint: without the cut the logical plan NESTS
+    // (round r's plan contains round r-1's whole DAG) and multi-arm
+    // compositions (s36's three-round arms, s47/s48's per-shard
+    // scatters) spend more wall-clock in Catalyst analysis than in
+    // data. The cut frame is also the snapshot: its O(queries·beam)
+    // blocks are written once and serve both the next round and a
+    // readout at that round, so no arm recomputes another arm's prefix.
+    var beamed = checkpoint(vecs.filter(col("nid") % seedMod === 0)
       .crossJoin(q)
       .filter(col("nid") =!= col("q_id"))
       .withColumn("cos", cosine(col("q_vec"), col("nvec")))
       .filter(col("cos").isNotNull)
       .groupBy(col("q_id"))
-      .agg(topB(col("nid"), col("cos")).as("beam"))
-    val snaps = scala.collection.mutable.Map.empty[Int, DataFrame]
-    // snapshot = persist the O(queries·beam) beam state and CONTINUE
-    // the walk from the persisted frame, so no arm recomputes another
-    // arm's prefix. With a SINGLE readout there is nothing to share —
-    // skip the persist so per-shard single-round callers (s47/s48's
-    // scatter arms) don't accumulate one persisted frame per arm
-    def snap(r: Int): Unit = if (roundsWanted.contains(r)) {
-      if (roundsWanted.size > 1) beamed = persist(beamed)
-      snaps(r) = beamed
-    }
-    snap(0)
-    for (r <- 1 to roundsWanted.max) {
-      // truncate lineage at the round boundary: without it the logical
-      // plan NESTS (round r's plan contains round r-1's whole DAG) and
-      // multi-arm compositions (s36's three-round arms, s47/s48's
-      // per-shard scatters) spend more wall-clock in Catalyst analysis
-      // than in data. The lazy localCheckpoint replaces the frontier's
-      // logical plan with a LogicalRDD NOW (planning cost per round
-      // stays constant) while materialization still happens inside the
-      // one final action; the checkpointed state is O(queries·beam).
-      beamed = beamed.localCheckpoint(false)
+      .agg(topB(col("nid"), col("cos")).as("beam")))
+    val snaps = scala.collection.mutable.ArrayBuffer(beamed)
+    for (_ <- 1 to roundsWanted.max) {
       val frontier = beamed.select(col("q_id"),
         explode(col("beam")("_1")).as("n_id"))
       val expanded = frontier.join(graph, frontier("n_id") === graph("node"))
         .select(col("q_id"), col("edge_to").as("n_id"))
-      beamed = prune(frontier.unionByName(expanded)
+      beamed = checkpoint(prune(frontier.unionByName(expanded)
         .filter(col("n_id") =!= col("q_id"))
-        .distinct())
-      snap(r)
+        .distinct()))
+      snaps += beamed
     }
     def readout(b: DataFrame): DataFrame = b
       .select(col("q_id"), posexplode(col("beam")))

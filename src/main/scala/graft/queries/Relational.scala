@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.operators.CacheScope.persist
+import graft.operators.CacheScope.{checkpoint, persist}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -1281,10 +1281,11 @@ object Relational {
     // commutative hash aggregates (the (node,label) count, then the
     // max(struct(cnt, -label)) argmax — both partial-aggregatable, no
     // window over nodes) + a left join back to the node set (isolated
-    // nodes keep their own label). Each round's label table is
-    // persisted because round r+1 reads it twice (count join +
-    // fallback); at 100 TB every stage keys on the node id and moves
-    // O(edges) rows — the same shuffle shape as one CC round.
+    // nodes keep their own label). Each round's label table is cut
+    // through CacheScope.checkpoint, so the plan stays O(1) in the round
+    // count and releaseSession frees every round; at 100 TB every stage
+    // keys on the node id and moves O(edges) rows — the same shuffle
+    // shape as one CC round.
     "q77_label_propagation" -> { (s, dir) =>
       import s.implicits._
       val edges = sessionOverlapEdges(s, dir)
@@ -1353,7 +1354,10 @@ object Relational {
     // equi-join passes over an edge set that stays keyed by node id —
     // no driver-side frontier, no unbounded iteration. Seeds are the
     // deterministic u % 50 == 0 nodes (seed density constant as the
-    // corpus scales). The oracle replays it as a recursive CTE.
+    // corpus scales). Each hop's table is cut through
+    // CacheScope.checkpoint: hop h reads hop h-1 twice (frontier +
+    // union), so an uncut plan doubles with every hop; releaseSession
+    // frees every hop. The oracle replays it as a recursive CTE.
     "q48_khop_reach" -> { (s, dir) =>
       import s.implicits._
       val edges = sessionOverlapEdges(s, dir)
@@ -1364,7 +1368,7 @@ object Relational {
       for (h <- 1 to 3) {
         val next = dist.filter($"hops" === (h - 1)).join(sym, "u")
           .select($"v".as("u"), lit(h.toLong).as("hops"))
-        dist = persist(dist.unionByName(next)
+        dist = checkpoint(dist.unionByName(next)
           .groupBy($"u").agg(min($"hops").as("hops")))
       }
       dist.select($"u".as("user_id"), $"hops").orderBy($"user_id")

@@ -433,7 +433,7 @@ object ScaleBench {
       val docs200 = spark.read.parquet(s"$oneDir/documents.parquet").limit(200)
         .select("doc_id", "text")
       graft.operators.Dedup.lshCandidatePairs(docs200, "text", "doc_id", 16, 4, 3).count()
-      spark.catalog.clearCache()
+      graft.GraftSession.release(spark)
     } catch { case e: Throwable => System.err.println(s"[scale] warmup failed: $e") }
     // build-once assets per dir, outside the timed region (their own
     // build cost scales with corpus size by construction — one scan)
@@ -461,7 +461,8 @@ object ScaleBench {
           System.err.println(s"[scale] $name FAILED at $dir: $e"); return -1.0
         }
         val dt = (System.nanoTime() - t0) / 1e9
-        try spark.catalog.clearCache() catch { case _: Throwable => }
+        // round checkpoints too: clearCache alone leaves them pinned
+        try graft.GraftSession.release(spark) catch { case _: Throwable => }
         dt
       }.min
     }

@@ -106,6 +106,23 @@ class StyleGateSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("every lineage cut goes through CacheScope.checkpoint") {
+    val raw = mainFilesWith("localCheckpoint", ".checkpoint(")
+      .filterNot(_.startsWith("src/main/scala/graft/operators/CacheScope.scala:"))
+    withClue(raw.mkString("checkpoint outside CacheScope at:\n", "\n", "\n")) {
+      raw shouldBe empty
+    }
+  }
+
+  // an operator that sets a conf changes every other query on the session
+  test("operators set no session conf") {
+    val bad = mainFilesWith("conf.set(")
+      .filter(_.startsWith("src/main/scala/graft/operators/"))
+    withClue(bad.mkString("conf set in an operator at:\n", "\n", "\n")) {
+      bad shouldBe empty
+    }
+  }
+
   test("the ANN top-k lattice stays collapsed into Similarity.annTopK") {
     val gone = Seq("ivfTopK", "ivfTopKCb", "ivfTopKTrained", "ivfTopKTrainedFp",
       "ivfTopKTrainedFpSoft", "pqTopK", "pqTopKTrained", "pqSearch", "pqSearchTrained",

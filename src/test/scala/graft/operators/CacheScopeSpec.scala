@@ -93,9 +93,42 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
     // the paper's DBSCAN pipeline (pts / clustered / cands) and the
     // relational graph rows persist inside the query builders; with no
     // clearCache after the release, anything left is an untracked cache
+    releasesClean("dbscan_events", "q44_triangles")
+  }
+
+  test("checkpoint cuts the plan and releaseSession frees its blocks") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.LogicalRDD
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    Seq("dbscan_events", "q44_triangles").foreach { q =>
+    val base = (0L until 200L).toDF("id")
+    var df = base
+    for (_ <- 1 to 4) df = CacheScope.checkpoint(df.union(df).groupBy("id").count()
+      .select($"id"))
+    df.queryExecution.logical shouldBe a[LogicalRDD] // the leaf of the last cut
+    df.count() shouldBe 200L
+    (sc.getPersistentRDDs.keySet -- before) should not be empty
+    CacheScope.releaseSession(spark)
+    (sc.getPersistentRDDs.keySet -- before) shouldBe empty
+  }
+
+  test("releaseSession alone frees the round state of every iterative row") {
+    // q77 label propagation, q48 hops, t35 PageRank, q51 forced-distributed
+    // CC rounds and s36's multi-readout beam walk: each cuts its rounds
+    // through CacheScope.checkpoint, so the session release that frees
+    // the persists frees the checkpoint blocks too — no context-wide
+    // cleanup needed after a query
+    releasesClean("q77_label_propagation", "q48_khop_reach", "t35_textrank_keywords",
+      "q51_graph_components", "s36_graph_ann_recall")
+  }
+
+  /** Runs registered rows, then asserts they cached something and that
+    * `releaseSession` alone frees all of it.
+    */
+  private def releasesClean(rows: String*): Unit = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    rows.foreach { q =>
       graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect()
     }
     (sc.getPersistentRDDs.keySet -- before) should not be empty

@@ -128,4 +128,16 @@ class PlanShapeSpec extends AnyFunSuite with Matchers {
       _.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryTableScanExec]
     ) should be >= 2 // both branches hit the cache
   }
+
+  test("q48 and q77: round loops plan in constant size (every round is cut)") {
+    // an uncut q48 hop holds the previous hop twice, so the printed plan
+    // doubles with every hop (1,350 lines here with persisted hops); a
+    // cut round is one leaf
+    for (name <- Seq("q48_khop_reach", "q77_label_propagation")) {
+      val lines = graft.SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.executedPlan.toString.split("\n").length
+      withClue(s"$name executed plan lines: ") { lines should be < 500 }
+    }
+    graft.operators.CacheScope.releaseSession(spark)
+  }
 }
