@@ -86,8 +86,9 @@ object Bench {
     // a single file named events.parquet (like the sf dirs), not a
     // directory of part files — stage the write, then move one part file.
     try {
-      import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-      val warmDir = Paths.get("/tmp/graft_warmup")
+      import java.nio.file.{Files, StandardCopyOption}
+      // the release below deletes the scratch dir
+      val warmDir = graft.operators.CacheScope.scratchDir(spark, "graft_warmup_").toPath
       val staging = warmDir.resolve("staging")
       spark.range(100).selectExpr(
         "id as event_id", "1704067200000000000L + id * 1000000000L as ts",
@@ -100,11 +101,6 @@ object Bench {
         StandardCopyOption.REPLACE_EXISTING)
       val n = graft.streaming.Streaming.hourlyStats(spark, warmDir.toString).count()
       require(n > 0, "streaming warmup processed no rows")
-      def rm(p: Path): Unit = { // clean up: nothing left in /tmp between runs
-        if (Files.isDirectory(p)) Files.list(p).forEach(rm(_))
-        Files.deleteIfExists(p)
-      }
-      rm(warmDir)
     } catch { case e: Throwable =>
       System.err.println(s"[bench] streaming warmup failed: $e")
     }
@@ -118,7 +114,9 @@ object Bench {
     // position — classic transient contention). min-of-k is robust to
     // one-sided noise because contention only ever adds time. Caches are
     // cleared between reps so the min still measures a cold-cache run,
-    // not a cross-rep cache hit.
+    // not a cross-rep cache hit. A rep materializes the whole result (a
+    // `noop` write): a timed count() would let the optimizer prune work
+    // the row's output needs.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     // local-iteration filter (comma-separated names); the driver sets no
     // filter and always measures the full surface
@@ -129,7 +127,7 @@ object Bench {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).count(); true }
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: $e")
             false

@@ -13,8 +13,9 @@ object GraftSession {
 
   /** A `local[cpus]` session: shuffle width = cpus, AQE on, a 64 MB
     * broadcast threshold, the graft planner extensions, UTC session
-    * time, no UI and WARN logging. `extra` confs are applied last, so
-    * they may override any of these.
+    * time, TIMESTAMP(NANOS) parquet read as epoch-nano long (see
+    * `Sources.events`), no UI and WARN logging. `extra` confs are
+    * applied last, so they may override any of these.
     */
   def local(app: String, cpus: Int, extra: Map[String, String] = Map.empty)
       : SparkSession = {
@@ -26,6 +27,7 @@ object GraftSession {
       .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
     extra.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once parquet asset lifecycle + the generation manifest.
@@ -50,11 +51,6 @@ object Assets {
         .filterNot(_.getName.startsWith(".")).flatMap(fpOf)
     else Seq(s"${f.getAbsolutePath}|${f.length()}|${f.lastModified()}")
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-    f.delete()
-  }
-
   /** Ensure the asset named `name` (a warehouse dir) exists and is
     * fresh for `src` (+ `extraFp`, e.g. a compaction's tombstone-set
     * signature); (re)build via `build` when not. Returns a reader of
@@ -78,8 +74,8 @@ object Assets {
       new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == fp
     if (!fresh) {
       Option(loc.getParentFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => retire(f.getName)).foreach(rm)
-      Seq(loc, marker).filter(_.exists()).foreach(rm)
+        .filter(f => retire(f.getName)).foreach(FileUtils.deleteQuietly)
+      Seq(loc, marker).foreach(FileUtils.deleteQuietly)
       build.write.mode("overwrite").parquet(loc.getAbsolutePath)
       recordGeneration(s, name, generation,
         s.read.parquet(loc.getAbsolutePath).count(), nTombstones, nUpserts)

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import scala.collection.mutable.ArrayBuffer
 
-/** Session-owned lifecycle for every operator-internal `persist()` and
-  * every lineage cut of an iterative operator's round state.
+/** Session-owned lifecycle for every operator-internal `persist()`,
+  * every lineage cut of an iterative operator's round state and every
+  * scratch directory a query writes.
   *
   * Several operators cache an intermediate that feeds two branches of
   * the returned (lazy) plan — the cache is what keeps the expensive
@@ -13,11 +14,12 @@ import scala.collection.mutable.ArrayBuffer
   * recomputed once per branch. The iterative ones (connected-component
   * star rounds, label propagation, PageRank, q48's hops, the beam walk)
   * cut each round's plan so it stays O(1) across rounds instead of
-  * nesting every earlier round. The operator cannot free either before
-  * returning (the result has not run yet), so it goes through
-  * [[CacheScope.persist]] or [[CacheScope.checkpoint]], which register
-  * the frame with its SparkSession. Whoever owns the session
-  * materializes the result, then reclaims every such block at once:
+  * nesting every earlier round; the scatter streams write the table
+  * the result reads to a scratch dir. The operator cannot free any of
+  * these before returning (the result has not run yet), so it goes
+  * through [[persist]], [[checkpoint]] or [[scratchDir]], which
+  * register it with its SparkSession. Whoever owns the session
+  * materializes the result, then reclaims everything at once:
   *
   * {{{
   * val pairs = Dedup.jaccardPairs(docs, "text", "doc_id")
@@ -27,10 +29,11 @@ import scala.collection.mutable.ArrayBuffer
   *
   * After the release a DataFrame that only persisted stays valid — a
   * further action simply recomputes from source. One that read a
-  * materialized checkpoint does not (its lineage ends at the freed
-  * blocks): rebuild it from the operator. CacheScopeSpec asserts the
-  * zero-residual contract, and StyleGateSpec keeps `persist` and
-  * `localCheckpoint` out of every other file under src/main, so
+  * materialized checkpoint or a scratch directory does not (its lineage
+  * ends at the freed blocks or the deleted files): rebuild it from the
+  * operator. CacheScopeSpec asserts the zero-residual contract, and
+  * StyleGateSpec keeps `persist`, `localCheckpoint` and
+  * `createTempDirectory` out of every other file under src/main, so
   * nothing is ever untracked.
   */
 object CacheScope {
@@ -41,8 +44,9 @@ object CacheScope {
     * eviction alone can never fire while an entry holds frames — each
     * tracked Dataset strongly references its SparkSession, so the value
     * reaches the key; the listener is what actually breaks the cycle
-    * for a process that stops sessions without calling releaseSession.
-    * Each entry is the action that frees one registered frame.
+    * for a process that stops sessions without calling releaseSession
+    * (and deletes their scratch dirs, which outlive the context). Each
+    * entry is the action that frees one registered frame or dir.
     */
   private val perSession =
     new java.util.WeakHashMap[SparkSession, ArrayBuffer[() => Unit]]()
@@ -70,6 +74,19 @@ object CacheScope {
     cut
   }
 
+  /** A fresh `prefix*` dir under `java.io.tmpdir`, registered with `s`
+    * so [[releaseSession]] deletes it (after the cache that fronts it).
+    */
+  def scratchDir(s: SparkSession, prefix: String): java.io.File = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    register(s, new DeleteDir(dir))
+    dir
+  }
+
+  private final class DeleteDir(dir: java.io.File) extends (() => Unit) {
+    def apply(): Unit = org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   private def register(s: SparkSession, release: () => Unit): Unit =
     perSession.synchronized {
       var owned = perSession.get(s)
@@ -88,8 +105,10 @@ object CacheScope {
               val it = perSession.entrySet().iterator()
               while (it.hasNext) {
                 val en = it.next()
-                if (en.getKey != null && (en.getKey.sparkContext eq ctx))
+                if (en.getKey != null && (en.getKey.sparkContext eq ctx)) {
+                  en.getValue.foreach { case d: DeleteDir => d(); case _ => }
                   it.remove()
+                }
               }
             }
         })
@@ -97,9 +116,9 @@ object CacheScope {
       owned += release
     }
 
-  /** Free (non-blocking) every cache and checkpoint an operator
-    * registered through [[persist]] or [[checkpoint]] on `s`. Call after
-    * the consuming action. Idempotent.
+  /** Free (non-blocking) every cache, checkpoint and scratch directory
+    * registered through [[persist]], [[checkpoint]] or [[scratchDir]] on
+    * `s`, newest first. Call after the consuming action. Idempotent.
     */
   def releaseSession(s: SparkSession): Unit = {
     val owned = perSession.synchronized {
@@ -107,7 +126,7 @@ object CacheScope {
       if (o == null) Nil
       else { val all = o.toList; o.clear(); all }
     }
-    owned.foreach(_.apply())
+    owned.reverseIterator.foreach(_.apply())
   }
 
   /** Unpersist EVERY persistent RDD of the context, tracked or not.

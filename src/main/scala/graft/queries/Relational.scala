@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.operators.CacheScope.{checkpoint, persist}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -133,11 +134,7 @@ object Relational {
       }
       s.sql(s"DROP TABLE IF EXISTS $ot")
       s.sql(s"DROP TABLE IF EXISTS $lt")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      Seq(oDir, lDir).filter(_.exists()).foreach(rm)
+      Seq(oDir, lDir).foreach(FileUtils.deleteQuietly)
       rd(s, dir, "orders")
         .select($"o_orderkey", $"o_orderpriority")
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
@@ -175,11 +172,7 @@ object Relational {
       val fresh = marker.isFile && loc.isDirectory &&
         new String(java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8") == fp
       if (!fresh) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        Seq(loc, marker).filter(_.exists()).foreach(rm)
+        Seq(loc, marker).foreach(FileUtils.deleteQuietly)
         events(s, dir)
           .select($"event_id", $"user_id", $"event_type", $"value",
             expr("ts div 1000000000 div 86400").as("day_num"))

@@ -38,7 +38,7 @@ object Sources {
         df.withColumn("ts", unix_micros(col("ts")) * lit(1000L))
       case TimestampNTZType =>
         // NTZ -> TZ cast interprets the wall-clock in the session time
-        // zone; callers below pin it to UTC before reading.
+        // zone; callers below require it to be UTC.
         df.withColumn("ts",
           unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
       case other =>
@@ -46,21 +46,21 @@ object Sources {
           s"events.ts has unsupported physical type $other")
     }
 
-  /** Conf pins shared by every events read: UTC so naive timestamps
-    * have one meaning, and the SPARK-40819 legacy switch so a
-    * TIMESTAMP(NANOS) file (the historical encoding) arrives as
-    * epoch-nano long instead of failing the scan.
+  /** Naive (NTZ) timestamps read as UTC. GraftSession sets the zone
+    * (and `nanosAsLong`, so a TIMESTAMP(NANOS) file, the historical
+    * encoding, reads as epoch-nano long); a read checks, never sets.
     */
-  private def pinTsConfs(s: SparkSession): Unit = {
-    s.conf.set("spark.sql.session.timeZone", "UTC")
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def requireUtc(s: SparkSession): Unit = {
+    val tz = s.conf.get("spark.sql.session.timeZone")
+    require(java.time.ZoneId.of(tz).normalized == java.time.ZoneOffset.UTC,
+      s"events reads need spark.sql.session.timeZone=UTC; the session has $tz")
   }
 
   /** The events table with `ts` normalized to epoch-nano Long,
     * whatever the file's physical timestamp encoding.
     */
   def events(s: SparkSession, dir: String): DataFrame = {
-    pinTsConfs(s)
+    requireUtc(s)
     normalizeTs(s.read.parquet(s"$dir/events.parquet"))
   }
 
@@ -86,7 +86,7 @@ object Sources {
     * the batch path does.
     */
   def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    pinTsConfs(s)
+    requireUtc(s)
     val physicalTs = s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
     val schema = StructType(eventsStreamSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = physicalTs) else f))

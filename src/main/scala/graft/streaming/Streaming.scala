@@ -1,11 +1,14 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
+import graft.operators.CacheScope
 import graft.operators.CacheScope.persist
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.GroupStateTimeout
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout,
+  StreamingQueryListener}
 import org.apache.spark.sql.types._
 
 final case class UserEvent(user_id: Long, value: Double)
@@ -47,11 +50,14 @@ final case class TrendState(event_type: String, n_events: Long,
 
 /** Structured Streaming operators over the events table.
   *
-  * Batch parquet drives the stream (file source + memory sink +
-  * processAllAvailable), so results are deterministic and each query
-  * has a plain batch-SQL oracle. The same plans run unchanged against
-  * a real source (kafka/files) at scale — aggregation state is keyed
-  * and partitioned by the group columns.
+  * Batch parquet drives the stream (file source + memory or parquet
+  * sink + processAllAvailable), so results are deterministic and each
+  * query has a plain batch-SQL oracle. The same plans run unchanged
+  * against a real source (kafka/files) at scale — aggregation state is
+  * keyed and partitioned by the group columns.
+  *
+  * Each bounded query runs on a private clone of the caller's session
+  * ([[runBounded]]): the caller's conf and catalog are never touched.
   *
   * events.ts arrives from Sources normalized to the canonical
   * epoch-nano long whatever the file's physical timestamp encoding
@@ -60,43 +66,51 @@ final case class TrendState(event_type: String, n_events: Long,
   */
 object Streaming {
 
-  private val counter = new AtomicInteger(0)
-
   private def eventStream(s: SparkSession, dir: String): DataFrame =
     graft.sources.Sources.eventsStream(s, dir)
 
-  /** Streaming state partition count. A streaming query's state is
-    * sharded by the shuffle-partition conf AT QUERY START and fixed for
-    * the query's lifetime — it is a per-query sizing decision (shard
-    * count ~ state volume / healthy-store size), not the session's
-    * batch shuffle width. Every store-partition pays a fixed commit
-    * cost per micro-batch regardless of content, so for the KB-scale
-    * state these queries keep (hours x types, user ids, join buffers)
-    * the floor wins: measured per-query at sf0.1, 2 partitions beats 4
-    * beats 8 on every shape, most dramatically the 4-store
+  /** Per-query state width, set on each query's session clone only. A
+    * streaming query's state is sharded by the shuffle width AT QUERY
+    * START and fixed for the query's lifetime — a sizing decision per
+    * query (shard count ~ state volume / healthy-store size), not the
+    * caller's batch shuffle width. Every store-partition pays a fixed
+    * commit cost per micro-batch regardless of content, so for the
+    * KB-scale state these queries keep (hours x types, user ids, join
+    * buffers) the floor wins: measured per-query at sf0.1, 2 partitions
+    * beats 4 beats 8 on every shape, most dramatically the 4-store
     * stream-stream join (st04 10.0s -> 6.1s); 32 was catastrophic
     * (r1: 156s of summed commits). At real state volumes raise it to
-    * keep individual stores bounded — the knob is the contract, the
-    * constant is sized to the state.
+    * keep individual stores bounded.
     */
   private val StatePartitions = "2"
 
-  /** Scatter scratch dirs, reclaimed at JVM exit (see
-    * [[runToScatterTable]] — they must outlive the cache that fronts
-    * them, so eager deletion would be a correctness hazard).
+  /** Runs `df` as a bounded stream (`mode`, the sink `to` configures)
+    * until it has processed all available input, on a private clone of
+    * `df`'s session, and returns the clone. Only the clone gets the
+    * state width. It carries the caller's streaming listeners, and
+    * every event of the query has reached them before the query's
+    * listener buses are dropped.
     */
-  private val scatterDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      scatterDirs.forEach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => () } // best-effort scratch reclaim
-      }))
+  private def runBounded(df: DataFrame, mode: String)(
+      to: DataStreamWriter[Row] => DataStreamWriter[Row]): SparkSession = {
+    val clone = Bridge.cloneSession(df.sparkSession)
+    clone.conf.set("spark.sql.shuffle.partitions", StatePartitions)
+    df.sparkSession.streams.listListeners().foreach(clone.streams.addListener)
+    val stopped = new CountDownLatch(1)
+    clone.streams.addListener(new StreamingQueryListener {
+      import StreamingQueryListener._
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = stopped.countDown()
+    })
+    val q = to(Bridge.ofRows(clone, Bridge.analyzed(df)).writeStream.outputMode(mode)).start()
+    try q.processAllAvailable()
+    finally {
+      q.stop()
+      stopped.await(30, TimeUnit.SECONDS)
+      Bridge.dropStreamsBuses(q)
+    }
+    clone
   }
 
   /** Materialize a bounded stream to a DISTRIBUTED parquet table — the
@@ -106,54 +120,28 @@ object Streaming {
     * driver never holds a row — unlike [[runToTable]]'s memory sink,
     * which is the right shape only for query RESULTS (the correctness
     * dump collects those anyway) and would put O(corpus) on the
-    * driver heap here. The table lands in a fresh temp dir (one per
-    * scatter; session-lifetime scratch, not the warehouse).
+    * driver heap here. The table lands in a [[CacheScope.scratchDir]]:
+    * the returned frame cannot run after the session's release.
     */
   private def runToScatterTable(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val out = java.nio.file.Files.createTempDirectory("graft_scatter_")
-    // session-lifetime scratch: the parquet must outlive the persist()
-    // (an evicted cache partition re-reads it), so reclaim at JVM exit
-    // rather than eagerly — the dirs are O(arrivals) parquet, not data
-    // the warehouse keeps
-    scatterDirs.add(out)
-    val data = new java.io.File(out.toFile, "data")
-    val cp = new java.io.File(out.toFile, "cp")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    try {
-      val q = df.writeStream.outputMode("append").format("parquet")
-        .option("path", data.getAbsolutePath)
-        .option("checkpointLocation", cp.getAbsolutePath)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    // the sink creates the dir (and _spark_metadata) at query START,
-    // so directory existence alone cannot distinguish "committed rows"
-    // from "zero batches / zero rows" — and read.parquet over a
-    // part-file-less sink dir fails schema inference. Check for actual
-    // part files (FileStreamSink writes them flat under the path).
-    val hasParts = data.isDirectory &&
-      Option(data.listFiles).getOrElse(Array.empty[java.io.File])
-        .exists(f => f.isFile && f.getName.endsWith(".parquet"))
-    if (hasParts) spark.read.parquet(data.getAbsolutePath)
-    else // empty source or all-empty batches: nothing was written
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], df.schema)
+    val out = CacheScope.scratchDir(df.sparkSession, "graft_scatter_")
+    val data = new java.io.File(out, "data").getAbsolutePath
+    runBounded(df, "append")(_.format("parquet").option("path", data)
+      .option("checkpointLocation", new java.io.File(out, "cp").getAbsolutePath))
+    // the read lists the files the sink's log committed; given the
+    // stream's schema, a log with none (empty source, all-empty batches)
+    // reads as an empty table instead of failing schema inference
+    df.sparkSession.read.schema(df.schema).parquet(data)
   }
 
+  /** A bounded stream's result through the memory sink, as a frame of
+    * the caller's session over the sink's rows (append and update
+    * accumulate, complete replaces; nothing is copied). The sink's view
+    * is named in the clone's catalog only.
+    */
   private def runToTable(df: DataFrame, mode: String): DataFrame = {
-    val spark = df.sparkSession
-    val name = s"graft_stream_${counter.incrementAndGet()}"
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    try {
-      val q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
-      try q.processAllAvailable()
-      finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    spark.table(name)
+    val clone = runBounded(df, mode)(_.format("memory").queryName("graft_stream"))
+    Bridge.ofRows(df.sparkSession, Bridge.analyzed(clone.table("graft_stream")))
   }
 
   /** Tumbling 1-hour windowed aggregate per event type (complete mode). */

@@ -19,8 +19,10 @@ import graft.{GraftSession, SparkEntry}
   *
   *   - `--sf` is the table directory (default: `SPARK_GRAFT_SF_DIR`);
   *   - `--reps` runs each query N times (default 2), releasing the
-  *     session between reps; each rep prints wall seconds, rows, jobs,
-  *     stages, tasks, summed executor task seconds and GC seconds. A
+  *     session between reps; each rep materializes the whole result
+  *     (a `noop` write) and prints its wall seconds, jobs, stages,
+  *     tasks, summed executor task seconds and GC seconds, plus the
+  *     row count from an untimed count afterwards. A
   *     query whose wall time is several times its task time is bound by
   *     driver-side work (planning, job launch cadence), not by data;
   *   - `--conf` adds a session conf on top of Bench's (repeatable);
@@ -95,13 +97,16 @@ object Probe extends AdaptiveSparkPlanHelper {
       (1 to reps).foreach { rep =>
         counters.reset()
         val t0 = System.nanoTime()
-        val rows = fn(spark, dir).count()
+        val df = fn(spark, dir)
+        df.write.format("noop").mode("overwrite").save()
         val wall = (System.nanoTime() - t0) / 1e9
         // the listener bus is asynchronous: give it a beat to drain
         Thread.sleep(400)
         import counters._
-        println(f"$name%-34s $rep%3d $wall%8.2f $rows%9d ${jobs.get}%5d ${stages.get}%6d " +
-          f"${tasks.get}%6d ${taskNanos.get / 1e9}%8.2f ${gcMillis.get / 1e3}%6.2f")
+        val work = f"${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d " +
+          f"${taskNanos.get / 1e9}%8.2f ${gcMillis.get / 1e3}%6.2f"
+        // untimed: a timed count() may prune work the output needs
+        println(f"$name%-34s $rep%3d $wall%8.2f ${df.count()}%9d $work")
         GraftSession.release(spark)
       }
       if (plan) {

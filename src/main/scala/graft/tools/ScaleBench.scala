@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -255,26 +256,16 @@ object ScaleBench {
   }
 
   private def writeSingleFile(df: DataFrame, outDir: java.nio.file.Path, table: String): Unit = {
-    import java.nio.file.{Files, Path, StandardCopyOption}
+    import java.nio.file.{Files, StandardCopyOption}
     val staging = outDir.resolve(s"staging_$table")
     df.coalesce(1).write.mode("overwrite")
       .option("parquet.block.size", (4 * 1024 * 1024).toString)
       .parquet(staging.toString)
-    def listed[A](dir: Path)(f: java.util.stream.Stream[Path] => A): A = {
-      val st = Files.list(dir)
-      try f(st) finally st.close()
-    }
-    val part = listed(staging)(_.filter(_.getFileName.toString.endsWith(".parquet"))
-      .findFirst().get())
+    val listed = Files.list(staging)
+    val part = try listed.filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get()
+      finally listed.close()
     Files.move(part, outDir.resolve(s"$table.parquet"), StandardCopyOption.REPLACE_EXISTING)
-    def rm(p: Path): Unit = {
-      if (Files.isDirectory(p)) {
-        import scala.jdk.CollectionConverters._
-        listed(p)(_.iterator().asScala.toList).foreach(rm)
-      }
-      Files.deleteIfExists(p)
-    }
-    rm(staging)
+    FileUtils.deleteQuietly(staging.toFile)
   }
 
   /** Deterministic Nx synthesis of the flagship tables into `out`.

@@ -24,4 +24,23 @@ object Bridge {
   /** The analyzed logical plan of a DataFrame. */
   def analyzed(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+
+  /** A private clone of `s`: confs and temp views copied, catalog,
+    * cache and context shared (what StreamExecution runs a query on).
+    */
+  def cloneSession(s: SparkSession): SparkSession =
+    s.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Unregister the streaming listener buses of `q`'s session and of
+    * the clone it ran batches on: Spark adds one to the context per
+    * session that touches `streams` and never removes it.
+    */
+  def dropStreamsBuses(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val bus = classOf[classic.StreamingQueryManager].getDeclaredField("listenerBus")
+    bus.setAccessible(true)
+    val run = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+      .StreamingQueryWrapper].streamingQuery
+    Seq(run.sparkSession, run.sparkSessionForStream).foreach(s => s.sparkContext.listenerBus
+      .removeListener(bus.get(s.streams).asInstanceOf[org.apache.spark.scheduler.SparkListener]))
+  }
 }

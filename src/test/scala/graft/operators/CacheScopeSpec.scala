@@ -122,6 +122,21 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
       "q51_graph_components", "s36_graph_ann_recall")
   }
 
+  test("releaseSession alone deletes stream scratch dirs and leaves no view") {
+    // st01 runs through the memory sink, st58 scatters its routed
+    // arrivals to a scratch dir that a cache fronts; only the session
+    // release runs afterwards
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def scatterDirs = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+      .map(_.getName).filter(_.startsWith("graft_scatter_")).toSet
+    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary)
+      .map(_.name).toSet
+    val (dirsBefore, viewsBefore) = (scatterDirs, tempViews)
+    releasesClean("st01_stream_hourly", "st58_sharded_graph_probe")
+    (scatterDirs -- dirsBefore) shouldBe empty
+    (tempViews -- viewsBefore) shouldBe empty
+  }
+
   /** Runs registered rows, then asserts they cached something and that
     * `releaseSession` alone frees all of it.
     */

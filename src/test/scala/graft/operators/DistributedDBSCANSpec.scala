@@ -11,6 +11,7 @@ object TestSpark {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // production session shape: the eps-join rewrite is installed (it
     // no-ops on plans without a DistSq predicate)
     .config("spark.sql.extensions", "graft.plans.GraftExtensions")

@@ -34,9 +34,8 @@ class EmptyInputSpec extends AnyFunSuite with Matchers {
         new java.io.File(dir, s"$t.parquet").toPath)
       rm(stage)
     }
-    // events needs its nano-ts long schema (reader quirk) — reuse the
-    // stream schema, which is the post-read shape with ts as long
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events keeps its physical schema (TestSpark reads a NANOS ts as
+    // a long, like GraftSession)
     val eventsSchema = spark.read.parquet(s"$src/events.parquet").schema
     val stage = new java.io.File(dir, "_stage_events")
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], eventsSchema)

@@ -73,6 +73,7 @@ class TsEncodingSpec extends AnyFunSuite with Matchers {
     try q.processAllAvailable()
     finally q.stop()
     val got = spark.table("ts_encoding_probe").head()
+    spark.catalog.dropTempView("ts_encoding_probe") // leave the shared session clean
     got.getLong(0) shouldBe batch.getLong(0)
     got.getLong(1) shouldBe batch.getLong(1)
     got.getLong(2) shouldBe batch.getLong(2)
