@@ -6,6 +6,7 @@ import graft.operators.AnnSpec.{Flat, Ivf, Pq, PqResidual, Raw, TrainedFp}
 import graft.operators.CacheScope.persist
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** North-star training-data-pipeline operators (SURVEY.md §2.3) as
   * oracle-checked queries: text analysis, dedup (exact / n-gram Jaccard
@@ -43,6 +44,20 @@ object NorthStar {
   private[queries] val PiiEmailRe = "[A-Za-z0-9._]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
   private[queries] val PiiPhoneRe = "\\d{3}-\\d{4}"
   private[queries] val PiiIpRe = "\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}\\.\\d{1,3}"
+
+  /** `text` run by `spark.sql` over `views` (name -> frame), registered
+    * as temp views on a private clone of `s`: the caller's catalog gains
+    * no view and concurrent rows cannot replace each other's. The result
+    * is a frame of `s`.
+    */
+  private def sqlOver(s: SparkSession, views: (String, DataFrame)*)(text: String)
+      : DataFrame = {
+    val clone = Bridge.cloneSession(s)
+    views.foreach { case (name, df) =>
+      Bridge.ofRows(clone, Bridge.analyzed(df)).createOrReplaceTempView(name)
+    }
+    Bridge.ofRows(s, Bridge.analyzed(clone.sql(text)))
+  }
 
   /** Corpus with exact duplicates: every doc again under id+100000. */
   private def dupCorpus(s: SparkSession, dir: String): DataFrame = {
@@ -795,9 +810,8 @@ object NorthStar {
     // move applied to curation: a SQL-only user can run the whole
     // pipeline); shares t17's oracle verbatim.
     "t29_sql_curation" -> { (s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
-        .createOrReplaceTempView("graft_t29_docs")
-      s.sql(s"""WITH u AS (
+      sqlOver(s, "graft_t29_docs" -> s.read.parquet(s"$dir/documents.parquet"))(
+        s"""WITH u AS (
               |  SELECT doc_id, text, lang FROM graft_t29_docs
               |  UNION ALL
               |  SELECT doc_id + 100000, text, lang FROM graft_t29_docs),
@@ -1047,9 +1061,8 @@ object NorthStar {
     // SQL-first user writes this and gets the Scala pipeline's exact
     // answer.
     "d11_sql_lsh_pairs" -> { (s, dir) =>
-      s.read.parquet(s"$dir/documents.parquet")
-        .createOrReplaceTempView("graft_d11_docs")
-      s.sql("""WITH u AS (
+      sqlOver(s, "graft_d11_docs" -> s.read.parquet(s"$dir/documents.parquet"))(
+        """WITH u AS (
               |  SELECT doc_id, text FROM graft_d11_docs
               |  UNION ALL
               |  SELECT doc_id + 100000,
@@ -2686,9 +2699,8 @@ object NorthStar {
     // the SQL-reachability proof for similarity search, sharing s01's
     // oracle verbatim.
     "s17_sql_knn" -> { (s, dir) =>
-      s.read.parquet(s"$dir/embeddings.parquet")
-        .createOrReplaceTempView("graft_s17_emb")
-      s.sql("""WITH e AS (SELECT vec_id AS id, embedding AS v FROM graft_s17_emb)
+      sqlOver(s, "graft_s17_emb" -> s.read.parquet(s"$dir/embeddings.parquet"))(
+        """WITH e AS (SELECT vec_id AS id, embedding AS v FROM graft_s17_emb)
               |SELECT q_id, n_id, cast(rn as bigint) AS rnk, cos_sim FROM (
               |  SELECT q.id AS q_id, n.id AS n_id,
               |    round(graft_cosine(q.v, n.v), 6) AS cos_sim,
@@ -2783,11 +2795,10 @@ object NorthStar {
     // the no-nested-loop bar with no allowance.
     "s14_sql_eps_degree" -> { (s, dir) =>
       import s.implicits._
-      Relational.events(s, dir).select(
-          $"event_id".as("id"), $"value".as("x"),
-          ((expr("ts div 1000000000") - lit(1704067200L)) / 3600.0).as("y"))
-        .createOrReplaceTempView("graft_s14_pts")
-      s.sql("""SELECT a.id AS id, count(*) AS n_neighbors
+      val pts = Relational.events(s, dir).select(
+        $"event_id".as("id"), $"value".as("x"),
+        ((expr("ts div 1000000000") - lit(1704067200L)) / 3600.0).as("y"))
+      sqlOver(s, "graft_s14_pts" -> pts)("""SELECT a.id AS id, count(*) AS n_neighbors
               |FROM graft_s14_pts a JOIN graft_s14_pts b
               |  ON graft_dist_sq(a.x, a.y, b.x, b.y) <= 4.0 AND a.id <> b.id
               |GROUP BY a.id ORDER BY id""".stripMargin)

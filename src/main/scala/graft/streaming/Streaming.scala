@@ -113,17 +113,21 @@ object Streaming {
     clone
   }
 
-  /** Materialize a bounded stream to a DISTRIBUTED parquet table — the
-    * ingest-tier spelling of the route-once scatter: executors write
-    * the routed arrivals (a DATA-SIZED intermediate) straight to
-    * storage and the serving arms read it back distributed. The
-    * driver never holds a row — unlike [[runToTable]]'s memory sink,
-    * which is the right shape only for query RESULTS (the correctness
-    * dump collects those anyway) and would put O(corpus) on the
-    * driver heap here. The table lands in a [[CacheScope.scratchDir]]:
-    * the returned frame cannot run after the session's release.
+  /** ROUTE ONCE: the shard fleet's one dispatch. The bounded stream
+    * `df` carries each arrival's arm in column `key` (computed once per
+    * arrival, so router work never grows with the arm count).
+    * Executors write the routed arrivals — a DATA-SIZED intermediate —
+    * straight to a parquet table in a [[CacheScope.scratchDir]], the
+    * ingest tier's route-and-dispatch; the driver never holds a row
+    * (unlike [[runToTable]]'s memory sink, the right shape only for
+    * query RESULTS). The table is read back distributed, clustered by
+    * `key` once and persisted, so an arm's filter prunes cached batches
+    * by their column stats. One `min`/`max` aggregate fills the cache
+    * and lets the driver `require` that every routed key names one of
+    * the `n` arms. The returned frame cannot run after the session's
+    * release.
     */
-  private def runToScatterTable(df: DataFrame): DataFrame = {
+  private def dispatch(df: DataFrame, key: String, n: Int): DataFrame = {
     val out = CacheScope.scratchDir(df.sparkSession, "graft_scatter_")
     val data = new java.io.File(out, "data").getAbsolutePath
     runBounded(df, "append")(_.format("parquet").option("path", data)
@@ -131,7 +135,12 @@ object Streaming {
     // the read lists the files the sink's log committed; given the
     // stream's schema, a log with none (empty source, all-empty batches)
     // reads as an empty table instead of failing schema inference
-    df.sparkSession.read.schema(df.schema).parquet(data)
+    val routed = persist(df.sparkSession.read.schema(df.schema).parquet(data)
+      .repartition(col(key)))
+    val span = routed.agg(min(col(key)).cast("long"), max(col(key)).cast("long")).head()
+    require(span.isNullAt(0) || (span.getLong(0) >= 0 && span.getLong(1) < n),
+      s"routed $key in [${span.get(0)}, ${span.get(1)}], outside the $n arms")
+    routed
   }
 
   /** A bounded stream's result through the memory sink, as a frame of
@@ -1443,33 +1452,82 @@ object Streaming {
     }
   }
 
-  /** ONE typed pass over the routed arrivals that walks each row
-    * against ITS shard's replica — the fused spelling of the
-    * arm-per-shard union (which re-planned, and re-scanned the cached
-    * dispatch, once per shard: nShards jobs of sub-second tasks at
-    * serving time). Each shard's replica still broadcasts SEPARATELY
-    * and a task only fetches the broadcasts of shards present in its
-    * partition (the dispatch is clustered by shard), so the
-    * O(corpus/nShards) per-worker replica bound is unchanged — only
-    * the job count drops to one. Returns
-    * (q_id, shard, rnk, n_id, cos_sim).
+  /** One serving arm's in-memory replica: its scoring vectors, the
+    * adjacency of its graph asset, and its walk seeds.
     */
-  private def fusedRoutedWalk(routedQ: DataFrame,
-      replicas: Seq[(Int, Map[Long, Array[Float]], Map[Long, Array[Long]],
-        Array[Long])],
+  private final case class Replica(vecs: Map[Long, Array[Float]],
+      adj: Map[Long, Array[Long]], seeds: Array[Long])
+
+  /** `f` for each of the `n` arms, run CONCURRENTLY — production's
+    * independent per-shard serving workers (Spark schedules actions
+    * from separate threads fine); sequential collects would pay `n` job
+    * latencies. Results in arm order.
+    */
+  private def perShard[A](n: Int)(f: Int => A): IndexedSeq[A] = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.concurrent.ExecutionContext.Implicits.global
+    Await.result(Future.sequence((0 until n).map(sh => Future(f(sh)))), Duration.Inf)
+  }
+
+  /** A graph asset's `(node, edge_to)` rows, collected and grouped by
+    * node.
+    */
+  private def adjacency(graph: DataFrame): Map[Long, Array[Long]] = {
+    import graph.sparkSession.implicits._
+    graph.select(col("node").cast("long"), col("edge_to").cast("long"))
+      .as[(Long, Long)].collect()
+      .groupBy(_._1).map { case (n, es) => (n, es.map(_._2)) }
+  }
+
+  /** The `n` per-shard replicas of a rendezvous-sharded fleet, loaded
+    * through [[perShard]]. Arm `sh` scores its slice of the n-layout
+    * (`rendezvousShardOf(vec_id, n) == sh`; one persisted scan feeds
+    * every arm), walks the per-shard graph asset of layout
+    * `assetLayout(sh)` — a build-once warehouse asset (first call
+    * builds under the asset lock, every later serve reads parquet) —
+    * and seeds from its slice ids that pass `isSeed`. Each replica is
+    * O(corpus/n), the bound the full-replica st50 lacks.
+    */
+  private def shardReplicas(s: SparkSession, dir: String, n: Int,
+      assetLayout: Int => Int, isSeed: Long => Boolean, graphK: Int,
+      targetList: Int, nprobe: Int, superProbe: Int): IndexedSeq[Replica] = {
+    import s.implicits._
+    import graft.operators.{Mixture, Similarity}
+    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
+        Mixture.rendezvousShardCol(col("vec_id"), n).as("shard")))
+    perShard(n) { sh =>
+      val vecs = emb.filter(col("shard") === sh).select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])].collect().toMap
+      Replica(vecs,
+        adjacency(Similarity.ensureShardKnnIndex(s, dir, assetLayout(sh), sh, graphK,
+          targetList, nprobe, superProbe)),
+        vecs.keysIterator.filter(isSeed).toArray.sorted)
+    }
+  }
+
+  /** ONE typed pass over the [[dispatch]]ed arrivals that walks each
+    * row against ITS shard's replica (`replicas(shard)`; the dispatch
+    * has already required every routed shard to be in range) — the
+    * fused spelling of the arm-per-shard union, which re-planned and
+    * re-scanned the cached dispatch once per shard. Each replica is ONE
+    * broadcast: a task fetches only the replicas of shards present in
+    * its partition (the dispatch is clustered by shard), so the
+    * O(corpus/nShards) per-worker replica bound holds and the walk is
+    * one job. Returns (q_id, shard, rnk, n_id, cos_sim).
+    */
+  private def fusedRoutedWalk(routedQ: DataFrame, replicas: IndexedSeq[Replica],
       k: Int, beam: Int, rounds: Int): DataFrame = {
     val s = routedQ.sparkSession
     import s.implicits._
-    val bc = replicas.map { case (sh, vecs, adj, seeds) =>
-      sh -> ((s.sparkContext.broadcast(vecs), s.sparkContext.broadcast(adj),
-        s.sparkContext.broadcast(seeds)))
-    }.toMap
+    val bc = replicas.map(s.sparkContext.broadcast(_))
     routedQ
       .select(col("shard").cast("int").as("shard"), col("q_id"),
         col("embedding"))
       .as[(Int, Long, Array[Float])].flatMap { case (sh, qId, qv) =>
-        val (bv, ba, bs) = bc(sh)
-        localBeamWalk(qId, qv, bv.value, ba.value, bs.value, k, beam,
+        val r = bc(sh).value
+        localBeamWalk(qId, qv, r.vecs, r.adj, r.seeds, k, beam,
           rounds).map { case (q, rnk, nId, cos) => (q, sh.toLong, rnk, nId, cos) }
       }.toDF("q_id", "shard", "rnk", "n_id", "cos_sim")
   }
@@ -1480,7 +1538,7 @@ object Streaming {
     * is replicated into each serving worker's memory; queries never
     * shuffle). The asset ([[graft.operators.Similarity.ensureKnnGraphIndex]]),
     * the corpus vectors, and the id%seedMod navigation slice broadcast
-    * once; each arriving vector runs the EXACT
+    * once as one [[Replica]]; each arriving vector runs the EXACT
     * [[graft.operators.Similarity.graphBeamSearchOver]] math locally —
     * same sequential-fold cosine (left-to-right double accumulation,
     * so doubles are bit-identical to the codegen DotProduct), same
@@ -1509,23 +1567,21 @@ object Streaming {
     if (corpus.isEmpty) // empty corpus: nothing to serve against
       return Seq.empty[(Long, Long, Long, Double)]
         .toDF("q_id", "rnk", "n_id", "cos_sim")
-    val adj: Map[Long, Array[Long]] = graphDf
-      .select(col("node").cast("long"), col("edge_to").cast("long"))
-      .as[(Long, Long)].collect()
-      .groupBy(_._1).map { case (n, es) => (n, es.map(_._2)) }
-    val seeds: Array[Long] = corpus.map(_._1).filter(_ % seedMod == 0)
-    val bcVecs = s.sparkContext.broadcast(corpus.toMap)
-    val bcAdj = s.sparkContext.broadcast(adj)
-    val bcSeeds = s.sparkContext.broadcast(seeds)
-    val shard = graft.sources.Sources.embeddingsStream(s, dir)
-      .select((col("vec_id") + 100000L).cast("long").as("q_id"),
-        col("embedding"))
-    val hits = shard.as[(Long, Array[Float])].flatMap { case (qId, qv) =>
-      localBeamWalk(qId, qv, bcVecs.value, bcAdj.value, bcSeeds.value,
-        k, beam, rounds)
+    val bc = s.sparkContext.broadcast(Replica(corpus.toMap, adjacency(graphDf),
+      corpus.map(_._1).filter(_ % seedMod == 0)))
+    val hits = queryArrivals(s, dir).as[(Long, Array[Float])].flatMap { case (qId, qv) =>
+      val r = bc.value
+      localBeamWalk(qId, qv, r.vecs, r.adj, r.seeds, k, beam, rounds)
     }.toDF("q_id", "rnk", "n_id", "cos_sim")
     runToTable(hits, "append")
   }
+
+  /** The serving family's query stream: each arriving vector as
+    * (q_id = vec_id + 100000, embedding).
+    */
+  private def queryArrivals(s: SparkSession, dir: String): DataFrame =
+    graft.sources.Sources.embeddingsStream(s, dir)
+      .select((col("vec_id") + 100000L).cast("long").as("q_id"), col("embedding"))
 
   /** SHARD-COMPOSED STREAMING GRAPH SERVING (st58) — the rendezvous
     * router (t55/st56) composed with st50's serving walk, closing the
@@ -1539,11 +1595,11 @@ object Streaming {
     * ([[graft.operators.Similarity.knnEdgesScaled]] over just the
     * shard — count-derived nlist, two-level routing, the nightly
     * per-shard index job), and each serving arm replicates ONLY its
-    * shard's vectors + adjacency + seed slice. An arriving query
-    * routes by ITS key's rendezvous shard (the same argmax, a pure
-    * per-row column expression) and walks that shard's replica
-    * locally — st50's exact math via [[localBeamWalk]] — never
-    * touching another shard.
+    * shard's vectors + adjacency + seed slice ([[shardReplicas]]). An
+    * arriving query routes by ITS key's rendezvous shard (the same
+    * argmax, a pure per-row column expression, [[dispatch]]ed once)
+    * and walks that shard's replica locally — st50's exact math via
+    * [[fusedRoutedWalk]] — never touching another shard.
     *
     * In local mode the nShards arms share one JVM, but no single
     * broadcast exceeds the per-shard slice; on a real cluster each
@@ -1558,7 +1614,7 @@ object Streaming {
       nprobe: Int = 4, superProbe: Int = 3,
       tombstones: Option[DataFrame] = None): DataFrame = {
     import s.implicits._
-    import graft.operators.{Mixture, Similarity}
+    import graft.operators.Mixture
     require(k <= beam, s"k=$k must be <= beam=$beam")
     require(nShards >= 1, s"nShards=$nShards must be positive")
     // s43's masking contract, shard-composed: the per-shard GRAPH
@@ -1568,52 +1624,11 @@ object Streaming {
       .map(_.select(col(tombstones.get.columns.head).cast("long"))
         .as[Long].collect().toSet)
       .getOrElse(Set.empty)
-    // one scan feeds all nShards shard builds
-    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        Mixture.rendezvousShardCol(col("vec_id"), nShards).as("shard")))
-    // ROUTE ONCE: the rendezvous argmax is computed in ONE streaming
-    // pass and the routed arrivals materialize as a table each arm
-    // consumes by its own partition — the ingest-tier dispatch. (The
-    // filtered-union spelling re-evaluated the O(nShards)-hash argmax
-    // in every arm, so router work grew ∝ nShards² per arrival.)
-    val routedQ = persist(runToScatterTable(
-        graft.sources.Sources.embeddingsStream(s, dir)
-          .select((col("vec_id") + 100000L).cast("long").as("q_id"),
-            col("embedding"))
-          .withColumn("shard",
-            Mixture.rendezvousShardCol(col("q_id"), nShards)))
-      .repartition(col("shard"))) // cluster by shard once;
-    routedQ.count() // arms prune cached batches by shard stats
-    // the per-shard replicas build CONCURRENTLY (production's
-    // independent per-shard nightly index jobs — Spark schedules
-    // actions from separate threads fine); each replica — vectors +
-    // adjacency + seed slice — is O(corpus/nShards), the bound the
-    // full-replica st50 lacks
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val replicas = Await.result(Future.sequence((0 until nShards).map { sh =>
-      Future {
-        val shardCorpus = emb.filter(col("shard") === sh).drop("shard")
-        val vecs: Map[Long, Array[Float]] = shardCorpus
-          .as[(Long, Array[Float])].collect()
-          .filterNot(r => masked.contains(r._1)).toMap
-        // the per-shard graph is a build-once warehouse asset (the
-        // nightly per-shard index job; first call builds, every later
-        // serve reads parquet). Builds serialize on the asset lock;
-        // fresh reads run concurrently.
-        val adj: Map[Long, Array[Long]] =
-          Similarity.ensureShardKnnIndex(s, dir, nShards, sh, graphK,
-              targetList, nprobe, superProbe)
-            .select(col("node").cast("long"), col("edge_to").cast("long"))
-            .as[(Long, Long)].collect()
-            .groupBy(_._1).map { case (n, es) => (n, es.map(_._2)) }
-        val seeds: Array[Long] = vecs.keysIterator.filter(_ % seedMod == 0)
-          .toArray.sorted
-        (sh, vecs, adj, seeds)
-      }
-    }), Duration.Inf)
+    val routedQ = dispatch(queryArrivals(s, dir)
+      .withColumn("shard", Mixture.rendezvousShardCol(col("q_id"), nShards)), "shard", nShards)
+    val replicas = shardReplicas(s, dir, nShards, _ => nShards, _ % seedMod == 0,
+        graphK, targetList, nprobe, superProbe)
+      .map(r => r.copy(vecs = r.vecs -- masked, seeds = r.seeds.filterNot(masked)))
     fusedRoutedWalk(routedQ, replicas, k, beam, rounds)
   }
 
@@ -2718,11 +2733,9 @@ object Streaming {
     * build-once parquet asset (no full-corpus driver map — each arm
     * collects only its own slice), and the scatter ROUTES ONCE — one
     * streaming pass routes each arrival through the broadcast O(nlist)
-    * centroid tables and materializes the (owner, arrival) dispatch,
-    * each arm consuming just its owner partition (the ingest-tier
-    * route-and-dispatch a deployment runs; router work is now
-    * per-arrival, not per-arrival-per-owner). The oracle replays the
-    * frozen build and every per-owner partial.
+    * centroid tables and [[dispatch]]es the (owner, arrival) rows
+    * (router work is per-arrival, not per-arrival-per-owner). The
+    * oracle replays the frozen build and every per-owner partial.
     */
   def streamShardedGraphUpsert(s: SparkSession, dir: String,
       nOwners: Int = 4, k: Int = 5, nprobe: Int = 4,
@@ -2737,14 +2750,25 @@ object Streaming {
     }
   }
 
+  /** One cell owner's upsert replica: its cells' members and probers,
+    * the vectors of those ids, and the probers' stored (rounded 5th-best,
+    * count) admission thresholds.
+    */
+  private final case class OwnerSlice(members: Map[Long, Array[Long]],
+      probers: Map[Long, Array[Long]], vecs: Map[Long, Array[Float]],
+      thr: Map[Long, (Double, Long)])
+
   /** The shared upsert-intent machinery behind [[streamGraphUpsert]]
     * (st53, the global merge) and [[streamShardedGraphUpsert]] (st61,
-    * the per-owner partials): route-once scatter over the build-once
-    * per-owner slice asset
-    * ([[graft.operators.Similarity.ensureUpsertOwnerSlices]]).
-    * Returns the per-owner partial intents with BOTH the raw cosine
-    * (`cos_raw`, the merge's exact ordering key) and the HALF_UP
-    * round-6 readout (`cos_sim`); None when the base corpus is empty.
+    * the per-owner partials): the arrivals are [[dispatch]]ed by cell
+    * owner, each owner's slice of the build-once asset
+    * ([[graft.operators.Similarity.ensureUpsertOwnerSlices]]) loads
+    * through [[perShard]] as one [[OwnerSlice]] broadcast, and ONE typed
+    * pass over the dispatch runs each row against `bc(owner)` — the
+    * [[fusedRoutedWalk]] shape. Returns the per-owner partial intents
+    * with BOTH the raw cosine (`cos_raw`, the merge's exact ordering
+    * key) and the HALF_UP round-6 readout (`cos_sim`); None when the
+    * base corpus is empty.
     *
     * The local kernel replicates the operators' math bit for bit:
     * DotProduct's sequential fold with per-element double cast
@@ -2776,12 +2800,9 @@ object Streaming {
     val slices = Similarity.ensureUpsertOwnerSlices(s, dir, nOwners, k,
       nprobe, superProbe)
     val ownerOf: Long => Int = c => Mixture.rendezvousShardOf(c, nOwners)
-    // ROUTE ONCE: one streaming pass routes each arrival through the
-    // frozen tables and materializes the (owner, arrival) dispatch —
-    // the ingest-tier scatter; arms never re-run the router
-    val arrivals = graft.sources.Sources.embeddingsStream(s, dir)
-      .select((col("vec_id") + 100000L).cast("long").as("q_id"),
-        col("embedding"))
+    // one routing pass emits an (owner, arrival) row per owner of a
+    // probed cell; arms never re-run the router
+    val routedT = dispatch(queryArrivals(s, dir)
       .as[(Long, Array[Float])]
       .flatMap { case (qId, qv) =>
         val probed = routeTwoLevel(qv, bcSup.value, bcCents.value,
@@ -2790,78 +2811,51 @@ object Streaming {
         else probed.map(ownerOf).distinct.iterator
           .map(o => (o, qId, qv, probed, probed.head))
       }
-      .toDF("owner", "q_id", "embedding", "probed", "assigned_cell")
-    // materialize ONCE as a distributed table clustered by owner —
-    // executors write the scatter straight to storage (the ingest
-    // tier's route-and-dispatch; the driver never holds a row) and
-    // one repartition+persist lets each arm's owner filter prune
-    // cached batches by their column stats
-    val routedT = persist(runToScatterTable(arrivals)
-      .repartition(col("owner")))
-    routedT.count() // fill the cache before the arms fan out
-    // each owner's replica loads CONCURRENTLY (st58's parallel
-    // per-shard load — production's independent serving workers;
-    // sequential collects would pay nOwners job latencies)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val ownerRows = Await.result(Future.sequence((0 until nOwners).map {
-      o => Future {
-        // collect ONLY the owner's slice — O((1+nprobe)·n/nOwners)
-        // narrow cell rows + ONE vector row per (owner, id)
-        (o, slices.filter(col("owner") === o)
-          .select(col("cell"), col("id"), col("role"), col("vec"),
-            col("thr"), col("thr_cnt"))
-          .as[(Long, Long, String, Array[Float], Option[Double], Option[Long])]
-          .collect())
-      }
-    }), Duration.Inf)
-    val arms = ownerRows.map { case (o, rows) =>
-      val memberSlice: Map[Long, Array[Long]] = rows.filter(_._3 == "m")
-        .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).sorted) }
-      val proberSlice: Map[Long, Array[Long]] = rows.filter(_._3 == "p")
+      .toDF("owner", "q_id", "embedding", "probed", "assigned_cell"), "owner", nOwners)
+    // each owner collects ONLY its slice — O((1+nprobe)·n/nOwners)
+    // narrow cell rows + ONE vector row per (owner, id)
+    val bc = perShard(nOwners) { o =>
+      val rows = slices.filter(col("owner") === o)
+        .select(col("cell"), col("id"), col("role"), col("vec"),
+          col("thr"), col("thr_cnt"))
+        .as[(Long, Long, String, Array[Float], Option[Double], Option[Long])]
+        .collect()
+      def cells(role: String): Map[Long, Array[Long]] = rows.filter(_._3 == role)
         .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).sorted) }
       val vrows = rows.filter(_._3 == "v")
-      val vecSlice: Map[Long, Array[Float]] =
-        vrows.iterator.map(r => (r._2, r._4)).toMap
-      val thrSlice: Map[Long, (Double, Long)] = vrows.iterator
-        .flatMap(r => r._5.map(t => (r._2, (t, r._6.get)))).toMap
-      val bcMembers = s.sparkContext.broadcast(memberSlice)
-      val bcProbers = s.sparkContext.broadcast(proberSlice)
-      val bcVecs = s.sparkContext.broadcast(vecSlice)
-      val bcThr = s.sparkContext.broadcast(thrSlice)
-      routedT.filter(col("owner") === o)
-        .select(col("q_id"), col("embedding"), col("probed"),
-          col("assigned_cell"))
-        .as[(Long, Array[Float], Seq[Long], Long)]
-        .flatMap { case (qId, qv, probed, assignedCell) =>
-          val ownedProbed = probed.filter(c => ownerOf(c) == o)
-          val members = ownedProbed.flatMap(c =>
-            bcMembers.value.getOrElse(c, Array.empty[Long])).distinct
-          val newTop = topByCos(members.iterator
-            .map(id => (id, cosExact(qv, bcVecs.value(id)))), k)
-            .zipWithIndex.map { case ((nId, c), i) =>
-              ("new_topk", o.toLong, qId, nId,
-                java.lang.Long.valueOf((i + 1).toLong), c, round6(c))
-            }
-          val ups =
-            if (ownerOf(assignedCell) != o) Iterator.empty
-            else bcProbers.value.getOrElse(assignedCell, Array.empty[Long])
-              .iterator.map { bq => (bq, cosExact(bcVecs.value(bq), qv)) }
-              .filter(!_._2.isNaN)
-              .flatMap { case (bq, c) =>
-                val c6 = round6(c)
-                bcThr.value.get(bq) match {
-                  case Some((t, cnt)) if cnt >= k && c6 <= t => None
-                  case _ => Some(("upsert", o.toLong, bq, qId,
-                    null.asInstanceOf[java.lang.Long], c, c6))
-                }
+      OwnerSlice(cells("m"), cells("p"), vrows.iterator.map(r => (r._2, r._4)).toMap,
+        vrows.iterator.flatMap(r => r._5.map(t => (r._2, (t, r._6.get)))).toMap)
+    }.map(s.sparkContext.broadcast(_))
+    Some(routedT
+      .select(col("owner"), col("q_id"), col("embedding"), col("probed"),
+        col("assigned_cell"))
+      .as[(Int, Long, Array[Float], Seq[Long], Long)]
+      .flatMap { case (o, qId, qv, probed, assignedCell) =>
+        val sl = bc(o).value
+        val members = probed.filter(c => ownerOf(c) == o)
+          .flatMap(c => sl.members.getOrElse(c, Array.empty[Long])).distinct
+        val newTop = topByCos(members.iterator
+          .map(id => (id, cosExact(qv, sl.vecs(id)))), k)
+          .zipWithIndex.map { case ((nId, c), i) =>
+            ("new_topk", o.toLong, qId, nId,
+              java.lang.Long.valueOf((i + 1).toLong), c, round6(c))
+          }
+        val ups =
+          if (ownerOf(assignedCell) != o) Iterator.empty
+          else sl.probers.getOrElse(assignedCell, Array.empty[Long])
+            .iterator.map { bq => (bq, cosExact(sl.vecs(bq), qv)) }
+            .filter(!_._2.isNaN)
+            .flatMap { case (bq, c) =>
+              val c6 = round6(c)
+              sl.thr.get(bq) match {
+                case Some((t, cnt)) if cnt >= k && c6 <= t => None
+                case _ => Some(("upsert", o.toLong, bq, qId,
+                  null.asInstanceOf[java.lang.Long], c, c6))
               }
-          newTop.iterator ++ ups
-        }
-        .toDF("kind", "owner", "q_id", "n_id", "rnk", "cos_raw", "cos_sim")
-    }
-    Some(arms.reduce(_ unionByName _))
+            }
+        newTop.iterator ++ ups
+      }
+      .toDF("kind", "owner", "q_id", "n_id", "rnk", "cos_raw", "cos_sim"))
   }
 
   /** STREAMING TAKEDOWN INTENTS (st54) — st53's delete half: takedown
@@ -3008,52 +3002,21 @@ object Streaming {
       rounds: Int = 3, seedMod: Int = 64, graphK: Int = 10,
       targetList: Int = 64, nprobe: Int = 4, superProbe: Int = 3)
       : DataFrame = {
-    import s.implicits._
-    import graft.operators.{Mixture, Similarity}
+    import graft.operators.Mixture
     require(k <= beam, s"k=$k must be <= beam=$beam")
     require(kFrom >= 1 && kTo > kFrom,
       s"resize must grow the fleet: kFrom=$kFrom, kTo=$kTo")
-    // one scan feeds every arm's scoring slice
-    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        Mixture.rendezvousShardCol(col("vec_id"), kTo).as("shard_to")))
-    // ROUTE ONCE under the NEW layout (st58's ingest-tier dispatch:
-    // one streaming pass computes the kTo argmax, arms consume their
-    // materialized partitions)
-    val routedQ = persist(runToScatterTable(
-        graft.sources.Sources.embeddingsStream(s, dir)
-          .select((col("vec_id") + 100000L).cast("long").as("q_id"),
-            col("embedding"))
-          .withColumn("shard", Mixture.rendezvousShardCol(col("q_id"), kTo)))
-      .repartition(col("shard"))) // cluster by shard once;
-    routedQ.count() // arms prune cached batches by shard stats
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val replicas = Await.result(Future.sequence((0 until kTo).map { sh =>
-      Future {
-        // scoring replica: the kTo partition — for old shards this is
-        // the kFrom slice minus its movers (the HRW stability set)
-        val vecs: Map[Long, Array[Float]] = emb
-          .filter(col("shard_to") === sh)
-          .select(col("vec_id"), col("embedding"))
-          .as[(Long, Array[Float])].collect().toMap
-        // the asset: old shards REUSE the kFrom-layout store (built
-        // over slice + movers; first caller built it, the resize
-        // reads it back), new shards build over their mover sliver
-        val assetLayout = if (sh < kFrom) kFrom else kTo
-        val adj: Map[Long, Array[Long]] =
-          Similarity.ensureShardKnnIndex(s, dir, assetLayout, sh, graphK,
-              targetList, nprobe, superProbe)
-            .select(col("node").cast("long"), col("edge_to").cast("long"))
-            .as[(Long, Long)].collect()
-            .groupBy(_._1).map { case (n, es) => (n, es.map(_._2)) }
-        val seeds: Array[Long] = vecs.keysIterator.filter(_ % seedMod == 0)
-          .toArray.sorted
-        (sh, vecs, adj, seeds)
-      }
-    }), Duration.Inf)
-    fusedRoutedWalk(routedQ, replicas, k, beam, rounds)
+    // queries route under the NEW layout
+    val routedQ = dispatch(queryArrivals(s, dir)
+      .withColumn("shard", Mixture.rendezvousShardCol(col("q_id"), kTo)), "shard", kTo)
+    // scoring replica: the kTo partition — for old shards the kFrom
+    // slice minus its movers (the HRW stability set). The asset: old
+    // shards REUSE the kFrom-layout store (built over slice + movers),
+    // new shards build over their mover sliver
+    fusedRoutedWalk(routedQ,
+      shardReplicas(s, dir, kTo, sh => if (sh < kFrom) kFrom else kTo, _ % seedMod == 0,
+        graphK, targetList, nprobe, superProbe),
+      k, beam, rounds)
   }
 
   /** THE exact cosine fold of the streaming serving family — the one
@@ -3140,10 +3103,9 @@ object Streaming {
     * — a deployment scales routerMod with the corpus to keep it
     * constant (st50's seedMod convention, one level up) — and each
     * query pays ONE summary ranking plus probeShards walks, both
-    * constants: the scatter ROUTES ONCE (a single streaming pass
-    * materializes the (shard, arrival) dispatch; arms consume their
-    * partition — the ingest-tier route-and-dispatch). The oracle
-    * replays the router ranking, every routed walk, and the merge.
+    * constants: the ranking runs once per arrival, in the
+    * [[dispatch]]. The oracle replays the router ranking, every routed
+    * walk, and the merge.
     */
   def streamScatterGatherServing(s: SparkSession, dir: String,
       nShards: Int = 4, probeShards: Int = 2, k: Int = 5, beam: Int = 16,
@@ -3151,59 +3113,30 @@ object Streaming {
       graphK: Int = 10, targetList: Int = 64, nprobe: Int = 4,
       superProbe: Int = 3): DataFrame = {
     import s.implicits._
-    import graft.operators.{Mixture, Similarity}
     require(k <= beam, s"k=$k must be <= beam=$beam")
     require(probeShards >= 1 && probeShards <= nShards,
       s"probeShards=$probeShards must be in [1, nShards=$nShards]")
-    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        Mixture.rendezvousShardCol(col("vec_id"), nShards).as("shard")))
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val replicas = Await.result(Future.sequence((0 until nShards).map { sh =>
-      Future {
-        val vecs: Map[Long, Array[Float]] = emb
-          .filter(col("shard") === sh)
-          .select(col("vec_id"), col("embedding"))
-          .as[(Long, Array[Float])].collect().toMap
-        val adj: Map[Long, Array[Long]] =
-          Similarity.ensureShardKnnIndex(s, dir, nShards, sh, graphK,
-              targetList, nprobe, superProbe)
-            .select(col("node").cast("long"), col("edge_to").cast("long"))
-            .as[(Long, Long)].collect()
-            .groupBy(_._1).map { case (n, es) => (n, es.map(_._2)) }
-        val seeds: Array[Long] = vecs.keysIterator.filter(_ % seedMod == 0)
-          .toArray.sorted
-        (sh, vecs, adj, seeds)
-      }
-    }), Duration.Inf)
+    val replicas = shardReplicas(s, dir, nShards, _ => nShards, _ % seedMod == 0,
+      graphK, targetList, nprobe, superProbe)
     // the navigation layer: each shard's sparse router slice —
     // O(corpus/routerMod) across the whole fleet, broadcast once
-    val summary: Array[(Int, Array[Array[Float]])] = replicas.map {
-      case (sh, vecs, _, _) =>
-        (sh, vecs.iterator.filter(_._1 % routerMod == 0)
+    val summary: Array[(Int, Array[Array[Float]])] = replicas.zipWithIndex.map {
+      case (r, sh) =>
+        (sh, r.vecs.iterator.filter(_._1 % routerMod == 0)
           .toArray.sortBy(_._1).map(_._2))
     }.toArray
     val bcSummary = s.sparkContext.broadcast(summary)
-    // ROUTE ONCE: one streaming pass ranks the shards per arrival
-    // against the summary and materializes the (shard, arrival)
-    // scatter — probeShards rows per arrival; arms consume their
-    // partition instead of each re-running the summary ranking
-    val routedQ = persist(runToScatterTable(
-        graft.sources.Sources.embeddingsStream(s, dir)
-          .select((col("vec_id") + 100000L).cast("long").as("q_id"),
-            col("embedding"))
-          .as[(Long, Array[Float])].flatMap { case (qId, qv) =>
-            bcSummary.value.iterator.flatMap { case (s2, rvs) =>
-              val scores = rvs.iterator.map(v => cosExact(qv, v))
-                .filter(!_.isNaN).toSeq
-              if (scores.isEmpty) None else Some((s2, scores.max))
-            }.toSeq.sortBy { case (s2, sc) => (-sc, s2) }
-              .take(probeShards).iterator.map(r => (r._1, qId, qv))
-          }.toDF("shard", "q_id", "embedding"))
-      .repartition(col("shard"))) // cluster by shard once;
-    routedQ.count() // arms prune cached batches by shard stats
+    // one routing pass ranks the shards per arrival against the
+    // summary — probeShards (shard, arrival) rows per arrival
+    val routedQ = dispatch(queryArrivals(s, dir).as[(Long, Array[Float])]
+      .flatMap { case (qId, qv) =>
+        bcSummary.value.iterator.flatMap { case (s2, rvs) =>
+          val scores = rvs.iterator.map(v => cosExact(qv, v))
+            .filter(!_.isNaN).toSeq
+          if (scores.isEmpty) None else Some((s2, scores.max))
+        }.toSeq.sortBy { case (s2, sc) => (-sc, s2) }
+          .take(probeShards).iterator.map(r => (r._1, qId, qv))
+      }.toDF("shard", "q_id", "embedding"), "shard", nShards)
     // the GATHER: exact top-k merge of the routed arms' partials —
     // shard slices are disjoint, so no dedup; rounded-cosine ties
     // break on id like every readout in the family
@@ -3247,50 +3180,21 @@ object Streaming {
       kFrom: Int = 5, k: Int = 5, beam: Int = 16, rounds: Int = 3,
       seedMod: Int = 64, graphK: Int = 10, targetList: Int = 64,
       nprobe: Int = 4, superProbe: Int = 3): DataFrame = {
-    import s.implicits._
-    import graft.operators.{Mixture, Similarity}
+    import graft.operators.Mixture
     require(k <= beam, s"k=$k must be <= beam=$beam")
     require(kFrom >= 2, s"kFrom=$kFrom: a 1-shard fleet cannot fail over")
     val kTo = kFrom - 1
-    val emb = persist(s.read.parquet(s"$dir/embeddings.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"),
-        Mixture.rendezvousShardCol(col("vec_id"), kTo).as("shard_to")))
-    // ROUTE ONCE under the surviving layout (st58's ingest-tier
-    // dispatch; the survivors' arms consume their materialized
-    // partitions instead of each re-running the HRW argmax)
-    val routedQ = persist(runToScatterTable(
-        graft.sources.Sources.embeddingsStream(s, dir)
-          .select((col("vec_id") + 100000L).cast("long").as("q_id"),
-            col("embedding"))
-          .withColumn("shard", Mixture.rendezvousShardCol(col("q_id"), kTo)))
-      .repartition(col("shard"))) // cluster by shard once;
-    routedQ.count() // arms prune cached batches by shard stats
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val replicas = Await.result(Future.sequence((0 until kTo).map { sh =>
-      Future {
-        // the surviving slice: own keys + the dead shard's orphans
-        val vecs: Map[Long, Array[Float]] = emb
-          .filter(col("shard_to") === sh)
-          .select(col("vec_id"), col("embedding"))
-          .as[(Long, Array[Float])].collect().toMap
-        // the stored pre-failover asset, reused byte-for-byte
-        val adj: Map[Long, Array[Long]] =
-          Similarity.ensureShardKnnIndex(s, dir, kFrom, sh, graphK,
-              targetList, nprobe, superProbe)
-            .select(col("node").cast("long"), col("edge_to").cast("long"))
-            .as[(Long, Long)].collect()
-            .groupBy(_._1).map { case (n, es) => (n, es.map(_._2)) }
-        // gained orphans join the seed layer — findable pre-rebuild
-        val seeds: Array[Long] = vecs.keysIterator.filter(id =>
-            id % seedMod == 0 ||
-              Mixture.rendezvousShardOf(id, kFrom) == kFrom - 1)
-          .toArray.sorted
-        (sh, vecs, adj, seeds)
-      }
-    }), Duration.Inf)
-    fusedRoutedWalk(routedQ, replicas, k, beam, rounds)
+    // queries route under the surviving layout
+    val routedQ = dispatch(queryArrivals(s, dir)
+      .withColumn("shard", Mixture.rendezvousShardCol(col("q_id"), kTo)), "shard", kTo)
+    // each survivor scores its own keys + the dead shard's orphans
+    // against the stored pre-failover asset, reused byte-for-byte; the
+    // gained orphans join the seed layer — findable pre-rebuild
+    fusedRoutedWalk(routedQ,
+      shardReplicas(s, dir, kTo, _ => kFrom,
+        id => id % seedMod == 0 || Mixture.rendezvousShardOf(id, kFrom) == kFrom - 1,
+        graphK, targetList, nprobe, superProbe),
+      k, beam, rounds)
   }
 
   /** STREAMING CONTENT-TAKEDOWN PROPAGATION (st55) — the CONTENT-level

@@ -144,6 +144,27 @@ class StyleGateSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  // the shard fleet loads its arms concurrently through Streaming.perShard
+  test("Future.sequence is spelled once, in Streaming") {
+    val sites = mainFilesWith("Future.sequence")
+    withClue(sites.mkString("Future.sequence at:\n", "\n", "\n")) {
+      sites should have size 1
+      sites.head should startWith("src/main/scala/graft/streaming/Streaming.scala:")
+    }
+  }
+
+  // a temp view on the caller's session outlives its query and races a
+  // concurrent one: views are named only on NorthStar.sqlOver's clone
+  test("temp views are registered only on sqlOver's session clone") {
+    val cloneView = "Bridge.ofRows(clone, Bridge.analyzed(df)).createOrReplaceTempView(name)"
+    val bad = mainLinesWith("createOrReplaceTempView(").filterNot { case (at, line) =>
+      at.startsWith("src/main/scala/graft/queries/NorthStar.scala:") && line.trim == cloneView
+    }.map(_._1)
+    withClue(bad.mkString("temp view registered at:\n", "\n", "\n")) {
+      bad shouldBe empty
+    }
+  }
+
   test("the ANN top-k lattice stays collapsed into Similarity.annTopK") {
     val gone = Seq("ivfTopK", "ivfTopKCb", "ivfTopKTrained", "ivfTopKTrainedFp",
       "ivfTopKTrainedFpSoft", "pqTopK", "pqTopKTrained", "pqSearch", "pqSearchTrained",

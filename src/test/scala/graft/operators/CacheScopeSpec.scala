@@ -14,6 +14,7 @@ import org.scalatest.matchers.should.Matchers
 class CacheScopeSpec extends AnyFunSuite with Matchers {
 
   private lazy val spark = TestSpark.spark
+  private val dir = "/root/testdata/sf0.001"
 
   private def docs = {
     import spark.implicits._
@@ -123,19 +124,31 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
   }
 
   test("releaseSession alone deletes stream scratch dirs and leaves no view") {
-    // st01 runs through the memory sink, st58 scatters its routed
+    // st01 runs through the memory sink; st58 (rendezvous shard), st61
+    // (cell owner) and st64 (summary-ranked shard) scatter their routed
     // arrivals to a scratch dir that a cache fronts; only the session
     // release runs afterwards
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
     def scatterDirs = Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
       .map(_.getName).filter(_.startsWith("graft_scatter_")).toSet
-    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary)
-      .map(_.name).toSet
     val (dirsBefore, viewsBefore) = (scatterDirs, tempViews)
-    releasesClean("st01_stream_hourly", "st58_sharded_graph_probe")
+    releasesClean("st01_stream_hourly", "st58_sharded_graph_probe",
+      "st61_sharded_graph_upsert", "st64_scatter_gather_serving")
     (scatterDirs -- dirsBefore) shouldBe empty
     (tempViews -- viewsBefore) shouldBe empty
   }
+
+  test("the SQL-authored rows leave no temp view on the caller's session") {
+    // t29, d11, s17 and s14 name their inputs as views for spark.sql
+    val before = tempViews
+    Seq("t29_sql_curation", "d11_sql_lsh_pairs", "s17_sql_knn", "s14_sql_eps_degree")
+      .foreach(q => graft.SparkEntry.queries(q)(spark, dir).collect())
+    CacheScope.releaseSession(spark)
+    (tempViews -- before) shouldBe empty
+  }
+
+  private def tempViews: Set[String] =
+    spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
 
   /** Runs registered rows, then asserts they cached something and that
     * `releaseSession` alone frees all of it.
@@ -144,7 +157,7 @@ class CacheScopeSpec extends AnyFunSuite with Matchers {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     rows.foreach { q =>
-      graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect()
+      graft.SparkEntry.queries(q)(spark, dir).collect()
     }
     (sc.getPersistentRDDs.keySet -- before) should not be empty
     CacheScope.releaseSession(spark)
